@@ -12,12 +12,29 @@ iteration is one shuffle. Scale posture:
 
 - edges are repartitioned ONCE on the join key and persisted, so every
   iteration reuses the same partitioning (no repeated exchange of the
-  big side);
+  big side); ``_right_sized`` shrinks a provably-small loop-invariant
+  table to a size-derived partition count once it is materialized;
 - per-iteration state (ranks/labels/frontier) is small relative to
   edges and is what moves;
-- lineage is cut with ``localCheckpoint`` every few iterations so plans
-  don't grow unboundedly (the classic iterative-Spark failure mode);
-- convergence checks (``count`` on changed rows) are cheap aggregations.
+- every frontier walk (BFS, closeness, reachability, the SCC collect
+  and the distance queries built on them) runs through
+  ``_frontier_walk``, which has ONE lineage-cut policy: each hop's
+  frontier is persisted, and every ``_CHECKPOINT_EVERY`` hops the
+  visited set is eager-checkpointed and the frontier's lineage is cut
+  too, so neither plan grows past one window whatever the walk's depth
+  (a multi-source walk, keyed by ``root``, checkpoints its visited set
+  every hop);
+- the PageRank family (global, personalized, weighted) shares one loop
+  body, ``_rank_walk``, which cuts lineage every round with a lazy
+  ``localCheckpoint`` (one-round-deep plans, no checkpoint action of
+  its own); value loops that reference their state more than once per
+  round (CC, SSSP, k-core) cut every round and let the convergence
+  count materialize the cut;
+- convergence: fixpoint loops stop on an empty frontier or a zero
+  changed-count; with ``check_convergence=True`` the fixed-round power
+  methods certify their last round with ``_assert_settled`` (max |Δ|
+  over the final two iterates against ``tol``, one action) and raise
+  :class:`ConvergenceError` instead of returning a truncated answer.
 """
 
 from __future__ import annotations
@@ -65,6 +82,162 @@ class ConvergenceError(RuntimeError):
     return the last iterate), which is what the fixed-round SQL oracles
     mirror; WITH it a truncated answer can never be mistaken for a
     converged one."""
+
+
+def _right_sized(df: DataFrame, *keys: str) -> DataFrame:
+    """:func:`right_size_keyed` for a loop-invariant table whose source
+    is already materialized (so its cache stats are exact): the
+    repartitioned copy is persisted, and tracked, only when
+    right-sizing actually changed the plan."""
+    rs = right_size_keyed(df, *keys)
+    return df if rs is df else tracked_persist(rs)
+
+
+def _assert_settled(
+    cur: DataFrame, prev: DataFrame, cols: list, tol: float, what: str
+) -> None:
+    """Max-|Δ| convergence certificate of a fixed-round iteration: join
+    the last two iterates on ``id`` and raise :class:`ConvergenceError`
+    if any of ``cols`` moved by more than ``tol`` in max norm. One
+    action, whatever the number of columns."""
+    diffs = [F.abs(F.col(f"cur.{c}") - F.col(f"p.{c}")) for c in cols]
+    delta = (
+        cur.alias("cur")
+        .join(prev.alias("p"), "id")
+        .agg(F.max(diffs[0] if len(diffs) == 1 else F.greatest(*diffs)))
+        .first()[0]
+    )
+    if delta is not None and delta > tol:
+        raise ConvergenceError(
+            f"{what}: max |Δ{'/'.join(cols)}| = {delta:.3e} > tol={tol} "
+            "after the last iteration — raise iterations"
+        )
+
+
+def _frontier_walk(
+    edges: DataFrame, visited: DataFrame, keys: list, max_iter: int
+) -> tuple[DataFrame, bool]:
+    """Frontier BFS over ``edges`` (src, dst[, root]) from the seed set
+    ``visited``, keyed by ``keys``: ``["id"]`` for one search,
+    ``["root", "id"]`` for a multi-source walk where every root's
+    frontier advances in the same join. Each hop joins the frontier to
+    the edges (on ``root`` too when the edges carry one), keeps the
+    vertices not yet visited (the anti-join) and, when the state has a
+    ``hops`` column, stamps them with the hop. Returns the visited set
+    and whether the frontier emptied within ``max_iter`` hops.
+
+    One lineage-cut policy for every caller: each hop's frontier is
+    persisted (the emptiness probe and the next hop both scan it) and
+    re-rooted on a lazy checkpoint every ``_CHECKPOINT_EVERY`` hops,
+    together with an eager checkpoint of the visited set. The next
+    frontier's plan references both the frontier and the visited set,
+    so uncut plans grow geometrically with depth; cutting both bounds
+    every plan to one window. A multi-source walk (a ``root`` key:
+    O(V²) pair state that its callers join again, often several times)
+    also checkpoints the visited set every hop, so the set it returns
+    is always a plan leaf.
+    """
+    tags = keys[:-1]
+    every = 1 if tags else _CHECKPOINT_EVERY
+    frontier = visited
+    for hop in range(1, max_iter + 1):
+        step = frontier.select(*tags, F.col("id").alias("src"))
+        nxt = (
+            edges.join(step, [c for c in step.columns if c in edges.columns])
+            .select(*tags, F.col("dst").alias("id"))
+            .distinct()
+            .join(visited, keys, "left_anti")
+        )
+        if "hops" in visited.columns:
+            nxt = nxt.withColumn("hops", F.lit(hop))
+        frontier = tracked_persist(nxt)
+        if frontier.limit(1).count() == 0:
+            return visited, True
+        visited = visited.union(frontier)
+        if hop % every == 0:
+            visited = visited.localCheckpoint(eager=True)
+        if hop % _CHECKPOINT_EVERY == 0:
+            frontier = frontier.localCheckpoint(eager=False)
+    return visited, False
+
+
+def _rank_walk(
+    e: DataFrame,
+    init,
+    update,
+    iterations: int,
+    check_convergence: bool,
+    tol: float,
+    what: str,
+    dangling: bool = True,
+) -> DataFrame:
+    """Power-method body of the PageRank family. ``e`` is the tracked
+    (src, dst[, w]) edge table partitioned on ``src``; a ``w`` column
+    splits each vertex's rank by edge weight over its out-weight
+    instead of evenly over its out-degree. ``init(n)`` is the round-0
+    rank over the ``n`` vertices and ``update(n, in_mass, dangling)``
+    the next round's rank from the in-flowing mass and the mass sitting
+    on vertices without out-edges (always 0.0 when ``dangling`` is
+    False: the walk lets that mass decay).
+
+    Edges are joined to their out-weight once, outside the loop (the
+    division stays inside, so the float arithmetic is per round as
+    written); each round shuffles only the |V|-row rank vector. The
+    dangling reduction costs one Spark action per round, so it runs
+    only when an up-front probe finds a vertex without out-edges
+    (never for symmetrized graphs).
+    """
+    verts = tracked_persist(
+        e.select(F.col("src").alias("id"))
+        .union(e.select(F.col("dst").alias("id")))
+        .distinct()
+    )
+    n = verts.count()
+    verts = _right_sized(verts, "id")
+    weighted = "w" in e.columns
+    out = tracked_persist(
+        e.groupBy("src").agg(
+            (F.sum("w") if weighted else F.count("*")).alias("out")
+        )
+    )
+    no_out = out.withColumnRenamed("src", "id")
+    has_dangling = (
+        dangling
+        and verts.join(no_out, "id", "left_anti").limit(1).count() > 0
+    )
+    ew = tracked_persist(right_size_keyed(e.join(out, "src"), "src"))
+    mass = F.col("rank") * F.col("w") if weighted else F.col("rank")
+    ranks = verts.withColumn("rank", init(n))
+    for _ in range(iterations):
+        contribs = (
+            ew.join(ranks.withColumnRenamed("id", "src"), "src")
+            .select("dst", (mass / F.col("out")).alias("contrib"))
+            .groupBy(F.col("dst").alias("id"))
+            .agg(F.sum("contrib").alias("in_mass"))
+        )
+        lost = (
+            ranks.join(no_out, "id", "left_anti")
+            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)))
+            .first()[0]
+            if has_dangling
+            else 0.0
+        )
+        prev = ranks
+        ranks = verts.join(contribs, "id", "left").select(
+            "id",
+            update(n, F.coalesce("in_mass", F.lit(0.0)), lost).alias("rank"),
+        )
+        # Lineage grows linearly (ranks is referenced once per round),
+        # so per-round LAZY truncation keeps every catalyst plan one
+        # round deep while deferring execution: the chain of pending
+        # checkpoint RDDs forms a DAG that the first downstream action
+        # computes in one submission instead of one eager
+        # (AQE-multiplied) job per window — q68 at sf0.1: 109 scheduled
+        # jobs -> single-digit (see OPTIMIZATION_r11.md).
+        ranks = ranks.localCheckpoint(eager=False)
+    if check_convergence and iterations > 0:
+        _assert_settled(ranks, prev, ["rank"], tol, what)
+    return ranks
 
 
 def degrees(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -133,19 +306,16 @@ def connected_components(
     convention (return the last iterate) that the fixed-round oracles
     mirror.
     """
-    und0 = tracked_persist(symmetrize(edges, src, dst))
+    und = tracked_persist(symmetrize(edges, src, dst))
     converged = False
-    labels = (
-        und0.select(F.col("src").alias("id"))
+    labels = tracked_persist(
+        und.select(F.col("src").alias("id"))
         .distinct()
         .withColumn("component", F.col("id"))
-        .persist()
     )
     # materialize, then right-size the edge table every round re-scans
     labels.count()
-    und = right_size_keyed(und0, "src")
-    if und is not und0:
-        und = tracked_persist(und)
+    und = _right_sized(und, "src")
     for i in range(max_iter):
         # neighbor labels: for each dst, min label of its srcs
         neighbor = (
@@ -243,90 +413,18 @@ def pagerank(
         .distinct()
         .repartition("src")
     )
-    verts = tracked_persist(
-        e.select(F.col("src").alias("id"))
-        .union(e.select(F.col("dst").alias("id")))
-        .distinct()
+    return _rank_walk(
+        e,
+        init=lambda n: F.lit(1.0 / n),
+        update=lambda n, in_mass, dangling: (
+            F.lit((1.0 - damping) / n)
+            + F.lit(damping) * (in_mass + F.lit(dangling / n))
+        ),
+        iterations=iterations,
+        check_convergence=check_convergence,
+        tol=tol,
+        what="pagerank",
     )
-    n = verts.count()
-    # e and verts are materialized now, so cache stats are exact:
-    # right-size the loop-invariant tables that every round re-scans
-    # (provably-small graphs stop paying shuffle.partitions-wide cache
-    # scans per round on a default session; big graphs unchanged).
-    rs = right_size_keyed(verts, "id")
-    if rs is not verts:
-        verts = tracked_persist(rs)
-    outdeg = tracked_persist(
-        e.groupBy("src").agg(F.count("*").alias("outdeg"))
-    )
-    # Dangling handling costs one extra driver action per iteration;
-    # detect up front whether any vertex lacks out-edges (never true for
-    # symmetrized graphs) and skip the per-round reduction when possible.
-    has_dangling = (
-        verts.join(outdeg.withColumnRenamed("src", "id"), "id", "left_anti")
-        .limit(1)
-        .count()
-        > 0
-    )
-    # The edges ⋈ outdeg join is loop-invariant — materialize it once
-    # instead of re-joining every iteration (round 11: at 20 iterations
-    # this removes 20 joins' worth of stages and driver re-planning;
-    # the division stays rank/outdeg inside the loop, so the float
-    # arithmetic is unchanged).
-    ew = tracked_persist(right_size_keyed(e.join(outdeg, "src"), "src"))
-    ranks = verts.withColumn("rank", F.lit(1.0 / n))
-    prev_ranks = ranks
-    for i in range(iterations):
-        contribs = (
-            ew.join(ranks.withColumnRenamed("id", "src"), "src")
-            .select("dst", (F.col("rank") / F.col("outdeg")).alias("contrib"))
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum("contrib").alias("in_mass"))
-        )
-        # mass sitting on dangling vertices (no out-edges) this round
-        if has_dangling:
-            dangling = (
-                ranks.join(outdeg.withColumnRenamed("src", "id"), "id", "left_anti")
-                .agg(F.coalesce(F.sum("rank"), F.lit(0.0)))
-                .first()[0]
-            )
-        else:
-            dangling = 0.0
-        ranks = verts.join(contribs, "id", "left").select(
-            "id",
-            (
-                F.lit((1.0 - damping) / n)
-                + F.lit(damping)
-                * (F.coalesce("in_mass", F.lit(0.0)) + F.lit(dangling / n))
-            ).alias("rank"),
-        )
-        # Lineage grows linearly (ranks is referenced once per round),
-        # so per-round LAZY truncation keeps every catalyst plan one
-        # round deep while deferring execution: the chain of pending
-        # checkpoint RDDs forms a DAG that the first downstream action
-        # computes in one submission instead of one eager
-        # (AQE-multiplied) job per window — q68 at sf0.1: 109 scheduled
-        # jobs -> single-digit, wall 24 s -> (see OPTIMIZATION_r11.md).
-        # The |V|-row rank vector is tiny at any scale.
-        ranks = ranks.localCheckpoint(eager=False)
-        if check_convergence and i == iterations - 1:
-            delta = (
-                ranks.alias("cur")
-                .join(prev_ranks.alias("p"), "id")
-                .agg(
-                    F.max(
-                        F.abs(F.col("cur.rank") - F.col("p.rank"))
-                    ).alias("d")
-                )
-                .first()["d"]
-            )
-            if delta is not None and delta > tol:
-                raise ConvergenceError(
-                    f"pagerank: max |Δrank| = {delta:.3e} > tol={tol} "
-                    f"after {iterations} iterations — raise iterations"
-                )
-        prev_ranks = ranks
-    return ranks
 
 
 def personalized_pagerank(
@@ -361,82 +459,21 @@ def personalized_pagerank(
         .distinct()
         .repartition("src")
     )
-    verts = tracked_persist(
-        e.select(F.col("src").alias("id"))
-        .union(e.select(F.col("dst").alias("id")))
-        .distinct()
-    )
-    # materialize so cache stats are exact, then right-size the tables
-    # the loop re-scans every round (no-op above one task per core)
-    verts.count()
-    rs = right_size_keyed(verts, "id")
-    if rs is not verts:
-        verts = tracked_persist(rs)
-    outdeg = tracked_persist(
-        e.groupBy("src").agg(F.count("*").alias("outdeg"))
-    )
-    has_dangling = (
-        verts.join(outdeg.withColumnRenamed("src", "id"), "id", "left_anti")
-        .limit(1)
-        .count()
-        > 0
-    )
     is_seed = F.col("id") == F.lit(seed)
-    # loop-invariant edges ⋈ outdeg hoisted out of the loop (round 11,
-    # same change as pagerank — the division stays inside, float
-    # arithmetic unchanged)
-    ew = tracked_persist(right_size_keyed(e.join(outdeg, "src"), "src"))
-    ranks = verts.withColumn(
-        "rank", F.when(is_seed, F.lit(1.0)).otherwise(F.lit(0.0))
+    return _rank_walk(
+        e,
+        init=lambda n: F.when(is_seed, F.lit(1.0)).otherwise(F.lit(0.0)),
+        update=lambda n, in_mass, dangling: (
+            F.when(
+                is_seed, F.lit(restart) + F.lit((1.0 - restart) * dangling)
+            ).otherwise(F.lit(0.0))
+            + F.lit(1.0 - restart) * in_mass
+        ),
+        iterations=iterations,
+        check_convergence=check_convergence,
+        tol=tol,
+        what="personalized_pagerank",
     )
-    prev_ranks = ranks
-    for i in range(iterations):
-        contribs = (
-            ew.join(ranks.withColumnRenamed("id", "src"), "src")
-            .select("dst", (F.col("rank") / F.col("outdeg")).alias("contrib"))
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum("contrib").alias("in_mass"))
-        )
-        if has_dangling:
-            dangling = (
-                ranks.join(
-                    outdeg.withColumnRenamed("src", "id"), "id", "left_anti"
-                )
-                .agg(F.coalesce(F.sum("rank"), F.lit(0.0)))
-                .first()[0]
-            )
-        else:
-            dangling = 0.0
-        ranks = verts.join(contribs, "id", "left").select(
-            "id",
-            (
-                F.when(
-                    is_seed,
-                    F.lit(restart) + F.lit((1.0 - restart) * dangling),
-                ).otherwise(F.lit(0.0))
-                + F.lit(1.0 - restart) * F.coalesce("in_mass", F.lit(0.0))
-            ).alias("rank"),
-        )
-        # per-round LAZY truncation: one-round-deep plans, single
-        # deferred materialization (round 11, same change as pagerank)
-        ranks = ranks.localCheckpoint(eager=False)
-        if check_convergence and i == iterations - 1:
-            delta = (
-                ranks.alias("cur")
-                .join(prev_ranks.alias("p"), "id")
-                .agg(
-                    F.max(F.abs(F.col("cur.rank") - F.col("p.rank"))).alias("d")
-                )
-                .first()["d"]
-            )
-            if delta is not None and delta > tol:
-                raise ConvergenceError(
-                    f"personalized_pagerank: max |Δrank| = {delta:.3e} > "
-                    f"tol={tol} after {iterations} iterations — raise "
-                    "iterations"
-                )
-        prev_ranks = ranks
-    return ranks
 
 
 def bfs_hops(
@@ -455,7 +492,7 @@ def bfs_hops(
     ``check_convergence=True`` raises :class:`ConvergenceError` if the
     frontier is still non-empty when ``max_iter`` is exhausted (the BFS
     was truncated before exploring the reachable set)."""
-    und0 = tracked_persist(symmetrize(edges, src, dst).repartition("src"))
+    und = tracked_persist(symmetrize(edges, src, dst).repartition("src"))
     spark = edges.sparkSession
     visited = tracked_persist(
         spark.createDataFrame(
@@ -463,29 +500,9 @@ def bfs_hops(
         )
     )
     # materialize, then right-size the edge table every hop re-scans
-    und0.count()
-    und = right_size_keyed(und0, "src")
-    if und is not und0:
-        und = tracked_persist(und)
-    frontier = visited
-    converged = False
-    for hop in range(1, max_iter + 1):
-        neighbors = (
-            und.join(frontier.withColumnRenamed("id", "src").select("src"), "src")
-            .select(F.col("dst").alias("id"))
-            .distinct()
-        )
-        new_frontier = tracked_persist(
-            neighbors.join(visited, "id", "left_anti")
-            .withColumn("hops", F.lit(hop))
-        )
-        if new_frontier.limit(1).count() == 0:
-            converged = True
-            break
-        visited = visited.union(new_frontier)
-        if hop % _CHECKPOINT_EVERY == 0:
-            visited = visited.localCheckpoint(eager=True)
-        frontier = new_frontier
+    und.count()
+    und = _right_sized(und, "src")
+    visited, converged = _frontier_walk(und, visited, ["id"], max_iter)
     if check_convergence and not converged:
         raise ConvergenceError(
             f"bfs_hops: frontier still expanding after {max_iter} hops — "
@@ -576,17 +593,15 @@ def label_propagation(
     bipartite structures — the check surfaces that too; the check costs
     one extra join + count, only when the flag is set).
     """
-    und0 = tracked_persist(symmetrize(edges, src, dst))
+    und = tracked_persist(symmetrize(edges, src, dst))
     labels = tracked_persist(
-        und0.select(F.col("src").alias("id"))
+        und.select(F.col("src").alias("id"))
         .distinct()
         .withColumn("label", F.col("id"))
     )
     # materialize, then right-size the edge table every round re-scans
     labels.count()
-    und = right_size_keyed(und0, "dst")
-    if und is not und0:
-        und = tracked_persist(und)
+    und = _right_sized(und, "dst")
     top1 = Window.partitionBy("id").orderBy(F.desc("c"), F.asc("label"))
     for i in range(iterations):
         nbr = (
@@ -689,8 +704,8 @@ def closeness_centrality(
     pivot closeness over a sample of sources — the standard
     approximation — while the per-round dataflow stays identical.
     """
-    und0 = tracked_persist(symmetrize(edges, src, dst).repartition("src"))
-    verts = und0.select(F.col("src").alias("id")).distinct()
+    und = tracked_persist(symmetrize(edges, src, dst).repartition("src"))
+    verts = und.select(F.col("src").alias("id")).distinct()
     start = (roots if roots is not None else verts).select("id")
     visited = tracked_persist(
         start.select(
@@ -698,29 +713,11 @@ def closeness_centrality(
         )
     )
     # materialize, then right-size the edge table every hop re-scans
-    und0.count()
-    und = right_size_keyed(und0, "src")
-    if und is not und0:
-        und = tracked_persist(und)
-    frontier = visited
-    converged = False
-    for hop in range(1, max_iter + 1):
-        neighbors = (
-            und.join(frontier.withColumnRenamed("id", "src"), "src")
-            .select("root", F.col("dst").alias("id"))
-            .distinct()
-        )
-        new_frontier = tracked_persist(
-            neighbors.join(visited, ["root", "id"], "left_anti")
-            .withColumn("hops", F.lit(hop))
-        )
-        if new_frontier.limit(1).count() == 0:
-            converged = True
-            break
-        visited = visited.union(new_frontier)
-        if hop % _CHECKPOINT_EVERY == 0:
-            visited = visited.localCheckpoint(eager=True)
-        frontier = new_frontier
+    und.count()
+    und = _right_sized(und, "src")
+    visited, converged = _frontier_walk(
+        und, visited, ["root", "id"], max_iter
+    )
     if check_convergence and not converged:
         raise ConvergenceError(
             f"closeness_centrality: multi-source BFS frontier still "
@@ -776,22 +773,17 @@ def eigenvector_centrality(
     norm — the power method has not settled on the principal
     eigenvector at this budget.
     """
-    und0 = tracked_persist(symmetrize(edges, src, dst).repartition("dst"))
+    und = tracked_persist(symmetrize(edges, src, dst).repartition("dst"))
     verts = tracked_persist(
-        und0.select(F.col("src").alias("id")).distinct()
+        und.select(F.col("src").alias("id")).distinct()
     )
     # materialize, then right-size the per-round tables (round 11)
     verts.count()
-    und = right_size_keyed(und0, "dst")
-    if und is not und0:
-        und = tracked_persist(und)
-    rs = right_size_keyed(verts, "id")
-    if rs is not verts:
-        verts = tracked_persist(rs)
-    scores = verts.withColumn("score", F.lit(1.0))
-    scores = _l2_normalize(scores, "score")
-    prev_scores = scores
-    for i in range(iterations):
+    und = _right_sized(und, "dst")
+    verts = _right_sized(verts, "id")
+    scores = _l2_normalize(verts.withColumn("score", F.lit(1.0)), "score")
+    for _ in range(iterations):
+        prev_scores = scores
         nbr_sum = (
             und.join(scores.withColumnRenamed("id", "dst"), "dst")
             .groupBy(F.col("src").alias("id"))
@@ -801,24 +793,10 @@ def eigenvector_centrality(
             "id", F.coalesce("score", F.lit(0.0)).alias("score")
         )
         scores = _l2_normalize(scores, "score")
-        if check_convergence and i == iterations - 1:
-            delta = (
-                scores.alias("cur")
-                .join(prev_scores.alias("p"), "id")
-                .agg(
-                    F.max(
-                        F.abs(F.col("cur.score") - F.col("p.score"))
-                    ).alias("d")
-                )
-                .first()["d"]
-            )
-            if delta is not None and delta > tol:
-                raise ConvergenceError(
-                    f"eigenvector_centrality: max |Δscore| = {delta:.3e} "
-                    f"> tol={tol} after {iterations} iterations — raise "
-                    "iterations"
-                )
-        prev_scores = scores
+    if check_convergence and iterations > 0:
+        _assert_settled(
+            scores, prev_scores, ["score"], tol, "eigenvector_centrality"
+        )
     return scores
 
 
@@ -841,27 +819,23 @@ def katz_centrality(
     last two iterates differ by more than ``tol`` in max norm (the
     geometric α-series was truncated short of its fixpoint).
     """
-    e0 = tracked_persist(
+    e = tracked_persist(
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         .distinct()
         .repartition("src")
     )
     verts = tracked_persist(
-        e0.select(F.col("src").alias("id"))
-        .union(e0.select(F.col("dst").alias("id")))
+        e.select(F.col("src").alias("id"))
+        .union(e.select(F.col("dst").alias("id")))
         .distinct()
     )
     # materialize, then right-size the per-round tables (round 11)
     verts.count()
-    e = right_size_keyed(e0, "src")
-    if e is not e0:
-        e = tracked_persist(e)
-    rs = right_size_keyed(verts, "id")
-    if rs is not verts:
-        verts = tracked_persist(rs)
+    e = _right_sized(e, "src")
+    verts = _right_sized(verts, "id")
     scores = verts.withColumn("score", F.lit(float(beta)))
-    prev_scores = scores
-    for i in range(iterations):
+    for _ in range(iterations):
+        prev_scores = scores
         in_sum = (
             e.join(scores.withColumnRenamed("id", "src"), "src")
             .groupBy(F.col("dst").alias("id"))
@@ -876,24 +850,8 @@ def katz_centrality(
         )
         # per-round LAZY truncation (round 11, same change as pagerank)
         scores = scores.localCheckpoint(eager=False)
-        if check_convergence and i == iterations - 1:
-            delta = (
-                scores.alias("cur")
-                .join(prev_scores.alias("p"), "id")
-                .agg(
-                    F.max(
-                        F.abs(F.col("cur.score") - F.col("p.score"))
-                    ).alias("d")
-                )
-                .first()["d"]
-            )
-            if delta is not None and delta > tol:
-                raise ConvergenceError(
-                    f"katz_centrality: max |Δscore| = {delta:.3e} > "
-                    f"tol={tol} after {iterations} iterations — raise "
-                    "iterations or lower alpha"
-                )
-        prev_scores = scores
+    if check_convergence and iterations > 0:
+        _assert_settled(scores, prev_scores, ["score"], tol, "katz_centrality")
     return scores
 
 
@@ -915,27 +873,23 @@ def hits(
     either normalized vector moved more than ``tol`` in max norm over
     the final round.
     """
-    e0 = tracked_persist(
+    e = tracked_persist(
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         .distinct()
     )
     verts = tracked_persist(
-        e0.select(F.col("src").alias("id"))
-        .union(e0.select(F.col("dst").alias("id")))
+        e.select(F.col("src").alias("id"))
+        .union(e.select(F.col("dst").alias("id")))
         .distinct()
     )
     # materialize, then right-size the per-round tables (round 11)
     verts.count()
-    e = right_size_keyed(e0, "src")
-    if e is not e0:
-        e = tracked_persist(e)
-    rs = right_size_keyed(verts, "id")
-    if rs is not verts:
-        verts = tracked_persist(rs)
+    e = _right_sized(e, "src")
+    verts = _right_sized(verts, "id")
     hubs = verts.withColumn("hub", F.lit(1.0))
     auths = verts.withColumn("authority", F.lit(1.0))
-    prev_hubs, prev_auths = hubs, auths
-    for i in range(iterations):
+    for _ in range(iterations):
+        prev_hubs, prev_auths = hubs, auths
         auth_sum = (
             e.join(hubs.withColumnRenamed("id", "src"), "src")
             .groupBy(F.col("dst").alias("id"))
@@ -956,28 +910,15 @@ def hits(
         hubs = _l2_normalize(hubs, "hub")
         # _l2_normalize already lazily truncates both vectors every
         # half-step — a dedicated eager checkpoint would only add jobs
-        if check_convergence and i == iterations - 1:
-            delta = (
-                auths.alias("ca")
-                .join(prev_auths.alias("pa"), "id")
-                .join(hubs.alias("ch"), "id")
-                .join(prev_hubs.alias("ph"), "id")
-                .agg(
-                    F.max(
-                        F.greatest(
-                            F.abs(F.col("ca.authority") - F.col("pa.authority")),
-                            F.abs(F.col("ch.hub") - F.col("ph.hub")),
-                        )
-                    ).alias("d")
-                )
-                .first()["d"]
-            )
-            if delta is not None and delta > tol:
-                raise ConvergenceError(
-                    f"hits: max |Δscore| = {delta:.3e} > tol={tol} after "
-                    f"{iterations} iterations — raise iterations"
-                )
-        prev_hubs, prev_auths = hubs, auths
+    if check_convergence and iterations > 0:
+        # both vectors in one join, so the certificate stays one action
+        _assert_settled(
+            auths.join(hubs, "id"),
+            prev_auths.join(prev_hubs, "id"),
+            ["authority", "hub"],
+            tol,
+            "hits",
+        )
     return auths.join(hubs, "id")
 
 
@@ -1007,7 +948,7 @@ def shortest_paths(
     :class:`ConvergenceError` if the final round still relaxed any
     vertex.
     """
-    e0 = tracked_persist(
+    e = tracked_persist(
         edges.select(
             F.col(src).alias("src"),
             F.col(dst).alias("dst"),
@@ -1016,18 +957,14 @@ def shortest_paths(
         .repartition("src")
     )
     verts = tracked_persist(
-        e0.select(F.col("src").alias("id"))
-        .union(e0.select(F.col("dst").alias("id")))
+        e.select(F.col("src").alias("id"))
+        .union(e.select(F.col("dst").alias("id")))
         .distinct()
     )
     # materialize, then right-size the per-round tables (round 11)
     verts.count()
-    e = right_size_keyed(e0, "src")
-    if e is not e0:
-        e = tracked_persist(e)
-    rs = right_size_keyed(verts, "id")
-    if rs is not verts:
-        verts = tracked_persist(rs)
+    e = _right_sized(e, "src")
+    verts = _right_sized(verts, "id")
     dist = verts.withColumn(
         "dist",
         F.when(F.col("id") == F.lit(source), F.lit(0).cast("long")).otherwise(
@@ -1110,7 +1047,9 @@ def _directed_reach(edges: DataFrame, max_iter: int) -> DataFrame:
     """All-pairs directed reachability (root, id) via multi-source
     frontier expansion — every vertex's frontier advances together, one
     join + one anti-join per round."""
-    e = edges.select("src", "dst").distinct().repartition("src").persist()
+    e = tracked_persist(
+        edges.select("src", "dst").distinct().repartition("src")
+    )
     verts = (
         e.select(F.col("src").alias("id"))
         .union(e.select(F.col("dst").alias("id")))
@@ -1119,25 +1058,7 @@ def _directed_reach(edges: DataFrame, max_iter: int) -> DataFrame:
     visited = verts.select(F.col("id").alias("root"), "id").localCheckpoint(
         eager=True
     )
-    frontier = visited
-    for _hop in range(1, max_iter + 1):
-        neighbors = (
-            e.join(frontier.withColumnRenamed("id", "src"), "src")
-            .select("root", F.col("dst").alias("id"))
-            .distinct()
-        )
-        # Truncate lineage EVERY hop, on the frontier as well as the
-        # visited set: new_frontier's plan references frontier AND
-        # visited, so without per-hop cuts the logical plan triples per
-        # round and the driver OOMs building plan strings long before
-        # the data is large (seen at 15 vertices).
-        new_frontier = neighbors.join(
-            visited, ["root", "id"], "left_anti"
-        ).localCheckpoint(eager=True)
-        if new_frontier.limit(1).count() == 0:
-            break
-        visited = visited.union(new_frontier).localCheckpoint(eager=True)
-        frontier = new_frontier
+    visited, _ = _frontier_walk(e, visited, ["root", "id"], max_iter)
     e.unpersist()
     return visited
 
@@ -1298,25 +1219,9 @@ def strongly_connected_components(
         visited = colors.filter(F.col("color") == F.col("id")).select(
             F.col("id").alias("root"), "id"
         ).localCheckpoint(eager=True)
-        frontier = visited
-        collect_fixpoint = False
-        for _ in range(max_iter):
-            nxt = (
-                ce.join(
-                    frontier.select("root", F.col("id").alias("src")),
-                    ["root", "src"],
-                )
-                .select("root", F.col("dst").alias("id"))
-                .distinct()
-            )
-            new_f = nxt.join(visited, ["root", "id"], "left_anti").localCheckpoint(
-                eager=True
-            )
-            if new_f.limit(1).count() == 0:
-                collect_fixpoint = True
-                break
-            visited = visited.union(new_f).localCheckpoint(eager=True)
-            frontier = new_f
+        visited, collect_fixpoint = _frontier_walk(
+            ce, visited, ["root", "id"], max_iter
+        )
         if not collect_fixpoint:
             truncated.append(f"backward collect (outer round {_outer + 1})")
         scc = visited.select("id", F.col("root").alias("component"))
@@ -1369,7 +1274,7 @@ def betweenness_centrality(
     is inherently all-pairs — at 100 TB scale feed a sampled root set
     (same dataflow, unbiased estimator) the way closeness does.
     """
-    und = symmetrize(edges, src, dst).repartition("src").persist()
+    und = tracked_persist(symmetrize(edges, src, dst).repartition("src"))
     verts = und.select(F.col("src").alias("id")).distinct()
     # forward phase: (root, id, hops, sigma)
     visited = tracked_persist(
@@ -1473,12 +1378,14 @@ def louvain(
     dataflow as label_propagation, so it scales to edge sets that only
     fit shuffled. Returns (id, community).
     """
-    und = symmetrize(edges, src, dst).repartition("src").persist()
+    und = tracked_persist(symmetrize(edges, src, dst).repartition("src"))
     m2 = float(und.count())  # 2m: each undirected pair counted twice
-    deg = und.groupBy(F.col("src").alias("id")).agg(
-        F.count(F.lit(1)).alias("k_v")
-    ).persist()
-    labels = deg.select("id", F.col("id").alias("community")).persist()
+    deg = tracked_persist(
+        und.groupBy(F.col("src").alias("id")).agg(
+            F.count(F.lit(1)).alias("k_v")
+        )
+    )
+    labels = tracked_persist(deg.select("id", F.col("id").alias("community")))
     top1 = Window.partitionBy("id").orderBy(F.desc("score"), F.asc("community"))
     for r in range(iterations):
         tot = (
@@ -1936,57 +1843,15 @@ def weighted_pagerank(
         )
         .repartition("src")
     )
-    verts = tracked_persist(
-        e.select(F.col("src").alias("id"))
-        .union(e.select(F.col("dst").alias("id")))
-        .distinct()
+    return _rank_walk(
+        e,
+        init=lambda n: F.lit(1.0 / n),
+        update=lambda n, in_mass, _: (
+            F.lit((1.0 - damping) / n) + F.lit(damping) * in_mass
+        ),
+        iterations=iterations,
+        check_convergence=check_convergence,
+        tol=tol,
+        what="weighted_pagerank",
+        dangling=False,
     )
-    n = verts.count()
-    # materialized now — right-size the per-round tables (round 11)
-    rs = right_size_keyed(verts, "id")
-    if rs is not verts:
-        verts = tracked_persist(rs)
-    outw = tracked_persist(
-        e.groupBy("src").agg(F.sum("w").alias("wout"))
-    )
-    # loop-invariant edges ⋈ out-weight hoisted (round 11, same change
-    # as pagerank — the rank·w/wout arithmetic stays inside the loop)
-    ew = tracked_persist(right_size_keyed(e.join(outw, "src"), "src"))
-    ranks = verts.withColumn("rank", F.lit(1.0 / n))
-    prev_ranks = ranks
-    for i in range(iterations):
-        contribs = (
-            ew.join(ranks.withColumnRenamed("id", "src"), "src")
-            .select(
-                "dst",
-                (F.col("rank") * F.col("w") / F.col("wout")).alias("contrib"),
-            )
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum("contrib").alias("in_mass"))
-        )
-        ranks = verts.join(contribs, "id", "left").select(
-            "id",
-            (
-                F.lit((1.0 - damping) / n)
-                + F.lit(damping) * F.coalesce("in_mass", F.lit(0.0))
-            ).alias("rank"),
-        )
-        # per-round LAZY truncation (round 11, same change as pagerank)
-        ranks = ranks.localCheckpoint(eager=False)
-        if check_convergence and i == iterations - 1:
-            delta = (
-                ranks.alias("cur")
-                .join(prev_ranks.alias("p"), "id")
-                .agg(
-                    F.max(F.abs(F.col("cur.rank") - F.col("p.rank"))).alias("d")
-                )
-                .first()["d"]
-            )
-            if delta is not None and delta > tol:
-                raise ConvergenceError(
-                    f"weighted_pagerank: max |Δrank| = {delta:.3e} > "
-                    f"tol={tol} after {iterations} iterations — raise "
-                    "iterations"
-                )
-        prev_ranks = ranks
-    return ranks

@@ -25,6 +25,7 @@ from pandrs_spark.operators.util import tracked_persist
 from pandrs_spark.catalog import load_table as T
 from pandrs_spark.functions.deterministic import sql_quantize
 from pandrs_spark.operators.graph import (
+    _frontier_walk,
     bfs_hops,
     connected_components,
     degrees,
@@ -1367,38 +1368,14 @@ def q515(spark, sf_dir):
     """,
 )
 def q516(spark, sf_dir):
-    from pandrs_spark.operators.graph import closeness_centrality
-
-    # closeness_centrality's visited state is (root, id, hops); rebuild
-    # the per-root max from the same frontier walk by asking for the
-    # raw reach: reuse the operator's BFS via roots=all and recompute
-    # ecc from a second pass over the strong graph.
     strong = _strong_edges(spark, sf_dir)
     und = tracked_persist(symmetrize(strong))
-    spark_ = und.sparkSession
-    from pandrs_spark.operators.graph import bfs_hops  # noqa: F401
-
     # multi-source BFS over all roots at once (the q112 dataflow)
     verts = und.select(F.col("src").alias("id")).distinct()
     visited = tracked_persist(
         verts.select(F.col("id").alias("root"), "id", F.lit(0).alias("hops"))
     )
-    frontier = visited
-    for hop in range(1, 21):
-        neighbors = (
-            und.join(frontier.withColumnRenamed("id", "src"), "src")
-            .select("root", F.col("dst").alias("id"))
-            .distinct()
-        )
-        new_frontier = tracked_persist(
-            neighbors.join(visited, ["root", "id"], "left_anti").withColumn(
-                "hops", F.lit(hop)
-            )
-        )
-        if new_frontier.limit(1).count() == 0:
-            break
-        visited = visited.union(new_frontier).localCheckpoint(eager=True)
-        frontier = new_frontier
+    visited, _ = _frontier_walk(und, visited, ["root", "id"], 20)
     ecc = visited.groupBy("root").agg(F.max("hops").cast("long").alias("ecc"))
     radius = ecc.agg(F.min("ecc").alias("r"))
     return (
@@ -1997,11 +1974,11 @@ def q613(spark, sf_dir):
 # efficiency of the strong trade graph — W = Σ_{i<j} d_ij, L = mean
 # d_ij, E_glob = mean 1/d_ij: the distance-tier summary on top of
 # q516's eccentricity readout (same BFS state, different reductions).
-# EAGER actions at plan-build time, by design: the BFS frontier loop
+# EAGER actions at plan-build time, by design: the shared frontier walk
 # runs one limit(1).count() job per hop (early-exit certificate — the
-# iteration count is a data property, not a plan property) plus eager
-# localCheckpoints to truncate the growing lineage; bounded by the
-# ≤25-nation vertex set and the 20-hop cap. ------------------------------------
+# iteration count is a data property, not a plan property) and cuts
+# lineage on its own cadence; bounded by the ≤25-nation vertex set and
+# the 20-hop cap. -----------------------------------------------------------
 @query(
     "q693_wiener_efficiency",
     oracle=f"""
@@ -2041,7 +2018,6 @@ def q613(spark, sf_dir):
 )
 def q693(spark, sf_dir):
     from pandrs_spark.functions.deterministic import quantize
-    from pandrs_spark.operators.graph import symmetrize
 
     strong = _strong_edges(spark, sf_dir)
     und = tracked_persist(symmetrize(strong))
@@ -2049,22 +2025,7 @@ def q693(spark, sf_dir):
     visited = tracked_persist(
         verts.select(F.col("id").alias("root"), "id", F.lit(0).alias("hops"))
     )
-    frontier = visited
-    for hop in range(1, 21):
-        neighbors = (
-            und.join(frontier.withColumnRenamed("id", "src"), "src")
-            .select("root", F.col("dst").alias("id"))
-            .distinct()
-        )
-        new_frontier = tracked_persist(
-            neighbors.join(visited, ["root", "id"], "left_anti").withColumn(
-                "hops", F.lit(hop)
-            )
-        )
-        if new_frontier.limit(1).count() == 0:
-            break
-        visited = visited.union(new_frontier).localCheckpoint(eager=True)
-        frontier = new_frontier
+    visited, _ = _frontier_walk(und, visited, ["root", "id"], 20)
     dist = visited.where(F.col("root") != F.col("id")).select(
         F.col("hops").cast("long").alias("h")
     )
@@ -2305,7 +2266,6 @@ def q694(spark, sf_dir):
 )
 def q695(spark, sf_dir):
     from pandrs_spark.functions.deterministic import quantize
-    from pandrs_spark.operators.graph import symmetrize
 
     strong = _strong_edges(spark, sf_dir)
     und = tracked_persist(symmetrize(strong))
@@ -2343,22 +2303,7 @@ def q695(spark, sf_dir):
     visited = tracked_persist(
         verts.select(F.col("id").alias("root"), "id", F.lit(0).alias("hops"))
     )
-    frontier = visited
-    for hop in range(1, 21):
-        neighbors = (
-            und.join(frontier.withColumnRenamed("id", "src"), "src")
-            .select("root", F.col("dst").alias("id"))
-            .distinct()
-        )
-        new_frontier = tracked_persist(
-            neighbors.join(visited, ["root", "id"], "left_anti").withColumn(
-                "hops", F.lit(hop)
-            )
-        )
-        if new_frontier.limit(1).count() == 0:
-            break
-        visited = visited.union(new_frontier).localCheckpoint(eager=True)
-        frontier = new_frontier
+    visited, _ = _frontier_walk(und, visited, ["root", "id"], 20)
     lbar = (
         visited.where(F.col("root") != F.col("id"))
         .agg(
@@ -2645,24 +2590,12 @@ def q698(spark, sf_dir):
         .unionAll(strong.select(F.col("dst").alias("id")))
         .distinct()
     )
-    visited = tracked_persist(
-        verts.select(F.col("id").alias("root"), "id")
+    reach, _ = _frontier_walk(
+        strong,
+        tracked_persist(verts.select(F.col("id").alias("root"), "id")),
+        ["root", "id"],
+        25,
     )
-    frontier = visited
-    for _ in range(1, 26):
-        neighbors = (
-            strong.join(frontier.withColumnRenamed("id", "src"), "src")
-            .select("root", F.col("dst").alias("id"))
-            .distinct()
-        )
-        new_frontier = tracked_persist(
-            neighbors.join(visited, ["root", "id"], "left_anti")
-        )
-        if new_frontier.limit(1).count() == 0:
-            break
-        visited = visited.union(new_frontier).localCheckpoint(eager=True)
-        frontier = new_frontier
-    reach = visited
     back = reach.select(
         F.col("root").alias("id"), F.col("id").alias("root")
     )

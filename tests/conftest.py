@@ -25,16 +25,20 @@ def spark():
     # parallelize: same pickle path, same schema inference and
     # verification, same row order (monotonically_increasing_id stays
     # ascending), one Python eval per action. Measured: trivial frame
-    # asserts 5 s -> 0.2 s. Test-session-only; library call sites use
-    # operators.util.small_local_df for the same reason.
+    # asserts 5 s -> 0.2 s. Test-session-only: library call sites still
+    # build their small local frames with a plain createDataFrame(list).
+    # A call that asks for schema sampling keeps the list, because a
+    # parallelized input would change how much of it is sampled.
     from pyspark.sql import SparkSession
 
     orig_create = SparkSession.createDataFrame
 
-    def _one_slice_create(self, data, schema=None, **kw):
-        if isinstance(data, (list, tuple)) and data and not kw:
+    def _one_slice_create(
+        self, data, schema=None, samplingRatio=None, verifySchema=True
+    ):
+        if isinstance(data, (list, tuple)) and data and samplingRatio is None:
             data = self.sparkContext.parallelize(data, 1)
-        return orig_create(self, data, schema, **kw)
+        return orig_create(self, data, schema, samplingRatio, verifySchema)
 
     SparkSession.createDataFrame = _one_slice_create
     yield s

@@ -10,12 +10,22 @@ from __future__ import annotations
 
 import pytest
 
+from pyspark.sql import functions as F
+
 from pandrs_spark.operators.graph import (
     ConvergenceError,
+    bfs_hops,
+    closeness_centrality,
     connected_components,
+    eigenvector_centrality,
+    hits,
+    katz_centrality,
     label_propagation,
     pagerank,
+    personalized_pagerank,
+    shortest_paths,
     strongly_connected_components,
+    weighted_pagerank,
 )
 
 
@@ -140,3 +150,161 @@ def test_kcore_convergence_certificate(spark):
     )
     out = kcore(tri, k=2, n_iter=2, check_convergence=True).collect()
     assert len(out) == 3
+
+
+def _star(spark):
+    # hub 0 <-> leaves 1..7: the first round moves every score a lot
+    return spark.createDataFrame(
+        [(0, i) for i in range(1, 8)] + [(i, 0) for i in range(1, 8)],
+        "src bigint, dst bigint",
+    )
+
+
+def _sym_triangle(spark, weighted=False):
+    rows = [(1, 2), (2, 3), (3, 1), (2, 1), (3, 2), (1, 3)]
+    if weighted:
+        return spark.createDataFrame(
+            [(s, d, 2.0) for s, d in rows], "src bigint, dst bigint, weight double"
+        )
+    return spark.createDataFrame(rows, "src bigint, dst bigint")
+
+
+def test_bfs_hops_raises_when_frontier_outlives_budget(spark):
+    with pytest.raises(ConvergenceError, match="bfs_hops"):
+        bfs_hops(_path_graph(spark, 6), [0], max_iter=2, check_convergence=True)
+
+
+def test_bfs_hops_certificate_silent_on_fixpoint(spark):
+    hops = {
+        r["id"]: r["hops"]
+        for r in bfs_hops(
+            _path_graph(spark, 3), [0], max_iter=5, check_convergence=True
+        ).collect()
+    }
+    assert hops == {0: 0, 1: 1, 2: 2, 3: 3}
+
+
+def test_closeness_raises_when_frontier_outlives_budget(spark):
+    with pytest.raises(ConvergenceError, match="closeness_centrality"):
+        closeness_centrality(
+            _path_graph(spark, 4), max_iter=1, check_convergence=True
+        )
+
+
+def test_closeness_certificate_silent_on_fixpoint(spark):
+    rows = closeness_centrality(
+        _sym_triangle(spark), max_iter=3, check_convergence=True
+    ).collect()
+    assert {r["id"]: r["closeness"] for r in rows} == {1: 1.0, 2: 1.0, 3: 1.0}
+
+
+def _costed_path(spark):
+    # 0 -> 1 -> 2 -> 3 at cost 1 each, plus a costly 0 -> 3 shortcut
+    return spark.createDataFrame(
+        [(0, 1, 1), (1, 2, 1), (2, 3, 1), (0, 3, 9)],
+        "src bigint, dst bigint, cost bigint",
+    )
+
+
+def test_shortest_paths_raises_while_still_relaxing(spark):
+    with pytest.raises(ConvergenceError, match="shortest_paths"):
+        shortest_paths(_costed_path(spark), 0, iterations=1, check_convergence=True)
+
+
+def test_shortest_paths_certificate_silent_on_fixpoint(spark):
+    dist = {
+        r["id"]: r["dist"]
+        for r in shortest_paths(
+            _costed_path(spark), 0, iterations=5, check_convergence=True
+        ).collect()
+    }
+    assert dist == {0: 0, 1: 1, 2: 2, 3: 3}
+
+
+def test_katz_raises_below_tol_budget(spark):
+    e = spark.createDataFrame([(1, 2)], "src bigint, dst bigint")
+    with pytest.raises(ConvergenceError, match="katz_centrality"):
+        katz_centrality(e, iterations=1, check_convergence=True, tol=1e-9)
+
+
+def test_katz_certificate_silent_at_fixpoint(spark):
+    # one edge: the alpha-series is exact after two rounds (A² = 0)
+    e = spark.createDataFrame([(1, 2)], "src bigint, dst bigint")
+    scores = {
+        r["id"]: r["score"]
+        for r in katz_centrality(
+            e, iterations=3, check_convergence=True, tol=1e-9
+        ).collect()
+    }
+    assert scores[1] == pytest.approx(1.0) and scores[2] == pytest.approx(1.1)
+
+
+def test_hits_raises_below_tol_budget(spark):
+    e = spark.createDataFrame([(1, 2)], "src bigint, dst bigint")
+    with pytest.raises(ConvergenceError, match="hits"):
+        hits(e, iterations=1, check_convergence=True, tol=1e-9)
+
+
+def test_hits_certificate_silent_at_fixpoint(spark):
+    # one edge: 1 is the pure hub and 2 the pure authority from round 1
+    e = spark.createDataFrame([(1, 2)], "src bigint, dst bigint")
+    rows = {
+        r["id"]: (r["authority"], r["hub"])
+        for r in hits(e, iterations=3, check_convergence=True, tol=1e-9).collect()
+    }
+    assert rows == {1: (0.0, 1.0), 2: (1.0, 0.0)}
+
+
+def test_eigenvector_raises_below_tol_budget(spark):
+    with pytest.raises(ConvergenceError, match="eigenvector_centrality"):
+        eigenvector_centrality(
+            _star(spark), iterations=1, check_convergence=True, tol=1e-9
+        )
+
+
+def test_eigenvector_certificate_silent_at_fixpoint(spark):
+    # symmetric triangle: the uniform start IS the principal eigenvector
+    scores = eigenvector_centrality(
+        _sym_triangle(spark), iterations=2, check_convergence=True, tol=1e-9
+    ).collect()
+    for r in scores:
+        assert r["score"] == pytest.approx(3 ** -0.5, abs=1e-9)
+
+
+def test_personalized_pagerank_raises_below_tol_budget(spark):
+    with pytest.raises(ConvergenceError, match="personalized_pagerank"):
+        personalized_pagerank(
+            _star(spark), 0, iterations=1, check_convergence=True, tol=1e-9
+        )
+
+
+def test_personalized_pagerank_certificate_silent_when_converged(spark):
+    # restart 0.9 contracts the error tenfold per round: 10 rounds
+    # settle far below tol
+    ranks = personalized_pagerank(
+        _sym_triangle(spark),
+        1,
+        restart=0.9,
+        iterations=10,
+        check_convergence=True,
+        tol=1e-6,
+    ).collect()
+    assert sum(r["rank"] for r in ranks) == pytest.approx(1.0, abs=1e-9)
+
+
+def test_weighted_pagerank_raises_below_tol_budget(spark):
+    e = _star(spark).withColumn("weight", F.col("src") + F.col("dst"))
+    with pytest.raises(ConvergenceError, match="weighted_pagerank"):
+        weighted_pagerank(e, iterations=1, check_convergence=True, tol=1e-9)
+
+
+def test_weighted_pagerank_certificate_silent_when_converged(spark):
+    # equal weights on a symmetric triangle: uniform is stationary
+    ranks = weighted_pagerank(
+        _sym_triangle(spark, weighted=True),
+        iterations=2,
+        check_convergence=True,
+        tol=1e-9,
+    ).collect()
+    for r in ranks:
+        assert r["rank"] == pytest.approx(1 / 3, abs=1e-9)

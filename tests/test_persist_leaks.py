@@ -59,6 +59,8 @@ def _graph_case(fn_name, *args, **kw):
         e = _edges(spark)
         if fn_name == "shortest_paths":
             e = e.withColumn("cost", (F.col("src") + F.col("dst")) % 3 + 1)
+        if fn_name == "weighted_pagerank":
+            e = e.withColumn("weight", (F.col("src") * F.col("dst")) % 4 + 1)
         return getattr(G, fn_name)(e, *args, **kw)
 
     return build
@@ -130,6 +132,8 @@ CASES = {
     "connected_components": _graph_case("connected_components"),
     "strongly_connected_components": _graph_case("strongly_connected_components"),
     "pagerank": _graph_case("pagerank", iterations=3),
+    "personalized_pagerank": _graph_case("personalized_pagerank", 1, iterations=3),
+    "weighted_pagerank": _graph_case("weighted_pagerank", iterations=3),
     "bfs_hops": _graph_case("bfs_hops", [1]),
     "triangle_count": _graph_case("triangle_count"),
     "clustering_coefficient": _graph_case("clustering_coefficient"),
@@ -141,7 +145,9 @@ CASES = {
     "shortest_paths": _graph_case("shortest_paths", 1, iterations=4),
     "betweenness_centrality": _graph_case("betweenness_centrality"),
     "louvain": _graph_case("louvain", iterations=2),
+    "louvain_no_rounds": _graph_case("louvain", iterations=0),
     "kcore": _graph_case("kcore", k=2, n_iter=4),
+    "k_truss": _graph_case("k_truss", k=3, n_iter=2),
     "dbscan_2d": _case_dbscan,
     "local_outlier_factor": _case_lof,
     "mann_whitney_u": _case_mwu,

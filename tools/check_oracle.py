@@ -144,7 +144,11 @@ def main() -> int:
                 spark.catalog.clearCache()
         if leaked:
             print(f"FAIL {name}: persisted-cache leak after release_persisted()")
-            results[name] = {"pass": False, "err": "persisted-cache leak"}
+            results[name] = {
+                "pass": False,
+                "err": "persisted-cache leak",
+                "spark_sec": spark_sec,
+            }
             n_fail += 1
             continue
         if name not in oracles:
@@ -160,7 +164,11 @@ def main() -> int:
             odf = con.execute(oracles[name]).fetchdf()
         except Exception as e:  # noqa: BLE001
             print(f"FAIL {name}: duckdb error: {e}")
-            results[name] = {"pass": False, "err": f"duckdb: {e}"[:200]}
+            results[name] = {
+                "pass": False,
+                "err": f"duckdb: {e}"[:200],
+                "spark_sec": spark_sec,
+            }
             n_fail += 1
             continue
         cs, co = canon(sdf), canon(odf)
@@ -183,7 +191,11 @@ def main() -> int:
             problems.append("values: " + "; ".join(diff_cols[:4]))
         if problems:
             print(f"FAIL {name}: " + " | ".join(problems))
-            results[name] = {"pass": False, "err": " | ".join(problems)[:200]}
+            results[name] = {
+                "pass": False,
+                "err": " | ".join(problems)[:200],
+                "spark_sec": spark_sec,
+            }
             n_fail += 1
         else:
             print(f"PASS {name} ({len(cs)} rows, {time.time()-t0:.1f}s)")

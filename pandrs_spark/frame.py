@@ -29,23 +29,28 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, FloatType
 
+from pandrs_spark.operators.util import small_local_df
+from pandrs_spark.operators.windows import global_row_number
+
 ORDER_COL = "__row_order__"
 
 __all__ = ["Frame", "StrAccessor", "DtAccessor", "str_", "dt", "read_parquet", "read_csv", "read_json", "concat", "concat_columns", "from_spark", "release_persisted"]
 
-# DataFrames persisted by _attach_global_positions. The persist must
-# outlive the call (the downstream lazy plan depends on the pinned
-# partition layout), so the handles are registered here and released in
-# bulk once the caller has materialized its results — bench.py calls
-# this between queries and the test session releases on teardown.
+# DataFrames persisted by operators.util.tracked_persist. The persist
+# must outlive the call (the downstream lazy plan depends on it, e.g. on
+# a pinned partition layout), so the handles are registered here and
+# released in bulk once the caller has materialized its results —
+# bench.py calls this between queries and the test session releases on
+# teardown.
 _PERSISTED: list[DataFrame] = []
 
 
 def release_persisted() -> int:
-    """Unpersist every frame cached by global-position sorts.
+    """Unpersist every frame registered by ``tracked_persist``.
 
-    Call after the plans built from sort_values()/concat_columns()
-    results have been materialized; returns the number released.
+    Call after the plans built from those frames (sort_values(),
+    concat_columns() results, ...) have been materialized; returns the
+    number released.
     """
     n = len(_PERSISTED)
     for cached in _PERSISTED:
@@ -66,38 +71,6 @@ def _missing(df: DataFrame, name: str) -> Column:
     if _is_float(df, name):
         return c.isNull() | F.isnan(c)
     return c.isNull()
-
-
-def _attach_global_positions(df: DataFrame, order_exprs: list, out_col: str) -> DataFrame:
-    """Dense 1..n global position under ``order_exprs`` — the DataFrame
-    analogue of RDD.zipWithIndex: range-sort keeps every core busy,
-    per-partition row_number stays parallel, and a tiny collected
-    count-per-partition map supplies the global offsets. No
-    single-partition Window.orderBy at any point.
-
-    Persists the sorted frame so the offset job and the downstream plan
-    see the SAME partition layout (spark_partition_id is only stable on
-    a materialized partitioning).
-    """
-    from pyspark import StorageLevel
-
-    sdf = df.orderBy(*order_exprs).withColumn("__pid__", F.spark_partition_id())
-    sdf = sdf.persist(StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED.append(sdf)
-    counts = sdf.groupBy("__pid__").count().collect()
-    pairs: list = []
-    acc = 0
-    for row in sorted(counts, key=lambda r: r["__pid__"]):
-        pairs += [F.lit(row["__pid__"]), F.lit(acc)]
-        acc += row["count"]
-    if not pairs:
-        return sdf.drop("__pid__").withColumn(out_col, F.lit(None).cast("long"))
-    offset = F.create_map(*pairs)[F.col("__pid__")]
-    w = Window.partitionBy("__pid__").orderBy(*order_exprs)
-    return (
-        sdf.withColumn(out_col, (offset + F.row_number().over(w)).cast("long"))
-        .drop("__pid__")
-    )
 
 
 class Frame:
@@ -243,8 +216,8 @@ class Frame:
         unknown = {c for _, c in pairs} - set(value_cols)
         if unknown:
             raise KeyError(f"lookup: unknown column(s) {sorted(unknown)}")
-        spec = spark.createDataFrame(
-            [(k, c) for k, c in pairs], f"__key__ {self._df.schema[key_col].dataType.simpleString()}, __col__ string"
+        spec = small_local_df(
+            spark, [(k, c) for k, c in pairs], f"__key__ {self._df.schema[key_col].dataType.simpleString()}, __col__ string"
         )
         # The CASE branches must share one type; keep the native type when
         # all requested columns agree, otherwise fall back to string.
@@ -683,7 +656,7 @@ class Frame:
         # Re-derive the order column so downstream order-dependent ops
         # (head/shift/dedup) follow the new ordering — partition-offset
         # scheme, never a single-partition Window.orderBy.
-        df = _attach_global_positions(
+        df = global_row_number(
             self._df, [*order, F.col(self._order)], self._order
         )
         return self._wrap(df)
@@ -1313,19 +1286,18 @@ def concat_columns(frames: Sequence[Frame]) -> Frame:
     positional alignment via each frame's row order.
 
     Scale shape: each side gets a dense 1..n global position from the
-    partition-offset scheme (``_attach_global_positions`` — range-sort
-    + per-partition row_number + a tiny collected offset map; the same
-    primitive as ``global_row_number``, no single-partition window or
-    zipWithIndex anywhere). The equi-join on ``__pos__`` is then the
-    minimal data movement positional alignment admits — rows with the
-    same position MUST be co-located once, and Spark hashes both sides
-    by the join key in one shuffle each. Frames of unequal length
+    partition-offset scheme (``global_row_number`` — range-sort +
+    per-partition row_number + a tiny collected offset map; no
+    single-partition window or zipWithIndex anywhere). The equi-join on
+    ``__pos__`` is then the minimal data movement positional alignment
+    admits — rows with the same position MUST be co-located once, and
+    Spark hashes both sides by the join key in one shuffle each. Frames of unequal length
     outer-join to NULLs, as pandas aligns missing labels to NaN. The
     result keeps ``__pos__`` as its hidden order column, so downstream
     sorts/exports preserve positional row order."""
     out = None
     for f in frames:
-        numbered = _attach_global_positions(
+        numbered = global_row_number(
             f._df, [F.col(f._order)], "__pos__"
         ).drop(f._order)
         out = numbered if out is None else out.join(numbered, "__pos__", "outer")

@@ -41,7 +41,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from pandrs_spark.operators.util import right_size_keyed, tracked_persist
+from pandrs_spark.operators.util import right_size_keyed, small_local_df, tracked_persist
 
 __all__ = [
     "ConvergenceError",
@@ -495,8 +495,8 @@ def bfs_hops(
     und = tracked_persist(symmetrize(edges, src, dst).repartition("src"))
     spark = edges.sparkSession
     visited = tracked_persist(
-        spark.createDataFrame(
-            [(int(i), 0) for i in start_ids], "id bigint, hops int"
+        small_local_df(
+            spark, [(int(i), 0) for i in start_ids], "id bigint, hops int"
         )
     )
     # materialize, then right-size the edge table every hop re-scans
@@ -1741,7 +1741,7 @@ def rich_club_coefficient(
         F.count(F.lit(1)).alias("deg")
     )
     spark = edges.sparkSession
-    kdf = spark.createDataFrame([(int(k),) for k in ks], "k int")
+    kdf = small_local_df(spark, [(int(k),) for k in ks], "k int")
     rich = F.broadcast(kdf).join(
         deg, deg.deg > F.col("k")
     ).select("k", "id")

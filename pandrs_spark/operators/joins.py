@@ -19,6 +19,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from pandrs_spark.operators.util import small_local_df
+
 __all__ = [
     "merge",
     "semi_join",
@@ -557,7 +559,7 @@ def auto_salted_join(
     # cold, where outer joins preserve them — row-identical to the
     # plain join.
     hot_df = F.broadcast(
-        left.sparkSession.createDataFrame(hot, left.select(*keys).schema)
+        small_local_df(left.sparkSession, hot, left.select(*keys).schema)
     )
     cold = left.join(hot_df, keys, "left_anti").join(
         right.join(hot_df, keys, "left_anti"), keys, how

@@ -20,7 +20,7 @@ Two tiers, chosen by what determinism allows:
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
-from pandrs_spark.operators.util import fan_out, right_size_keyed, tracked_persist
+from pandrs_spark.operators.util import fan_out, right_size_keyed, small_local_df, tracked_persist
 from pyspark.sql import functions as F
 
 from pandrs_spark.functions.deterministic import dsum
@@ -328,8 +328,8 @@ def logistic_fit_metrics(
         F.count(F.lit(1)).alias("n"),
         F.avg((F.col("prediction") == F.col(label_col)).cast("double")).alias("acc"),
     ).first()
-    return spark.createDataFrame(
-        [(acc_row["n"], round(acc_row["acc"], 4), round(auc, 4))],
+    return small_local_df(
+        spark, [(acc_row["n"], round(acc_row["acc"], 4), round(auc, 4))],
         "n bigint, accuracy double, auc double",
     )
 
@@ -548,8 +548,8 @@ def kfold_cv_metrics(
     mean_acc = round(sum(r[2] for r in rows) / k, 4)
     rows.append((-1, sum(r[1] for r in rows), mean_acc))
     spark = df.sparkSession
-    return spark.createDataFrame(
-        rows, "fold int, n_test bigint, accuracy double"
+    return small_local_df(
+        spark, rows, "fold int, n_test bigint, accuracy double"
     ).orderBy("fold")
 
 
@@ -1197,8 +1197,8 @@ def auto_model_select(
     feat.unpersist()
     results.sort(key=lambda t: (-t[1], t[0]))
     spark = df.sparkSession
-    return spark.createDataFrame(
-        [(n, a, i + 1) for i, (n, a) in enumerate(results)],
+    return small_local_df(
+        spark, [(n, a, i + 1) for i, (n, a) in enumerate(results)],
         "model string, mean_accuracy double, rank int",
     )
 
@@ -1420,8 +1420,8 @@ def tsne_project(
         (ids[i], round(float(Y[i, 0]), 6), round(float(Y[i, 1]), 6))
         for i in range(n)
     ]
-    return df.sparkSession.createDataFrame(
-        out, f"{id_col} long, ts_x double, ts_y double"
+    return small_local_df(
+        df.sparkSession, out, f"{id_col} long, ts_x double, ts_y double"
     )
 
 
@@ -1576,7 +1576,8 @@ def isotonic_fit_metrics(
         (F.avg(F.col("__y__") ** 2) - F.avg("__y__") ** 2).alias("mse_const"),
     ).first()
     spark = df.sparkSession
-    return spark.createDataFrame(
+    return small_local_df(
+        spark,
         [
             (
                 int(row["n"]),
@@ -1711,8 +1712,8 @@ def em_gmm_1d(
 
     sqrt2pi = 2.5066282746310002
     spark = df.sparkSession
-    params = spark.createDataFrame(
-        [init], "mu1 double, s1 double, mu2 double, s2 double, pi double"
+    params = small_local_df(
+        spark, [init], "mu1 double, s1 double, mu2 double, s2 double, pi double"
     )
     vals = df.select(F.col(value_col).cast("double").alias("x"))
     for _ in range(n_iter):

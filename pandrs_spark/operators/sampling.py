@@ -126,9 +126,9 @@ def weighted_sample(
     w = F.col(weight_col) if isinstance(weight_col, str) else weight_col
     u = _uniform01(*key_cols)
     key = F.round(F.pow(u, 1.0 / w.cast("double")), 12)
-    scored = df.withColumn("__es_key__", key).filter(
-        w.cast("double") > 0
-    )
+    # filter BEFORE the key: over a LocalRelation the optimizer folds the
+    # projection eagerly, so 1/w would raise on a zero weight under ANSI
+    scored = df.filter(w.cast("double") > 0).withColumn("__es_key__", key)
     order = [F.col("__es_key__").desc()] + [F.col(c).asc() for c in key_cols]
     if group_by:
         win = Window.partitionBy(*group_by).orderBy(*order)
@@ -236,12 +236,12 @@ def dsir_importance_weights(
     """
     from pyspark import StorageLevel
 
-    from pandrs_spark.frame import _PERSISTED
     from pandrs_spark.functions.deterministic import dsum
     from pandrs_spark.operators.text import fan_out, tokens
+    from pandrs_spark.operators.util import tracked_persist
 
     b = int(n_buckets)
-    tok = (
+    tok = tracked_persist(
         fan_out(docs)
         .select(
             F.col(id_col),
@@ -258,10 +258,9 @@ def dsir_importance_weights(
                 ),
                 F.lit(b),
             ).alias("__b__"),
-        )
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        ),
+        StorageLevel.MEMORY_AND_DISK,
     )
-    _PERSISTED.append(tok)
     feat = tok.groupBy("__b__").agg(
         F.sum(F.when(F.col("__t__"), 1).otherwise(0)).alias("__ct__"),
         F.count(F.lit(1)).alias("__cr__"),

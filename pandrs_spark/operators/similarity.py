@@ -176,8 +176,12 @@ def nearest_neighbors(
 
 def _hyperplanes(n_tables: int, n_planes: int, dim: int, seed: int) -> list[list[list[float]]]:
     """Seeded random hyperplanes: n_tables independent banks of
-    n_planes vectors. Deterministic across runs/cluster sizes."""
+    n_planes vectors. Deterministic across runs/cluster sizes. Bucket
+    ids pack one bit per plane into an int32, so at most 31 planes."""
     import numpy as np
+
+    if n_planes > 31:
+        raise ValueError(f"n_planes={n_planes} > 31 wraps the int32 bucket id")
 
     rng = np.random.RandomState(seed)
     return rng.randn(n_tables, n_planes, dim).round(6).tolist()
@@ -237,37 +241,15 @@ def lsh_bucket_array(vec_col: str, banks: list[list[list[float]]]) -> Column:
 def _bucket_array_expr(vec_ref: str, banks_ref: str) -> str:
     """The shared all-tables bucket expression over two SQL references
     (a vector column and an array<array<array<double>>> of banks) —
-    the single source of the fold arithmetic for both the inline-literal
-    (:func:`lsh_bucket_array`) and broadcast-banks
-    (:func:`lsh_bucket_explode`) forms."""
+    the single source of the fold arithmetic for the inline-literal
+    (:func:`lsh_bucket_array`) form and for the broadcast-banks form
+    that tests/test_similarity.py certifies :func:`lsh_bucket_explode`
+    against."""
     return (
         f"transform({banks_ref}, tb -> aggregate(sequence(0, size(tb) - 1), 0, "
         f"(acc, i) -> acc + IF(aggregate(zip_with({vec_ref}, tb[i], "
         f"(x, y) -> x * y), CAST(0.0 AS DOUBLE), (a2, x2) -> a2 + x2) "
         f">= CAST(0.0 AS DOUBLE), shiftleft(1, i), 0)))"
-    )
-
-
-def _lsh_bucket_explode_expr(
-    df: DataFrame,
-    vec_col: str,
-    banks: list[list[list[float]]],
-    *keep: str,
-) -> DataFrame:
-    """Pure-JVM fold-expression form of :func:`lsh_bucket_explode`
-    (round 11): the plane banks attached as a ONE-ROW broadcast frame,
-    buckets computed by the interpreted array-HOF fold
-    (:func:`_bucket_array_expr`). Kept as the arithmetic reference the
-    Arrow fast path is certified against (tests/test_similarity.py
-    pins row-level equality of the two forms, including the
-    null/ragged/NaN edge semantics)."""
-    spark = df.sparkSession
-    banks_df = spark.createDataFrame(
-        [(banks,)], "__banks__ array<array<array<double>>>"
-    )
-    bucket_arr = F.expr(_bucket_array_expr(vec_col, "__banks__"))
-    return df.crossJoin(F.broadcast(banks_df)).select(
-        *keep, F.posexplode(bucket_arr).alias("t", "bucket")
     )
 
 
@@ -322,6 +304,8 @@ def lsh_bucket_explode(
 
     n_tables = len(banks)
     n_planes = len(banks[0]) if n_tables else 0
+    if n_planes > 31:
+        raise ValueError(f"n_planes={n_planes} > 31 wraps the int32 bucket id")
     dim = len(banks[0][0]) if n_planes else 0
     sel = df.select(*keep, vec_col)
     out_schema = StructType(

@@ -50,7 +50,7 @@ STOPWORDS: dict[str, tuple[str, ...]] = {
 }
 
 
-from pandrs_spark.operators.util import fan_out  # noqa: E402 — re-export
+from pandrs_spark.operators.util import fan_out, tracked_persist  # noqa: E402 — fan_out is re-exported
 
 
 def tokens(col: Column | str) -> Column:
@@ -321,23 +321,23 @@ def remove_boilerplate_segments(
     )
     from pyspark import StorageLevel
 
-    from pandrs_spark.frame import _PERSISTED
-
     # The exploded segment table feeds both the DF aggregate and the
     # per-doc reconstruction; persist it so the corpus-wide tokenize +
     # posexplode (the dominant cost) runs ONCE, not once per consumer
     # (MEMORY_AND_DISK: at corpus scale the explosion spills, it never
     # recomputes).
-    segs = docs.select(
-        id_col,
-        *carry,
-        F.posexplode_outer(
-            F.when(n_segs > 0, seg_list).otherwise(
-                F.array().cast("array<string>")
-            )
-        ).alias("pos", "seg"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED.append(segs)
+    segs = tracked_persist(
+        docs.select(
+            id_col,
+            *carry,
+            F.posexplode_outer(
+                F.when(n_segs > 0, seg_list).otherwise(
+                    F.array().cast("array<string>")
+                )
+            ).alias("pos", "seg"),
+        ),
+        StorageLevel.MEMORY_AND_DISK,
+    )
     seg_df = segs.filter(F.col("seg").isNotNull()).groupBy("seg").agg(
         F.countDistinct(id_col).alias("__df__")
     )
@@ -403,20 +403,17 @@ def unigram_logprob_score(
 
     from pyspark import StorageLevel
 
-    from pandrs_spark.frame import _PERSISTED
-
     # tok feeds both the LM build and the scoring join — persist so the
     # corpus-wide explode runs once (MEMORY_AND_DISK spills at scale,
     # it never recomputes).
-    tok = (
+    tok = tracked_persist(
         fan_out(docs)
         .select(
             id_col, *carry, F.explode(tokens(F.col(text_col))).alias("w")
         )
-        .filter(F.col("w") != "")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .filter(F.col("w") != ""),
+        StorageLevel.MEMORY_AND_DISK,
     )
-    _PERSISTED.append(tok)
     lm = tok.groupBy("w").agg(F.count(F.lit(1)).alias("__cnt__"))
     total = lm.agg(F.sum("__cnt__").alias("__total__"))
     scored = (
@@ -721,22 +718,20 @@ def bigram_lm_score(
 
     from pyspark import StorageLevel
 
-    from pandrs_spark.frame import _PERSISTED
-
     ws = F.filter(tokens(F.col(text_col)), lambda w: w != "")
     base = fan_out(docs).select(id_col, ws.alias("__ws__"))
 
     # token instances feed the unigram LM AND the per-position scoring
     # join; bigram instances feed the bigram LM AND scoring. Persist
     # both so each corpus-wide explode runs once.
-    tok = base.select(
-        id_col, F.explode("__ws__").alias("w")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED.append(tok)
+    tok = tracked_persist(
+        base.select(id_col, F.explode("__ws__").alias("w")),
+        StorageLevel.MEMORY_AND_DISK,
+    )
     uni = tok.groupBy("w").agg(F.count(F.lit(1)).alias("__cu__"))
     total = tok.agg(F.count(F.lit(1)).alias("__n__"))
 
-    bg = (
+    bg = tracked_persist(
         base.filter(F.size("__ws__") >= 2)
         .select(
             id_col,
@@ -746,10 +741,9 @@ def bigram_lm_score(
             id_col,
             F.split("bg", " ").getItem(0).alias("prev"),
             F.split("bg", " ").getItem(1).alias("cur"),
-        )
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        ),
+        StorageLevel.MEMORY_AND_DISK,
     )
-    _PERSISTED.append(bg)
     bgc = bg.groupBy("prev", "cur").agg(F.count(F.lit(1)).alias("__cb__"))
 
     up = uni.select(F.col("w").alias("prev"), F.col("__cu__").alias("__cup__"))

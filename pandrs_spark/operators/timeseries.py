@@ -15,7 +15,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
-from pandrs_spark.operators.util import fan_out_groups
+from pandrs_spark.operators.util import fan_out_groups, small_local_df
 
 __all__ = [
     "nelson_aalen",
@@ -564,7 +564,7 @@ def periodogram(
         (F.row_number().over(Window.orderBy(ts_col)) - 1).alias("t"),
         F.col(value_col).alias("x"),
     )
-    plist = spark.createDataFrame([(int(p),) for p in periods], "period int")
+    plist = small_local_df(spark, [(int(p),) for p in periods], "period int")
     two_pi = 6.283185307179586  # 2*pi, same literal in the SQL oracle
     fanned = (
         pos.crossJoin(F.broadcast(n_mean))

@@ -2,8 +2,9 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 __all__ = [
     "UnboundedBuildError",
@@ -11,6 +12,7 @@ __all__ = [
     "fan_out",
     "fan_out_groups",
     "right_size_keyed",
+    "small_local_df",
     "tracked_persist",
 ]
 
@@ -21,16 +23,48 @@ def tracked_persist(df: DataFrame, level=None) -> DataFrame:
     For intermediates that the RETURNED DataFrame's lineage still
     references: unpersisting before return would force a recompute on
     the caller's first action, while a bare ``.persist()`` leaks cache
-    entries across queries. Registering in the global ``_PERSISTED``
-    list defers the unpersist to after materialization — check_oracle,
-    bench.py, and the leak fence all call ``release_persisted()`` per
-    query, so the cache-manager count returns to zero between queries.
+    entries across queries. Registration defers the unpersist to after
+    materialization — check_oracle, bench.py, and the leak fence all
+    call ``release_persisted()`` per query, so the cache-manager count
+    returns to zero between queries.
     """
     from pandrs_spark.frame import _PERSISTED
 
     df = df.persist(level) if level is not None else df.persist()
     _PERSISTED.append(df)
     return df
+
+
+def small_local_df(
+    spark: SparkSession, rows: list, schema: str | StructType
+) -> DataFrame:
+    """A small driver-side frame (a ``LocalRelation``) from Python rows.
+
+    ``schema`` is a DDL string or a ``StructType``; nothing is inferred.
+    The rows go to the JVM as one Arrow table, the way Spark Connect
+    builds a frame from a list, so no action on the result starts a
+    Python worker — a list handed to classic ``createDataFrame`` becomes
+    a pickled ``LogicalRDD`` that costs one worker round-trip per slice.
+
+    Every row first passes classic ``createDataFrame``'s type check:
+    the Arrow converter alone would silently store 1.5 in an ``int``
+    column, where ``createDataFrame`` raises ``PySparkTypeError``.
+    """
+    from pyspark.sql.conversion import LocalDataToArrowConversion
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _make_type_verifier
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    verify = _make_type_verifier(schema)
+    for row in rows:
+        verify(row)
+    table = (
+        LocalDataToArrowConversion.convert(rows, schema, False)
+        if rows
+        else to_arrow_schema(schema).empty_table()
+    )
+    return spark.createDataFrame(table, schema)
 
 
 # Logical operators that cannot change a plan's partition count on

@@ -18,7 +18,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
-from pandrs_spark.operators.util import fan_out_groups
+from pandrs_spark.operators.util import fan_out_groups, tracked_persist
 
 __all__ = [
     "ordered_window",
@@ -313,7 +313,7 @@ def global_prefix_sum(
     every core busy, each partition computes its own quantized prefix
     sum, and a tiny per-partition total map (collected, one row per
     partition) supplies the additive offsets. Same partition-offset
-    scheme as Frame.sort_values' global positions (frame.py:71).
+    scheme as global_row_number below.
 
     Values are quantized to scaled BIGINT for the cross-partition
     fold, so the running total is EXACT and order-independent within a
@@ -322,18 +322,15 @@ def global_prefix_sum(
     """
     from pyspark import StorageLevel
 
-    from pandrs_spark.frame import _PERSISTED
-
     v = F.col(value_col) if isinstance(value_col, str) else value_col
     m = 10**scale
     q = (v * m + F.when(v < 0, -0.5).otherwise(0.5)).cast("long")
-    sdf = (
+    sdf = tracked_persist(
         df.orderBy(*order_exprs)
         .withColumn("__pid__", F.spark_partition_id())
-        .withColumn("__q__", q)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .withColumn("__q__", q),
+        StorageLevel.MEMORY_AND_DISK,
     )
-    _PERSISTED.append(sdf)
     totals = sdf.groupBy("__pid__").agg(F.sum("__q__").alias("t")).collect()
     pairs: list = []
     acc = 0
@@ -377,14 +374,10 @@ def global_prefix_counts(
     """
     from pyspark import StorageLevel
 
-    from pandrs_spark.frame import _PERSISTED
-
-    sdf = (
-        df.orderBy(*order_exprs)
-        .withColumn("__pid__", F.spark_partition_id())
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    sdf = tracked_persist(
+        df.orderBy(*order_exprs).withColumn("__pid__", F.spark_partition_id()),
+        StorageLevel.MEMORY_AND_DISK,
     )
-    _PERSISTED.append(sdf)
     totals = sdf.groupBy("__pid__").agg(
         *[F.sum(src).alias(out) for out, src in counts.items()]
     ).collect()
@@ -430,17 +423,17 @@ def global_row_number(
     rank statistics follow arithmetically: percent_rank =
     (rn−1)/(n−1), cume_dist = rn/n, ntile(k) from (rn, n, k) — see
     queries/windows.py q53 for the derivation.
+
+    Persists the sorted frame so the offset job and the downstream plan
+    see the SAME partition layout (spark_partition_id is only stable on
+    a materialized partitioning).
     """
     from pyspark import StorageLevel
 
-    from pandrs_spark.frame import _PERSISTED
-
-    sdf = (
-        df.orderBy(*order_exprs)
-        .withColumn("__pid__", F.spark_partition_id())
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    sdf = tracked_persist(
+        df.orderBy(*order_exprs).withColumn("__pid__", F.spark_partition_id()),
+        StorageLevel.MEMORY_AND_DISK,
     )
-    _PERSISTED.append(sdf)
     counts = sdf.groupBy("__pid__").agg(F.count(F.lit(1)).alias("c")).collect()
     pairs: list = []
     acc = 0
@@ -548,14 +541,10 @@ def global_prefix_max(
     first non-null get a NULL running max."""
     from pyspark import StorageLevel
 
-    from pandrs_spark.frame import _PERSISTED
-
-    sdf = (
-        df.orderBy(*order_exprs)
-        .withColumn("__pid__", F.spark_partition_id())
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    sdf = tracked_persist(
+        df.orderBy(*order_exprs).withColumn("__pid__", F.spark_partition_id()),
+        StorageLevel.MEMORY_AND_DISK,
     )
-    _PERSISTED.append(sdf)
     totals = sdf.groupBy("__pid__").agg(F.max(src_col).alias("__m__")).collect()
     pairs: list = []
     running = None

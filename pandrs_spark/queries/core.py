@@ -24,6 +24,7 @@ from pandrs_spark.functions.deterministic import (
     sql_dsum_over,
 )
 from pandrs_spark.operators.joins import anti_join, merge, semi_join
+from pandrs_spark.operators.util import small_local_df
 from pandrs_spark.queries import query
 
 
@@ -1301,7 +1302,7 @@ def q164(spark, sf_dir):
         orphans(li, part, "l_partkey", "p_partkey", "lineitem->part"),
         orphans(li, supp, "l_suppkey", "s_suppkey", "lineitem->supplier"),
     ]
-    return spark.createDataFrame(rows, "fk string, orphans long").orderBy("fk")
+    return small_local_df(spark, rows, "fk string, orphans long").orderBy("fk")
 
 
 # --- q167: fuzzy name matching by edit distance — broadcast probe set
@@ -1327,8 +1328,8 @@ def q164(spark, sf_dir):
 )
 def q167(spark, sf_dir):
     part = T(spark, sf_dir, "part")
-    probes = spark.createDataFrame(
-        [("steal blanched tomatoe",), ("forrest green chocolat",), ("miidnight lnen corn",)],
+    probes = small_local_df(
+        spark, [("steal blanched tomatoe",), ("forrest green chocolat",), ("miidnight lnen corn",)],
         "probe string",
     )
     scored = part.crossJoin(F.broadcast(probes)).select(

@@ -18,6 +18,7 @@ from pandrs_spark.catalog import load_table as T
 from pandrs_spark.functions.deterministic import dsum, sql_dsum, sql_dsum_over
 from pandrs_spark.operators.joins import asof_join
 from pandrs_spark.operators.timeseries import date_range, ffill, resample, upsample_grid
+from pandrs_spark.operators.util import small_local_df
 from pandrs_spark.queries import query
 
 
@@ -3426,8 +3427,8 @@ def q405(spark, sf_dir):
         .groupBy("s")
         .agg(F.coalesce(F.sum("conv_n"), F.lit(0)).cast("long").alias("val"))
     )
-    channels = spark.createDataFrame(
-        [("click", 1), ("error", 2), ("signup", 4), ("view", 8)],
+    channels = small_local_df(
+        spark, [("click", 1), ("error", 2), ("signup", 4), ("view", 8)],
         "channel string, cbit int",
     )
     v0 = v.select(F.col("s").alias("s0"), F.col("val").alias("val0"))
@@ -3748,7 +3749,8 @@ def q419(spark, sf_dir):
     for ch in _Q419_CHANNELS:
         rc = absorb(ch)
         out_rows.append((ch, base_cvr, rc, (base_cvr - rc) / base_cvr))
-    out = spark.createDataFrame(
+    out = small_local_df(
+        spark,
         out_rows,
         "channel string, base_cvr double, removed_cvr double, "
         "removal_effect double",
@@ -5307,7 +5309,7 @@ def q706(spark, sf_dir):
         .cast("long")
         .alias("s")
     )
-    taus = ev.sparkSession.createDataFrame([(1,), (2,), (4,)], "tau int")
+    taus = small_local_df(ev.sparkSession, [(1,), (2,), (4,)], "tau int")
     bins = (
         secs.crossJoin(F.broadcast(taus))
         .groupBy(
@@ -5452,8 +5454,8 @@ def q721(spark, sf_dir):
             / 60000000.0
         ).alias("g")
     ).filter(F.col("g").isNotNull())
-    grid = spark.createDataFrame(
-        [(0,), (2,), (5,), (10,), (20,), (40,), (80,), (160,)], "t int"
+    grid = small_local_df(
+        spark, [(0,), (2,), (5,), (10,), (20,), (40,), (80,), (160,)], "t int"
     )
     s = (
         gaps.crossJoin(F.broadcast(grid))

@@ -25,6 +25,7 @@ from pandrs_spark.operators.ml import (
     simple_ols,
     standard_scale,
 )
+from pandrs_spark.operators.util import small_local_df
 from pandrs_spark.queries import query
 
 
@@ -1384,7 +1385,8 @@ def q362(spark, sf_dir):
     n_nonpos = preds.filter(F.col("prediction") <= 0).count()
     n = preds.count()
     coefs = [float(c) for c in model.coefficients] + [float(model.intercept)]
-    return spark.createDataFrame(
+    return small_local_df(
+        spark,
         [
             (
                 n,
@@ -2331,8 +2333,8 @@ def q444(spark, sf_dir):
         dsum(F.col("x") * F.col("x"), 0).alias("sxx"),
         dsum(F.col("x") * F.col("y"), 0).alias("sxy"),
     )
-    lams = joined.sparkSession.createDataFrame(
-        [(0.0,), (0.1,), (1.0,)], "lambda double"
+    lams = small_local_df(
+        joined.sparkSession, [(0.0,), (0.1,), (1.0,)], "lambda double"
     )
     sol = F.broadcast(lams).crossJoin(F.broadcast(agg))
     slope = (F.col("sxy") - F.col("sx") * F.col("sy") / F.col("n")) / (
@@ -4231,8 +4233,8 @@ def q681(spark, sf_dir):
         F.sum("cnt").cast("long").alias("n"),
         F.sum("pos").cast("long").alias("np"),
     )
-    grid = cust.sparkSession.createDataFrame(
-        [(i,) for i in range(1, 11)], "dec int"
+    grid = small_local_df(
+        cust.sparkSession, [(i,) for i in range(1, 11)], "dec int"
     )
     j = (
         F.broadcast(grid)
@@ -4584,8 +4586,8 @@ def q684(spark, sf_dir):
             F.max(F.when(F.col("yr") == 1996, F.col("r"))).alias("r2"),
         )
     )
-    depths = orders.sparkSession.createDataFrame(
-        [(i,) for i in range(1, 11)], "d long"
+    depths = small_local_df(
+        orders.sparkSession, [(i,) for i in range(1, 11)], "d long"
     )
     xd = (
         F.broadcast(depths)

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from pandrs_spark.catalog import load_table as T
+from pandrs_spark.operators.util import small_local_df
 from pandrs_spark.queries import query
 
 # ===== Wave q669-q674: embedding-geometry diagnostics =================
@@ -1003,7 +1004,7 @@ def q720(spark, sf_dir):
         .filter(F.col("rn") <= 8)
         .select("id_q", "cid", "rn")
     )
-    grid = spark.createDataFrame([(1,), (2,), (4,), (8,)], "p int")
+    grid = small_local_df(spark, [(1,), (2,), (4,), (8,)], "p int")
     cand = (
         probe.crossJoin(F.broadcast(grid))
         .filter(F.col("rn") <= F.col("p"))
@@ -1704,7 +1705,7 @@ def q727(spark, sf_dir):
         .agg(F.sum(cq2).cast("long").alias("dq"))
     )
     grid = F.broadcast(
-        spark.createDataFrame([(1,), (2,), (4,), (8,)], "np int")
+        small_local_df(spark, [(1,), (2,), (4,), (8,)], "np int")
     )
     adc = (
         codes.join(lut, ["cell", "s", "code"])
@@ -1817,8 +1818,8 @@ def q729(spark, sf_dir):
     actual = emb.agg(
         F.countDistinct("embedding").cast("long").alias("n")
     ).select(F.lit("corpus").alias("src"), "n")
-    synth = spark.createDataFrame(
-        [("n20k", 20000), ("n1m", 1000000), ("n1g", 1000000000)],
+    synth = small_local_df(
+        spark, [("n20k", 20000), ("n1m", 1000000), ("n1g", 1000000000)],
         "src string, n long",
     )
     d = actual.union(synth).select(

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from pandrs_spark.catalog import load_table as T, register_views
 from pandrs_spark.functions.deterministic import CORR_FORMULA, dsum, sql_dsum, sql_quantize
+from pandrs_spark.operators.util import small_local_df
 from pandrs_spark.queries import query
 
 
@@ -3435,7 +3436,8 @@ def q525(spark, sf_dir):
     )
     hist = digits.groupBy("d2").agg(F.count(F.lit(1)).cast("long").alias("o"))
     tot = hist.agg(F.sum("o").cast("long").alias("n"))
-    expect = spark.createDataFrame(
+    expect = small_local_df(
+        spark,
         [
             (
                 d,

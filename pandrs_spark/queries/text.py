@@ -22,6 +22,7 @@ from pandrs_spark.operators.text import (
     stopword_hits,
     tokens,
 )
+from pandrs_spark.operators.util import small_local_df
 from pandrs_spark.queries import query
 
 # Shared SQL fragments (DuckDB side) mirroring operators/text.py.
@@ -993,7 +994,7 @@ def q224(spark, sf_dir):
     # total token occurrences: aggregate the persisted sorted frame
     # instead of re-running the tokenize+explode+groupBy pass
     total = ranked.agg(F.sum("c").alias("__n__"))
-    sizes = spark.createDataFrame([(10,), (100,), (1000,)], "vocab_size long")
+    sizes = small_local_df(spark, [(10,), (100,), (1000,)], "vocab_size long")
     return (
         ranked.join(F.broadcast(sizes), F.col("rank") <= F.col("vocab_size"))
         .groupBy("vocab_size")
@@ -2777,8 +2778,8 @@ def q449(spark, sf_dir):
     docs = T(spark, sf_dir, "documents")
     cand = lsh_candidate_pairs(docs, "text", "doc_id", num_hashes=4, band_size=2)
     scored = ngram_jaccard_pairs(docs, "text", "doc_id", cand, threshold=0.0)
-    ths = docs.sparkSession.createDataFrame(
-        [(0.5,), (0.7,), (0.9,)], "threshold double"
+    ths = small_local_df(
+        docs.sparkSession, [(0.5,), (0.7,), (0.9,)], "threshold double"
     )
     j = F.broadcast(ths).join(
         scored, scored.jaccard >= F.col("threshold"), "left"
@@ -2884,8 +2885,8 @@ def q454(spark, sf_dir):
 )
 def q455(spark, sf_dir):
     docs = T(spark, sf_dir, "documents")
-    canaries = docs.sparkSession.createDataFrame(
-        [("lorem",), ("ipsum",), ("nonexistent-canary-xyzzy",)],
+    canaries = small_local_df(
+        docs.sparkSession, [("lorem",), ("ipsum",), ("nonexistent-canary-xyzzy",)],
         "canary string",
     )
     hits = docs.crossJoin(F.broadcast(canaries)).select(
@@ -3324,8 +3325,8 @@ def q504(spark, sf_dir):
     dtok = docs.select(
         F.size(F.split(F.lower("text"), r"\s+")).cast("long").alias("ntok")
     )
-    grid = spark.createDataFrame(
-        [(256,), (512,), (1024,), (2048,)], "w int"
+    grid = small_local_df(
+        spark, [(256,), (512,), (1024,), (2048,)], "w int"
     )
     j = F.broadcast(grid).crossJoin(dtok)
     bins = F.ceil(F.col("ntok").cast("double") / F.col("w")).cast("long")
@@ -4471,7 +4472,7 @@ def q629(spark, sf_dir):
         F.sum("c").cast("double").alias("n"),
         F.count(F.lit(1)).cast("long").alias("v"),
     )
-    ks = spark.createDataFrame([(100,), (500,), (1000,), (5000,)], "k int")
+    ks = small_local_df(spark, [(100,), (500,), (1000,), (5000,)], "k int")
     cov = (
         ranked.crossJoin(F.broadcast(ks))
         .where(F.col("r") <= F.col("k"))

@@ -31,6 +31,7 @@ from pandrs_spark.operators.timeseries import (
     ses_fitted,
 )
 from pandrs_spark.operators.windows import diff, pct_change, shift
+from pandrs_spark.operators.util import small_local_df
 from pandrs_spark.queries import query
 
 # Shared monthly revenue CTE (DuckDB side).
@@ -2982,7 +2983,7 @@ def q451(spark, sf_dir):
             (F.col("rn") - 1).alias("t"), F.col("rev").cast("double").alias("x")
         )
     )
-    sizes = spark.createDataFrame([(8,), (16,), (32,)], "s int")
+    sizes = small_local_df(spark, [(8,), (16,), (32,)], "s int")
     blocks = pts.crossJoin(F.broadcast(sizes)).select(
         "s", (F.col("t") / F.col("s")).cast("long").alias("blk"), "t", "x"
     )
@@ -3585,7 +3586,8 @@ def q462(spark, sf_dir):
         ).alias("f_prev"),
         "m",
     )
-    grid = spark.createDataFrame(
+    grid = small_local_df(
+        spark,
         [(p, q) for p in (0.001, 0.003, 0.01, 0.03, 0.1)
          for q in (0.1, 0.2, 0.3, 0.4, 0.5)],
         "p double, q double",
@@ -4777,8 +4779,8 @@ def q538(spark, sf_dir):
             ).alias("sxx")
         )
     )
-    lags = spark.createDataFrame(
-        [(l, 1.0 - l / 5.0) for l in range(5)], "l int, w double"
+    lags = small_local_df(
+        spark, [(l, 1.0 - l / 5.0) for l in range(5)], "l int, w double"
     )
     a = u.select(F.col("x").alias("xa"), F.col("v").alias("va"))
     b = u.select(F.col("x").alias("xb2"), F.col("v").alias("vb"))

@@ -23,6 +23,7 @@ from pandrs_spark.functions.deterministic import (
     sql_dsum,
     sql_quantize,
 )
+from pandrs_spark.operators.util import small_local_df
 from pandrs_spark.queries import query
 from pandrs_spark.queries.timeseries import (
     _MONTHLY_REV_SQL,
@@ -1178,8 +1179,8 @@ def q563(spark, sf_dir):
             (F.col("rev") - F.col("mu")).alias("xc"),
         )
     )
-    freqs = spark.createDataFrame(
-        [(7, 0.8975979010256552), (30, 0.20943951023931953), (91, 0.06904599238658886)],
+    freqs = small_local_df(
+        spark, [(7, 0.8975979010256552), (30, 0.20943951023931953), (91, 0.06904599238658886)],
         "period int, w double",
     )
     ph = (
@@ -2249,7 +2250,7 @@ def q620(spark, sf_dir):
             "m"
         ),
     )
-    harm = spark.createDataFrame([(k,) for k in range(1, 13)], "k int")
+    harm = small_local_df(spark, [(k,) for k in range(1, 13)], "k int")
     arg = 6.283185307179586 * F.col("k") * F.col("t") / F.col("n")
     pw = (
         idx.crossJoin(F.broadcast(harm))
@@ -4190,8 +4191,8 @@ def q665(spark, sf_dir):
             ).alias("y"),
         )
     )
-    scales = monthly.sparkSession.createDataFrame(
-        [(4,), (8,), (16,)], "s int"
+    scales = small_local_df(
+        monthly.sparkSession, [(4,), (8,), (16,)], "s int"
     )
     seg = prof.crossJoin(F.broadcast(scales)).select(
         "s",

@@ -36,6 +36,7 @@ from pandrs_spark.functions.deterministic import (
     sql_quantize,
 )
 from pandrs_spark.operators.joins import anti_join
+from pandrs_spark.operators.util import small_local_df
 from pandrs_spark.queries import query
 
 
@@ -4614,8 +4615,8 @@ def q530(spark, sf_dir):
     hist = baskets.groupBy(F.least("k", F.lit(10)).alias("kb")).agg(
         F.count(F.lit(1)).cast("long").alias("o")
     )
-    grid = spark.createDataFrame(
-        [(kb, float(math.factorial(kb)) if kb < 10 else 0.0) for kb in range(11)],
+    grid = small_local_df(
+        spark, [(kb, float(math.factorial(kb)) if kb < 10 else 0.0) for kb in range(11)],
         "kb long, fact double",
     )
     g = F.broadcast(grid).crossJoin(F.broadcast(lam))
@@ -4892,8 +4893,8 @@ def q702(spark, sf_dir):
         global_prefix_counts(hist, [F.asc("yq")], {"cum_n": "cnt"})
     )
     tot = rev.agg(F.count(F.lit(1)).cast("long").alias("n"))
-    grid = orders.sparkSession.createDataFrame(
-        [(i,) for i in range(1, 8)], "i int"
+    grid = small_local_df(
+        orders.sparkSession, [(i,) for i in range(1, 8)], "i int"
     )
     j = (
         F.broadcast(grid)

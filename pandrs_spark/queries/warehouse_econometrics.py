@@ -28,6 +28,7 @@ from pandrs_spark.functions.deterministic import (
     sql_quantize,
 )
 from pandrs_spark.operators.joins import anti_join
+from pandrs_spark.operators.util import small_local_df
 from pandrs_spark.queries import query
 
 
@@ -3616,7 +3617,7 @@ def q616(spark, sf_dir):
     orders = T(spark, sf_dir, "orders")
     lastd = orders.agg(F.max("o_orderdate").alias("dmax"))
     firsts = orders.groupBy("o_custkey").agg(F.min("o_orderdate").alias("f"))
-    ages = spark.createDataFrame([(30,), (90,), (180,), (365,), (730,)], "age int")
+    ages = small_local_df(spark, [(30,), (90,), (180,), (365,), (730,)], "age int")
     obs = tracked_persist(
         firsts.crossJoin(F.broadcast(ages))
         .crossJoin(F.broadcast(lastd))
@@ -4655,8 +4656,8 @@ def q644(spark, sf_dir):
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("yq").cast("long").alias("ty"),
     )
-    grid = orders.sparkSession.createDataFrame(
-        [(2,), (4,), (8,), (9,)], "d int"
+    grid = small_local_df(
+        orders.sparkSession, [(2,), (4,), (8,), (9,)], "d int"
     )
     j = (
         F.broadcast(grid)

@@ -8,11 +8,12 @@ from pandrs_spark.operators.categorical import (
     decode,
     encode,
 )
+from pandrs_spark.operators.util import small_local_df
 
 
 def test_encode_decode_roundtrip(spark):
-    df = spark.createDataFrame(
-        [(1, "red"), (2, "blue"), (3, "red"), (4, None)], "id bigint, color string"
+    df = small_local_df(
+        spark, [(1, "red"), (2, "blue"), (3, "red"), (4, None)], "id bigint, color string"
     )
     encoded, dim = encode(df, "color", code_col="c")
     codes = {r["label"]: r["code"] for r in dim.collect()}
@@ -24,8 +25,8 @@ def test_encode_decode_roundtrip(spark):
 
 
 def test_category_set_ops(spark):
-    a = spark.createDataFrame([(0, "x"), (1, "y")], "code int, label string")
-    b = spark.createDataFrame([(0, "y"), (1, "z")], "code int, label string")
+    a = small_local_df(spark, [(0, "x"), (1, "y")], "code int, label string")
+    b = small_local_df(spark, [(0, "y"), (1, "z")], "code int, label string")
     u = {r["label"] for r in category_union(a, b).collect()}
     assert u == {"x", "y", "z"}
     i = [r["label"] for r in category_intersection(a, b).collect()]

@@ -27,12 +27,13 @@ from pandrs_spark.operators.graph import (
     strongly_connected_components,
     weighted_pagerank,
 )
+from pandrs_spark.operators.util import small_local_df
 
 
 def _path_graph(spark, n):
     # 0-1-2-...-n path: min-label propagation needs ~n rounds
-    return spark.createDataFrame(
-        [(i, i + 1) for i in range(n)], "src bigint, dst bigint"
+    return small_local_df(
+        spark, [(i, i + 1) for i in range(n)], "src bigint, dst bigint"
     )
 
 
@@ -57,8 +58,8 @@ def test_scc_raises_on_truncation(spark):
     # one long directed cycle: coloring needs ~n rounds to reach the
     # min id; max_iter=2 truncates the inner coloring pass
     n = 12
-    e = spark.createDataFrame(
-        [(i, (i + 1) % n) for i in range(n)], "src bigint, dst bigint"
+    e = small_local_df(
+        spark, [(i, (i + 1) % n) for i in range(n)], "src bigint, dst bigint"
     )
     with pytest.raises(ConvergenceError, match="strongly_connected"):
         strongly_connected_components(e, max_iter=2, check_convergence=True)
@@ -66,8 +67,8 @@ def test_scc_raises_on_truncation(spark):
 
 def test_scc_certificate_silent_on_fixpoint(spark):
     # two 3-cycles bridged one-way: clean SCC structure within budget
-    e = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (5, 6), (6, 4)],
+    e = small_local_df(
+        spark, [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (5, 6), (6, 4)],
         "src bigint, dst bigint",
     )
     comp = {
@@ -90,8 +91,8 @@ def test_label_prop_raises_when_still_changing(spark):
 
 def test_label_prop_certificate_silent_on_fixpoint(spark):
     # a triangle stabilizes immediately (everyone adopts label 1)
-    e = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 1)], "src bigint, dst bigint"
+    e = small_local_df(
+        spark, [(1, 2), (2, 3), (3, 1)], "src bigint, dst bigint"
     )
     labels = {
         r["id"]: r["label"]
@@ -104,8 +105,8 @@ def test_label_prop_certificate_silent_on_fixpoint(spark):
 
 def test_pagerank_raises_below_tol_budget(spark):
     # star graph, 1 iteration: ranks move a lot on the first round
-    e = spark.createDataFrame(
-        [(0, i) for i in range(1, 8)] + [(i, 0) for i in range(1, 8)],
+    e = small_local_df(
+        spark, [(0, i) for i in range(1, 8)] + [(i, 0) for i in range(1, 8)],
         "src bigint, dst bigint",
     )
     with pytest.raises(ConvergenceError, match="pagerank"):
@@ -115,8 +116,8 @@ def test_pagerank_raises_below_tol_budget(spark):
 def test_pagerank_certificate_silent_when_converged(spark):
     # symmetric triangle starts AT the stationary distribution
     # (uniform), so even one iteration changes nothing
-    e = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 1), (2, 1), (3, 2), (1, 3)],
+    e = small_local_df(
+        spark, [(1, 2), (2, 3), (3, 1), (2, 1), (3, 2), (1, 3)],
         "src bigint, dst bigint",
     )
     ranks = {
@@ -139,14 +140,14 @@ def test_kcore_convergence_certificate(spark):
 
     # path 0-1-2-...-9 with k=2: every round peels both endpoints, so
     # the whole path dissolves after ~5 rounds; 1 round is NOT enough
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(9)], "src long, dst long"
+    edges = small_local_df(
+        spark, [(i, i + 1) for i in range(9)], "src long, dst long"
     )
     with pytest.raises(ConvergenceError):
         kcore(edges, k=2, n_iter=1, check_convergence=True).count()
     # a triangle IS its own 2-core: converged at any budget
-    tri = spark.createDataFrame(
-        [(0, 1), (1, 2), (2, 0)], "src long, dst long"
+    tri = small_local_df(
+        spark, [(0, 1), (1, 2), (2, 0)], "src long, dst long"
     )
     out = kcore(tri, k=2, n_iter=2, check_convergence=True).collect()
     assert len(out) == 3
@@ -154,8 +155,8 @@ def test_kcore_convergence_certificate(spark):
 
 def _star(spark):
     # hub 0 <-> leaves 1..7: the first round moves every score a lot
-    return spark.createDataFrame(
-        [(0, i) for i in range(1, 8)] + [(i, 0) for i in range(1, 8)],
+    return small_local_df(
+        spark, [(0, i) for i in range(1, 8)] + [(i, 0) for i in range(1, 8)],
         "src bigint, dst bigint",
     )
 
@@ -163,10 +164,10 @@ def _star(spark):
 def _sym_triangle(spark, weighted=False):
     rows = [(1, 2), (2, 3), (3, 1), (2, 1), (3, 2), (1, 3)]
     if weighted:
-        return spark.createDataFrame(
-            [(s, d, 2.0) for s, d in rows], "src bigint, dst bigint, weight double"
+        return small_local_df(
+            spark, [(s, d, 2.0) for s, d in rows], "src bigint, dst bigint, weight double"
         )
-    return spark.createDataFrame(rows, "src bigint, dst bigint")
+    return small_local_df(spark, rows, "src bigint, dst bigint")
 
 
 def test_bfs_hops_raises_when_frontier_outlives_budget(spark):
@@ -200,8 +201,8 @@ def test_closeness_certificate_silent_on_fixpoint(spark):
 
 def _costed_path(spark):
     # 0 -> 1 -> 2 -> 3 at cost 1 each, plus a costly 0 -> 3 shortcut
-    return spark.createDataFrame(
-        [(0, 1, 1), (1, 2, 1), (2, 3, 1), (0, 3, 9)],
+    return small_local_df(
+        spark, [(0, 1, 1), (1, 2, 1), (2, 3, 1), (0, 3, 9)],
         "src bigint, dst bigint, cost bigint",
     )
 
@@ -222,14 +223,14 @@ def test_shortest_paths_certificate_silent_on_fixpoint(spark):
 
 
 def test_katz_raises_below_tol_budget(spark):
-    e = spark.createDataFrame([(1, 2)], "src bigint, dst bigint")
+    e = small_local_df(spark, [(1, 2)], "src bigint, dst bigint")
     with pytest.raises(ConvergenceError, match="katz_centrality"):
         katz_centrality(e, iterations=1, check_convergence=True, tol=1e-9)
 
 
 def test_katz_certificate_silent_at_fixpoint(spark):
     # one edge: the alpha-series is exact after two rounds (A² = 0)
-    e = spark.createDataFrame([(1, 2)], "src bigint, dst bigint")
+    e = small_local_df(spark, [(1, 2)], "src bigint, dst bigint")
     scores = {
         r["id"]: r["score"]
         for r in katz_centrality(
@@ -240,14 +241,14 @@ def test_katz_certificate_silent_at_fixpoint(spark):
 
 
 def test_hits_raises_below_tol_budget(spark):
-    e = spark.createDataFrame([(1, 2)], "src bigint, dst bigint")
+    e = small_local_df(spark, [(1, 2)], "src bigint, dst bigint")
     with pytest.raises(ConvergenceError, match="hits"):
         hits(e, iterations=1, check_convergence=True, tol=1e-9)
 
 
 def test_hits_certificate_silent_at_fixpoint(spark):
     # one edge: 1 is the pure hub and 2 the pure authority from round 1
-    e = spark.createDataFrame([(1, 2)], "src bigint, dst bigint")
+    e = small_local_df(spark, [(1, 2)], "src bigint, dst bigint")
     rows = {
         r["id"]: (r["authority"], r["hub"])
         for r in hits(e, iterations=3, check_convergence=True, tol=1e-9).collect()

@@ -8,11 +8,12 @@ from pandrs_spark.operators.timeseries import (
     croston_forecast,
     sbc_demand_classification,
 )
+from pandrs_spark.operators.util import small_local_df
 
 
 def _series_df(spark, xs, key="a"):
     rows = [(key, i, float(x)) for i, x in enumerate(xs)]
-    return spark.createDataFrame(rows, "k string, t int, qty double")
+    return small_local_df(spark, rows, "k string, t int, qty double")
 
 
 def _croston_ref(xs, alpha=0.3):
@@ -74,7 +75,7 @@ def test_sbc_quadrants(spark):
         rows.append(("smooth", t, 5.0))
     for t, x in enumerate([0, 0, 1.0, 0, 0, 0, 40.0, 0]):
         rows.append(("lumpy", t, float(x)))
-    df = spark.createDataFrame(rows, "k string, t int, qty double")
+    df = small_local_df(spark, rows, "k string, t int, qty double")
     got = {
         r["k"]: r
         for r in sbc_demand_classification(df, "qty", partition_by=["k"]).collect()

@@ -14,14 +14,15 @@ from pandrs_spark.operators.dedup import (
     simhash_fingerprint,
 )
 from pandrs_spark.operators.text import doc_fingerprint, quality_score, shingles, tokens
+from pandrs_spark.operators.util import small_local_df
 
 
 def _docs(spark):
     base = "the quick brown fox jumps over the lazy dog and runs far away home"
     near = "the quick brown fox jumps over the lazy dog and runs far away house"
     other = "completely different words about spark engines and column pruning"
-    return spark.createDataFrame(
-        [(1, base), (2, base), (3, near), (4, other)], "doc_id long, text string"
+    return small_local_df(
+        spark, [(1, base), (2, base), (3, near), (4, other)], "doc_id long, text string"
     )
 
 
@@ -34,8 +35,8 @@ def test_exact_dedup_clusters(spark):
 
 
 def test_fingerprint_normalizes_whitespace_and_case(spark):
-    df = spark.createDataFrame(
-        [(1, "Hello  World"), (2, "  hello world ")], "id long, t string"
+    df = small_local_df(
+        spark, [(1, "Hello  World"), (2, "  hello world ")], "id long, t string"
     )
     fps = [r.fp for r in df.select(doc_fingerprint("t").alias("fp")).collect()]
     assert fps[0] == fps[1]
@@ -56,10 +57,10 @@ def test_lsh_finds_exact_and_near_duplicates(spark):
 
 
 def test_jaccard_exact_value(spark):
-    df = spark.createDataFrame(
-        [(1, "a b c d e"), (2, "a b c d f")], "doc_id long, text string"
+    df = small_local_df(
+        spark, [(1, "a b c d e"), (2, "a b c d f")], "doc_id long, text string"
     )
-    pairs = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
+    pairs = small_local_df(spark, [(1, 2)], "id_a long, id_b long")
     out = ngram_jaccard_pairs(df, "text", "doc_id", pairs).collect()
     # shingles(3): doc1 {abc, bcd, cde}, doc2 {abc, bcd, cdf} -> 2/4
     assert out[0].jaccard == 0.5
@@ -75,7 +76,7 @@ def test_simhash_locality(spark):
 
 
 def test_shingles_short_doc_empty(spark):
-    df = spark.createDataFrame([(1, "a b")], "id long, t string")
+    df = small_local_df(spark, [(1, "a b")], "id long, t string")
     row = df.select(shingles(tokens(F.col("t"))).alias("s")).collect()[0]
     assert row.s == []
 
@@ -93,8 +94,8 @@ def test_char_entropy_known_values(spark):
 
     from pandrs_spark.operators.text import char_entropy
 
-    df = spark.createDataFrame(
-        [("aaaa",), ("aabb",), ("abcdefgh",)], "t string"
+    df = small_local_df(
+        spark, [("aaaa",), ("aabb",), ("abcdefgh",)], "t string"
     )
     got = [r[0] for r in df.select(F.round(char_entropy("t"), 9)).collect()]
     assert got == [0.0, 1.0, 3.0]
@@ -105,8 +106,8 @@ def test_char_entropy_flags_gibberish_below_text(spark):
 
     from pandrs_spark.operators.text import char_entropy
 
-    df = spark.createDataFrame(
-        [("the quick brown fox jumps over the lazy dog",), ("zzzzzzzzzzzz zz",)],
+    df = small_local_df(
+        spark, [("the quick brown fox jumps over the lazy dog",), ("zzzzzzzzzzzz zz",)],
         "t string",
     )
     a, b = [r[0] for r in df.select(char_entropy("t")).collect()]
@@ -118,7 +119,8 @@ def test_gopher_flags_repetitive_doc(spark):
 
     from pandrs_spark.operators.text import gopher_quality_flags
 
-    df = spark.createDataFrame(
+    df = small_local_df(
+        spark,
         [
             ("clean", "the quick brown fox jumps over the lazy dog today"),
             ("looped", "buy now buy now buy now buy now buy now buy now"),
@@ -138,7 +140,8 @@ def test_gopher_flags_repetitive_doc(spark):
 def test_tfidf_prefers_rare_terms(spark):
     from pandrs_spark.operators.text import tf_idf_top_terms
 
-    df = spark.createDataFrame(
+    df = small_local_df(
+        spark,
         [
             (1, "common common common zebra"),
             (2, "common words here also"),
@@ -157,7 +160,8 @@ def test_tfidf_prefers_rare_terms(spark):
 def test_bm25_ranks_matching_docs_first(spark):
     from pandrs_spark.operators.text import bm25_search
 
-    df = spark.createDataFrame(
+    df = small_local_df(
+        spark,
         [
             (1, "spark shuffle join window"),
             (2, "window window window window window padding"),
@@ -184,7 +188,7 @@ def test_redact_pii_patterns(spark):
         ("card 1234567890 pin 12345",),  # only the 6+ digit run redacts
         ("plain text stays",),
     ]
-    df = spark.createDataFrame(rows, "t string")
+    df = small_local_df(spark, rows, "t string")
     got = [r["r"] for r in df.select(redact_pii("t").alias("r")).collect()]
     assert got[0] == "mail me at <EMAIL> now"
     assert got[1] == "see <URL> and <URL>"
@@ -196,8 +200,8 @@ def test_corpus_ngram_duplication_counts(spark):
     from pandrs_spark.operators.text import corpus_ngram_duplication
 
     # two docs sharing one 3-gram ("a b c"), plus a unique one each
-    df = spark.createDataFrame(
-        [("a b c d",), ("x a b c",), ("short",)], "text string"
+    df = small_local_df(
+        spark, [("a b c d",), ("x a b c",), ("short",)], "text string"
     )
     row = corpus_ngram_duplication(df, "text", k=3).collect()[0]
     # grams: (a b c),(b c d) + (x a b),(a b c) -> 4 total, 3 distinct
@@ -208,10 +212,11 @@ def test_corpus_ngram_duplication_counts(spark):
 def test_incremental_dedup(spark):
     from pandrs_spark.operators.dedup import incremental_dedup
 
-    existing = spark.createDataFrame(
-        [(1, "the cat sat"), (2, "old news here")], "doc_id long, text string"
+    existing = small_local_df(
+        spark, [(1, "the cat sat"), (2, "old news here")], "doc_id long, text string"
     )
-    new_batch = spark.createDataFrame(
+    new_batch = small_local_df(
+        spark,
         [
             (10, "The  cat   sat"),   # dup of existing (normalized)
             (11, "fresh content one"),
@@ -233,7 +238,7 @@ def test_chunk_documents_windows(spark):
     # 10 tokens, chunk 4, overlap 1 -> stride 3 -> ceil(9/3)=3 chunks:
     # [t0..t3], [t3..t6], [t6..t9]
     text = " ".join(f"t{i}" for i in range(10))
-    df = spark.createDataFrame([(1, text), (2, "a b")], "doc_id long, text string")
+    df = small_local_df(spark, [(1, text), (2, "a b")], "doc_id long, text string")
     rows = sorted(
         (r["doc_id"], r["chunk_idx"], r["chunk_text"], r["n_tokens"])
         for r in chunk_documents(df, chunk_tokens=4, overlap=1).collect()
@@ -258,7 +263,7 @@ def test_pack_sequences_bins(spark):
     from pandrs_spark.operators.text import pack_sequences
 
     rows = [(i, "s", 40) for i in range(10)]  # 400 tokens, budget 100
-    df = spark.createDataFrame(rows, "doc_id long, shard string, n_tok long")
+    df = small_local_df(spark, rows, "doc_id long, shard string, n_tok long")
     out = {r["doc_id"]: r["bin_id"] for r in pack_sequences(
         df.repartition(5), "n_tok", 100, ["shard"], ["doc_id"]
     ).collect()}
@@ -269,11 +274,12 @@ def test_pack_sequences_bins(spark):
 def test_decontaminate_flags_overlap_and_keeps_short_docs(spark):
     from pandrs_spark.operators.text import decontaminate
 
-    bench = spark.createDataFrame(
-        [(100, "alpha beta gamma delta epsilon zeta")],
+    bench = small_local_df(
+        spark, [(100, "alpha beta gamma delta epsilon zeta")],
         "doc_id long, text string",
     )
-    cand = spark.createDataFrame(
+    cand = small_local_df(
+        spark,
         [
             # shares the 3-gram "beta gamma delta" with the benchmark
             (1, "zero beta gamma delta nine ten"),
@@ -299,7 +305,8 @@ def test_remove_boilerplate_segments(spark):
 
     # "the footer text" appears in 3 docs -> removed at min_doc_count=3;
     # unique bodies survive in original order.
-    docs = spark.createDataFrame(
+    docs = small_local_df(
+        spark,
         [
             (1, "alpha beta gamma the footer text"),
             (2, "delta epsilon zeta the footer text"),
@@ -320,7 +327,7 @@ def test_remove_boilerplate_segments(spark):
     assert out[4]["n_removed"] == 0
     # a doc that is ALL boilerplate keeps its row with empty text
     docs2 = docs.union(
-        spark.createDataFrame([(5, "the footer text")], "doc_id long, text string")
+        small_local_df(spark, [(5, "the footer text")], "doc_id long, text string")
     )
     out2 = {
         r["doc_id"]: r
@@ -336,8 +343,8 @@ def test_unigram_logprob_score(spark):
 
     from pandrs_spark.operators.text import unigram_logprob_score
 
-    docs = spark.createDataFrame(
-        [(1, "common common common"), (2, "common rare")],
+    docs = small_local_df(
+        spark, [(1, "common common common"), (2, "common rare")],
         "doc_id long, text string",
     )
     got = {r["doc_id"]: r for r in unigram_logprob_score(docs).collect()}
@@ -357,7 +364,8 @@ def test_decontaminate_hashed_matches_exact(spark):
     explode_outer null path for too-short docs."""
     from pandrs_spark.operators.text import decontaminate
 
-    docs = spark.createDataFrame(
+    docs = small_local_df(
+        spark,
         [
             (1, "a b c d e f g h i j"),
             (2, "k l m n o p q r s t"),
@@ -365,8 +373,8 @@ def test_decontaminate_hashed_matches_exact(spark):
         ],
         "doc_id long, text string",
     )
-    bench = spark.createDataFrame(
-        [(100, "a b c d e f g h plus tail words")], "doc_id long, text string"
+    bench = small_local_df(
+        spark, [(100, "a b c d e f g h plus tail words")], "doc_id long, text string"
     )
     exact = {
         r["doc_id"]: (r["n_grams"], r["n_hits"], r["contaminated"])
@@ -384,7 +392,8 @@ def test_decontaminate_hashed_matches_exact(spark):
 def test_select_cluster_representatives(spark):
     from pandrs_spark.operators.dedup import select_cluster_representatives
 
-    docs = spark.createDataFrame(
+    docs = small_local_df(
+        spark,
         [
             (1, "same   text here", 10),
             (2, "same text here", 25),   # same normalized content, best quality
@@ -405,8 +414,8 @@ def test_temperature_mixture_shares(spark):
 
     from pandrs_spark.operators.sampling import temperature_mixture_shares
 
-    df = spark.createDataFrame(
-        [("web",)] * 90 + [("code",)] * 9 + [("books",)] * 1, "d string"
+    df = small_local_df(
+        spark, [("web",)] * 90 + [("code",)] * 9 + [("books",)] * 1, "d string"
     )
     out = {r["domain"]: r for r in temperature_mixture_shares(df, "d", 0.5).collect()}
     tot = math.sqrt(90) + math.sqrt(9) + math.sqrt(1)
@@ -425,7 +434,8 @@ def test_remove_boilerplate_segments_keeps_null_text_docs(spark):
     frequency join must keep them with n_segs=0 and empty clean_text."""
     from pandrs_spark.operators.text import remove_boilerplate_segments
 
-    docs = spark.createDataFrame(
+    docs = small_local_df(
+        spark,
         [
             (1, "alpha beta gamma"),
             (2, None),
@@ -452,8 +462,8 @@ def test_bigram_lm_scores_word_salad_higher(spark):
     from pandrs_spark.operators.text import bigram_lm_score
 
     fluent = "the cat sat on the mat"
-    docs = spark.createDataFrame(
-        [(i, fluent) for i in range(1, 9)] + [(9, "mat the on sat cat the")],
+    docs = small_local_df(
+        spark, [(i, fluent) for i in range(1, 9)] + [(9, "mat the on sat cat the")],
         "doc_id long, text string",
     )
     out = {r["doc_id"]: r for r in bigram_lm_score(docs).collect()}
@@ -469,8 +479,8 @@ def test_bigram_lm_scores_word_salad_higher(spark):
 def test_bigram_lm_skips_short_docs(spark):
     from pandrs_spark.operators.text import bigram_lm_score
 
-    docs = spark.createDataFrame(
-        [(1, "one"), (2, ""), (3, "two tokens here")],
+    docs = small_local_df(
+        spark, [(1, "one"), (2, ""), (3, "two tokens here")],
         "doc_id long, text string",
     )
     out = {r["doc_id"]: r for r in bigram_lm_score(docs).collect()}
@@ -485,7 +495,8 @@ def test_c4_line_filter_rule_battery(spark):
     from pandrs_spark.operators.text import c4_line_filter
 
     good = "this line has enough words and ends well."
-    docs = spark.createDataFrame(
+    docs = small_local_df(
+        spark,
         [
             (1, good + "\nno terminal punctuation here at all\nshort line."),
             (2, good + "\nplease Enable JavaScript to view the full page."),
@@ -516,7 +527,8 @@ def test_source_overlap_matrix_counts_and_zero_pairs(spark):
     normalized), zero-overlap pairs still present with jaccard 0."""
     from pandrs_spark.operators.dedup import source_overlap_matrix
 
-    docs = spark.createDataFrame(
+    docs = small_local_df(
+        spark,
         [
             (1, "Alpha  beta", "a"),
             (2, "alpha beta", "b"),     # same fp as 1 after normalize
@@ -546,7 +558,8 @@ def test_winnow_fingerprints_guarantee_and_edges(spark):
     from pandrs_spark.operators.dedup import winnow_fingerprints
 
     shared = "one two three four five six seven eight nine ten"
-    docs = spark.createDataFrame(
+    docs = small_local_df(
+        spark,
         [
             (1, "alpha beta " + shared + " gamma delta"),
             (2, "zork quux " + shared + " blarg wibble"),
@@ -574,7 +587,8 @@ def test_winnow_overlap_pairs_finds_partial_dup(spark):
     from pandrs_spark.operators.dedup import winnow_overlap_pairs
 
     run = " ".join(f"tok{i}" for i in range(30))
-    docs = spark.createDataFrame(
+    docs = small_local_df(
+        spark,
         [
             (1, run + " unique tail one here now"),
             (2, "other head words go here " + run),
@@ -593,7 +607,8 @@ def test_winnow_overlap_pairs_finds_partial_dup(spark):
 def test_top_ngram_fraction_known_values(spark):
     from pandrs_spark.operators.text import top_ngram_fraction
 
-    df = spark.createDataFrame(
+    df = small_local_df(
+        spark,
         [
             # bigrams: "buy now" x3, "now buy" x2 -> top = 3/5
             ("stuffed", "buy now buy now buy now"),

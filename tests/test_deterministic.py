@@ -9,12 +9,13 @@ import random
 from pyspark.sql import functions as F
 
 from pandrs_spark.functions.deterministic import davg, dsum
+from pandrs_spark.operators.util import small_local_df
 
 
 def test_dsum_partition_invariant(spark):
     rng = random.Random(7)
     vals = [(rng.uniform(-1e6, 1e6),) for _ in range(20_000)]
-    df = spark.createDataFrame(vals, "v double")
+    df = small_local_df(spark, vals, "v double")
     results = set()
     for parts in (1, 7, 64):
         r = df.repartition(parts).agg(dsum("v").alias("s")).collect()[0].s
@@ -23,7 +24,7 @@ def test_dsum_partition_invariant(spark):
 
 
 def test_davg_matches_exact(spark):
-    df = spark.createDataFrame([(1.005,), (2.015,), (3.025,)], "v double")
+    df = small_local_df(spark, [(1.005,), (2.015,), (3.025,)], "v double")
     got = df.agg(davg("v", 2).alias("m")).collect()[0].m
     # round half away from zero at scale 2: 1.0 + 2.02 + 3.02 or exact
     # double-repr dependent — just assert stability and closeness

@@ -24,6 +24,8 @@ import tempfile
 
 import pytest
 
+from pandrs_spark.operators.util import small_local_df
+
 
 _TMP = tempfile.mkdtemp(prefix="fanout_fence_")
 
@@ -47,7 +49,8 @@ def _docs(spark, n, words_per_doc):
     def tok(i, j):
         return hashlib.md5(f"{i}:{j}".encode()).hexdigest()[:8]
 
-    df = spark.createDataFrame(
+    df = small_local_df(
+        spark,
         [
             (i, " ".join(tok(i, j) for j in range(words_per_doc)))
             for i in range(n)
@@ -62,8 +65,8 @@ def _embs(spark, n, dim=64):
         h = int(hashlib.md5(f"{i}:{j}".encode()).hexdigest()[:8], 16)
         return h / 1e8 - 21.5  # ~4e9 distinct values: defeats dictionary encoding
 
-    df = spark.createDataFrame(
-        [(i, [val(i, j) for j in range(dim)]) for i in range(n)],
+    df = small_local_df(
+        spark, [(i, [val(i, j) for j in range(dim)]) for i in range(n)],
         "vec_id long, embedding array<double>",
     )
     return _single_file_parquet(df, f"embs_{n}_{dim}")
@@ -75,8 +78,8 @@ def _roundrobin(df) -> bool:
 
 
 def _bench(spark):
-    return spark.createDataFrame(
-        [(1, "held out benchmark prompt entirely distinct tokens")],
+    return small_local_df(
+        spark, [(1, "held out benchmark prompt entirely distinct tokens")],
         "bench_id long, text string",
     )
 

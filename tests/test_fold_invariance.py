@@ -18,6 +18,8 @@ import math
 import pytest
 from hypothesis import given, settings, strategies as st
 
+from pandrs_spark.operators.util import small_local_df
+
 vals_strategy = st.lists(
     st.floats(min_value=0.1, max_value=20.0, allow_nan=False),
     min_size=6,
@@ -53,7 +55,7 @@ def test_em_gmm_trajectory_partition_invariant(spark, xs, pa, pb):
     cols = ["n", "mu1", "s1", "mu2", "s2", "pi"]
     outs = []
     for parts in (pa, pb):
-        df = spark.createDataFrame([(v,) for v in xs], "x double").repartition(
+        df = small_local_df(spark, [(v,) for v in xs], "x double").repartition(
             parts
         )
         outs.append(
@@ -81,7 +83,7 @@ def test_msprt_partition_invariant_and_matches_formula(spark, rows, pa, pb):
     cols = ["n1", "c1", "n0", "c0", "theta", "v", "lambda_stat"]
     outs = []
     for parts in (pa, pb):
-        df = spark.createDataFrame(rows, "arm int, conv int").repartition(parts)
+        df = small_local_df(spark, rows, "arm int, conv int").repartition(parts)
         outs.append(_rows(msprt_two_proportion(df, "arm", "conv"), cols))
     assert outs[0] == outs[1]
     n1, c1, n0, c0, theta, v, lam = outs[0][0]
@@ -119,8 +121,8 @@ def test_ransac_consensus_partition_invariant(spark, ys, pa, pb):
     cols = ["t1", "t2", "slope", "icept", "n_inliers", "n_total"]
     outs = []
     for parts in (pa, pb):
-        df = spark.createDataFrame(
-            [(i, y) for i, y in enumerate(ys)], "t long, y double"
+        df = small_local_df(
+            spark, [(i, y) for i, y in enumerate(ys)], "t long, y double"
         ).repartition(parts)
         outs.append(_rows(ransac_line_consensus(df, "t", "y", sample_n=8), cols))
     # the md5-keyed sample and exact integer inlier counts make the
@@ -150,8 +152,8 @@ def test_lmdi_contributions_sum_to_delta_cvr(spark, rates):
 
     r1a, r1b, r2a, r2b = rates
     cvra, cvrb = r1a * r2a, r1b * r2b
-    df = spark.createDataFrame(
-        [("s1", r1a, r1b, cvra, cvrb), ("s2", r2a, r2b, cvra, cvrb)],
+    df = small_local_df(
+        spark, [("s1", r1a, r1b, cvra, cvrb), ("s2", r2a, r2b, cvra, cvrb)],
         "stage string, rate_a double, rate_b double, cvra double, cvrb double",
     )
     out = df.select(
@@ -179,7 +181,7 @@ def test_poisson_irls_partition_invariant(spark, rows, pa, pb):
     cols = ["n", "b0", "b1", "mean_y"]
     outs = []
     for parts in (pa, pb):
-        df = spark.createDataFrame(rows, "y int, x double").repartition(parts)
+        df = small_local_df(spark, rows, "y int, x double").repartition(parts)
         outs.append(_rows(poisson_irls_1d(df, "y", "x", n_iter=3), cols))
     assert _same(outs[0], outs[1])
     assert outs[0][0][0] == len(rows)
@@ -209,11 +211,11 @@ def test_ipf_rake_partition_invariant(spark, cells, pa, pb):
     ct = [(c, total / len(cols_)) for c in cols_]
     outs = []
     for parts in (pa, pb):
-        df = spark.createDataFrame(cells, "r int, c int, n long").repartition(
+        df = small_local_df(spark, cells, "r int, c int, n long").repartition(
             parts
         )
-        row_t = spark.createDataFrame(rt, "r int, target_r double")
-        col_t = spark.createDataFrame(ct, "c int, target_c double")
+        row_t = small_local_df(spark, rt, "r int, target_r double")
+        col_t = small_local_df(spark, ct, "c int, target_c double")
         w = ipf_rake(df, "r", "c", "n", row_t, col_t, n_rounds=3)
         outs.append(
             sorted(_rows(w.select("r", "c", "n", "w"), ["r", "c", "n", "w"]))
@@ -240,7 +242,7 @@ def test_holt_damped_partition_invariant(spark, xs, pa, pb):
     rows = [("s", i, float(v)) for i, v in enumerate(xs)]
     outs = []
     for parts in (pa, pb):
-        df = spark.createDataFrame(rows, "k string, t int, x double").repartition(
+        df = small_local_df(spark, rows, "k string, t int, x double").repartition(
             parts
         )
         fc = holt_damped_forecast(
@@ -277,7 +279,7 @@ def test_page_hinkley_partition_invariant(spark, xs, pa, pb):
     cols = ["n_days", "ph_max", "n_alarm_days", "first_alarm_idx"]
     outs = []
     for parts in (pa, pb):
-        df = spark.createDataFrame(rows, "d int, x double").repartition(parts)
+        df = small_local_df(spark, rows, "d int, x double").repartition(parts)
         outs.append(_rows(page_hinkley(df, "x", "d", delta=0.01, lam=0.5), cols))
     assert _same(outs[0], outs[1])
     assert outs[0][0][0] == len(xs)
@@ -299,7 +301,7 @@ def test_logistic_irls_partition_invariant(spark, rows, pa, pb):
     cols = ["n", "b0", "b1", "mean_y"]
     outs = []
     for parts in (pa, pb):
-        df = spark.createDataFrame(rows, "y int, x double").repartition(parts)
+        df = small_local_df(spark, rows, "y int, x double").repartition(parts)
         outs.append(_rows(logistic_irls_1d(df, "y", "x", n_iter=3), cols))
     assert _same(outs[0], outs[1])
     assert outs[0][0][0] == len(rows)
@@ -327,7 +329,7 @@ def test_ansari_bradley_partition_invariant(spark, rows, pa, pb):
     cols = ["n1", "n2", "ab_t_norm", "z"]
     outs = []
     for parts in (pa, pb):
-        df = spark.createDataFrame(rows, "value double, grp string").repartition(
+        df = small_local_df(spark, rows, "value double, grp string").repartition(
             parts
         )
         outs.append(_rows(ansari_bradley_test(df, "value", "grp", "a", "b"), cols))
@@ -356,7 +358,7 @@ def test_cucconi_partition_invariant(spark, rows, pa, pb):
     cols = ["n1", "n2", "u", "v", "c"]
     outs = []
     for parts in (pa, pb):
-        df = spark.createDataFrame(rows, "value double, grp string").repartition(
+        df = small_local_df(spark, rows, "value double, grp string").repartition(
             parts
         )
         outs.append(_rows(cucconi_test(df, "value", "grp", "a", "b"), cols))

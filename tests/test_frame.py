@@ -9,11 +9,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from pandrs_spark.frame import Frame, concat, from_spark
+from pandrs_spark.operators.util import small_local_df
 
 
 @pytest.fixture()
 def frame(spark):
-    df = spark.createDataFrame(
+    df = small_local_df(
+        spark,
         [
             ("a", 1, 10.0),
             ("b", 2, None),
@@ -109,8 +111,8 @@ def test_groupby_transform_filter(frame):
 
 def test_pivot_melt_roundtrip(spark):
     f = Frame(
-        spark.createDataFrame(
-            [("r1", "x", 1.0), ("r1", "y", 2.0), ("r2", "x", 3.0)],
+        small_local_df(
+            spark, [("r1", "x", 1.0), ("r1", "y", 2.0), ("r2", "x", 3.0)],
             "idx string, col string, val double",
         )
     )
@@ -122,7 +124,7 @@ def test_pivot_melt_roundtrip(spark):
 
 
 def test_explode_and_value_counts(spark):
-    f = Frame(spark.createDataFrame([("a b", 1), ("a", 2)], "t string, i long"))
+    f = Frame(small_local_df(spark, [("a b", 1), ("a", 2)], "t string, i long"))
     e = f.explode("t", sep=" ")
     vc = e.value_counts("t").spark.collect()
     assert [(r.t, r["count"]) for r in vc] == [("a", 2), ("b", 1)]
@@ -143,7 +145,7 @@ def test_rolling(frame):
 
 
 def test_merge_concat(spark, frame):
-    dim = Frame(spark.createDataFrame([("a", "alpha")], "k string, label string"))
+    dim = Frame(small_local_df(spark, [("a", "alpha")], "k string, label string"))
     m = frame.merge(dim, on="k", how="left")
     assert m.count() == 5
     two = concat([frame, frame])
@@ -174,10 +176,10 @@ def test_sample_deterministic(frame):
 def test_update_overwrites_non_null(spark):
     from pandrs_spark.frame import Frame
 
-    base = Frame(spark.createDataFrame(
-        [(1, "a", 10.0), (2, "b", 20.0), (3, "c", 30.0)], "id bigint, s string, v double"
+    base = Frame(small_local_df(
+        spark, [(1, "a", 10.0), (2, "b", 20.0), (3, "c", 30.0)], "id bigint, s string, v double"
     ))
-    upd = spark.createDataFrame([(2, None, 99.0), (3, "C", None)], "id bigint, s string, v double")
+    upd = small_local_df(spark, [(2, None, 99.0), (3, "C", None)], "id bigint, s string, v double")
     out = {r["id"]: r for r in base.update(upd, on=["id"]).spark.collect()}
     assert out[2]["v"] == 99.0 and out[2]["s"] == "b"  # NULL does not overwrite
     assert out[3]["s"] == "C" and out[3]["v"] == 30.0
@@ -187,8 +189,8 @@ def test_update_overwrites_non_null(spark):
 def test_combine_first_fills_and_extends(spark):
     from pandrs_spark.frame import Frame
 
-    a = Frame(spark.createDataFrame([(1, None), (2, 20.0)], "id bigint, v double"))
-    b = spark.createDataFrame([(1, 11.0), (3, 33.0)], "id bigint, v double")
+    a = Frame(small_local_df(spark, [(1, None), (2, 20.0)], "id bigint, v double"))
+    b = small_local_df(spark, [(1, 11.0), (3, 33.0)], "id bigint, v double")
     rows = {r["id"]: r["v"] for r in a.combine_first(b, on=["id"]).spark.collect()}
     assert rows == {1: 11.0, 2: 20.0, 3: 33.0}
 
@@ -196,7 +198,7 @@ def test_combine_first_fills_and_extends(spark):
 def test_transpose_small(spark):
     from pandrs_spark.frame import Frame
 
-    f = Frame(spark.createDataFrame([(1, 2)], "a bigint, b bigint"))
+    f = Frame(small_local_df(spark, [(1, 2)], "a bigint, b bigint"))
     t = f.transpose().spark.collect()
     assert {r["column"] for r in t} == {"a", "b"}
 
@@ -204,8 +206,8 @@ def test_transpose_small(spark):
 def test_concat_columns_positional(spark):
     from pandrs_spark.frame import Frame, concat_columns
 
-    a = Frame(spark.createDataFrame([(1,), (2,)], "x bigint"))
-    b = Frame(spark.createDataFrame([(10,), (20,)], "y bigint"))
+    a = Frame(small_local_df(spark, [(1,), (2,)], "x bigint"))
+    b = Frame(small_local_df(spark, [(10,), (20,)], "y bigint"))
     rows = sorted(
         (r["x"], r["y"]) for r in concat_columns([a, b]).spark.collect()
     )
@@ -215,7 +217,7 @@ def test_concat_columns_positional(spark):
 def test_cut_qcut_accessors(spark):
     from pandrs_spark.frame import Frame
 
-    f = Frame(spark.createDataFrame([(float(i),) for i in range(8)], "v double"))
+    f = Frame(small_local_df(spark, [(float(i),) for i in range(8)], "v double"))
     cut = f.cut("v", 4, out="b").spark
     assert cut.agg(F.countDistinct("b")).first()[0] == 4
     q = f.qcut("v", 2, out="b").spark
@@ -226,8 +228,8 @@ def test_cut_qcut_accessors(spark):
 def test_interpolate_accessor(spark):
     from pandrs_spark.frame import Frame
 
-    f = Frame(spark.createDataFrame(
-        [(1, 1.0), (2, None), (3, 3.0)], "i bigint, v double"
+    f = Frame(small_local_df(
+        spark, [(1, 1.0), (2, None), (3, 3.0)], "i bigint, v double"
     ))
     vals = {r["i"]: r["v"] for r in f.interpolate(["v"]).spark.collect()}
     assert vals[2] == pytest.approx(2.0)
@@ -236,7 +238,7 @@ def test_interpolate_accessor(spark):
 def test_iloc_take_nth(spark):
     from pandrs_spark.frame import Frame
 
-    f = Frame(spark.createDataFrame([(i, i * 10) for i in range(6)], "i bigint, v bigint"))
+    f = Frame(small_local_df(spark, [(i, i * 10) for i in range(6)], "i bigint, v bigint"))
     assert [r["i"] for r in f.iloc_range(1, 4).spark.collect()] == [1, 2, 3]
     assert sorted(r["i"] for r in f.take([0, 5]).spark.collect()) == [0, 5]
     assert f.nth(2)["v"] == 20
@@ -247,8 +249,8 @@ def test_iloc_take_nth(spark):
 def test_str_accessor(spark):
     from pandrs_spark.frame import str_
 
-    df = spark.createDataFrame(
-        [("Hello World",), ("spark",), ("  pad  ",), ("abc123",)], "s string"
+    df = small_local_df(
+        spark, [("Hello World",), ("spark",), ("  pad  ",), ("abc123",)], "s string"
     )
     s = str_("s")
     row = df.select(
@@ -278,8 +280,8 @@ def test_dt_accessor(spark):
     from pandrs_spark.frame import dt as dt_
 
     # 2024-03-09 is a Saturday; 2024 is a leap year
-    df = spark.createDataFrame(
-        [(datetime.datetime(2024, 3, 9, 15, 30, 45),)], "ts timestamp"
+    df = small_local_df(
+        spark, [(datetime.datetime(2024, 3, 9, 15, 30, 45),)], "ts timestamp"
     )
     d = dt_("ts")
     row = df.select(
@@ -322,8 +324,8 @@ def test_insert_pop_swap_reindex(frame):
 
 
 def test_align_outer_on_keys(spark):
-    a = Frame(spark.createDataFrame([(1, 10.0), (2, 20.0)], "id long, x double"))
-    b = Frame(spark.createDataFrame([(2, 200.0), (3, 300.0)], "id long, y double"))
+    a = Frame(small_local_df(spark, [(1, 10.0), (2, 20.0)], "id long, x double"))
+    b = Frame(small_local_df(spark, [(2, 200.0), (3, 300.0)], "id long, y double"))
     la, lb = a.align(b, on=["id"])
     ra = {r.id: r.x for r in la.collect()}
     rb = {r.id: r.y for r in lb.collect()}
@@ -333,8 +335,8 @@ def test_align_outer_on_keys(spark):
 
 def test_lookup(spark):
     f = Frame(
-        spark.createDataFrame(
-            [(1, "a", 10.0), (2, "b", 20.0)], "id long, s string, v double"
+        small_local_df(
+            spark, [(1, "a", 10.0), (2, "b", 20.0)], "id long, s string, v double"
         )
     )
     out = {
@@ -346,8 +348,8 @@ def test_lookup(spark):
 
 def test_replace_inf(spark):
     f = Frame(
-        spark.createDataFrame(
-            [(1.0,), (float("inf"),), (float("-inf"),), (float("nan"),)], "v double"
+        small_local_df(
+            spark, [(1.0,), (float("inf"),), (float("-inf"),), (float("nan"),)], "v double"
         )
     )
     vals = [r.v for r in f.replace_inf().collect()]
@@ -358,8 +360,8 @@ def test_replace_inf(spark):
 def test_str_accessor_extensions(spark):
     from pandrs_spark.frame import StrAccessor
 
-    df = spark.createDataFrame(
-        [("Hello World",), ("abc",), ("ABC",), ("aXbY",)], "s string"
+    df = small_local_df(
+        spark, [("Hello World",), ("abc",), ("ABC",), ("aXbY",)], "s string"
     )
     a = StrAccessor("s")
     got = df.select(
@@ -384,7 +386,7 @@ def test_center_matches_cpython(spark):
     from pandrs_spark.frame import StrAccessor
 
     cases = [("a", 4), ("ab", 4), ("ab", 5), ("abc", 6), ("aXbY", 7), ("aXbY", 3)]
-    df = spark.createDataFrame([(s,) for s, _ in cases], "s string").coalesce(1)
+    df = small_local_df(spark, [(s,) for s, _ in cases], "s string").coalesce(1)
     a = StrAccessor("s")
     for (s, w) in cases:
         got = df.filter(F.col("s") == s).select(a.center(w, "*").alias("c")).first()["c"]
@@ -394,8 +396,8 @@ def test_center_matches_cpython(spark):
 def test_dt_accessor_tz(spark):
     from pandrs_spark.frame import DtAccessor
 
-    df = spark.createDataFrame(
-        [("2024-01-15 12:00:00",), ("2024-07-15 12:00:00",)], "s string"
+    df = small_local_df(
+        spark, [("2024-01-15 12:00:00",), ("2024-07-15 12:00:00",)], "s string"
     ).select(F.to_timestamp("s").alias("ts"))
     a = DtAccessor("ts")
     got = df.select(
@@ -412,7 +414,7 @@ def test_dt_accessor_tz(spark):
 def test_dt_add_years_leap_clamp(spark):
     from pandrs_spark.frame import DtAccessor
 
-    df = spark.createDataFrame([("2024-02-29",)], "s string").select(
+    df = small_local_df(spark, [("2024-02-29",)], "s string").select(
         F.to_date("s").alias("d")
     )
     got = df.select(
@@ -424,8 +426,8 @@ def test_dt_add_years_leap_clamp(spark):
 def test_groupby_sugar_extended(spark):
     from pandrs_spark.frame import Frame
 
-    df = spark.createDataFrame(
-        [("a", 1.0), ("a", 2.0), ("a", 3.0), ("b", 4.0), ("b", 6.0)],
+    df = small_local_df(
+        spark, [("a", 1.0), ("a", 2.0), ("a", 3.0), ("b", 4.0), ("b", 6.0)],
         "g string, v double",
     )
     f = Frame(df)
@@ -442,8 +444,8 @@ def test_groupby_sugar_extended(spark):
 def test_frame_any_all_count_valid(spark):
     from pandrs_spark.frame import Frame
 
-    df = spark.createDataFrame(
-        [(1, 0, float("nan")), (0, 0, 2.0), (1, 0, None)],
+    df = small_local_df(
+        spark, [(1, 0, float("nan")), (0, 0, 2.0), (1, 0, None)],
         "a int, b int, c double",
     )
     f = Frame(df)
@@ -455,7 +457,7 @@ def test_frame_any_all_count_valid(spark):
 def test_driver_side_materialization(spark):
     from pandrs_spark.frame import Frame
 
-    f = Frame(spark.createDataFrame([(1, "a"), (2, "b")], "x bigint, s string"))
+    f = Frame(small_local_df(spark, [(1, "a"), (2, "b")], "x bigint, s string"))
     assert f.to_dict("records") == [{"x": 1, "s": "a"}, {"x": 2, "s": "b"}]
     assert f.to_dict("list") == {"x": [1, 2], "s": ["a", "b"]}
     assert f.to_dict() == {"x": {0: 1, 1: 2}, "s": {0: "a", 1: "b"}}
@@ -467,8 +469,8 @@ def test_driver_side_materialization(spark):
 def test_stack_unstack_roundtrip(spark):
     from pandrs_spark.frame import Frame
 
-    df = spark.createDataFrame(
-        [("x", 1.0, 10.0), ("y", 2.0, 20.0)], "k string, a double, b double"
+    df = small_local_df(
+        spark, [("x", 1.0, 10.0), ("y", 2.0, 20.0)], "k string, a double, b double"
     )
     long = Frame(df).stack(["k"])
     assert long.spark.count() == 4
@@ -480,8 +482,8 @@ def test_stack_unstack_roundtrip(spark):
 def test_query_at_params(spark):
     from pandrs_spark.frame import Frame
 
-    df = spark.createDataFrame(
-        [(1, 50.0, "AUTO"), (2, 150.0, "AUTO"), (3, 200.0, "HOUSE")],
+    df = small_local_df(
+        spark, [(1, 50.0, "AUTO"), (2, 150.0, "AUTO"), (3, 200.0, "HOUSE")],
         "id long, bal double, seg string",
     )
     out = Frame(df).query("bal > @lo and seg == @seg", lo=100, seg="AUTO")
@@ -493,7 +495,7 @@ def test_query_at_params(spark):
 def test_query_param_escapes_quotes(spark):
     from pandrs_spark.frame import Frame
 
-    df = spark.createDataFrame([("o'brien",), ("smith",)], "name string")
+    df = small_local_df(spark, [("o'brien",), ("smith",)], "name string")
     out = Frame(df).query("name == @n", n="o'brien")
     assert out.spark.count() == 1
 
@@ -502,8 +504,8 @@ def test_query_param_prefix_names(spark):
     # @p must not corrupt @p2 (word-boundary splice, not str.replace)
     from pandrs_spark.frame import Frame
 
-    df = spark.createDataFrame(
-        [(1, 5.0), (2, 15.0), (3, 25.0)], "a long, b double"
+    df = small_local_df(
+        spark, [(1, 5.0), (2, 15.0), (3, 25.0)], "a long, b double"
     )
     out = Frame(df).query("a > @p and b > @p2", p=1, p2=20)
     assert [r["a"] for r in out.spark.collect()] == [3]
@@ -514,15 +516,15 @@ def test_query_param_prefix_names(spark):
 def test_query_param_nonfinite_and_mixed_list(spark):
     from pandrs_spark.frame import Frame
 
-    df = spark.createDataFrame(
-        [(1.0,), (float("inf",),), (float("-inf"),)], "v double"
+    df = small_local_df(
+        spark, [(1.0,), (float("inf",),), (float("-inf"),)], "v double"
     )
     assert Frame(df).query("v > @lo", lo=float("-inf")).spark.count() == 2
     assert Frame(df).query("v == @x", x=float("inf")).spark.count() == 1
     nan_lit = Frame._sql_literal(float("nan"))
     assert "NaN" in nan_lit and "nan" not in nan_lit.replace("NaN", "")
     # mixed-type list literal must not raise (old sorted() did)
-    df2 = spark.createDataFrame([("a",), ("1",)], "s string")
+    df2 = small_local_df(spark, [("a",), ("1",)], "s string")
     assert Frame._sql_literal(["a", 1]) == "('a', 1)"
 
 
@@ -530,8 +532,8 @@ def test_lookup_guards_and_native_type(spark):
     from pandrs_spark.frame import Frame
 
     f = Frame(
-        spark.createDataFrame(
-            [(1, 10.0, 100.0), (2, 20.0, 200.0)], "id long, x double, y double"
+        small_local_df(
+            spark, [(1, 10.0, 100.0), (2, 20.0, 200.0)], "id long, x double, y double"
         )
     )
     # uniform requested dtype → native double, not string
@@ -542,7 +544,7 @@ def test_lookup_guards_and_native_type(spark):
     assert out == {(1, "x"): 10.0, (2, "y"): 200.0}
     with pytest.raises(KeyError):
         f.lookup("id", [(1, "nope")])
-    key_only = Frame(spark.createDataFrame([(1,)], "id long"))
+    key_only = Frame(small_local_df(spark, [(1,)], "id long"))
     with pytest.raises(ValueError):
         key_only.lookup("id", [(1, "id")])
 
@@ -550,14 +552,14 @@ def test_lookup_guards_and_native_type(spark):
 def test_eval_assignment(spark):
     from pandrs_spark.frame import Frame
 
-    df = spark.createDataFrame([(2.0, 3.0)], "a double, b double")
+    df = small_local_df(spark, [(2.0, 3.0)], "a double, b double")
     out = Frame(df).eval("c = a * b + 1")
     assert out.spark.first()["c"] == 7.0
 
 
 def test_set_index_reset_index_roundtrip(spark):
-    df = spark.createDataFrame(
-        [("a", 1, 10.0), ("b", 2, 20.0), ("a", 3, 30.0)], "k string, n long, v double"
+    df = small_local_df(
+        spark, [("a", 1, 10.0), ("b", 2, 20.0), ("a", 3, 30.0)], "k string, n long, v double"
     )
     f = Frame(df.coalesce(1)).set_index("k")
     assert f.index_names == ("k",)
@@ -571,8 +573,8 @@ def test_set_index_reset_index_roundtrip(spark):
 
 
 def test_multiindex_levels(spark):
-    df = spark.createDataFrame(
-        [("a", "x", 1.0), ("a", "y", 2.0), ("b", "x", 3.0)],
+    df = small_local_df(
+        spark, [("a", "x", 1.0), ("a", "y", 2.0), ("b", "x", 3.0)],
         "k1 string, k2 string, v double",
     )
     f = Frame(df.coalesce(1)).set_index(["k1", "k2"])
@@ -589,7 +591,7 @@ def test_multiindex_levels(spark):
 
 
 def test_set_index_drop_false_and_append(spark):
-    df = spark.createDataFrame([("a", 1), ("b", 2)], "k string, n long")
+    df = small_local_df(spark, [("a", 1), ("b", 2)], "k string, n long")
     f = Frame(df.coalesce(1)).set_index("k", drop=False)
     assert "k" in f.columns and f.index_names == ("__index_k__",)
     f2 = f.set_index("n", append=True)
@@ -601,8 +603,8 @@ def test_set_index_drop_false_and_append(spark):
 
 
 def test_ffill_bfill_limit(spark):
-    df = spark.createDataFrame(
-        [(1, 1.0), (2, None), (3, None), (4, None), (5, 5.0)], "i long, v double"
+    df = small_local_df(
+        spark, [(1, 1.0), (2, None), (3, None), (4, None), (5, 5.0)], "i long, v double"
     )
     f = Frame(df.coalesce(1))
     ff = [r.v for r in f.ffill(["v"], limit=2).collect()]
@@ -612,8 +614,8 @@ def test_ffill_bfill_limit(spark):
 
 
 def test_fillna_limit(spark):
-    df = spark.createDataFrame(
-        [(1, None), (2, None), (3, 3.0), (4, None)], "i long, v double"
+    df = small_local_df(
+        spark, [(1, None), (2, None), (3, 3.0), (4, None)], "i long, v double"
     )
     f = Frame(df.coalesce(1))
     got = [r.v for r in f.fillna(0.0, limit=2).collect()]
@@ -621,8 +623,8 @@ def test_fillna_limit(spark):
 
 
 def test_interpolate_methods(spark):
-    df = spark.createDataFrame(
-        [(1, 10.0), (2, None), (3, None), (4, 40.0)], "i long, v double"
+    df = small_local_df(
+        spark, [(1, 10.0), (2, None), (3, None), (4, 40.0)], "i long, v double"
     )
     f = Frame(df.coalesce(1))
     lin = [r.v for r in f.interpolate(["v"]).collect()]
@@ -640,7 +642,7 @@ def test_interpolate_methods(spark):
 def test_select_column_expr_on_indexed_frame(spark):
     # ADVICE r3: `c not in cols` with a pyspark Column in cols invoked
     # Column.__eq__ then bool() -> "Cannot convert column into bool".
-    df = spark.createDataFrame([("a", 1, 10.0), ("b", 2, 20.0)], "k string, n long, v double")
+    df = small_local_df(spark, [("a", 1, 10.0), ("b", 2, 20.0)], "k string, n long, v double")
     f = Frame(df.coalesce(1)).set_index("k")
     out = f.select(F.col("v") * 2)
     assert sorted(r[0] for r in out.spark.select("`(v * 2)`").collect()) == [20.0, 40.0]
@@ -655,8 +657,8 @@ def test_select_column_expr_on_indexed_frame(spark):
 def test_query_at_inside_string_literal(spark):
     # ADVICE r3: '@' inside quoted literals must not be treated as a
     # parameter reference.
-    df = spark.createDataFrame(
-        [("a@b.com", 1), ("c@d.org", 2)], "email string, n long"
+    df = small_local_df(
+        spark, [("a@b.com", 1), ("c@d.org", 2)], "email string, n long"
     )
     out = Frame(df).query("email == 'a@b.com'")
     assert out.spark.count() == 1
@@ -664,7 +666,7 @@ def test_query_at_inside_string_literal(spark):
     out2 = Frame(df).query("email == 'c@d.org' and n >= @lo", lo=2)
     assert [r["n"] for r in out2.spark.collect()] == [2]
     # doubled-quote escape keeps the scanner in quote state
-    df2 = spark.createDataFrame([("it's@x", 5)], "s string, n long")
+    df2 = small_local_df(spark, [("it's@x", 5)], "s string, n long")
     assert Frame(df2).query("s == 'it''s@x' and n > @lo", lo=1).spark.count() == 1
 
 
@@ -672,7 +674,7 @@ def test_release_persisted_unpins_sort_cache(spark):
     from pandrs_spark import frame as frame_mod
 
     frame_mod.release_persisted()  # start clean
-    df = spark.createDataFrame([(3,), (1,), (2,)], "n long")
+    df = small_local_df(spark, [(3,), (1,), (2,)], "n long")
     out = Frame(df).sort_values("n")
     assert [r["n"] for r in out.collect()] == [1, 2, 3]
     assert len(frame_mod._PERSISTED) >= 1
@@ -692,7 +694,7 @@ def test_register_named_sql_function(spark):
         return x * 2.0
 
     register_function(spark, "double_it", _double_it, "double")
-    df = spark.createDataFrame([(1.5,), (2.0,)], "v double")
+    df = small_local_df(spark, [(1.5,), (2.0,)], "v double")
     df.createOrReplaceTempView("t_reg")
     got = spark.sql("SELECT double_it(v) AS d FROM t_reg ORDER BY d").collect()
     assert [r["d"] for r in got] == [3.0, 4.0]
@@ -703,13 +705,13 @@ def test_register_named_sql_function(spark):
     register_function(
         spark, "shout", lambda s: (s or "") + "!", "string", vectorized=False
     )
-    sdf = spark.createDataFrame([("hi",)], "s string")
+    sdf = small_local_df(spark, [("hi",)], "s string")
     assert spark.sql("SELECT shout('hi') AS x").collect()[0]["x"] == "hi!"
     del sdf
 
 
 def test_shape_size_empty_pipe(spark):
-    df = spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], "n long, s string")
+    df = small_local_df(spark, [(1, "a"), (2, "b"), (3, "c")], "n long, s string")
     f = Frame(df)
     assert f.shape == (3, 2)
     assert f.size == 6
@@ -722,14 +724,14 @@ def test_shape_size_empty_pipe(spark):
 def test_query_backslash_escaped_quote(spark):
     # review fix: \' inside a Spark string literal must not close the
     # quote state in @param substitution
-    df = spark.createDataFrame([("O'Brien @x", 1), ("Smith", 2)], "name string, n long")
+    df = small_local_df(spark, [("O'Brien @x", 1), ("Smith", 2)], "name string, n long")
     out = Frame(df).query("name == 'O\\'Brien @x' and n >= @lo", lo=1)
     assert [r["n"] for r in out.spark.collect()] == [1]
 
 
 def test_frame_skyline(spark):
-    df = spark.createDataFrame(
-        [(1, 10.0, 5.0), (2, 10.0, 4.0), (3, 9.0, 1.0), (4, 8.0, 2.0)],
+    df = small_local_df(
+        spark, [(1, 10.0, 5.0), (2, 10.0, 4.0), (3, 9.0, 1.0), (4, 8.0, 2.0)],
         "id long, gain double, cost double",
     )
     out = Frame(df).skyline(maximize=["gain"], minimize=["cost"])
@@ -740,8 +742,8 @@ def test_frame_profile_and_weighted_sample(spark):
     from pandrs_spark.frame import Frame
 
     f = Frame(
-        spark.createDataFrame(
-            [(1, "a", 2.0), (2, "b", 8.0), (3, None, 100.0)],
+        small_local_df(
+            spark, [(1, "a", 2.0), (2, "b", 8.0), (3, None, 100.0)],
             "id long, s string, w double",
         )
     )
@@ -755,8 +757,8 @@ def test_frame_cum_family_and_abs(spark):
     from pandrs_spark.frame import Frame
 
     f = Frame(
-        spark.createDataFrame(
-            [(1, 2.0), (2, -3.0), (3, 1.5)], "id long, v double"
+        small_local_df(
+            spark, [(1, 2.0), (2, -3.0), (3, 1.5)], "id long, v double"
         )
     )
     out = (
@@ -778,8 +780,8 @@ def test_frame_mode_and_idxmax(spark):
     from pandrs_spark.frame import Frame
 
     f = Frame(
-        spark.createDataFrame(
-            [(1, "a"), (2, "b"), (3, "a"), (4, "b"), (5, "c")],
+        small_local_df(
+            spark, [(1, "a"), (2, "b"), (3, "a"), (4, "b"), (5, "c")],
             "id long, s string",
         )
     )
@@ -787,8 +789,8 @@ def test_frame_mode_and_idxmax(spark):
     assert modes == ["a", "b"]  # tie -> both, like pandas
 
     g = Frame(
-        spark.createDataFrame(
-            [(10, 5.0), (11, 9.0), (12, 9.0)], "id long, v double"
+        small_local_df(
+            spark, [(10, 5.0), (11, 9.0), (12, 9.0)], "id long, v double"
         )
     )
     top = g.idxmax("v", "id").spark.collect()
@@ -806,8 +808,8 @@ def test_check_constraints_one_pass_report(spark):
     )
     import pyspark.sql.functions as F
 
-    df = spark.createDataFrame(
-        [(1, "a", 5.0), (2, "b", -1.0), (2, "z", 50.0), (None, "a", 10.0)],
+    df = small_local_df(
+        spark, [(1, "a", 5.0), (2, "b", -1.0), (2, "z", 50.0), (None, "a", 10.0)],
         "k long, s string, v double",
     )
     rep = {
@@ -835,14 +837,14 @@ def test_unique_constraint_null_positional_encoding(spark):
     # old concat_ws key skipped null elements and conflated them.
     from pandrs_spark.operators.quality import check_constraints, unique
 
-    df = spark.createDataFrame(
-        [("a", None), (None, "a")], "x string, y string"
+    df = small_local_df(
+        spark, [("a", None), (None, "a")], "x string, y string"
     )
     rep = check_constraints(df, [unique("x", "y")]).collect()
     assert rep[0]["violations"] == 0 and rep[0]["passed"]
     # and true duplicates (with nulls) are still caught
-    df2 = spark.createDataFrame(
-        [("a", None), ("a", None)], "x string, y string"
+    df2 = small_local_df(
+        spark, [("a", None), ("a", None)], "x string, y string"
     )
     rep2 = check_constraints(df2, [unique("x", "y")]).collect()
     assert rep2[0]["violations"] == 1 and not rep2[0]["passed"]

@@ -4,14 +4,15 @@ import pytest
 from pyspark.sql import functions as F
 
 from pandrs_spark.operators.hypothesis import gesd_outlier_peel
+from pandrs_spark.operators.util import small_local_df
 
 
 def test_gesd_peel_unmasks_outlier_cluster(spark):
     # two extreme points close together would mask each other in a
     # single-pass z-score; peeling must surface both, largest first.
     vals = [10.0, 11.0, 9.0, 10.5, 9.5, 10.2, 9.8, 10.1, 50.0, 48.0]
-    df = spark.createDataFrame(
-        [(i, v) for i, v in enumerate(vals)], "k int, x double"
+    df = small_local_df(
+        spark, [(i, v) for i, v in enumerate(vals)], "k int, x double"
     )
     out = gesd_outlier_peel(df, "x", key_cols=["k"], k=3).orderBy("peel_round")
     rows = out.collect()
@@ -28,8 +29,8 @@ def test_gesd_peel_recomputes_stats_per_round(spark):
     # round 2 must pick 20 with a huge R (stats recomputed), not reuse
     # round-1 stats (which would give 20 a modest R).
     vals = [5.0] * 9 + [20.0, 100.0]
-    df = spark.createDataFrame(
-        [(i, v) for i, v in enumerate(vals)], "k int, x double"
+    df = small_local_df(
+        spark, [(i, v) for i, v in enumerate(vals)], "k int, x double"
     )
     rows = (
         gesd_outlier_peel(df, "x", key_cols=["k"], k=2)
@@ -42,8 +43,8 @@ def test_gesd_peel_recomputes_stats_per_round(spark):
 
 
 def test_gesd_deterministic_tie_breaks_on_key(spark):
-    df = spark.createDataFrame(
-        [(1, 0.0), (2, 10.0), (3, -10.0), (4, 0.0)], "k int, x double"
+    df = small_local_df(
+        spark, [(1, 0.0), (2, 10.0), (3, -10.0), (4, 0.0)], "k int, x double"
     )
     rows = (
         gesd_outlier_peel(df, "x", key_cols=["k"], k=2)
@@ -60,8 +61,8 @@ def test_gesd_duplicate_keys_drop_one_row_per_round(spark):
     # rows share k=7; each peel round must remove exactly ONE physical
     # row (synthetic row-id anti-join), not the whole key group —
     # otherwise the remaining mean/sd is computed over a biased set.
-    df = spark.createDataFrame(
-        [(7, 100.0), (7, 100.0), (7, 10.0), (1, 0.0), (2, 1.0),
+    df = small_local_df(
+        spark, [(7, 100.0), (7, 100.0), (7, 10.0), (1, 0.0), (2, 1.0),
          (3, -1.0), (4, 0.5), (5, -0.5), (6, 0.2)],
         "k int, x double",
     )

@@ -12,18 +12,19 @@ from pandrs_spark.operators.graph import (
     symmetrize,
     triangle_count,
 )
+from pandrs_spark.operators.util import small_local_df
 
 
 @pytest.fixture()
 def two_component_graph(spark):
     # component A: 1-2-3 triangle; component B: 4-5 edge; 6 isolated via self-loop
-    return spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 1), (4, 5), (6, 6)], "src bigint, dst bigint"
+    return small_local_df(
+        spark, [(1, 2), (2, 3), (3, 1), (4, 5), (6, 6)], "src bigint, dst bigint"
     )
 
 
 def test_degrees(spark):
-    e = spark.createDataFrame([(1, 2), (1, 3), (2, 3)], "src bigint, dst bigint")
+    e = small_local_df(spark, [(1, 2), (1, 3), (2, 3)], "src bigint, dst bigint")
     rows = {r["id"]: r for r in degrees(e).collect()}
     assert rows[1]["out_degree"] == 2 and rows[1]["in_degree"] == 0
     assert rows[3]["in_degree"] == 2 and rows[3]["degree"] == 2
@@ -47,7 +48,7 @@ def test_connected_components(two_component_graph):
 def test_pagerank_uniform_on_symmetric_cycle(spark):
     # symmetric triangle: stationary distribution is uniform
     e = symmetrize(
-        spark.createDataFrame([(1, 2), (2, 3), (3, 1)], "src bigint, dst bigint")
+        small_local_df(spark, [(1, 2), (2, 3), (3, 1)], "src bigint, dst bigint")
     )
     ranks = {r["id"]: r["rank"] for r in pagerank(e, iterations=5).collect()}
     for v in (1, 2, 3):
@@ -60,7 +61,7 @@ def test_pagerank_mass_conserved(two_component_graph):
 
 
 def test_bfs_hops_chain(spark):
-    e = spark.createDataFrame([(1, 2), (2, 3), (3, 4)], "src bigint, dst bigint")
+    e = small_local_df(spark, [(1, 2), (2, 3), (3, 4)], "src bigint, dst bigint")
     hops = {r["id"]: r["hops"] for r in bfs_hops(e, [1]).collect()}
     assert hops == {1: 0, 2: 1, 3: 2, 4: 3}
 
@@ -72,8 +73,8 @@ def test_bfs_unreachable_absent(two_component_graph):
 
 def test_triangle_count(spark):
     # one triangle + one dangling edge
-    e = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 1), (3, 4)], "src bigint, dst bigint"
+    e = small_local_df(
+        spark, [(1, 2), (2, 3), (3, 1), (3, 4)], "src bigint, dst bigint"
     )
     assert triangle_count(e).first()["n_triangles"] == 1
 
@@ -81,7 +82,7 @@ def test_triangle_count(spark):
 def test_triangle_count_k4(spark):
     # K4 has 4 triangles
     edges = [(a, b) for a in range(1, 5) for b in range(1, 5) if a < b]
-    e = spark.createDataFrame(edges, "src bigint, dst bigint")
+    e = small_local_df(spark, edges, "src bigint, dst bigint")
     assert triangle_count(e).first()["n_triangles"] == 4
 
 
@@ -89,8 +90,8 @@ def test_clustering_coefficient(spark):
     from pandrs_spark.operators.graph import clustering_coefficient
 
     # triangle 1-2-3 plus pendant 4 attached to 3
-    e = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 1), (3, 4)], "src bigint, dst bigint"
+    e = small_local_df(
+        spark, [(1, 2), (2, 3), (3, 1), (3, 4)], "src bigint, dst bigint"
     )
     rows = {r["id"]: r for r in clustering_coefficient(e).collect()}
     assert rows[1]["lcc"] == 1.0 and rows[2]["lcc"] == 1.0
@@ -103,8 +104,8 @@ def test_label_propagation_two_cliques(spark):
 
     # two disjoint triangles: each converges to its min vertex id
     # (synchronous rounds; min tie-break makes the result deterministic)
-    e = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 1), (10, 11), (11, 12), (12, 10)],
+    e = small_local_df(
+        spark, [(1, 2), (2, 3), (3, 1), (10, 11), (11, 12), (12, 10)],
         "src bigint, dst bigint",
     )
     rows = {r["id"]: r["label"] for r in label_propagation(e, iterations=4).collect()}
@@ -116,13 +117,13 @@ def test_modularity_two_components(spark):
     from pandrs_spark.operators.graph import modularity, symmetrize
 
     # two disjoint triangles; perfect partition: Q = sum_c 1/2 - 1/4 = 1/2
-    e = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 1), (10, 11), (11, 12), (12, 10)],
+    e = small_local_df(
+        spark, [(1, 2), (2, 3), (3, 1), (10, 11), (11, 12), (12, 10)],
         "src bigint, dst bigint",
     )
     und = symmetrize(e)
-    comm = spark.createDataFrame(
-        [(1, 1), (2, 1), (3, 1), (10, 10), (11, 10), (12, 10)], "id bigint, community bigint"
+    comm = small_local_df(
+        spark, [(1, 1), (2, 1), (3, 1), (10, 10), (11, 10), (12, 10)], "id bigint, community bigint"
     )
     rows = {r["community"]: r for r in modularity(und, comm).collect()}
     assert rows[1]["intra_edges"] == 6 and rows[1]["degree_sum"] == 6
@@ -133,9 +134,9 @@ def test_modularity_two_components(spark):
 def test_modularity_single_community_is_zero(spark):
     from pandrs_spark.operators.graph import modularity, symmetrize
 
-    e = spark.createDataFrame([(1, 2), (2, 3)], "src bigint, dst bigint")
+    e = small_local_df(spark, [(1, 2), (2, 3)], "src bigint, dst bigint")
     und = symmetrize(e)
-    comm = spark.createDataFrame([(1, 0), (2, 0), (3, 0)], "id bigint, community bigint")
+    comm = small_local_df(spark, [(1, 0), (2, 0), (3, 0)], "id bigint, community bigint")
     row = modularity(und, comm).first()
     assert row["contribution"] == pytest.approx(0.0)
 
@@ -145,7 +146,7 @@ def test_closeness_path_graph(spark):
     # path 1-2-3: center is closer to everyone
     from pandrs_spark.operators.graph import closeness_centrality
 
-    e = spark.createDataFrame([(1, 2), (2, 3)], "src bigint, dst bigint")
+    e = small_local_df(spark, [(1, 2), (2, 3)], "src bigint, dst bigint")
     rows = {r["id"]: r for r in closeness_centrality(e).collect()}
     assert rows[2]["closeness"] == pytest.approx(1.0)       # 2/(1+1)
     assert rows[1]["closeness"] == pytest.approx(2 / 3)     # 2/(1+2)
@@ -155,8 +156,8 @@ def test_closeness_path_graph(spark):
 def test_closeness_landmark_roots(spark):
     from pandrs_spark.operators.graph import closeness_centrality
 
-    e = spark.createDataFrame([(1, 2), (2, 3)], "src bigint, dst bigint")
-    roots = spark.createDataFrame([(2,)], "id bigint")
+    e = small_local_df(spark, [(1, 2), (2, 3)], "src bigint, dst bigint")
+    roots = small_local_df(spark, [(2,)], "id bigint")
     rows = closeness_centrality(e, roots=roots).collect()
     assert len(rows) == 1 and rows[0]["id"] == 2
 
@@ -164,7 +165,7 @@ def test_closeness_landmark_roots(spark):
 def test_eigenvector_star_center_dominates(spark):
     from pandrs_spark.operators.graph import eigenvector_centrality
 
-    e = spark.createDataFrame([(0, 1), (0, 2), (0, 3)], "src bigint, dst bigint")
+    e = small_local_df(spark, [(0, 1), (0, 2), (0, 3)], "src bigint, dst bigint")
     s = {r["id"]: r["score"] for r in eigenvector_centrality(e, iterations=8).collect()}
     assert s[0] > s[1] and s[1] == pytest.approx(s[2]) == pytest.approx(s[3])
     # L2 norm 1
@@ -175,7 +176,7 @@ def test_katz_in_degree_ordering(spark):
     from pandrs_spark.operators.graph import katz_centrality
 
     # 1->3, 2->3, 3->4: vertex 4 inherits 3's mass, 3 has two in-edges
-    e = spark.createDataFrame([(1, 3), (2, 3), (3, 4)], "src bigint, dst bigint")
+    e = small_local_df(spark, [(1, 3), (2, 3), (3, 4)], "src bigint, dst bigint")
     s = {r["id"]: r["score"] for r in katz_centrality(e, iterations=8).collect()}
     assert s[3] > s[1] == pytest.approx(s[2]) == pytest.approx(1.0)
     assert s[4] > s[1]
@@ -185,8 +186,8 @@ def test_hits_bipartite_hubs_vs_authorities(spark):
     from pandrs_spark.operators.graph import hits
 
     # 1,2 point at 3,4: 1,2 are pure hubs; 3,4 pure authorities
-    e = spark.createDataFrame(
-        [(1, 3), (1, 4), (2, 3), (2, 4)], "src bigint, dst bigint"
+    e = small_local_df(
+        spark, [(1, 3), (1, 4), (2, 3), (2, 4)], "src bigint, dst bigint"
     )
     rows = {r["id"]: r for r in hits(e, iterations=5).collect()}
     assert rows[1]["hub"] == pytest.approx(rows[2]["hub"])
@@ -201,8 +202,8 @@ def test_shortest_paths_weighted(spark):
     from pandrs_spark.operators.graph import shortest_paths
 
     # direct 1->3 costs 10; detour 1->2->3 costs 3; 4 unreachable
-    e = spark.createDataFrame(
-        [(1, 3, 10), (1, 2, 1), (2, 3, 2), (4, 1, 5)],
+    e = small_local_df(
+        spark, [(1, 3, 10), (1, 2, 1), (2, 3, 2), (4, 1, 5)],
         "src bigint, dst bigint, cost bigint",
     )
     d = {r["id"]: r["dist"] for r in shortest_paths(e, 1, iterations=5).collect()}
@@ -214,8 +215,8 @@ def test_scc_two_cycles_and_bridge(spark):
     from pandrs_spark.operators.graph import strongly_connected_components
 
     # cycle {1,2,3}, cycle {4,5}, one-way bridge 3->4
-    e = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 1), (4, 5), (5, 4), (3, 4)],
+    e = small_local_df(
+        spark, [(1, 2), (2, 3), (3, 1), (4, 5), (5, 4), (3, 4)],
         "src bigint, dst bigint",
     )
     comp = {r["id"]: r["component"] for r in strongly_connected_components(e).collect()}
@@ -228,13 +229,13 @@ def test_betweenness_path_and_star(spark):
     from pandrs_spark.operators.graph import betweenness_centrality
 
     # path 1-2-3: only the middle vertex lies between others
-    path = spark.createDataFrame([(1, 2), (2, 3)], "src bigint, dst bigint")
+    path = small_local_df(spark, [(1, 2), (2, 3)], "src bigint, dst bigint")
     b = {r["id"]: r["betweenness"] for r in betweenness_centrality(path).collect()}
     assert b[2] == pytest.approx(1.0)
     assert b[1] == pytest.approx(0.0) and b[3] == pytest.approx(0.0)
 
     # star with center 0 and 3 leaves: center carries all 3 leaf pairs
-    star = spark.createDataFrame([(0, 1), (0, 2), (0, 3)], "src bigint, dst bigint")
+    star = small_local_df(spark, [(0, 1), (0, 2), (0, 3)], "src bigint, dst bigint")
     b = {r["id"]: r["betweenness"] for r in betweenness_centrality(star).collect()}
     assert b[0] == pytest.approx(3.0)
     assert b[1] == pytest.approx(0.0)
@@ -244,8 +245,8 @@ def test_betweenness_bridge_graph(spark):
     from pandrs_spark.operators.graph import betweenness_centrality
 
     # two triangles joined by bridge 3-4: bridge endpoints score highest
-    e = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 1), (4, 5), (5, 6), (6, 4), (3, 4)],
+    e = small_local_df(
+        spark, [(1, 2), (2, 3), (3, 1), (4, 5), (5, 6), (6, 4), (3, 4)],
         "src bigint, dst bigint",
     )
     b = {r["id"]: r["betweenness"] for r in betweenness_centrality(e).collect()}
@@ -259,8 +260,8 @@ def test_louvain_two_triangles(spark):
     from pandrs_spark.operators.graph import louvain
 
     # two triangles joined by one bridge: Louvain splits at the bridge
-    e = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 1), (4, 5), (5, 6), (6, 4), (3, 4)],
+    e = small_local_df(
+        spark, [(1, 2), (2, 3), (3, 1), (4, 5), (5, 6), (6, 4), (3, 4)],
         "src bigint, dst bigint",
     )
     comm = {r["id"]: r["community"] for r in louvain(e).collect()}
@@ -272,8 +273,8 @@ def test_louvain_two_triangles(spark):
 def test_louvain_improves_modularity(spark):
     from pandrs_spark.operators.graph import louvain, modularity, symmetrize
 
-    e = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 1), (4, 5), (5, 6), (6, 4), (1, 4), (2, 5)],
+    e = small_local_df(
+        spark, [(1, 2), (2, 3), (3, 1), (4, 5), (5, 6), (6, 4), (1, 4), (2, 5)],
         "src bigint, dst bigint",
     )
     und = symmetrize(e)
@@ -288,8 +289,8 @@ def test_louvain_improves_modularity(spark):
 def test_from_adjacency(spark):
     from pandrs_spark.operators.graph import connected_components, from_adjacency
 
-    m = spark.createDataFrame(
-        [(1, 2, 1.0), (2, 3, 2.0), (3, 3, 9.0), (4, 5, 0.0), (5, 6, 3.0)],
+    m = small_local_df(
+        spark, [(1, 2, 1.0), (2, 3, 2.0), (3, 3, 9.0), (4, 5, 0.0), (5, 6, 3.0)],
         "row bigint, col bigint, w double",
     )
     e = from_adjacency(m, directed=False)
@@ -306,8 +307,8 @@ def test_dfs_preorder_deterministic(spark):
     from pandrs_spark.operators.graph import dfs_preorder
 
     # component A: 1-2, 1-3, 2-4 (tree); component B: 10-11
-    edges = spark.createDataFrame(
-        [(1, 2), (1, 3), (2, 4), (10, 11)], "src long, dst long"
+    edges = small_local_df(
+        spark, [(1, 2), (1, 3), (2, 4), (10, 11)], "src long, dst long"
     )
     rows = {r["id"]: r for r in dfs_preorder(edges).collect()}
     # preorder from 1, ascending neighbors: 1, 2, 4 (deep first), 3
@@ -320,8 +321,8 @@ def test_kcore_peels_below_k(spark):
     from pandrs_spark.operators.graph import kcore
 
     # clique {1,2,3,4} (deg 3 each) + pendant chain 4-5-6
-    edges = spark.createDataFrame(
-        [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4), (4, 5), (5, 6)],
+    edges = small_local_df(
+        spark, [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4), (4, 5), (5, 6)],
         "src long, dst long",
     )
     core = {r["id"]: r["core_degree"] for r in kcore(edges, k=3, n_iter=6).collect()}
@@ -334,8 +335,8 @@ def test_neighborhood_jaccard_exact(spark):
     from pandrs_spark.operators.graph import neighborhood_jaccard
 
     # 1 and 2 share both neighbors {3,4}; union = {3,4,(each other? no)}
-    edges = spark.createDataFrame(
-        [(1, 3), (1, 4), (2, 3), (2, 4), (5, 3)], "src long, dst long"
+    edges = small_local_df(
+        spark, [(1, 3), (1, 4), (2, 3), (2, 4), (5, 3)], "src long, dst long"
     )
     got = {
         (r["id_a"], r["id_b"]): (r["common"], r["jaccard"])
@@ -354,7 +355,7 @@ def test_scc_coloring_matches_allpairs_on_random_digraph(spark):
 
     rng = random.Random(20260814)
     edges = list({(rng.randrange(15), rng.randrange(15)) for _ in range(40)})
-    e = spark.createDataFrame(edges, "src bigint, dst bigint")
+    e = small_local_df(spark, edges, "src bigint, dst bigint")
     color = {
         r["id"]: r["component"]
         for r in strongly_connected_components(e).collect()
@@ -382,7 +383,7 @@ def test_scc_coloring_scales_past_allpairs(spark):
             edges.append((i, hub))
     edges.append((5, 10005))  # one-way bridge: SCCs stay separate
     edges += [(20000, 20001), (20001, 20002), (20002, 0)]  # dangling chain
-    e = spark.createDataFrame(edges, "src bigint, dst bigint").repartition(8)
+    e = small_local_df(spark, edges, "src bigint, dst bigint").repartition(8)
     comp = {
         r["id"]: r["component"]
         for r in strongly_connected_components(e, max_iter=12).collect()
@@ -402,8 +403,8 @@ def test_personalized_pagerank_localizes_to_seed(spark):
     ranks sum to ~1 (no dangling on the symmetric closure)."""
     from pandrs_spark.operators.graph import personalized_pagerank, symmetrize
 
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (4, 5)], "src long, dst long"
+    edges = small_local_df(
+        spark, [(1, 2), (2, 3), (3, 4), (4, 5)], "src long, dst long"
     )
     und = symmetrize(edges)
     out = {r["id"]: r["rank"] for r in personalized_pagerank(und, 1, iterations=20).collect()}
@@ -420,7 +421,7 @@ def test_personalized_pagerank_dangling_returns_to_seed(spark):
     seed instead of leaking: ranks still sum to ~1."""
     from pandrs_spark.operators.graph import personalized_pagerank
 
-    edges = spark.createDataFrame([(1, 2)], "src long, dst long")
+    edges = small_local_df(spark, [(1, 2)], "src long, dst long")
     out = {r["id"]: r["rank"] for r in personalized_pagerank(edges, 1, iterations=15).collect()}
     assert abs(sum(out.values()) - 1.0) < 1e-3
     assert out[1] > out[2]
@@ -433,7 +434,7 @@ def test_rich_club_star_vs_clique(spark):
     # set is the clique, fully connected -> phi = 1
     k5 = [(a, b) for a in range(1, 6) for b in range(a + 1, 6)]
     g = k5 + [(5, 6), (6, 7)]
-    e = spark.createDataFrame(g, "src long, dst long")
+    e = small_local_df(spark, g, "src long, dst long")
     rows = {r["k"]: r for r in rich_club_coefficient(e, ks=(2, 4)).collect()}
     assert rows[2]["n_rich"] == 5 and rows[2]["e_rich"] == 10
     assert rows[2]["phi"] == 1.0
@@ -446,8 +447,8 @@ def test_edge_embeddedness_triangle_and_bridge(spark):
 
     # triangle 1-2-3 plus bridge 3-4: triangle edges have 1 common
     # neighbor, the bridge has 0 (and must still appear)
-    e = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 1), (3, 4)], "src long, dst long"
+    e = small_local_df(
+        spark, [(1, 2), (2, 3), (3, 1), (3, 4)], "src long, dst long"
     )
     got = {(r["u"], r["v"]): r["embeddedness"] for r in edge_embeddedness(e).collect()}
     assert got[(1, 2)] == 1 and got[(2, 3)] == 1 and got[(1, 3)] == 1

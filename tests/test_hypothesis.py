@@ -10,10 +10,11 @@ from pandrs_spark.operators.hypothesis import (
     ks_2samp,
     mann_whitney_u,
 )
+from pandrs_spark.operators.util import small_local_df
 
 
 def _df(spark, pairs):
-    return spark.createDataFrame(pairs, "value double, grp string")
+    return small_local_df(spark, pairs, "value double, grp string")
 
 
 def test_mann_whitney_separated(spark):
@@ -78,8 +79,8 @@ def test_scipy_cross_check_if_available(spark):
 
 def test_one_sample_ttest(spark):
     # scipy.stats.ttest_1samp([2,4,4,4,5,5,7,9], 4): t = 1.3228757
-    df = spark.createDataFrame(
-        [(v,) for v in [2.0, 4.0, 4.0, 4.0, 5.0, 5.0, 7.0, 9.0]], "x double"
+    df = small_local_df(
+        spark, [(v,) for v in [2.0, 4.0, 4.0, 4.0, 5.0, 5.0, 7.0, 9.0]], "x double"
     )
     from pandrs_spark.operators.hypothesis import one_sample_ttest
 
@@ -91,8 +92,8 @@ def test_one_sample_ttest(spark):
 
 def test_paired_ttest(spark):
     # scipy.stats.ttest_rel([3,3,4,5],[1,2,4,4]): diffs [2,1,0,1], t = 2.44949
-    df = spark.createDataFrame(
-        [(3.0, 1.0), (3.0, 2.0), (4.0, 4.0), (5.0, 4.0)], "a double, b double"
+    df = small_local_df(
+        spark, [(3.0, 1.0), (3.0, 2.0), (4.0, 4.0), (5.0, 4.0)], "a double, b double"
     )
     from pandrs_spark.operators.hypothesis import paired_ttest
 
@@ -105,8 +106,8 @@ def test_paired_ttest(spark):
 def test_paired_ttest_drops_null_pairs(spark):
     from pandrs_spark.operators.hypothesis import paired_ttest
 
-    df = spark.createDataFrame(
-        [(3.0, 1.0), (None, 2.0), (4.0, None), (5.0, 4.0), (4.0, 2.0)],
+    df = small_local_df(
+        spark, [(3.0, 1.0), (None, 2.0), (4.0, None), (5.0, 4.0), (4.0, 2.0)],
         "a double, b double",
     )
     r = paired_ttest(df, "a", "b").first()
@@ -118,7 +119,7 @@ def test_levene_equal_variances_near_one(spark):
 
     # two groups drawn from the same deterministic pattern -> W ~ small
     rows = [(g, float((i * 7) % 11)) for g in ("a", "b") for i in range(50)]
-    df = spark.createDataFrame(rows, "g string, x double")
+    df = small_local_df(spark, rows, "g string, x double")
     w = levene_test(df, "x", "g").first()
     assert w["k"] == 2 and w["n"] == 100
     assert abs(w["w_stat"]) < 0.2  # identical dispersion -> no signal
@@ -130,7 +131,7 @@ def test_levene_detects_unequal_spread(spark):
     rows = [("tight", float(i % 3)) for i in range(60)] + [
         ("wide", float((i * 13) % 100)) for i in range(60)
     ]
-    df = spark.createDataFrame(rows, "g string, x double")
+    df = small_local_df(spark, rows, "g string, x double")
     w = levene_test(df, "x", "g").first()
     assert w["w_stat"] > 50
 
@@ -148,7 +149,7 @@ def test_jackknife_ratio_matches_direct_computation(spark):
         "d": [(12.0, 3.0), (4.0, 1.0)],
     }
     rows = [(g, n, d) for g, pairs in data.items() for n, d in pairs]
-    df = spark.createDataFrame(rows, "g string, num double, den double")
+    df = small_local_df(spark, rows, "g string, num double, den double")
     got = jackknife_ratio(df, "num", "den", "g").first()
 
     sums = {
@@ -171,7 +172,7 @@ def test_mcnemar_hand_computed(spark):
 
     # b=3 (1,0), c=1 (0,1), concordant ignored
     rows = [(1, 0)] * 3 + [(0, 1)] * 1 + [(1, 1)] * 4 + [(0, 0)] * 2
-    df = spark.createDataFrame(rows, "x int, y int")
+    df = small_local_df(spark, rows, "x int, y int")
     r = mcnemar_test(df, "x", "y").first()
     assert (r["n_pairs"], r["b"], r["c"]) == (10, 3, 1)
     assert r["chi2"] == (abs(3 - 1) - 1) ** 2 / 4  # = 0.25
@@ -180,7 +181,7 @@ def test_mcnemar_hand_computed(spark):
 def test_mcnemar_no_discordant_is_null(spark):
     from pandrs_spark.operators.hypothesis import mcnemar_test
 
-    df = spark.createDataFrame([(1, 1), (0, 0)], "x int, y int")
+    df = small_local_df(spark, [(1, 1), (0, 0)], "x int, y int")
     assert mcnemar_test(df, "x", "y").first()["chi2"] is None
 
 
@@ -188,14 +189,14 @@ def test_cohens_kappa_perfect_and_chance(spark):
     from pandrs_spark.operators.hypothesis import cohens_kappa
 
     # perfect agreement -> kappa = 1
-    df = spark.createDataFrame([(1, 1)] * 3 + [(0, 0)] * 3, "a int, b int")
+    df = small_local_df(spark, [(1, 1)] * 3 + [(0, 0)] * 3, "a int, b int")
     assert cohens_kappa(df, "a", "b").first()["kappa"] == 1.0
     # independent raters with balanced marginals -> kappa = 0
     rows = [(1, 1), (1, 0), (0, 1), (0, 0)]
-    r = cohens_kappa(spark.createDataFrame(rows, "a int, b int"), "a", "b").first()
+    r = cohens_kappa(small_local_df(spark, rows, "a int, b int"), "a", "b").first()
     assert r["kappa"] == 0.0
     # constant raters -> pe=1 -> NULL
-    const = spark.createDataFrame([(1, 1)] * 4, "a int, b int")
+    const = small_local_df(spark, [(1, 1)] * 4, "a int, b int")
     assert cohens_kappa(const, "a", "b").first()["kappa"] is None
 
 
@@ -208,12 +209,12 @@ def test_cochran_armitage_direction(spark):
         + [(2, 0)] * 5 + [(2, 1)] * 5
         + [(3, 0)] * 1 + [(3, 1)] * 9
     )
-    df = spark.createDataFrame(rows, "t int, e int")
+    df = small_local_df(spark, rows, "t int, e int")
     r = cochran_armitage_trend(df, "e", "t").first()
     assert r["n"] == 30 and r["k"] == 3
     assert r["z_trend"] > 3.0
     # constant score -> variance 0 -> NULL
-    const = spark.createDataFrame([(1, 0), (1, 1)], "t int, e int")
+    const = small_local_df(spark, [(1, 0), (1, 1)], "t int, e int")
     assert cochran_armitage_trend(const, "e", "t").first()["z_trend"] is None
 
 
@@ -222,7 +223,7 @@ def test_mood_median_balanced_groups(spark):
 
     # two groups straddling the pooled median identically -> chi2 = 0
     rows = [("a", 1.0), ("a", 10.0), ("b", 2.0), ("b", 9.0)]
-    df = spark.createDataFrame(rows, "g string, v double")
+    df = small_local_df(spark, rows, "g string, v double")
     out = mood_median_test(df, "v", "g").collect()
     assert all(abs(r["chi2"]) < 1e-12 for r in out)
 
@@ -233,7 +234,7 @@ def test_cvm_identical_samples_zero(spark):
     rows = [("a", float(v)) for v in range(10)] + [
         ("b", float(v)) for v in range(10)
     ]
-    df = spark.createDataFrame(rows, "g string, v double")
+    df = small_local_df(spark, rows, "g string, v double")
     r = cramer_von_mises_2samp(df, "v", "g", "a", "b").first()
     assert r["cvm"] == 0.0
     # disjoint samples -> large cvm
@@ -241,7 +242,7 @@ def test_cvm_identical_samples_zero(spark):
         ("b", float(v + 100)) for v in range(10)
     ]
     r2 = cramer_von_mises_2samp(
-        spark.createDataFrame(rows2, "g string, v double"), "v", "g", "a", "b"
+        small_local_df(spark, rows2, "g string, v double"), "v", "g", "a", "b"
     ).first()
     assert r2["cvm"] > 1.0
 
@@ -255,7 +256,7 @@ def test_brunner_munzel_matches_pure_python(spark):
     xs = [1.0, 2.0, 2.0, 3.0, 5.0, 9.0]          # group a
     ys = [2.0, 4.0, 4.0, 4.0, 6.0, 7.0, 8.0]     # group b
     rows = [("a", v) for v in xs] + [("b", v) for v in ys]
-    df = spark.createDataFrame(rows, "g string, v double")
+    df = small_local_df(spark, rows, "g string, v double")
     r = brunner_munzel(df, "v", "g", "a", "b").first()
 
     # independent computation: pooled + within-group midranks
@@ -292,7 +293,7 @@ def test_mood_median_degenerate_ties_null_chi2(spark):
     from pandrs_spark.operators.hypothesis import mood_median_test
 
     rows = [("a", 5.0)] * 3 + [("b", 5.0)] * 3
-    df = spark.createDataFrame(rows, "g string, v double")
+    df = small_local_df(spark, rows, "g string, v double")
     out = mood_median_test(df, "v", "g").collect()
     assert all(r["chi2"] is None for r in out)
 
@@ -309,8 +310,8 @@ def test_lmdi_limit_branch_offsetting_factors(spark):
 
     # rate1: 0.5 -> 0.8, rate2: 0.4 -> 0.25; CVR = rate1*rate2 = 0.2 both
     rows = [("f1", 0.5, 0.8, 0.2, 0.2), ("f2", 0.4, 0.25, 0.2, 0.2)]
-    df = spark.createDataFrame(
-        rows, "f string, rate_a double, rate_b double, cvra double, cvrb double"
+    df = small_local_df(
+        spark, rows, "f string, rate_a double, rate_b double, cvra double, cvrb double"
     )
     out = {
         r["f"]: r["c"]

@@ -7,17 +7,18 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from pandrs_spark.operators.joins import anti_join, asof_join, merge, semi_join
+from pandrs_spark.operators.util import small_local_df
 
 
 def _left(spark):
-    return spark.createDataFrame(
-        [(1, "a", 10.0), (2, "b", 20.0), (3, "c", 30.0)], "id long, name string, value double"
+    return small_local_df(
+        spark, [(1, "a", 10.0), (2, "b", 20.0), (3, "c", 30.0)], "id long, name string, value double"
     )
 
 
 def _right(spark):
-    return spark.createDataFrame(
-        [(2, 200.0), (3, 300.0), (3, 301.0), (4, 400.0)], "id long, value double"
+    return small_local_df(
+        spark, [(2, 200.0), (3, 300.0), (3, 301.0), (4, 400.0)], "id long, value double"
     )
 
 
@@ -57,15 +58,15 @@ def test_semi_anti(spark):
 
 
 def _trades(spark):
-    return spark.createDataFrame(
-        [("A", 3, "t1"), ("A", 7, "t2"), ("B", 5, "t3"), ("B", 1, "t4")],
+    return small_local_df(
+        spark, [("A", 3, "t1"), ("A", 7, "t2"), ("B", 5, "t3"), ("B", 1, "t4")],
         "sym string, t long, trade string",
     )
 
 
 def _quotes(spark):
-    return spark.createDataFrame(
-        [("A", 1, 10.0), ("A", 5, 11.0), ("B", 4, 20.0)],
+    return small_local_df(
+        spark, [("A", 1, 10.0), ("A", 5, 11.0), ("B", 4, 20.0)],
         "sym string, t long, px double",
     )
 
@@ -80,7 +81,7 @@ def test_asof_backward(spark):
 
 
 def test_asof_backward_inclusive_same_ts(spark):
-    trades = spark.createDataFrame([("A", 5, "x")], "sym string, t long, trade string")
+    trades = small_local_df(spark, [("A", 5, "x")], "sym string, t long, trade string")
     out = asof_join(trades, _quotes(spark), on="t", by="sym", value_cols=["px"])
     assert out.collect()[0].px == 11.0
 
@@ -110,10 +111,10 @@ def test_salted_join_matches_plain_join(spark):
     from pandrs_spark.operators.joins import salted_join
 
     # skewed left: 90% of rows share key 1
-    left = spark.createDataFrame(
-        [(1 if i % 10 else 2, i) for i in range(200)], "k bigint, row_id bigint"
+    left = small_local_df(
+        spark, [(1 if i % 10 else 2, i) for i in range(200)], "k bigint, row_id bigint"
     )
-    right = spark.createDataFrame([(1, "hot"), (2, "cold"), (3, "none")], "k bigint, label string")
+    right = small_local_df(spark, [(1, "hot"), (2, "cold"), (3, "none")], "k bigint, label string")
     plain = {(r["row_id"], r["label"]) for r in left.join(right, "k").collect()}
     salted = {
         (r["row_id"], r["label"])
@@ -125,8 +126,8 @@ def test_salted_join_matches_plain_join(spark):
 def test_salted_join_left_outer(spark):
     from pandrs_spark.operators.joins import salted_join
 
-    left = spark.createDataFrame([(1, 10), (9, 90)], "k bigint, v bigint")
-    right = spark.createDataFrame([(1, "x")], "k bigint, s string")
+    left = small_local_df(spark, [(1, 10), (9, 90)], "k bigint, v bigint")
+    right = small_local_df(spark, [(1, "x")], "k bigint, s string")
     rows = {r["k"]: r["s"] for r in salted_join(left, right, "k", salt_from="v", how="left").collect()}
     assert rows == {1: "x", 9: None}
 
@@ -136,11 +137,11 @@ def test_asof_nearest_matches_pandas(spark):
     import pandas as pd
     from pandrs_spark.operators.joins import asof_join
 
-    left = spark.createDataFrame(
-        [("k", 1.0), ("k", 5.0), ("k", 10.0)], "g string, t double"
+    left = small_local_df(
+        spark, [("k", 1.0), ("k", 5.0), ("k", 10.0)], "g string, t double"
     )
-    right = spark.createDataFrame(
-        [("k", 2.0, "a"), ("k", 7.0, "b")], "g string, t double, lab string"
+    right = small_local_df(
+        spark, [("k", 2.0, "a"), ("k", 7.0, "b")], "g string, t double, lab string"
     )
     got = {
         r["t"]: r["lab"]
@@ -162,8 +163,8 @@ def test_asof_nearest_matches_pandas(spark):
 def test_asof_tolerance_drops_far_matches(spark):
     from pandrs_spark.operators.joins import asof_join
 
-    left = spark.createDataFrame([("k", 10.0), ("k", 100.0)], "g string, t double")
-    right = spark.createDataFrame([("k", 8.0, "x")], "g string, t double, lab string")
+    left = small_local_df(spark, [("k", 10.0), ("k", 100.0)], "g string, t double")
+    right = small_local_df(spark, [("k", 8.0, "x")], "g string, t double, lab string")
     got = {
         r["t"]: r["lab"]
         for r in asof_join(
@@ -179,8 +180,8 @@ def test_range_join_matches_naive_inequality_join(spark):
     from pandrs_spark.operators.joins import range_join
 
     pts = spark.range(0, 200).select((F.col("id") * 1.5).alias("x"))
-    iv = spark.createDataFrame(
-        [(0, 10.0, 40.0), (1, 35.0, 36.0), (2, 250.0, 260.0), (3, 0.0, 300.0)],
+    iv = small_local_df(
+        spark, [(0, 10.0, 40.0), (1, 35.0, 36.0), (2, 250.0, 260.0), (3, 0.0, 300.0)],
         "iv_id long, lo double, hi double",
     )
     got = sorted(
@@ -199,11 +200,11 @@ def test_range_join_matches_naive_inequality_join(spark):
 def test_range_join_extra_keys(spark):
     from pandrs_spark.operators.joins import range_join
 
-    pts = spark.createDataFrame(
-        [("a", 5.0), ("b", 5.0)], "grp string, x double"
+    pts = small_local_df(
+        spark, [("a", 5.0), ("b", 5.0)], "grp string, x double"
     )
-    iv = spark.createDataFrame(
-        [("a", 0.0, 10.0), ("b", 6.0, 10.0)], "grp string, lo double, hi double"
+    iv = small_local_df(
+        spark, [("a", 0.0, 10.0), ("b", 6.0, 10.0)], "grp string, lo double, hi double"
     )
     out = range_join(pts, iv, "x", "lo", "hi", bucket_width=4.0, extra_on="grp")
     assert [(r.grp, r.x) for r in out.collect()] == [("a", 5.0)]
@@ -212,11 +213,11 @@ def test_range_join_extra_keys(spark):
 def test_upsert_latest_patches_and_appends(spark):
     from pandrs_spark.operators.joins import upsert_latest
 
-    base = spark.createDataFrame(
-        [(1, "a", 1), (2, "b", 1)], "k long, v string, version int"
+    base = small_local_df(
+        spark, [(1, "a", 1), (2, "b", 1)], "k long, v string, version int"
     )
-    updates = spark.createDataFrame(
-        [(2, "B", 2), (3, "c", 2)], "k long, v string, version int"
+    updates = small_local_df(
+        spark, [(2, "B", 2), (3, "c", 2)], "k long, v string, version int"
     )
     out = {r["k"]: r for r in upsert_latest(base, updates, ["k"], "version").collect()}
     assert len(out) == 3
@@ -228,8 +229,8 @@ def test_upsert_latest_patches_and_appends(spark):
 def test_upsert_latest_tie_prefers_updates(spark):
     from pandrs_spark.operators.joins import upsert_latest
 
-    base = spark.createDataFrame([(1, "old", 5)], "k long, v string, version int")
-    updates = spark.createDataFrame([(1, "new", 5)], "k long, v string, version int")
+    base = small_local_df(spark, [(1, "old", 5)], "k long, v string, version int")
+    updates = small_local_df(spark, [(1, "new", 5)], "k long, v string, version int")
     out = upsert_latest(base, updates, ["k"], "version").first()
     assert out["v"] == "new"
 
@@ -237,7 +238,8 @@ def test_upsert_latest_tie_prefers_updates(spark):
 def test_scd2_history_intervals(spark):
     from pandrs_spark.operators.joins import scd2_history
 
-    df = spark.createDataFrame(
+    df = small_local_df(
+        spark,
         [
             (1, 1, "2024-01-01", "A"),
             (1, 2, "2024-02-01", "A"),   # same run
@@ -263,12 +265,12 @@ def test_scd2_history_intervals(spark):
 def test_table_diff_classifies_changes(spark):
     from pandrs_spark.operators.joins import table_diff
 
-    old = spark.createDataFrame(
-        [(1, "a", 10.0), (2, "b", 20.0), (3, "c", None)],
+    old = small_local_df(
+        spark, [(1, "a", 10.0), (2, "b", 20.0), (3, "c", None)],
         "k long, s string, v double",
     )
-    new = spark.createDataFrame(
-        [(1, "a", 10.0), (2, "B", 20.0), (4, "d", 40.0)],
+    new = small_local_df(
+        spark, [(1, "a", 10.0), (2, "B", 20.0), (4, "d", 40.0)],
         "k long, s string, v double",
     )
     got = {r["k"]: r["change"] for r in table_diff(old, new, ["k"]).collect()}
@@ -278,8 +280,8 @@ def test_table_diff_classifies_changes(spark):
 def test_table_diff_null_vs_empty_not_equal(spark):
     from pandrs_spark.operators.joins import table_diff
 
-    old = spark.createDataFrame([(1, None)], "k long, s string")
-    new = spark.createDataFrame([(1, "")], "k long, s string")
+    old = small_local_df(spark, [(1, None)], "k long, s string")
+    new = small_local_df(spark, [(1, "")], "k long, s string")
     got = table_diff(old, new, ["k"]).collect()[0]["change"]
     assert got == "changed"  # NULL sentinel distinguishes null from ''
 
@@ -288,12 +290,12 @@ def test_auto_salted_join_row_identical_to_plain(spark):
     from pandrs_spark.operators.joins import auto_salted_join
 
     # one pathological key (0: 5000 rows), long tail of small keys
-    left = spark.createDataFrame(
-        [(0, i) for i in range(5000)] + [(k, k) for k in range(1, 40)],
+    left = small_local_df(
+        spark, [(0, i) for i in range(5000)] + [(k, k) for k in range(1, 40)],
         "k long, payload long",
     )
-    right = spark.createDataFrame(
-        [(k, f"r{k}") for k in range(40)], "k long, rv string"
+    right = small_local_df(
+        spark, [(k, f"r{k}") for k in range(40)], "k long, rv string"
     )
     plain = left.join(right, ["k"]).groupBy("k").count()
     auto = (
@@ -309,8 +311,8 @@ def test_auto_salted_join_row_identical_to_plain(spark):
 def test_auto_salted_join_no_hot_keys_is_plain_join(spark):
     from pandrs_spark.operators.joins import auto_salted_join
 
-    left = spark.createDataFrame([(k, k) for k in range(20)], "k long, p long")
-    right = spark.createDataFrame([(k, k * 2) for k in range(20)], "k long, v long")
+    left = small_local_df(spark, [(k, k) for k in range(20)], "k long, p long")
+    right = small_local_df(spark, [(k, k * 2) for k in range(20)], "k long, v long")
     out = auto_salted_join(left, right, "k", salt_from="p", skew_threshold=5)
     assert out.count() == 20
 
@@ -321,8 +323,8 @@ def test_interval_overlap_join_matches_bruteforce(spark):
     # Deterministic intervals with varied lengths spanning many cells.
     left = [(i, (i * 7) % 50, (i * 7) % 50 + (i % 13)) for i in range(60)]
     right = [(j, (j * 11) % 45, (j * 11) % 45 + (j % 9) + 1) for j in range(40)]
-    ldf = spark.createDataFrame(left, "lid int, ls int, le int")
-    rdf = spark.createDataFrame(right, "rid int, rs int, re int")
+    ldf = small_local_df(spark, left, "lid int, ls int, le int")
+    rdf = small_local_df(spark, right, "rid int, rs int, re int")
     got = sorted(
         (r["lid"], r["rid"])
         for r in interval_overlap_join(
@@ -342,8 +344,8 @@ def test_interval_overlap_join_no_cartesian(spark):
     from pandrs_spark import plans
     from pandrs_spark.operators.joins import interval_overlap_join
 
-    ldf = spark.createDataFrame([(1, 0, 10)], "lid int, ls int, le int")
-    rdf = spark.createDataFrame([(1, 5, 15)], "rid int, rs int, re int")
+    ldf = small_local_df(spark, [(1, 0, 10)], "lid int, ls int, le int")
+    rdf = small_local_df(spark, [(1, 5, 15)], "rid int, rs int, re int")
     j = interval_overlap_join(ldf, rdf, "ls", "le", "rs", "re", bucket_width=4)
     assert "CartesianProduct" not in plans.plan_text(j, "simple")
 
@@ -353,11 +355,11 @@ def test_auto_salted_join_preserves_null_keys_outer(spark):
     # the row from BOTH branches; left join must keep all 3 rows.
     from pandrs_spark.operators.joins import auto_salted_join
 
-    left = spark.createDataFrame(
-        [(0, i) for i in range(50)] + [(7, 1), (None, 99)],
+    left = small_local_df(
+        spark, [(0, i) for i in range(50)] + [(7, 1), (None, 99)],
         "k long, payload long",
     )
-    right = spark.createDataFrame([(0, "a"), (7, "b")], "k long, rv string")
+    right = small_local_df(spark, [(0, "a"), (7, "b")], "k long, rv string")
     plain = left.join(right, ["k"], "left")
     auto = auto_salted_join(
         left, right, "k", salt_from="payload", skew_threshold=10, how="left"
@@ -373,12 +375,12 @@ def test_auto_salted_join_multicol_key_hotness(spark):
     # hot but (0, 2) shares keys[0]=0 and must stay cold/unsalted.
     from pandrs_spark.operators.joins import auto_salted_join
 
-    left = spark.createDataFrame(
-        [(0, 1, i) for i in range(100)] + [(0, 2, 1), (3, 4, 2)],
+    left = small_local_df(
+        spark, [(0, 1, i) for i in range(100)] + [(0, 2, 1), (3, 4, 2)],
         "a long, b long, payload long",
     )
-    right = spark.createDataFrame(
-        [(0, 1, "hot"), (0, 2, "cold"), (3, 4, "tail")],
+    right = small_local_df(
+        spark, [(0, 1, "hot"), (0, 2, "cold"), (3, 4, "tail")],
         "a long, b long, rv string",
     )
     auto = auto_salted_join(
@@ -396,12 +398,12 @@ def test_salted_join_right_and_full_outer_row_identical(spark):
     keys and null keys."""
     from pandrs_spark.operators.joins import salted_join
 
-    left = spark.createDataFrame(
-        [(0, i) for i in range(200)] + [(1, 7)],
+    left = small_local_df(
+        spark, [(0, i) for i in range(200)] + [(1, 7)],
         "k long, payload long",
     )
-    right = spark.createDataFrame(
-        [(0, "hot"), (2, "right_only"), (None, "null_key")],
+    right = small_local_df(
+        spark, [(0, "hot"), (2, "right_only"), (None, "null_key")],
         "k long, rv string",
     )
     for how in ("right", "full"):
@@ -418,12 +420,12 @@ def test_auto_salted_join_many_hot_keys_and_outer(spark):
     a per-key OR chain) and stay row-identical for full outer."""
     from pandrs_spark.operators.joins import auto_salted_join
 
-    left = spark.createDataFrame(
-        [(k, i) for k in range(30) for i in range(20)] + [(None, 1)],
+    left = small_local_df(
+        spark, [(k, i) for k in range(30) for i in range(20)] + [(None, 1)],
         "k long, payload long",
     )
-    right = spark.createDataFrame(
-        [(k, f"r{k}") for k in range(0, 40, 2)], "k long, rv string"
+    right = small_local_df(
+        spark, [(k, f"r{k}") for k in range(0, 40, 2)], "k long, rv string"
     )
     plain = left.join(right, ["k"], "full")
     auto = auto_salted_join(
@@ -444,8 +446,8 @@ def test_salted_join_outer_rejects_overlapping_noncol(spark):
 
     from pandrs_spark.operators.joins import salted_join
 
-    left = spark.createDataFrame([(1, 10.0)], "k long, value double")
-    right = spark.createDataFrame([(1, 20.0)], "k long, value double")
+    left = small_local_df(spark, [(1, 10.0)], "k long, value double")
+    right = small_local_df(spark, [(1, 20.0)], "k long, value double")
     for how in ("right", "full"):
         with pytest.raises(ValueError, match="value"):
             salted_join(left, right, "k", "value", 4, how)

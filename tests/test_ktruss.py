@@ -1,10 +1,11 @@
 """k-truss unit tests against hand-computed small graphs."""
 
 from pandrs_spark.operators.graph import k_truss
+from pandrs_spark.operators.util import small_local_df
 
 
 def _edges(spark, pairs):
-    return spark.createDataFrame(pairs, "src long, dst long")
+    return small_local_df(spark, pairs, "src long, dst long")
 
 
 def test_ktruss_keeps_clique_drops_tail(spark):

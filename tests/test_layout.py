@@ -4,12 +4,14 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from pandrs_spark.operators.util import small_local_df
+
 
 def test_zvalue_interleaves_bits(spark):
     from pandrs_spark.operators.layout import zvalue
 
-    df = spark.createDataFrame(
-        [(0, 0), (1, 0), (0, 1), (3, 5)], "x long, y long"
+    df = small_local_df(
+        spark, [(0, 0), (1, 0), (0, 1), (3, 5)], "x long, y long"
     )
     got = [
         r["z"]
@@ -25,8 +27,8 @@ def test_zvalue_interleaves_bits(spark):
 def test_zorder_layout_clusters_neighbors(spark):
     from pandrs_spark.operators.layout import zorder_layout, zvalue
 
-    df = spark.createDataFrame(
-        [(x, y) for x in range(16) for y in range(16)], "x long, y long"
+    df = small_local_df(
+        spark, [(x, y) for x in range(16) for y in range(16)], "x long, y long"
     )
     parts = (
         zorder_layout(df, ["x", "y"], bits=4, num_partitions=4)
@@ -49,8 +51,8 @@ def test_zorder_layout_clusters_neighbors(spark):
 def test_profile_columns_long_report(spark):
     from pandrs_spark.operators.profile import profile_columns
 
-    df = spark.createDataFrame(
-        [(1, "a", None), (2, "b", 2.5), (3, None, 7.5), (3, "a", None)],
+    df = small_local_df(
+        spark, [(1, "a", None), (2, "b", 2.5), (3, None, 7.5), (3, "a", None)],
         "k long, s string, v double",
     )
     out = {r["column"]: r for r in profile_columns(df, ["k", "s", "v"]).collect()}

@@ -3,6 +3,7 @@
 import pytest
 
 from pandrs_spark.operators.timeseries import logrank_test
+from pandrs_spark.operators.util import small_local_df
 
 
 def test_logrank_identical_groups_is_null(spark):
@@ -11,7 +12,7 @@ def test_logrank_identical_groups_is_null(spark):
     for t, ev in [(1, 1), (2, 1), (3, 0), (5, 1), (8, 0)]:
         rows.append((t, ev, 1))
         rows.append((t, ev, 0))
-    df = spark.createDataFrame(rows, "t int, ev int, grp int")
+    df = small_local_df(spark, rows, "t int, ev int, grp int")
     r = logrank_test(df, "t", "ev", "grp").collect()[0]
     assert r["o1"] == 3
     assert r["e1"] == pytest.approx(3.0, abs=1e-9)
@@ -21,7 +22,7 @@ def test_logrank_identical_groups_is_null(spark):
 def test_logrank_hand_computed(spark):
     # group 1: events at t=1,2 ; group 0: events at t=3,4 (no censoring)
     rows = [(1, 1, 1), (2, 1, 1), (3, 1, 0), (4, 1, 0)]
-    df = spark.createDataFrame(rows, "t int, ev int, grp int")
+    df = small_local_df(spark, rows, "t int, ev int, grp int")
     r = logrank_test(df, "t", "ev", "grp").collect()[0]
     # risk sets: t=1 (n1=2,n0=2): E+=0.5, V+=0.25
     #            t=2 (n1=1,n0=2): E+=1/3, V+=2/9
@@ -55,7 +56,7 @@ def test_wasserstein_matches_scipy_formula(spark):
     from pyspark.sql import functions as F
 
     rows = [(v, 1, 0) for v in a] + [(v, 0, 1) for v in b]
-    sub = spark.createDataFrame(rows, "v double, a int, b int")
+    sub = small_local_df(spark, rows, "v double, a int, b int")
     hist = sub.groupBy("v").agg(
         F.sum("a").cast("long").alias("ca"), F.sum("b").cast("long").alias("cb")
     ).withColumn("__one__", F.lit(1))
@@ -77,8 +78,8 @@ def test_logrank_degenerate_risk_sets_null_chi2(spark):
     # never Infinity/NaN from a raw divide.
     from pandrs_spark.operators.timeseries import logrank_test
 
-    df = spark.createDataFrame(
-        [(5.0, 1, 1), (7.0, 1, 1), (9.0, 0, 1)],
+    df = small_local_df(
+        spark, [(5.0, 1, 1), (7.0, 1, 1), (9.0, 0, 1)],
         "duration double, event int, grp int",
     )
     row = logrank_test(df, "duration", "event", "grp").first()

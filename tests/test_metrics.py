@@ -9,13 +9,14 @@ from pandrs_spark.operators.metrics import (
     confusion_matrix,
     regression_metrics,
 )
+from pandrs_spark.operators.util import small_local_df
 
 
 @pytest.fixture()
 def preds(spark):
     #        label, pred
     rows = [("a", "a"), ("a", "a"), ("a", "b"), ("b", "b"), ("b", "a"), ("c", "b")]
-    return spark.createDataFrame(rows, "label string, pred string")
+    return small_local_df(spark, rows, "label string, pred string")
 
 
 def test_confusion_matrix(spark, preds):
@@ -36,7 +37,7 @@ def test_classification_metrics_per_class(spark, preds):
 
 def test_regression_metrics_exact(spark):
     rows = [(1.0, 2.0), (2.0, 2.0), (3.0, 2.0), (6.0, 4.0)]
-    df = spark.createDataFrame(rows, "y double, yhat double")
+    df = small_local_df(spark, rows, "y double, yhat double")
     m = regression_metrics(df, "y", "yhat").first()
     # errors: -1, 0, 1, 2 -> sse=6 sae=4; mean y=3, sst=14
     assert m["mse"] == pytest.approx(1.5)
@@ -45,14 +46,14 @@ def test_regression_metrics_exact(spark):
 
 
 def test_regression_metrics_perfect_fit(spark):
-    df = spark.createDataFrame([(1.0, 1.0), (2.0, 2.0)], "y double, yhat double")
+    df = small_local_df(spark, [(1.0, 1.0), (2.0, 2.0)], "y double, yhat double")
     m = regression_metrics(df, "y", "yhat").first()
     assert m["mse"] == 0.0 and m["r2"] == 1.0
 def test_hll_rollup_accuracy_and_merge(spark):
     from pandrs_spark.operators.sketches import hll_rollup
 
-    df = spark.createDataFrame(
-        [(i % 4, i % 12, i % 499) for i in range(5000)],
+    df = small_local_df(
+        spark, [(i % 4, i % 12, i % 499) for i in range(5000)],
         "coarse int, fine int, v int",
     )
     out = {r["coarse"]: r for r in hll_rollup(
@@ -68,7 +69,7 @@ def test_cms_never_undercounts_and_is_fixed_size(spark):
     from pandrs_spark.operators.sketches import cms_build, cms_estimate
 
     rows = [(f"k{i % 37}",) for i in range(2000)]
-    df = spark.createDataFrame(rows, "k string")
+    df = small_local_df(spark, rows, "k string")
     sketch = cms_build(df, "k", depth=4, width=64)
     assert sketch.count() <= 4 * 64  # grid-bounded regardless of keys
     est = {

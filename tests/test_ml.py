@@ -18,12 +18,13 @@ from pandrs_spark.operators.ml import (
     standard_scale,
     train_test_split,
 )
+from pandrs_spark.operators.util import small_local_df
 
 
 @pytest.fixture()
 def xy(spark):
     rows = [(float(i), 2.0 * i + 1.0, "a" if i % 2 == 0 else "b") for i in range(10)]
-    return spark.createDataFrame(rows, "x double, y double, g string")
+    return small_local_df(spark, rows, "x double, y double, g string")
 
 
 def test_standard_scale_zero_mean_unit_var(spark, xy):
@@ -39,7 +40,7 @@ def test_minmax_scale_bounds(spark, xy):
 
 
 def test_impute_mean_fills_nulls(spark):
-    df = spark.createDataFrame([(1.0,), (None,), (3.0,)], "v double")
+    df = small_local_df(spark, [(1.0,), (None,), (3.0,)], "v double")
     vals = sorted(r["v"] for r in impute_mean(df, ["v"]).collect())
     assert vals == [1.0, 2.0, 3.0]
 
@@ -84,7 +85,7 @@ def test_train_test_split_partitions_all_rows(spark, xy):
 
 def test_kmeans_separated_clusters(spark):
     pts = [([0.0, 0.0],), ([0.1, 0.0],), ([10.0, 10.0],), ([10.1, 10.0],)]
-    df = spark.createDataFrame(pts, "embedding array<float>")
+    df = small_local_df(spark, pts, "embedding array<float>")
     out = kmeans_fit_predict(df, "embedding", k=2, seed=1)
     groups = out.groupBy("cluster").count().collect()
     assert sorted(r["count"] for r in groups) == [2, 2]
@@ -92,7 +93,7 @@ def test_kmeans_separated_clusters(spark):
 
 def test_pca_projects_to_k_dims(spark):
     pts = [([float(i), float(2 * i), 0.0],) for i in range(6)]
-    df = spark.createDataFrame(pts, "embedding array<float>")
+    df = small_local_df(spark, pts, "embedding array<float>")
     out = pca_project(df, "embedding", k=2)
     first = out.first()["pca"]
     assert len(first) == 2
@@ -104,7 +105,7 @@ def test_logistic_separable(spark):
     rows = [([float(i), 1.0], 0.0) for i in range(10)] + [
         ([float(i) + 100.0, 1.0], 1.0) for i in range(10)
     ]
-    df = spark.createDataFrame(rows, "embedding array<float>, y double")
+    df = small_local_df(spark, rows, "embedding array<float>, y double")
     m = logistic_fit_metrics(df, "embedding", "y").first()
     assert m["n"] == 20 and m["accuracy"] == 1.0 and m["auc"] == 1.0
 
@@ -117,7 +118,7 @@ def test_feature_scores_ranks_by_corr(spark):
     for t in range(200):
         y = float(100 + 3 * t)
         rows += [("lin", float(t * 100), y), ("noise", float((t * 37) % 11) * 100, y)]
-    long = spark.createDataFrame(rows, "feature string, x double, y double")
+    long = small_local_df(spark, rows, "feature string, x double, y double")
     out = {r["feature"]: r for r in feature_scores(long, top_k=1).collect()}
     assert out["lin"]["selected"] and not out["noise"]["selected"]
     assert out["lin"]["corr"] == pytest.approx(1.0, abs=1e-6)
@@ -134,7 +135,7 @@ def test_random_forest_separable(spark):
         (float(i % 50), float((i * 13) % 7), 1.0 if i % 50 >= 25 else 0.0)
         for i in range(500)
     ]
-    df = spark.createDataFrame(rows, "a double, b double, label double")
+    df = small_local_df(spark, rows, "a double, b double, label double")
     m = random_forest_metrics(df, ["a", "b"], "label", n_trees=10).first()
     assert m["n"] == 500
     assert m["accuracy"] > 0.95          # label is a function of feature a
@@ -145,8 +146,8 @@ def test_gbt_regression_learns_linear_signal(spark):
     from pandrs_spark.operators.ml import gbt_regression_metrics
 
     # y = 3x + noise-free: GBT should fit near-perfectly (r2 ~ 1)
-    df = spark.createDataFrame(
-        [(float(i), 3.0 * i) for i in range(100)], "x double, y double"
+    df = small_local_df(
+        spark, [(float(i), 3.0 * i) for i in range(100)], "x double, y double"
     )
     r = gbt_regression_metrics(df, ["x"], "y", max_iter=10).first()
     assert r["n"] == 100
@@ -159,7 +160,7 @@ def test_kfold_cv_deterministic_folds(spark):
 
     # linearly separable: every fold should classify held-out perfectly
     rows = [(i, float(i % 7), 1.0 if i % 7 >= 4 else 0.0) for i in range(140)]
-    df = spark.createDataFrame(rows, "id bigint, x double, y double")
+    df = small_local_df(spark, rows, "id bigint, x double, y double")
     out = kfold_cv_metrics(df, ["x"], "y", id_col="id", k=3)
     rows_out = out.collect()
     assert [r["fold"] for r in rows_out] == [-1, 0, 1, 2]
@@ -180,7 +181,7 @@ def test_mlp_learns_xor(spark):
         (float(a), float(b), float(a ^ b))
         for a in (0, 1) for b in (0, 1) for _ in range(25)
     ]
-    df = spark.createDataFrame(rows, "x1 double, x2 double, y double")
+    df = small_local_df(spark, rows, "x1 double, x2 double, y double")
     r = mlp_classifier_metrics(df, ["x1", "x2"], "y", hidden=(4,)).first()
     assert r["n"] == 100
     assert r["accuracy"] >= 0.99
@@ -192,8 +193,8 @@ def test_dbscan_blobs_and_noise(spark):
     blob_a = [(i, 0.0 + 0.1 * (i % 3), 0.0 + 0.1 * (i // 3)) for i in range(9)]
     blob_b = [(100 + i, 5.0 + 0.1 * (i % 3), 5.0 + 0.1 * (i // 3)) for i in range(9)]
     noise = [(200, 2.5, 2.5), (201, 8.0, 0.0)]
-    df = spark.createDataFrame(
-        blob_a + blob_b + noise, "id bigint, x double, y double"
+    df = small_local_df(
+        spark, blob_a + blob_b + noise, "id bigint, x double, y double"
     )
     out = {r["id"]: r for r in dbscan_2d(df, "id", "x", "y", eps=0.25, min_pts=4).collect()}
     a_clusters = {out[i]["cluster"] for i in range(9)}
@@ -210,8 +211,8 @@ def test_dbscan_isolated_core_pair(spark):
     from pandrs_spark.operators.ml import dbscan_2d
 
     # two points within eps, min_pts=2: both core, one cluster
-    df = spark.createDataFrame(
-        [(1, 0.0, 0.0), (2, 0.1, 0.0), (3, 9.0, 9.0)],
+    df = small_local_df(
+        spark, [(1, 0.0, 0.0), (2, 0.1, 0.0), (3, 9.0, 9.0)],
         "id bigint, x double, y double",
     )
     out = {r["id"]: r for r in dbscan_2d(df, "id", "x", "y", 0.5, 2).collect()}
@@ -224,8 +225,8 @@ def test_lof_flags_outlier(spark):
 
     # 3x3 grid of tightly packed points + one far-away point
     grid = [(i, 0.1 * (i % 3), 0.1 * (i // 3)) for i in range(9)]
-    df = spark.createDataFrame(
-        grid + [(99, 5.0, 5.0)], "id bigint, x double, y double"
+    df = small_local_df(
+        spark, grid + [(99, 5.0, 5.0)], "id bigint, x double, y double"
     )
     out = {r["id"]: r["lof"] for r in local_outlier_factor(df, "id", "x", "y", k=3, method="grid", eps=8.0).collect()}
     # grid points sit in uniform density: LOF ~ 1
@@ -238,8 +239,8 @@ def test_single_linkage_threshold_cut(spark):
     from pandrs_spark.operators.ml import single_linkage_clusters
 
     # chain a-b-c linked pairwise at 0.9 < t, d isolated, e-f a far pair
-    df = spark.createDataFrame(
-        [(1, 0.0, 0.0), (2, 0.9, 0.0), (3, 1.8, 0.0),
+    df = small_local_df(
+        spark, [(1, 0.0, 0.0), (2, 0.9, 0.0), (3, 1.8, 0.0),
          (4, 5.0, 5.0), (5, 9.0, 0.0), (6, 9.5, 0.0)],
         "id bigint, x double, y double",
     )
@@ -254,7 +255,7 @@ def test_decision_tree_separable(spark):
     from pandrs_spark.operators.ml import decision_tree_metrics
 
     rows = [(float(i), 1 if i >= 50 else 0) for i in range(100)]
-    df = spark.createDataFrame(rows, "x double, y bigint")
+    df = small_local_df(spark, rows, "x double, y bigint")
     r = decision_tree_metrics(df, ["x"], "y", max_depth=3).first()
     assert r["n"] == 100 and r["accuracy"] == 1.0
     assert r["depth"] >= 1 and r["num_nodes"] >= 3
@@ -265,7 +266,7 @@ def test_isolation_forest_flags_planted_outlier(spark):
 
     pts = [(i, (i % 13) * 0.1, (i % 7) * 0.1) for i in range(300)]
     pts.append((999, 50.0, 50.0))
-    df = spark.createDataFrame(pts, "id bigint, x double, y double")
+    df = small_local_df(spark, pts, "id bigint, x double, y double")
     out = {r["id"]: r["score"] for r in
            isolation_forest_scores(df, ["x", "y"], "id", n_trees=10, psi=64).collect()}
     normal = [out[i] for i in range(300)]
@@ -283,7 +284,7 @@ def test_auto_model_select_leaderboard(spark):
     # 8 distinct x values (< MLlib's default maxBins=32, so tree splits
     # can land exactly between classes)
     rows = [(i, float(i % 8), 1 if (i % 8) >= 4 else 0) for i in range(200)]
-    df = spark.createDataFrame(rows, "id bigint, x double, y bigint")
+    df = small_local_df(spark, rows, "id bigint, x double, y bigint")
     out = auto_model_select(df, ["x"], "y", "id", k=2).collect()
     assert len(out) == 5
     assert [r["rank"] for r in out] == [1, 2, 3, 4, 5]
@@ -306,7 +307,7 @@ def test_ocsvm_flags_planted_outliers(spark):
         rows.append((i, v))
     for i in range(40, 44):
         rows.append((i, [-1.0, 0.0, 0.1]))
-    df = spark.createDataFrame(rows, "id long, x array<double>")
+    df = small_local_df(spark, rows, "id long, x array<double>")
     out = one_class_svm_flags(df, "x", "id", nu=0.15, epochs=20)
     flagged = {r["id"] for r in out.filter("is_outlier = 1").collect()}
     assert {40, 41, 42, 43} <= flagged
@@ -317,8 +318,8 @@ def test_ocsvm_deterministic_across_partitionings(spark):
     from pandrs_spark.operators.ml import one_class_svm_flags
 
     rows = [(i, [float((i * 7) % 5), float((i * 3) % 4), 1.0]) for i in range(30)]
-    a = spark.createDataFrame(rows, "id long, x array<double>").repartition(1)
-    b = spark.createDataFrame(rows, "id long, x array<double>").repartition(17)
+    a = small_local_df(spark, rows, "id long, x array<double>").repartition(1)
+    b = small_local_df(spark, rows, "id long, x array<double>").repartition(17)
     ra = sorted(one_class_svm_flags(a, "x", "id", epochs=8).collect())
     rb = sorted(one_class_svm_flags(b, "x", "id", epochs=8).collect())
     assert ra == rb
@@ -332,7 +333,7 @@ def test_tsne_separates_blobs(spark):
         rows.append((i, [10.0 + 0.1 * (i % 5), 10.0 + 0.1 * (i % 3), 0.0]))
     for i in range(30, 60):
         rows.append((i, [-10.0 + 0.1 * (i % 5), -10.0 - 0.1 * (i % 3), 0.0]))
-    df = spark.createDataFrame(rows, "id long, x array<double>")
+    df = small_local_df(spark, rows, "id long, x array<double>")
     out = tsne_project(df, "x", "id", sample_n=60, perplexity=10.0, iters=120)
     pts = {r["id"]: (r["ts_x"], r["ts_y"]) for r in out.collect()}
     import math
@@ -354,7 +355,7 @@ def test_tsne_deterministic(spark):
     from pandrs_spark.operators.ml import tsne_project
 
     rows = [(i, [float((i * 13) % 7), float((i * 5) % 11)]) for i in range(40)]
-    df = spark.createDataFrame(rows, "id long, x array<double>")
+    df = small_local_df(spark, rows, "id long, x array<double>")
     r1 = sorted(tsne_project(df, "x", "id", sample_n=25, iters=60).collect())
     r2 = sorted(tsne_project(df, "x", "id", sample_n=25, iters=60).collect())
     assert r1 == r2
@@ -366,17 +367,17 @@ def test_quantile_bins_edge_cases(spark):
     (pandas qcut NaN parity)."""
     from pandrs_spark.operators.ml import quantile_bins
 
-    empty = spark.createDataFrame([], "x double")
+    empty = small_local_df(spark, [], "x double")
     assert quantile_bins(empty, "x", 4).count() == 0
-    allnull = spark.createDataFrame([(None,), (None,)], "x double")
+    allnull = small_local_df(spark, [(None,), (None,)], "x double")
     rows = quantile_bins(allnull, "x", 4).collect()
     assert [r["bin"] for r in rows] == [None, None]
     one = quantile_bins(
-        spark.createDataFrame([(1.0,), (2.0,), (None,)], "x double"), "x", 1
+        small_local_df(spark, [(1.0,), (2.0,), (None,)], "x double"), "x", 1
     ).collect()
     assert sorted([r["bin"] for r in one], key=lambda v: (v is None, v)) == [0, 0, None]
     mixed = quantile_bins(
-        spark.createDataFrame([(float(i),) for i in range(8)] + [(None,)], "x double"),
+        small_local_df(spark, [(float(i),) for i in range(8)] + [(None,)], "x double"),
         "x",
         2,
     ).collect()
@@ -395,8 +396,8 @@ def test_quantile_bins_duplicate_edges(spark):
 
     # 90% zeros, a few distinct tails: edges for n_bins=4 are
     # [0, 0, ...] — duplicated.
-    df = spark.createDataFrame(
-        [(0.0,)] * 18 + [(5.0,), (9.0,)], "x double"
+    df = small_local_df(
+        spark, [(0.0,)] * 18 + [(5.0,), (9.0,)], "x double"
     )
     bins = sorted(
         {r["bin"] for r in quantile_bins(df, "x", 4).collect()}
@@ -405,7 +406,7 @@ def test_quantile_bins_duplicate_edges(spark):
     with pytest.raises(ValueError, match="not unique"):
         quantile_bins(df, "x", 4, duplicates="raise")
     # untied data is unaffected by 'raise'
-    ok = spark.createDataFrame([(float(i),) for i in range(20)], "x double")
+    ok = small_local_df(spark, [(float(i),) for i in range(20)], "x double")
     assert quantile_bins(ok, "x", 4, duplicates="raise").count() == 20
     with pytest.raises(ValueError, match="drop"):
         quantile_bins(df, "x", 4, duplicates="nonsense")
@@ -417,16 +418,16 @@ def test_isotonic_fit_metrics_recovers_monotone_signal(spark):
     mse <= constant-baseline mse."""
     from pandrs_spark.operators.ml import isotonic_fit_metrics
 
-    mono = spark.createDataFrame(
-        [(float(i), float(i // 10)) for i in range(100)], "x double, y double"
+    mono = small_local_df(
+        spark, [(float(i), float(i // 10)) for i in range(100)], "x double, y double"
     )
     m = isotonic_fit_metrics(mono, "x", "y").first()
     assert m["n"] == 100 and m["monotone"]
     assert m["mse"] < 1e-12
     # y decreasing in x but fitted increasing: PAV pools everything
     # toward the mean; still never worse than the constant baseline
-    anti = spark.createDataFrame(
-        [(float(i), float(-i)) for i in range(50)], "x double, y double"
+    anti = small_local_df(
+        spark, [(float(i), float(-i)) for i in range(50)], "x double, y double"
     )
     a = isotonic_fit_metrics(anti, "x", "y").first()
     assert a["monotone"] and a["mse"] <= a["mse_const"] + 1e-9
@@ -438,7 +439,7 @@ def test_huber_ols_downweights_outliers(spark):
 
     # y = 2x on a clean grid, plus one gross outlier
     rows = [(float(i), 2.0 * i) for i in range(1, 40)] + [(40.0, 500.0)]
-    df = spark.createDataFrame(rows, "x double, y double")
+    df = small_local_df(spark, rows, "x double, y double")
     r = huber_ols(df, "x", "y").first()
     assert r["n_down"] >= 1  # the outlier got a weight < 1
     # huber slope strictly closer to the true slope 2 than OLS slope
@@ -461,7 +462,7 @@ def test_poisson_irls_recovers_known_coefficients(spark):
         (round(math.exp(b0_true + b1_true * (i / 10.0))), i / 10.0)
         for i in range(-20, 21)
     ]
-    df = spark.createDataFrame(rows, "y long, x double")
+    df = small_local_df(spark, rows, "y long, x double")
     r = poisson_irls_1d(df, "y", "x", n_iter=3).first()
     assert r["n"] == 41
     assert abs(r["b0"] - b0_true) < 0.1
@@ -476,7 +477,7 @@ def test_poisson_irls_partition_invariant(spark):
     rows = [(1 + (i * 7) % 5, (i % 13) / 3.0) for i in range(50)]
     outs = []
     for parts in (1, 5):
-        df = spark.createDataFrame(rows, "y long, x double").repartition(parts)
+        df = small_local_df(spark, rows, "y long, x double").repartition(parts)
         r = poisson_irls_1d(df, "y", "x", n_iter=3).first()
         outs.append((r["n"], r["b0"], r["b1"], r["mean_y"]))
     assert outs[0] == outs[1]
@@ -489,7 +490,7 @@ def test_lof_grid_matches_exact(spark):
     from pandrs_spark.operators.ml import local_outlier_factor
 
     pts = [(i, 0.2 * (i % 5), 0.2 * (i // 5)) for i in range(25)]
-    df = spark.createDataFrame(pts, "id bigint, x double, y double")
+    df = small_local_df(spark, pts, "id bigint, x double, y double")
     g = {r["id"]: r["lof"] for r in local_outlier_factor(
         df, "id", "x", "y", k=3, method="grid", eps=0.75).collect()}
     e = {r["id"]: r["lof"] for r in local_outlier_factor(
@@ -503,8 +504,8 @@ def test_lof_grid_eps_fence_raises(spark):
     import pytest
     from pandrs_spark.operators.ml import local_outlier_factor
 
-    df = spark.createDataFrame(
-        [(1, 0.0, 0.0), (2, 0.1, 0.0), (3, 0.2, 0.0), (4, 0.1, 0.1),
+    df = small_local_df(
+        spark, [(1, 0.0, 0.0), (2, 0.1, 0.0), (3, 0.2, 0.0), (4, 0.1, 0.1),
          (99, 50.0, 50.0)],
         "id bigint, x double, y double",
     )
@@ -527,7 +528,7 @@ def test_lof_grid_aside_fence_partial_candidates(spark):
     from pandrs_spark.operators.ml import local_outlier_factor
 
     rows = [(i, 0.01 * i, 0.0) for i in range(10)] + [(99, 0.32, 0.0)]
-    df = spark.createDataFrame(rows, "id bigint, x double, y double")
+    df = small_local_df(spark, rows, "id bigint, x double, y double")
     with pytest.raises(Exception, match="LOF_GRID_EPS_TOO_SMALL"):
         local_outlier_factor(df, "id", "x", "y", k=5,
                              method="grid", eps=0.25).collect()
@@ -541,8 +542,8 @@ def test_lof_grid_requires_explicit_eps(spark):
     import pytest
     from pandrs_spark.operators.ml import local_outlier_factor
 
-    df = spark.createDataFrame(
-        [(1, 0.0, 0.0), (2, 1.0, 0.0)], "id bigint, x double, y double"
+    df = small_local_df(
+        spark, [(1, 0.0, 0.0), (2, 1.0, 0.0)], "id bigint, x double, y double"
     )
     with pytest.raises(ValueError, match="requires an explicit eps"):
         local_outlier_factor(df, "id", "x", "y", k=1, method="grid")
@@ -554,8 +555,8 @@ def test_knn_topk_edges_requires_explicit_method(spark):
     import pytest
     from pandrs_spark.operators.similarity import knn_topk_edges
 
-    df = spark.createDataFrame(
-        [(1, [1.0, 0.0]), (2, [0.0, 1.0])],
+    df = small_local_df(
+        spark, [(1, [1.0, 0.0]), (2, [0.0, 1.0])],
         "vec_id bigint, embedding array<double>",
     )
     with pytest.raises(TypeError):

@@ -12,12 +12,13 @@ from pandrs_spark.operators.multimodal import (
     media_stats,
     sample_video_frames,
 )
+from pandrs_spark.operators.util import small_local_df
 
 
 @pytest.fixture()
 def media_df(spark):
     rows = [(1, b"fake-image-bytes-1"), (2, b"fake-image-bytes-22")]
-    df = spark.createDataFrame(rows, "id long, raw binary")
+    df = small_local_df(spark, rows, "id long, raw binary")
     return attach_media_struct(
         df, "raw", "image/fake", width=F.lit(32), height=F.lit(16)
     ).drop("raw")
@@ -49,14 +50,14 @@ def test_decode_rejects_real_images(spark):
     # JPEG stays honestly gated (DCT entropy coding needs libjpeg);
     # PNG decodes for real since round 8, so a malformed PNG payload
     # now surfaces ValueError instead of the old NotImplementedError
-    df = spark.createDataFrame(
-        [(1, b"\xff\xd8\xffrest")], "id long, raw binary"
+    df = small_local_df(
+        spark, [(1, b"\xff\xd8\xffrest")], "id long, raw binary"
     )
     media = attach_media_struct(df, "raw", "image/jpeg")
     with pytest.raises(Exception, match="NotImplementedError|JPEG"):
         decode_image_features(media).collect()
-    df2 = spark.createDataFrame(
-        [(1, b"\x89PNG\r\n\x1a\nrest")], "id long, raw binary"
+    df2 = small_local_df(
+        spark, [(1, b"\x89PNG\r\n\x1a\nrest")], "id long, raw binary"
     )
     media2 = attach_media_struct(df2, "raw", "image/png")
     with pytest.raises(Exception, match="ValueError|missing IHDR|truncated"):
@@ -64,7 +65,7 @@ def test_decode_rejects_real_images(spark):
 
 
 def test_sample_video_frames(spark):
-    df = spark.createDataFrame([(7, b"vid")], "id long, raw binary")
+    df = small_local_df(spark, [(7, b"vid")], "id long, raw binary")
     media = attach_media_struct(
         df, "raw", "video/fake", n_frames=F.lit(10)
     )
@@ -78,8 +79,8 @@ def test_repartition_for_payload_parallelism_floor(spark):
     SIZE, not a license to serialize the decode."""
     from pandrs_spark.operators.multimodal import repartition_for_payload
 
-    df = spark.createDataFrame(
-        [(i, b"x" * 100) for i in range(200)], "id long, content binary"
+    df = small_local_df(
+        spark, [(i, b"x" * 100) for i in range(200)], "id long, content binary"
     ).coalesce(1)
     out = repartition_for_payload(df, avg_payload_bytes=100)
     assert (
@@ -181,7 +182,7 @@ def test_decode_audio_features_distributed(spark):
         (1, encode_wav_pcm16(8000, [100, -100, 200, -200])),
         (2, encode_wav_pcm16(44100, [0, 0, 0, 0, 0, 0])),
     ]
-    df = spark.createDataFrame(rows, "id long, content binary").repartition(2)
+    df = small_local_df(spark, rows, "id long, content binary").repartition(2)
     media = attach_media_struct(df, "content", "audio/wav")
     got = {r["id"]: r for r in decode_audio_features(media).collect()}
     assert got[1]["sample_rate"] == 8000 and got[1]["n_frames"] == 4
@@ -306,7 +307,7 @@ def test_decode_image_features_png_distributed(spark):
         (1, encode_png_rgb(2, 2, bytes([255, 0, 0] * 4))),
         (2, encode_png_rgb(3, 1, bytes([0, 128, 0] * 3))),
     ]
-    df = spark.createDataFrame(rows, "id long, content binary").repartition(2)
+    df = small_local_df(spark, rows, "id long, content binary").repartition(2)
     media = attach_media_struct(df, "content", "image/png")
     got = {r["id"]: r for r in decode_image_features(media).collect()}
     assert got[1]["width"] == 2 and abs(got[1]["features"][0] - 1.0) < 1e-12

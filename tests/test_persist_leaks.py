@@ -19,35 +19,37 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from pandrs_spark.operators.util import small_local_df
+
 
 def _cache_empty(spark) -> bool:
     return bool(spark._jsparkSession.sharedState().cacheManager().isEmpty())
 
 
 def _edges(spark):
-    return spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (5, 4), (2, 5), (6, 1)],
+    return small_local_df(
+        spark, [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (5, 4), (2, 5), (6, 1)],
         "src bigint, dst bigint",
     )
 
 
 def _points(spark):
-    return spark.createDataFrame(
-        [(i, float(i % 5), float((i * 3) % 7)) for i in range(30)],
+    return small_local_df(
+        spark, [(i, float(i % 5), float((i * 3) % 7)) for i in range(30)],
         "id long, x double, y double",
     )
 
 
 def _grouped(spark):
-    return spark.createDataFrame(
-        [(float(i % 11), "abc"[i % 3]) for i in range(60)],
+    return small_local_df(
+        spark, [(float(i % 11), "abc"[i % 3]) for i in range(60)],
         "v double, g string",
     )
 
 
 def _docs(spark):
-    return spark.createDataFrame(
-        [(i, "alpha beta gamma delta epsilon zeta " * 3) for i in range(20)],
+    return small_local_df(
+        spark, [(i, "alpha beta gamma delta epsilon zeta " * 3) for i in range(20)],
         "doc_id long, text string",
     )
 

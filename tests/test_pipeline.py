@@ -16,17 +16,18 @@ from pandrs_spark.operators.pipeline import (
     PolynomialFeaturesEst,
     StandardScalerEst,
 )
+from pandrs_spark.operators.util import small_local_df
 
 
 @pytest.fixture()
 def train(spark):
     rows = [(float(i), "a" if i % 2 == 0 else "b") for i in range(8)]
-    return spark.createDataFrame(rows, "x double, g string")
+    return small_local_df(spark, rows, "x double, g string")
 
 
 def test_scaler_freezes_fit_stats(spark, train):
     est = StandardScalerEst(["x"]).fit(train)
-    test = spark.createDataFrame([(100.0, "a")], "x double, g string")
+    test = small_local_df(spark, [(100.0, "a")], "x double, g string")
     out = est.transform(test).first()
     # mean=3.5, sd of 0..7 — stats come from TRAIN, not the transformed frame
     mu, sd = 3.5, train.agg(F.stddev_samp("x")).first()[0]
@@ -36,15 +37,15 @@ def test_scaler_freezes_fit_stats(spark, train):
 def test_minmax_and_binner_clamp_out_of_range(spark, train):
     mm = MinMaxScalerEst(["x"]).fit(train)
     bn = BinnerEst("x", 4, out="b").fit(train)
-    test = spark.createDataFrame([(-5.0, "a"), (99.0, "b")], "x double, g string")
+    test = small_local_df(spark, [(-5.0, "a"), (99.0, "b")], "x double, g string")
     rows = bn.transform(mm.transform(test)).orderBy("x").collect()
     assert rows[0]["b"] == 0 and rows[1]["b"] == 3  # clamped to edge bins
     assert rows[0]["x_mm"] < 0 and rows[1]["x_mm"] > 1  # sklearn keeps raw scale
 
 
 def test_imputer_median(spark):
-    df = spark.createDataFrame(
-        [(1.0,), (2.0,), (10.0,), (None,)], "x double"
+    df = small_local_df(
+        spark, [(1.0,), (2.0,), (10.0,), (None,)], "x double"
     )
     out = ImputerEst(["x"], strategy="median").fit(df).transform(df)
     assert out.where(F.col("x") == 2.0).count() == 2
@@ -52,7 +53,7 @@ def test_imputer_median(spark):
 
 def test_onehot_unseen_category_all_zero(spark, train):
     est = OneHotEncoderEst("g", prefix="g").fit(train)
-    test = spark.createDataFrame([("zzz",)], "g string")
+    test = small_local_df(spark, [("zzz",)], "g string")
     row = est.transform(test).first()
     assert row["g_a"] == 0 and row["g_b"] == 0
 
@@ -82,6 +83,6 @@ def test_get_dummies(spark, train):
 
 
 def test_slice_replace(spark):
-    df = spark.createDataFrame([("abcdef",)], "s string")
+    df = small_local_df(spark, [("abcdef",)], "s string")
     out = df.select(str_("s").slice_replace(2, 4, "XY").alias("r")).first()
     assert out["r"] == "abXYef"  # pandas: 'abcdef'[..2] + 'XY' + 'abcdef'[4..]

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from pandrs_spark import plans
 from pandrs_spark.catalog import load_table
+from pandrs_spark.operators.util import small_local_df
 
 
 def test_filter_pushed_to_scan(spark, sf_dir):
@@ -684,7 +685,7 @@ def test_knn_topk_edges_method_dispatch(spark):
 
     rows = [(i, [float((i * 7 + j * 3) % 11) / 11.0 for j in range(8)])
             for i in range(30)]
-    df = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
+    df = small_local_df(spark, rows, "vec_id bigint, embedding array<double>")
     exact = knn_topk_edges(df, k=3, method="exact").collect()
     assert {r["rank"] for r in exact} == {1, 2, 3}
     assert all(r["id_a"] != r["id_b"] for r in exact)

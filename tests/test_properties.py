@@ -18,6 +18,7 @@ from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from pandrs_spark.functions.deterministic import dsum
+from pandrs_spark.operators.util import small_local_df
 from pandrs_spark.operators.windows import ordered_window, rank_method, rolling
 
 # Bounded, NaN/inf-free doubles: the deterministic layer quantizes at
@@ -38,7 +39,7 @@ def _model_dsum(vals, scale=2):
 @settings(max_examples=12, deadline=None)
 @given(st.lists(floats, min_size=1, max_size=40), st.integers(1, 6))
 def test_dsum_partition_invariant_and_exact(spark, vals, nparts):
-    df = spark.createDataFrame([(v,) for v in vals], "v double").repartition(nparts)
+    df = small_local_df(spark, [(v,) for v in vals], "v double").repartition(nparts)
     got = df.agg(dsum("v").alias("s")).first()["s"]
     assert got == pytest.approx(_model_dsum(vals), abs=1e-9)
 
@@ -46,8 +47,8 @@ def test_dsum_partition_invariant_and_exact(spark, vals, nparts):
 @settings(max_examples=10, deadline=None)
 @given(st.lists(st.integers(-5, 5), min_size=1, max_size=30))
 def test_rank_methods_match_pandas(spark, vals):
-    df = spark.createDataFrame(
-        [(i, float(v)) for i, v in enumerate(vals)], "i bigint, v double"
+    df = small_local_df(
+        spark, [(i, float(v)) for i, v in enumerate(vals)], "i bigint, v double"
     )
     out = df.select(
         "i",
@@ -67,8 +68,8 @@ def test_rank_methods_match_pandas(spark, vals):
 @settings(max_examples=10, deadline=None)
 @given(st.lists(floats, min_size=1, max_size=30), st.integers(1, 5))
 def test_rolling_mean_matches_pandas(spark, vals, window):
-    df = spark.createDataFrame(
-        [(i, v) for i, v in enumerate(vals)], "i bigint, v double"
+    df = small_local_df(
+        spark, [(i, v) for i, v in enumerate(vals)], "i bigint, v double"
     )
     w = ordered_window("i")
     got = [
@@ -92,8 +93,8 @@ def test_rolling_mean_matches_pandas(spark, vals, window):
 def test_ffill_matches_pandas(spark, vals):
     from pandrs_spark.operators.timeseries import ffill
 
-    df = spark.createDataFrame(
-        [(i, float(v) if v is not None else None) for i, v in enumerate(vals)],
+    df = small_local_df(
+        spark, [(i, float(v) if v is not None else None) for i, v in enumerate(vals)],
         "i bigint, v double",
     )
     from pyspark.sql import Window
@@ -121,7 +122,7 @@ def test_ffill_matches_pandas(spark, vals):
 def test_upsert_latest_is_idempotent(spark, rows):
     from pandrs_spark.operators.joins import upsert_latest
 
-    df = spark.createDataFrame(rows, "k int, v string, version int")
+    df = small_local_df(spark, rows, "k int, v string, version int")
     updates = df.limit(0)
     once = upsert_latest(df, updates, ["k"], "version")
     twice = upsert_latest(once, updates, ["k"], "version")
@@ -136,7 +137,7 @@ def test_upsert_latest_is_idempotent(spark, rows):
 def test_deterministic_sample_partition_invariant(spark, n, parts):
     from pandrs_spark.operators.sampling import deterministic_sample
 
-    df = spark.createDataFrame([(i,) for i in range(n)], "id long")
+    df = small_local_df(spark, [(i,) for i in range(n)], "id long")
     a = {r["id"] for r in deterministic_sample(df.repartition(1), ["id"], 0.5).collect()}
     b = {r["id"] for r in deterministic_sample(df.repartition(parts), ["id"], 0.5).collect()}
     assert a == b
@@ -149,7 +150,7 @@ def test_slice_replace_matches_pandas(spark, s, start, stop):
 
     if stop < start:
         stop = start
-    df = spark.createDataFrame([(s,)], "t string")
+    df = small_local_df(spark, [(s,)], "t string")
     got = df.select(str_("t").slice_replace(start, stop, "XY").alias("r")).first()["r"]
     expected = pd.Series([s]).str.slice_replace(start, stop, "XY").iloc[0]
     assert got == expected
@@ -166,7 +167,7 @@ def test_sort_values_partition_invariant_dense_order(spark, vals, nparts):
     partitioning (it replaced a single-partition Window.orderBy)."""
     from pandrs_spark.frame import Frame
 
-    df = spark.createDataFrame([(i, v) for i, v in enumerate(vals)], "i long, v double")
+    df = small_local_df(spark, [(i, v) for i, v in enumerate(vals)], "i long, v double")
     f = Frame(df.repartition(nparts)).sort_values("v")
     rows = f._df.select("v", f._order).collect()
     orders = sorted(r[f._order] for r in rows)
@@ -218,7 +219,7 @@ def test_skyline_matches_bruteforce_any_partitioning(spark, pts, nparts):
     from pandrs_spark.operators.skyline import skyline
 
     rows = [(i, float(a), float(b)) for i, (a, b) in enumerate(pts)]
-    df = spark.createDataFrame(rows, "id long, x double, y double").repartition(nparts)
+    df = small_local_df(spark, rows, "id long, x double, y double").repartition(nparts)
     got = sorted(
         r["id"] for r in skyline(df, maximize=["x"], minimize=["y"]).collect()
     )
@@ -243,7 +244,7 @@ def test_ewm_mean_matches_pandas(spark, vals, alpha, adjust):
     from pandrs_spark.operators.windows import ewm_mean
 
     rows = [(i, float(v)) for i, v in enumerate(vals)]
-    df = spark.createDataFrame(rows, "i long, v double").repartition(3)
+    df = small_local_df(spark, rows, "i long, v double").repartition(3)
     out = ewm_mean(df, "v", ["i"], [], alpha=alpha, adjust=adjust)
     got = {r["i"]: r["ewm"] for r in out.collect()}
     exp = pd.Series(vals).ewm(alpha=alpha, adjust=adjust).mean()
@@ -262,7 +263,7 @@ def test_rolling_quantile_matches_pandas(spark, vals, window, q):
     from pandrs_spark.operators.windows import ordered_window, rolling
 
     rows = [(i, float(v)) for i, v in enumerate(vals)]
-    df = spark.createDataFrame(rows, "i long, v double").repartition(3)
+    df = small_local_df(spark, rows, "i long, v double").repartition(3)
     w = ordered_window(order_by=["i"])
     out = df.withColumn(
         "rq", rolling("v", window, w, agg="quantile", q=q)
@@ -290,7 +291,7 @@ def test_global_prefix_sum_partition_invariant(spark):
     rows = [(i, float((i * 13) % 29)) for i in range(300)]
     outs = []
     for parts in (1, 3, 17):
-        df = spark.createDataFrame(rows, "id long, v double").repartition(parts)
+        df = small_local_df(spark, rows, "id long, v double").repartition(parts)
         out = (
             global_prefix_sum(df, [F.asc("id")], "v", "rt")
             .orderBy("id")
@@ -308,7 +309,7 @@ def test_weighted_sample_partition_invariant(spark):
     rows = [(i, float(1 + i % 9)) for i in range(200)]
     picks = []
     for parts in (1, 8):
-        df = spark.createDataFrame(rows, "id long, w double").repartition(parts)
+        df = small_local_df(spark, rows, "id long, w double").repartition(parts)
         picks.append(
             sorted(r["id"] for r in weighted_sample(df, "w", ["id"], 25).collect())
         )
@@ -328,8 +329,8 @@ def test_global_prefix_counts_partition_invariant(spark, keys, nparts):
     from pandrs_spark.operators.windows import global_prefix_counts
 
     rows = [(i, k, 1, k % 3) for i, k in enumerate(keys)]
-    df = spark.createDataFrame(
-        rows, "id long, v long, one long, w long"
+    df = small_local_df(
+        spark, rows, "id long, v long, one long, w long"
     ).repartition(nparts)
     out = global_prefix_counts(
         df, [F.asc("v"), F.asc("id")], {"cum1": "one", "cumw": "w"}
@@ -362,7 +363,7 @@ def test_global_row_number_and_ntile_partition_invariant(
     )
 
     rows = [(i, v) for i, v in enumerate(vals)]
-    df = spark.createDataFrame(rows, "id long, v long").repartition(nparts)
+    df = small_local_df(spark, rows, "id long, v long").repartition(nparts)
     n = len(vals)
     out = global_row_number(df, [F.asc("v"), F.asc("id")], "rn").select(
         "id", "rn", ntile_from_rank(F.col("rn"), n, k).alias("nt")
@@ -397,8 +398,8 @@ def test_croston_partition_invariant_and_matches_pure_fold(spark, xs, parts):
     after a per-series shuffle + in-group sort)."""
     from pandrs_spark.operators.timeseries import croston_forecast
 
-    df = spark.createDataFrame(
-        [("k", i, float(x)) for i, x in enumerate(xs)],
+    df = small_local_df(
+        spark, [("k", i, float(x)) for i, x in enumerate(xs)],
         "k string, t int, qty double",
     ).repartition(parts)
     got = croston_forecast(
@@ -436,8 +437,8 @@ def test_croston_partition_invariant_and_matches_pure_fold(spark, xs, parts):
 def test_reorder_sim_partition_invariant(spark, xs, parts):
     from pandrs_spark.operators.timeseries import reorder_policy_sim
 
-    df = spark.createDataFrame(
-        [("k", i, float(x)) for i, x in enumerate(xs)],
+    df = small_local_df(
+        spark, [("k", i, float(x)) for i, x in enumerate(xs)],
         "k string, t int, qty double",
     ).repartition(parts)
     got = reorder_policy_sim(
@@ -476,14 +477,14 @@ def test_concat_columns_partition_invariant(spark, vals, pa, pb):
     from pandrs_spark.frame import Frame, concat_columns
 
     left = Frame(
-        spark.createDataFrame(
-            [(i, v) for i, v in enumerate(vals)], "i bigint, x double"
+        small_local_df(
+            spark, [(i, v) for i, v in enumerate(vals)], "i bigint, x double"
         ).repartition(pa),
         order_col="i",
     )
     right = Frame(
-        spark.createDataFrame(
-            [(i, v * 2) for i, v in enumerate(vals)], "j bigint, y double"
+        small_local_df(
+            spark, [(i, v * 2) for i, v in enumerate(vals)], "j bigint, y double"
         ).repartition(pb),
         order_col="j",
     )

@@ -5,19 +5,21 @@ from __future__ import annotations
 
 import math
 
+from pandrs_spark.operators.util import small_local_df
+
 
 def test_ranking_metrics_hand_computed(spark):
     from pandrs_spark.operators.metrics import ranking_metrics
 
     # q1: preds [10,11,12] vs truth [10,12,13] → hits at ranks 1,3
     # q2: preds [20,21,22] vs truth [23,24,25] → no hits
-    pred = spark.createDataFrame(
-        [(1, 10, 1), (1, 11, 2), (1, 12, 3),
+    pred = small_local_df(
+        spark, [(1, 10, 1), (1, 11, 2), (1, 12, 3),
          (2, 20, 1), (2, 21, 2), (2, 22, 3)],
         "id_q int, nn_id int, rank int",
     )
-    truth = spark.createDataFrame(
-        [(1, 10), (1, 12), (1, 13), (2, 23), (2, 24), (2, 25)],
+    truth = small_local_df(
+        spark, [(1, 10), (1, 12), (1, 13), (2, 23), (2, 24), (2, 25)],
         "id_q int, nn_id int",
     )
     row = ranking_metrics(pred, truth, k=3).collect()[0]
@@ -44,7 +46,7 @@ def test_mmr_rerank_prefers_diversity(spark):
         (2, [0.985, 0.17, 0.0]),     # near-duplicate of doc 1
         (3, [0.7, 0.0, 0.71]),       # decent sim, diverse direction
     ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    df = small_local_df(spark, rows, "vec_id long, embedding array<float>")
     corpus = df.filter("vec_id != 0")
     qv = df.filter("vec_id = 0")
     out = mmr_rerank(corpus, qv, k=2, top_n=3, lam=0.5)
@@ -56,7 +58,7 @@ def test_mmr_rank1_is_top_cosine(spark):
     from pandrs_spark.operators.similarity import mmr_rerank
 
     rows = [(0, [1.0, 0.0]), (1, [0.9, 0.1]), (2, [0.5, 0.5])]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    df = small_local_df(spark, rows, "vec_id long, embedding array<float>")
     out = mmr_rerank(
         df.filter("vec_id != 0"), df.filter("vec_id = 0"), k=1, top_n=2
     ).collect()

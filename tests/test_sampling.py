@@ -7,10 +7,11 @@ from pandrs_spark.operators.sampling import (
     stratified_sample,
     train_test_split_hash,
 )
+from pandrs_spark.operators.util import small_local_df
 
 
 def test_deterministic_sample_stable(spark):
-    df = spark.createDataFrame([(i,) for i in range(2000)], "id long")
+    df = small_local_df(spark, [(i,) for i in range(2000)], "id long")
     a = {r["id"] for r in deterministic_sample(df.repartition(3), ["id"], 0.25).collect()}
     b = {r["id"] for r in deterministic_sample(df.repartition(11), ["id"], 0.25).collect()}
     assert a == b
@@ -19,7 +20,7 @@ def test_deterministic_sample_stable(spark):
 
 def test_stratified_rates(spark):
     rows = [(i, "maj" if i % 10 else "min") for i in range(5000)]
-    df = spark.createDataFrame(rows, "id long, cls string")
+    df = small_local_df(spark, rows, "id long, cls string")
     out = stratified_sample(df, "cls", {"maj": 0.1, "min": 1.0}, ["id"])
     got = {r["cls"]: r["n"] for r in out.groupBy("cls").count().withColumnRenamed("count", "n").collect()}
     assert got["min"] == 500          # rate 1.0 keeps every rare row
@@ -27,13 +28,13 @@ def test_stratified_rates(spark):
 
 
 def test_stratified_unlisted_stratum_dropped(spark):
-    df = spark.createDataFrame([(1, "a"), (2, "b")], "id long, cls string")
+    df = small_local_df(spark, [(1, "a"), (2, "b")], "id long, cls string")
     out = stratified_sample(df, "cls", {"a": 1.0}, ["id"])
     assert [r["cls"] for r in out.collect()] == ["a"]
 
 
 def test_train_test_split_hash_partition(spark):
-    df = spark.createDataFrame([(i,) for i in range(1000)], "id long")
+    df = small_local_df(spark, [(i,) for i in range(1000)], "id long")
     train, test = train_test_split_hash(df, ["id"], test_frac=0.3)
     n_tr, n_te = train.count(), test.count()
     assert n_tr + n_te == 1000
@@ -51,7 +52,7 @@ def test_weighted_sample_prefers_heavy_weights(spark):
     rows = [(i, 1.0) for i in range(100)]
     rows += [(100 + i, 1000.0) for i in range(10)]
     rows += [(200, 0.0)]
-    df = spark.createDataFrame(rows, "id long, w double")
+    df = small_local_df(spark, rows, "id long, w double")
     got = weighted_sample(df, "w", ["id"], k=20).collect()
     assert len(got) == 20
     ids = {r["id"] for r in got}
@@ -66,8 +67,8 @@ def test_weighted_sample_prefers_heavy_weights(spark):
 def test_weighted_sample_per_group(spark):
     from pandrs_spark.operators.sampling import weighted_sample
 
-    df = spark.createDataFrame(
-        [(g, i, float(i + 1)) for g in ("a", "b") for i in range(10)],
+    df = small_local_df(
+        spark, [(g, i, float(i + 1)) for g in ("a", "b") for i in range(10)],
         "g string, id long, w double",
     )
     got = weighted_sample(df, "w", ["g", "id"], k=3, group_by=["g"]).collect()
@@ -83,7 +84,7 @@ def test_resample_to_mixture_rates_and_drop(spark):
     rows = [(i, "big") for i in range(1000)] + [
         (10000 + i, "small") for i in range(20)
     ] + [(20000, "unlisted")]
-    df = spark.createDataFrame(rows, "id long, dom string")
+    df = small_local_df(spark, rows, "id long, dom string")
     kept = resample_to_mixture(
         df, "dom", {"big": 0.5, "small": 0.5}, budget=100, key_cols=["id"]
     )
@@ -109,7 +110,7 @@ def test_dsir_importance_prefers_target_like_docs(spark):
     rows = [(i, target_text, True) for i in range(10)]
     rows += [(100 + i, off_text, False) for i in range(10)]
     rows += [(200, target_text, False), (201, off_text, False)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string, t boolean")
+    docs = small_local_df(spark, rows, "doc_id long, text string, t boolean")
     out = {
         r["doc_id"]: r
         for r in dsir_importance_weights(
@@ -130,7 +131,7 @@ def test_export_shards_deterministic_and_dense(spark):
     from pandrs_spark.operators.sampling import export_shards
 
     rows = [(i, f"doc {i}") for i in range(200)]
-    df = spark.createDataFrame(rows, "doc_id bigint, text string")
+    df = small_local_df(spark, rows, "doc_id bigint, text string")
     a = export_shards(df, n_shards=8, id_col="doc_id").collect()
     b = export_shards(df.repartition(13), n_shards=8, id_col="doc_id").collect()
     ka = {r["doc_id"]: (r["shard"], r["pos"], r["fp"]) for r in a}

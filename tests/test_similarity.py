@@ -2,9 +2,18 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
-from pandrs_spark.operators.similarity import cosine, cosine_topk, nearest_neighbors
+from pandrs_spark.operators.similarity import (
+    _bucket_array_expr,
+    _hyperplanes,
+    cosine,
+    cosine_topk,
+    lsh_bucket_explode,
+    nearest_neighbors,
+)
+from pandrs_spark.operators.util import small_local_df
 
 
 def _vecs(spark):
@@ -15,7 +24,7 @@ def _vecs(spark):
         (3, [1.0, 1.0, 0.0], 1),   # cos ~ 0.7071
         (4, [-1.0, 0.0, 0.0], 2),  # opposite -> cos -1
     ]
-    return spark.createDataFrame(rows, "vec_id long, embedding array<double>, label int")
+    return small_local_df(spark, rows, "vec_id long, embedding array<double>, label int")
 
 
 def test_cosine_expression(spark):
@@ -53,7 +62,7 @@ def test_ann_lsh_finds_exact_duplicates(spark):
     vecs = rng.randn(50, 8).astype(float)
     vecs[7] = vecs[3] + 1e-6  # near-identical to vec 3
     rows = [(i, [float(x) for x in vecs[i]]) for i in range(50)]
-    df = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
+    df = small_local_df(spark, rows, "vec_id bigint, embedding array<double>")
     out = ann_lsh_topk(
         df, df.filter("vec_id = 7"), k=1, n_tables=8, n_planes=3, dim=8
     ).collect()
@@ -85,7 +94,7 @@ def test_ivf_topk_finds_planted_neighbor(spark):
 
     rows = [(i, vec(i % 4, 0.1 * (i % 3))) for i in range(40)]
     rows.append((100, vec(1, 0.09)))
-    df = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
+    df = small_local_df(spark, rows, "vec_id bigint, embedding array<double>")
     q = df.filter(F.col("vec_id") == 100)
     out = ivf_topk(df, q, k=3, n_centroids=4, n_probe=2).collect()
     assert len(out) == 3
@@ -99,7 +108,7 @@ def test_ivf_probe_widens_candidates(spark):
     from pandrs_spark.operators.similarity import ivf_topk
 
     rows = [(i, [float(i % 5 == j) for j in range(5)]) for i in range(25)]
-    df = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
+    df = small_local_df(spark, rows, "vec_id bigint, embedding array<double>")
     q = df.filter(F.col("vec_id") == 24)
     narrow = ivf_topk(df, q, k=10, n_centroids=5, n_probe=1).count()
     wide = ivf_topk(df, q, k=10, n_centroids=5, n_probe=5).count()
@@ -109,8 +118,8 @@ def test_ivf_probe_widens_candidates(spark):
 def test_quantize_embeddings_int8(spark):
     from pandrs_spark.operators.similarity import quantize_embeddings_int8
 
-    df = spark.createDataFrame(
-        [(1, [1.0, -0.5, 0.25, 0.0]), (2, [0.1, 0.1, 0.1, 0.1])],
+    df = small_local_df(
+        spark, [(1, [1.0, -0.5, 0.25, 0.0]), (2, [0.1, 0.1, 0.1, 0.1])],
         "vec_id long, embedding array<float>",
     )
     rows = {r["vec_id"]: r for r in quantize_embeddings_int8(df).collect()}
@@ -128,8 +137,8 @@ def test_quantize_embeddings_int8_zero_vector(spark):
     # review fix: all-zero vector must not divide by scale=0
     from pandrs_spark.operators.similarity import quantize_embeddings_int8
 
-    df = spark.createDataFrame(
-        [(1, [0.0, 0.0, 0.0])], "vec_id long, embedding array<float>"
+    df = small_local_df(
+        spark, [(1, [0.0, 0.0, 0.0])], "vec_id long, embedding array<float>"
     )
     r = quantize_embeddings_int8(df).collect()[0]
     assert r["scale"] == 0.0
@@ -140,7 +149,8 @@ def test_quantize_embeddings_int8_zero_vector(spark):
 def test_semantic_dedup_drops_lower_id_near_dups_within_cluster(spark):
     from pandrs_spark.operators.similarity import semantic_dedup
 
-    df = spark.createDataFrame(
+    df = small_local_df(
+        spark,
         [
             (1, [0.9, 0.0, 0.0]),   # representative (lowest id in its group)
             (2, [0.9, 0.001, 0.0]),  # near-dup of 1, same grid cell -> dropped
@@ -161,11 +171,12 @@ def test_embedding_decontaminate_flags_near_dups(spark):
     vectors are not; max_sim is the max over ALL test vectors."""
     from pandrs_spark.operators.similarity import embedding_decontaminate
 
-    test = spark.createDataFrame(
-        [(900, [1.0, 0.0, 0.0]), (901, [0.0, 1.0, 0.0])],
+    test = small_local_df(
+        spark, [(900, [1.0, 0.0, 0.0]), (901, [0.0, 1.0, 0.0])],
         "vec_id long, embedding array<double>",
     )
-    train = spark.createDataFrame(
+    train = small_local_df(
+        spark,
         [
             (1, [2.0, 0.0, 0.0]),     # parallel to test 900 -> sim 1.0
             (2, [0.0, 0.0, 5.0]),     # orthogonal to both -> sim 0.0
@@ -394,6 +405,20 @@ def test_ivfadc_lloyd_beats_seed_recall_small(spark):
     assert rec("lloyd", 2) >= rec("seed", 0)
 
 
+def _lsh_bucket_explode_expr(df, vec_col, banks, *keep):
+    """Pure-JVM fold-expression form of ``lsh_bucket_explode``: the
+    plane banks attached as a one-row broadcast frame, buckets computed
+    by the interpreted array-HOF fold (``_bucket_array_expr``). The
+    arithmetic reference the Arrow fast path is certified against."""
+    banks_df = small_local_df(
+        df.sparkSession, [(banks,)], "__banks__ array<array<array<double>>>"
+    )
+    bucket_arr = F.expr(_bucket_array_expr(vec_col, "__banks__"))
+    return df.crossJoin(F.broadcast(banks_df)).select(
+        *keep, F.posexplode(bucket_arr).alias("t", "bucket")
+    )
+
+
 def test_lsh_bucket_explode_arrow_matches_fold_expression(spark):
     """Round 12: the numpy-matmul mapInArrow bucket pass must produce
     row-identical (keep, t, bucket) to the JVM fold-expression form —
@@ -401,12 +426,6 @@ def test_lsh_bucket_explode_arrow_matches_fold_expression(spark):
     zeros route through the margin-certificate fallback), and on the
     NULL/ragged/NaN edge semantics the expression form defines."""
     import math
-
-    from pandrs_spark.operators.similarity import (
-        _hyperplanes,
-        _lsh_bucket_explode_expr,
-        lsh_bucket_explode,
-    )
 
     banks = _hyperplanes(4, 5, 8, seed=11)
     rows = [
@@ -426,7 +445,7 @@ def test_lsh_bucket_explode_arrow_matches_fold_expression(spark):
         # ragged (shorter than dim): zip_with pads null -> null dot
         (7, [1.0, 2.0, 3.0]),
     ]
-    df = spark.createDataFrame(rows, "id long, v array<double>")
+    df = small_local_df(spark, rows, "id long, v array<double>")
     got = sorted(
         map(tuple, lsh_bucket_explode(df, "v", banks, "id").collect())
     )
@@ -443,3 +462,14 @@ def test_lsh_bucket_explode_arrow_matches_fold_expression(spark):
     # NaN dot on plane 0 of every table -> bit 0 always set
     assert all(b & 1 for b in by_id[4])
     assert not math.isnan(sum(sum(p) for tb in banks for p in tb))
+
+
+def test_lsh_planes_beyond_int32_bucket_raise(spark):
+    """Bucket ids pack one bit per plane into an int32: 31 planes fit,
+    a 32nd would wrap into the sign bit, so both entry points refuse."""
+    assert len(_hyperplanes(1, 31, 2, seed=0)[0]) == 31
+    with pytest.raises(ValueError, match="n_planes=32"):
+        _hyperplanes(1, 32, 2, seed=0)
+    df = small_local_df(spark, [(0, [1.0, 0.0])], "id long, v array<double>")
+    with pytest.raises(ValueError, match="n_planes=32"):
+        lsh_bucket_explode(df, "v", [[[1.0, 0.0]] * 32], "id")

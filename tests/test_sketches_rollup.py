@@ -5,6 +5,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from pandrs_spark.operators.util import small_local_df
+
 
 def test_bitmap_distinct_rollup_matches_exact(spark):
     # Keys deliberately span multiple bitmap buckets (bucket = 1<<12
@@ -15,7 +17,7 @@ def test_bitmap_distinct_rollup_matches_exact(spark):
         for d in (1, 2, 3)
         for uid in range(d * 3000, d * 3000 + 500)
     ]
-    df = spark.createDataFrame(rows, "g string, d int, uid long")
+    df = small_local_df(spark, rows, "g string, d int, uid long")
     got = {
         r["g"]: r["exact_distinct"]
         for r in __import__(
@@ -36,7 +38,7 @@ def test_bitmap_distinct_rollup_matches_exact(spark):
 def test_bitmap_rollup_dedups_across_fine_groups(spark):
     # Same users appear every day: distinct-over-merge must not sum.
     rows = [(d, uid) for d in range(5) for uid in range(100)]
-    df = spark.createDataFrame(rows, "d int, uid long").withColumn(
+    df = small_local_df(spark, rows, "d int, uid long").withColumn(
         "all", F.lit(1)
     )
     from pandrs_spark.operators.sketches import bitmap_distinct_rollup
@@ -55,7 +57,7 @@ def test_clamped_cumsum_floors_at_lower(spark):
         ("k2", 1, -4.0),  # clamps immediately
         ("k2", 2, 1.25),
     ]
-    df = spark.createDataFrame(rows, "k string, t int, x double")
+    df = small_local_df(spark, rows, "k string, t int, x double")
     full = {
         (r["k"], r["t"]): r["balance"]
         for r in clamped_cumsum(
@@ -80,8 +82,8 @@ def test_clamped_cumsum_floors_at_lower(spark):
 def test_clamped_cumsum_nonzero_floor(spark):
     from pandrs_spark.operators.timeseries import clamped_cumsum
 
-    df = spark.createDataFrame(
-        [("k", 1, -100.0), ("k", 2, 3.0)], "k string, t int, x double"
+    df = small_local_df(
+        spark, [("k", 1, -100.0), ("k", 2, 3.0)], "k string, t int, x double"
     )
     out = {
         r["t"]: r["balance"]
@@ -103,7 +105,7 @@ def test_clamped_cumsum_matches_reference_fold(spark):
             x = (1103515245 * x + 12345) % (1 << 31)
             val = ((x % 2001) - 1000) / 10.0  # [-100.0, 100.0]
             rows.append((f"k{key}", t, val))
-    df = spark.createDataFrame(rows, "k string, t int, v double")
+    df = small_local_df(spark, rows, "k string, t int, v double")
     got = {
         (r["k"], r["t"]): r["bal"]
         for r in clamped_cumsum(
@@ -129,8 +131,8 @@ def test_cms_fast_hash_guarantee_and_agreement(spark):
     xxhash64 being signed."""
     from pandrs_spark.operators.sketches import cms_build, cms_estimate
 
-    df = spark.createDataFrame(
-        [(k,) for k in (["hot"] * 50 + [f"k{i}" for i in range(40)])],
+    df = small_local_df(
+        spark, [(k,) for k in (["hot"] * 50 + [f"k{i}" for i in range(40)])],
         "key string",
     )
     sketch = cms_build(df, "key", depth=4, width=512, fast_hash=True)
@@ -154,7 +156,7 @@ def test_cms_estimate_rejects_hash_mode_mismatch(spark):
 
     from pandrs_spark.operators.sketches import cms_build, cms_estimate
 
-    df = spark.createDataFrame([(f"k{i % 5}",) for i in range(50)], "key string")
+    df = small_local_df(spark, [(f"k{i % 5}",) for i in range(50)], "key string")
     sketch = cms_build(df, "key", depth=4, width=64, fast_hash=True)
     with pytest.raises(ValueError, match="fast_hash"):
         cms_estimate(sketch, df, "key", depth=4, width=64, fast_hash=False)

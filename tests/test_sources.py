@@ -9,12 +9,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from pandrs_spark.sources import io as pio
+from pandrs_spark.operators.util import small_local_df
 
 
 @pytest.fixture()
 def small_df(spark):
-    return spark.createDataFrame(
-        [(1, "a", 1.5), (2, "b", None), (3, None, 3.0)],
+    return small_local_df(
+        spark, [(1, "a", 1.5), (2, "b", None), (3, None, 3.0)],
         "id bigint, name string, score double",
     )
 
@@ -243,8 +244,8 @@ def test_xlsx_multi_sheet_roundtrip(spark, tmp_path):
     # io-level wrappers: write several frames, read one back by name
     import pandrs_spark.sources.io as pio
 
-    df1 = spark.createDataFrame([(1, "x"), (2, "y")], "k long, s string")
-    df2 = spark.createDataFrame([(9.5,)], "v double")
+    df1 = small_local_df(spark, [(1, "x"), (2, "y")], "k long, s string")
+    df2 = small_local_df(spark, [(9.5,)], "v double")
     path2 = str(tmp_path / "multi2.xlsx")
     pio.write_excel_multi({"first": df1, "second": df2}, path2)
     assert pio.list_excel_sheets(path2) == ["first", "second"]
@@ -301,11 +302,11 @@ def test_schema_drift_detects_add_remove_retype(spark, tmp_path):
 
     a = str(tmp_path / "a")
     b = str(tmp_path / "b")
-    spark.createDataFrame(
-        [(1, "x", 1.0)], "id long, s string, v double"
+    small_local_df(
+        spark, [(1, "x", 1.0)], "id long, s string, v double"
     ).coalesce(1).write.parquet(a)
-    spark.createDataFrame(
-        [(1, 2.5, True)], "id long, v float, flag boolean"
+    small_local_df(
+        spark, [(1, 2.5, True)], "id long, v float, flag boolean"
     ).coalesce(1).write.parquet(b)
     drift = {d["column"]: d for d in schema_drift(a, b)}
     assert drift["s"]["change"] == "removed"

@@ -19,6 +19,7 @@ from pandrs_spark.streaming.windows import (
     tumbling,
     windowed_agg,
 )
+from pandrs_spark.operators.util import small_local_df
 
 SCHEMA = "ts timestamp, key string, v double"
 
@@ -33,7 +34,7 @@ def stream_dir(spark):
         (dt.datetime(2024, 1, 1, 1, 5), "a", 4.0),
         (dt.datetime(2024, 1, 1, 2, 30), "b", 5.0),
     ]
-    spark.createDataFrame(rows, SCHEMA).coalesce(1).write.parquet(f"{d}/batch1")
+    small_local_df(spark, rows, SCHEMA).coalesce(1).write.parquet(f"{d}/batch1")
     yield d
     shutil.rmtree(d, ignore_errors=True)
 
@@ -135,7 +136,7 @@ def _write_flat_parquet(spark, rows, schema, dest_file):
     import tempfile
 
     tmp = tempfile.mkdtemp()
-    spark.createDataFrame(rows, schema).coalesce(1).write.mode("overwrite").parquet(tmp)
+    small_local_df(spark, rows, schema).coalesce(1).write.mode("overwrite").parquet(tmp)
     part = glob.glob(f"{tmp}/part-*.parquet")[0]
     os.makedirs(os.path.dirname(dest_file), exist_ok=True)
     shutil.copy(part, dest_file)
@@ -226,7 +227,7 @@ def test_stream_dedup_within_watermark(spark, tmp_path):
         (dt.datetime(2024, 1, 1, 0, 4), "k2", 98.0),  # duplicate key
         (dt.datetime(2024, 1, 1, 0, 5), "k3", 3.0),
     ]
-    spark.createDataFrame(rows, SCHEMA).coalesce(1).write.parquet(d)
+    small_local_df(spark, rows, SCHEMA).coalesce(1).write.parquet(d)
     src = stream_from_directory(spark, d, SCHEMA)
     deduped = dedup_within_watermark(src, ["key"], "ts", "10 minutes")
     q = stream_to_memory(deduped, "dedup_sink", output_mode="append")
@@ -238,8 +239,8 @@ def test_stream_dedup_within_watermark(spark, tmp_path):
 def test_stream_dedup_batch_fallback(spark):
     from pandrs_spark.streaming.windows import dedup_within_watermark
 
-    df = spark.createDataFrame(
-        [(dt.datetime(2024, 1, 1), "a", 1.0), (dt.datetime(2024, 1, 2), "a", 2.0)],
+    df = small_local_df(
+        spark, [(dt.datetime(2024, 1, 1), "a", 1.0), (dt.datetime(2024, 1, 2), "a", 2.0)],
         SCHEMA,
     )
     assert dedup_within_watermark(df, ["key"], "ts", "1 hour").count() == 1
@@ -254,9 +255,9 @@ def test_stream_static_enrich_broadcast(spark, tmp_path):
         (dt.datetime(2024, 1, 1, 0, 2), "b", 2.0),
         (dt.datetime(2024, 1, 1, 0, 3), "zzz", 3.0),  # no dim match
     ]
-    spark.createDataFrame(rows, SCHEMA).coalesce(1).write.parquet(d)
-    dim = spark.createDataFrame(
-        [("a", "alpha"), ("b", "beta")], "key string, label string"
+    small_local_df(spark, rows, SCHEMA).coalesce(1).write.parquet(d)
+    dim = small_local_df(
+        spark, [("a", "alpha"), ("b", "beta")], "key string, label string"
     )
     src = stream_from_directory(spark, d, SCHEMA)
     joined = stream_static_enrich(src, dim, on=["key"])
@@ -404,10 +405,10 @@ def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
         (dt.datetime(2024, 1, 1, 12, 45), 1),   # within 1h of view 12:00 only
         (dt.datetime(2024, 1, 1, 15, 0), 2),    # outside any window
     ]
-    spark.createDataFrame(views, vs).coalesce(1).write.parquet(
+    small_local_df(spark, views, vs).coalesce(1).write.parquet(
         str(tmp_path / "views")
     )
-    spark.createDataFrame(buys, vs).coalesce(1).write.parquet(
+    small_local_df(spark, buys, vs).coalesce(1).write.parquet(
         str(tmp_path / "buys")
     )
     sv = stream_from_directory(spark, str(tmp_path / "views"), vs).select(
@@ -441,7 +442,7 @@ def test_incremental_aggregate_sink_matches_batch(spark, tmp_path):
         (dt.datetime(2024, 1, 1, 0, i % 50, i % 60 if i % 60 != i % 50 else (i + 1) % 60), ["a", "b", "c"][i % 3], float(i))
         for i in range(90)
     ]
-    spark.createDataFrame(rows, sch).repartition(4).write.parquet(
+    small_local_df(spark, rows, sch).repartition(4).write.parquet(
         str(tmp_path / "src")
     )
     src = stream_from_directory(
@@ -485,10 +486,10 @@ def test_stream_stream_left_outer_join_emits_unmatched(spark, tmp_path):
     # docstring). maxFilesPerTrigger=1 makes them a LATER micro-batch.
     sentinel = [(dt.datetime(2024, 1, 5, 0, 0), 99)]
     for side, batch1 in (("views", views), ("buys", buys)):
-        spark.createDataFrame(batch1, vs).coalesce(1).write.parquet(
+        small_local_df(spark, batch1, vs).coalesce(1).write.parquet(
             str(tmp_path / side / "b1")
         )
-        spark.createDataFrame(sentinel, vs).coalesce(1).write.parquet(
+        small_local_df(spark, sentinel, vs).coalesce(1).write.parquet(
             str(tmp_path / side / "b2")
         )
     sv = stream_from_directory(spark, str(tmp_path / "views/*"), vs).select(
@@ -583,7 +584,8 @@ def test_kafka_contract(spark):
             c.split()[0] for c in KAFKA_WIRE_SCHEMA.split(", ")
         ]
     # wire-schema decode works without a broker (batch mimic)
-    mimic = spark.createDataFrame(
+    mimic = small_local_df(
+        spark,
         [
             (
                 b"k1",
@@ -672,7 +674,7 @@ def test_count_window_state_bounded_by_keys(spark, tmp_path):
         for i in range(25)
     ]
     d = str(tmp_path / "many_keys")
-    spark.createDataFrame(rows, SCHEMA).coalesce(2).write.parquet(d)
+    small_local_df(spark, rows, SCHEMA).coalesce(2).write.parquet(d)
     src = stream_from_directory(spark, d, SCHEMA)
     out = count_window_stateful(src, "key", "v", size=10)
     q = stream_to_memory(out, "t_state_audit", output_mode="append")
@@ -701,7 +703,7 @@ def test_stateful_drawdown_state_bounded_by_keys(spark, tmp_path):
         for i in range(20)
     ]
     d = str(tmp_path / "dd_keys")
-    spark.createDataFrame(rows, schema).coalesce(2).write.parquet(d)
+    small_local_df(spark, rows, schema).coalesce(2).write.parquet(d)
     src = stream_from_directory(spark, d, schema)
     out = stateful_drawdown(src, "key", "ts", "v", "v")
     q = stream_to_memory(out, "t_dd_audit", output_mode="update")
@@ -771,7 +773,7 @@ def test_stateful_ewma_anomaly_matches_batch_fold(spark, tmp_path):
     ]
     schema = "ts timestamp, key long, ord long, v double"
     d = str(tmp_path / "ewma_src")
-    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(d)
+    small_local_df(spark, rows, schema).coalesce(1).write.parquet(d)
     src = stream_from_directory(spark, d, schema)
     out = stateful_ewma_anomaly(
         src, "key", "ts", "v", "ord", alpha=0.2, z_thresh=3.0, warmup=5
@@ -821,7 +823,7 @@ def test_stateful_ewma_anomaly_string_key(spark, tmp_path):
         rows.append((dt.datetime(2024, 1, 1, 0, 0, i), "sensor-b", i, 5.0))
     schema = "ts timestamp, key string, ord long, v double"
     d = str(tmp_path / "ewma_str_src")
-    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(d)
+    small_local_df(spark, rows, schema).coalesce(1).write.parquet(d)
     src = stream_from_directory(spark, d, schema)
     out = stateful_ewma_anomaly(
         src, "key", "ts", "v", "ord", alpha=0.2, z_thresh=3.0, warmup=3

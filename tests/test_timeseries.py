@@ -17,6 +17,7 @@ from pandrs_spark.operators.timeseries import (
     interpolate_linear_cols,
     resample,
 )
+from pandrs_spark.operators.util import small_local_df
 
 
 def test_date_range_daily(spark):
@@ -32,7 +33,8 @@ def test_date_range_hourly(spark):
 
 
 def test_resample_daily_sum(spark):
-    df = spark.createDataFrame(
+    df = small_local_df(
+        spark,
         [
             (dt.datetime(2024, 1, 1, 3), 1.0),
             (dt.datetime(2024, 1, 1, 15), 2.0),
@@ -48,7 +50,7 @@ def _gappy(spark):
     rows = [
         (1, None), (2, 10.0), (3, None), (4, None), (5, 40.0), (6, None),
     ]
-    return spark.createDataFrame(rows, "i long, v double")
+    return small_local_df(spark, rows, "i long, v double")
 
 
 def test_ffill_bfill(spark):
@@ -83,7 +85,7 @@ def test_seasonal_decompose_reconstructs(spark):
         (base + datetime.timedelta(days=i), float(10 * (i % 7) + i))
         for i in range(28)
     ]
-    df = spark.createDataFrame(rows, "ts timestamp, v double")
+    df = small_local_df(spark, rows, "ts timestamp, v double")
     dec = seasonal_decompose_additive(df, "ts", "v", period=7).orderBy("ts").collect()
     mid = [r for r in dec if r["trend"] is not None]
     assert len(mid) == 28 - 6  # centered window drops 3 rows each end
@@ -101,8 +103,8 @@ def test_ses_matches_pandas(spark):
     from pandrs_spark.operators.timeseries import ses_fitted
 
     vals = [3.0, 5.0, 4.0, 8.0, 6.0, 7.0]
-    df = spark.createDataFrame(
-        [(i, v) for i, v in enumerate(vals)], "i bigint, v double"
+    df = small_local_df(
+        spark, [(i, v) for i, v in enumerate(vals)], "i bigint, v double"
     )
     out = (
         ses_fitted(df, "v", order_by=["i"], partition_by=[], alpha=0.4)
@@ -126,8 +128,8 @@ def test_holt_forecast_hand_recursion(spark):
         level = alpha * vals[t] + (1 - alpha) * (level + trend)
         trend = beta * (level - prev) + (1 - beta) * trend
         expect.append(level + trend)
-    df = spark.createDataFrame(
-        [(i, v) for i, v in enumerate(vals)], "i bigint, v double"
+    df = small_local_df(
+        spark, [(i, v) for i, v in enumerate(vals)], "i bigint, v double"
     )
     out = (
         holt_forecast(df, "v", order_by=["i"], partition_by=[], alpha=alpha, beta=beta)
@@ -141,8 +143,8 @@ def test_holt_forecast_hand_recursion(spark):
 def test_holt_per_group_independent(spark):
     from pandrs_spark.operators.timeseries import holt_forecast
 
-    df = spark.createDataFrame(
-        [("a", 0, 1.0), ("a", 1, 2.0), ("a", 2, 3.0), ("b", 0, 10.0), ("b", 1, 8.0), ("b", 2, 6.0)],
+    df = small_local_df(
+        spark, [("a", 0, 1.0), ("a", 1, 2.0), ("a", 2, 3.0), ("b", 0, 10.0), ("b", 1, 8.0), ("b", 2, 6.0)],
         "g string, i bigint, v double",
     )
     out = holt_forecast(df, "v", order_by=["i"], partition_by=["g"], alpha=0.5, beta=0.5)
@@ -169,8 +171,8 @@ def test_holt_winters_hand_recursion(spark):
             trend = beta * (level - prev) + (1 - beta) * trend
             season[s] = gamma * (x - level) + (1 - gamma) * season[s]
         expect.append(level + h * trend + season[(t + h) % period])
-    df = spark.createDataFrame(
-        [(i, v) for i, v in enumerate(vals)], "i bigint, v double"
+    df = small_local_df(
+        spark, [(i, v) for i, v in enumerate(vals)], "i bigint, v double"
     )
     out = (
         holt_winters_forecast(
@@ -187,8 +189,8 @@ def test_holt_winters_hand_recursion(spark):
 def test_holt_winters_short_series_is_nan(spark):
     from pandrs_spark.operators.timeseries import holt_winters_forecast
 
-    df = spark.createDataFrame(
-        [(i, float(i)) for i in range(5)], "i bigint, v double"
+    df = small_local_df(
+        spark, [(i, float(i)) for i in range(5)], "i bigint, v double"
     )
     out = holt_winters_forecast(
         df, "v", order_by=["i"], partition_by=[],
@@ -206,7 +208,7 @@ def test_multiplicative_decompose_reconstructs(spark):
     period = 4
     season = [1.2, 0.8, 1.1, 0.9]
     vals = [(i, (10.0 + i) * season[i % period]) for i in range(24)]
-    df = spark.createDataFrame(vals, "i bigint, v double")
+    df = small_local_df(spark, vals, "i bigint, v double")
     out = seasonal_decompose_multiplicative(df, "i", "v", period=period).collect()
     for r in out:
         if r["trend"] is not None:
@@ -223,7 +225,7 @@ def test_periodogram_detects_period(spark):
     from pandrs_spark.operators.timeseries import periodogram
 
     rows = [(t, 100.0 * math.cos(2 * math.pi * t / 8)) for t in range(32)]
-    df = spark.createDataFrame(rows, "t int, x double")
+    df = small_local_df(spark, rows, "t int, x double")
     p = {r["period"]: r["power"] for r in periodogram(df, "t", "x", [4, 8, 16]).collect()}
     assert p[8] > 100 * p[4]
     assert p[8] > 10 * p[16]
@@ -238,8 +240,8 @@ def test_ar2_fit_matches_numpy(spark):
     from pandrs_spark.operators.timeseries import ar2_fit
 
     xs = [5000 + 1000 * math.sin(t / 2) + 50 * ((t * 37) % 11) for t in range(60)]
-    df = spark.createDataFrame(
-        [(t, float(v)) for t, v in enumerate(xs)], "t int, x double"
+    df = small_local_df(
+        spark, [(t, float(v)) for t, v in enumerate(xs)], "t int, x double"
     )
     out = ar2_fit(df, "t", "x").first()
     a = np.asarray(xs)
@@ -261,8 +263,8 @@ def test_linear_trend_exact_line(spark):
     from pandrs_spark.operators.timeseries import linear_trend
 
     # y = 2t + 1 exactly: slope 2, intercept 1, r2 1, next = 2*4+1 = 9
-    df = spark.createDataFrame(
-        [("2024-01-01", 1.0), ("2024-02-01", 3.0), ("2024-03-01", 5.0),
+    df = small_local_df(
+        spark, [("2024-01-01", 1.0), ("2024-02-01", 3.0), ("2024-03-01", 5.0),
          ("2024-04-01", 7.0)],
         "ts string, y double",
     )
@@ -281,8 +283,8 @@ def test_linear_trend_r2_partial(spark):
     # slope = cov/var = (sum ty - n tbar ybar)/(sum tt - n tbar^2)
     # t=[0,1,2,3] y=[1,2,2,3]: sty=0+2+4+9=15, st=6, sy=8, stt=14, n=4
     # slope=(4*15-6*8)/(4*14-36)=12/20=0.6, intercept=(8-0.6*6)/4=1.1
-    df = spark.createDataFrame(
-        [("a", 1.0), ("b", 2.0), ("c", 2.0), ("d", 3.0)], "ts string, y double"
+    df = small_local_df(
+        spark, [("a", 1.0), ("b", 2.0), ("c", 2.0), ("d", 3.0)], "ts string, y double"
     )
     r = linear_trend(df, "ts", "y").first()
     assert r["slope"] == pytest.approx(0.6)
@@ -294,8 +296,8 @@ def test_linear_trend_r2_partial(spark):
 def test_moving_average_forecast(spark):
     from pandrs_spark.operators.timeseries import moving_average_forecast
 
-    df = spark.createDataFrame(
-        [("2024-01-01", 10.0), ("2024-02-01", 20.0), ("2024-03-01", 30.0),
+    df = small_local_df(
+        spark, [("2024-01-01", 10.0), ("2024-02-01", 20.0), ("2024-03-01", 30.0),
          ("2024-04-01", 40.0)],
         "ts string, y double",
     )
@@ -309,7 +311,7 @@ def test_split_mean_changepoint_step(spark):
 
     # step series: 10×1.0 then 10×5.0 — max score at the step boundary
     rows = [(f"2024-01-{d:02d}", 1.0 if d <= 10 else 5.0) for d in range(1, 21)]
-    df = spark.createDataFrame(rows, "ts string, y double")
+    df = small_local_df(spark, rows, "ts string, y double")
     out = split_mean_changepoints(df, "ts", "y", prior_scale=0.01).collect()
     best = max(out, key=lambda r: r["score"])
     assert best["idx"] == 10  # split right at the jump
@@ -323,7 +325,7 @@ def test_ts_feature_matrix_values(spark):
     from pandrs_spark.operators.timeseries import ts_feature_matrix
 
     rows = [(1, i, float(v)) for i, v in enumerate([10, 20, 30, 40])]
-    df = spark.createDataFrame(rows, "sid int, t int, v double")
+    df = small_local_df(spark, rows, "sid int, t int, v double")
     out = {
         r["t"]: r
         for r in ts_feature_matrix(df, "sid", "t", "v", lags=(1,), window=3).collect()
@@ -339,7 +341,7 @@ def test_ts_feature_matrix_values(spark):
 def test_ts_feature_matrix_single_shuffle(spark):
     from pandrs_spark.operators.timeseries import ts_feature_matrix
 
-    df = spark.createDataFrame([(1, 1, 1.0)], "sid int, t int, v double")
+    df = small_local_df(spark, [(1, 1, 1.0)], "sid int, t int, v double")
     plan = ts_feature_matrix(df, "sid", "t", "v")._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") <= 1  # one partitioning serves every feature
 
@@ -353,7 +355,7 @@ def test_bocpd_detects_mean_shift(spark):
     rows = [
         (1, base + datetime.timedelta(days=i), float(v)) for i, v in enumerate(vals)
     ]
-    df = spark.createDataFrame(rows, "sid long, ts timestamp, v double")
+    df = small_local_df(spark, rows, "sid long, ts timestamp, v double")
     out = bocpd_changepoints(df, "sid", "ts", "v", hazard=0.02).collect()
     out.sort(key=lambda r: r["ts"])
     shift_idx = 40
@@ -375,7 +377,7 @@ def test_bocpd_deterministic(spark):
         for s in (1, 2)
         for i in range(30)
     ]
-    df = spark.createDataFrame(rows, "sid long, ts timestamp, v double")
+    df = small_local_df(spark, rows, "sid long, ts timestamp, v double")
     a = sorted(bocpd_changepoints(df.repartition(1), "sid", "ts", "v").collect())
     b = sorted(bocpd_changepoints(df.repartition(13), "sid", "ts", "v").collect())
     assert a == b
@@ -400,7 +402,7 @@ def test_arima_pdq_matches_reference_recursion(spark):
         for sid, vals in series.items()
         for i, v in enumerate(vals)
     ]
-    df = spark.createDataFrame(rows, "sid long, ts timestamp, v double")
+    df = small_local_df(spark, rows, "sid long, ts timestamp, v double")
     p, d, q = 2, 1, 2
     ar, ma = [0.5, 0.5], [0.3, 0.3]
     out = arima_forecast(
@@ -443,8 +445,8 @@ def test_kaplan_meier_textbook_example(spark):
     (last subject dies, d = n_risk). Censored times emit no row."""
     from pandrs_spark.operators.timeseries import kaplan_meier
 
-    df = spark.createDataFrame(
-        [(1, 1), (2, 0), (3, 1), (4, 0), (5, 1)], "t int, e int"
+    df = small_local_df(
+        spark, [(1, 1), (2, 0), (3, 1), (4, 0), (5, 1)], "t int, e int"
     )
     rows = {r["duration"]: r for r in kaplan_meier(df, "t", "e").collect()}
     assert set(rows) == {1, 3, 5}
@@ -460,7 +462,7 @@ def test_kaplan_meier_no_censoring_matches_ecdf(spark):
     from pandrs_spark.operators.timeseries import kaplan_meier
 
     data = [(d, 1) for d in [2, 2, 3, 5, 5, 5, 8, 13]]
-    df = spark.createDataFrame(data, "t int, e int")
+    df = small_local_df(spark, data, "t int, e int")
     rows = {r["duration"]: r["survival"] for r in kaplan_meier(df, "t", "e").collect()}
     n = len(data)
     seen = 0
@@ -480,7 +482,7 @@ def test_nelson_aalen_hand_computed(spark):
     # durations: events at 1 (d=2, n=6), censor at 2 (n=4 after),
     # event at 3 (d=1, n=3), censor at 4
     rows = [(1, 1), (1, 1), (2, 0), (3, 1), (4, 0), (5, 0)]
-    df = spark.createDataFrame(rows, "t int, e int")
+    df = small_local_df(spark, rows, "t int, e int")
     out = {r["duration"]: r for r in nelson_aalen(df, "t", "e").collect()}
     assert set(out) == {1, 3}
     assert out[1]["n_risk"] == 6 and out[1]["n_events"] == 2
@@ -501,8 +503,8 @@ def test_holt_damped_matches_pure_fold_and_flattens(spark):
     )
 
     xs = [10.0, 12.0, 15.0, 16.0, 20.0, 23.0, 25.0, 30.0]
-    df = spark.createDataFrame(
-        [("k", i, v) for i, v in enumerate(xs)], "k string, t int, v double"
+    df = small_local_df(
+        spark, [("k", i, v) for i, v in enumerate(xs)], "k string, t int, v double"
     )
     damped = holt_damped_forecast(
         df, "v", order_by=["t"], partition_by=["k"], alpha=0.5, beta=0.3,

@@ -20,6 +20,7 @@ from pandrs_spark.operators.windows import (
     rolling,
     shift,
 )
+from pandrs_spark.operators.util import small_local_df
 
 
 @pytest.fixture(scope="module")
@@ -28,7 +29,7 @@ def series_df(spark):
         ("g1", 1, 1.0), ("g1", 2, None), ("g1", 3, 3.0), ("g1", 4, 4.0), ("g1", 5, 5.0),
         ("g2", 1, 10.0), ("g2", 2, 20.0),
     ]
-    return spark.createDataFrame(data, "grp string, i long, v double")
+    return small_local_df(spark, data, "grp string, i long, v double")
 
 
 def _by_key(df, *cols):
@@ -123,7 +124,7 @@ def test_rolling_center_matches_pandas(spark):
     from pandrs_spark.operators.windows import ordered_window, rolling
 
     vals = [1.0, 2.0, 4.0, 8.0, 16.0, 32.0]
-    df = spark.createDataFrame([(i, v) for i, v in enumerate(vals)], "i bigint, v double")
+    df = small_local_df(spark, [(i, v) for i, v in enumerate(vals)], "i bigint, v double")
     for n in (3, 4):
         w = ordered_window("i")
         got = [
@@ -143,7 +144,7 @@ def test_rolling_center_matches_pandas(spark):
 def test_rolling_closed_left(spark):
     from pandrs_spark.operators.windows import ordered_window, rolling
 
-    df = spark.createDataFrame([(i, float(i)) for i in range(5)], "i bigint, v double")
+    df = small_local_df(spark, [(i, float(i)) for i in range(5)], "i bigint, v double")
     w = ordered_window("i")
     got = {
         r["i"]: r["s"]
@@ -162,7 +163,7 @@ def test_ewm_std_var_match_pandas(spark):
     from pandrs_spark.operators.windows import ewm_stat
 
     vals = [2.0, 4.0, 3.0, 9.0, 1.0]
-    df = spark.createDataFrame([(i, v) for i, v in enumerate(vals)], "i bigint, v double")
+    df = small_local_df(spark, [(i, v) for i, v in enumerate(vals)], "i bigint, v double")
     for stat, ref in (
         ("var", pd.Series(vals).ewm(alpha=0.4).var()),
         ("std", pd.Series(vals).ewm(alpha=0.4).std()),
@@ -185,7 +186,7 @@ def test_ewm_ignore_na_parity(spark):
     from pandrs_spark.operators.windows import ewm_mean
 
     rows = [("g", i, v) for i, v in enumerate([1.0, None, 3.0, None, 5.0, 2.0])]
-    df = spark.createDataFrame(rows, "g string, i int, v double")
+    df = small_local_df(spark, rows, "g string, i int, v double")
     for ignore_na in (False, True):
         got = {
             r["i"]: r["ewm"]
@@ -211,8 +212,8 @@ def test_cumprod_cummax_cummin(spark):
 
     from pandrs_spark.operators.windows import cummax, cummin, cumprod
 
-    df = spark.createDataFrame(
-        [(1, 2.0), (2, -3.0), (3, 0.5), (4, 0.0), (5, 4.0)], "t int, v double"
+    df = small_local_df(
+        spark, [(1, 2.0), (2, -3.0), (3, 0.5), (4, 0.0), (5, 4.0)], "t int, v double"
     )
     w = Window.orderBy("t")
     out = df.select(
@@ -233,7 +234,7 @@ def test_global_prefix_sum_matches_serial(spark):
     import pyspark.sql.functions as F
 
     rows = [(i, float((i * 37) % 100) - 50.0) for i in range(500)]
-    df = spark.createDataFrame(rows, "id long, v double").repartition(7)
+    df = small_local_df(spark, rows, "id long, v double").repartition(7)
     out = global_prefix_sum(df, [F.asc("id")], "v", "rt").orderBy("id").collect()
     acc = 0.0
     for r in out:
@@ -266,7 +267,7 @@ def test_rolling_corr_matches_pandas(spark):
     import pyspark.sql.functions as F
 
     rows = [(i, float(i % 7), float((i * 3) % 11)) for i in range(40)]
-    df = spark.createDataFrame(rows, "id long, x double, y double")
+    df = small_local_df(spark, rows, "id long, x double, y double")
     w = Window.partitionBy().orderBy("id")
     got = (
         df.select("id", rolling_corr("x", "y", 5, w).alias("rc"))
@@ -298,7 +299,7 @@ def test_rolling_corr_one_sided_nulls_matches_pandas(spark):
         x = None if i % 5 == 2 else float(i % 7)
         y = None if i % 7 == 3 else float((i * 3) % 11)
         rows.append((i, x, y))
-    df = spark.createDataFrame(rows, "id long, x double, y double")
+    df = small_local_df(spark, rows, "id long, x double, y double")
     w = Window.partitionBy().orderBy("id")
     got = (
         df.select(
@@ -346,7 +347,7 @@ def test_ntile_from_rank_exact_beyond_double_range(spark):
     for b in range(1, k):
         edge = b * (base + 1) if b <= rem else big + (b - rem) * base
         probes += [edge, edge + 1]
-    df = spark.createDataFrame([(r,) for r in probes], "rn long")
+    df = small_local_df(spark, [(r,) for r in probes], "rn long")
     out = {
         r["rn"]: r["b"]
         for r in df.select(
@@ -381,7 +382,7 @@ def test_global_prefix_max_matches_window_cummax(spark):
     from pandrs_spark.operators.windows import global_prefix_max
 
     rows = [(i, None if i < 3 else (i * 37) % 50) for i in range(200)]
-    df = spark.createDataFrame(rows, "k int, v int").repartition(7)
+    df = small_local_df(spark, rows, "k int, v int").repartition(7)
     got = {
         r["k"]: r["cm"]
         for r in global_prefix_max(df, [F.col("k")], "v", "cm").collect()

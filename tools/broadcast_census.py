@@ -6,8 +6,8 @@ classification is reviewable without launching Spark):
 - ``fixed_dim``     — region/nation loads: cardinality fixed at any SF.
 - ``scalar_carry``  — ``.agg(`` with no ``groupBy`` upstream in the same
                       expression, ``.limit(``, ``.first(``-derived local
-                      frames, ``createDataFrame`` literals: bounded by
-                      construction.
+                      frames, ``createDataFrame``/``small_local_df``
+                      literals: bounded by construction.
 - ``grouped_agg``   — ``.groupBy(...).agg(...)`` build sides: bounded by
                       the KEY's cardinality, which is a domain argument
                       (the docstring / assert_bounded fence must carry
@@ -94,7 +94,11 @@ def classify(
 
     if ".limit(" in text or ".agg(" in text and ".groupBy(" not in text:
         return "scalar_carry", text
-    if "createDataFrame" in text or "spark.range" in text:
+    if (
+        "createDataFrame" in text
+        or "small_local_df" in text
+        or "spark.range" in text
+    ):
         return "scalar_carry", text
     if "assert_bounded" in text:
         return "fenced_bounded", text

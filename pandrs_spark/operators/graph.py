@@ -24,17 +24,28 @@ iteration is one shuffle. Scale posture:
   too, so neither plan grows past one window whatever the walk's depth
   (a multi-source walk, keyed by ``root``, checkpoints its visited set
   every hop);
-- the PageRank family (global, personalized, weighted) shares one loop
-  body, ``_rank_walk``, which cuts lineage every round with a lazy
-  ``localCheckpoint`` (one-round-deep plans, no checkpoint action of
-  its own); value loops that reference their state more than once per
-  round (CC, SSSP, k-core) cut every round and let the convergence
-  count materialize the cut;
-- convergence: fixpoint loops stop on an empty frontier or a zero
-  changed-count; with ``check_convergence=True`` the fixed-round power
-  methods certify their last round with ``_assert_settled`` (max |Δ|
-  over the final two iterates against ``tol``, one action) and raise
-  :class:`ConvergenceError` instead of returning a truncated answer.
+- every value loop (the PageRank family, katz, label propagation, CC,
+  SSSP, k-core, k-truss and the SCC forward coloring) runs its rounds
+  through ``_iterate``, which has ONE cut placement: each round's new
+  state is cut with a lazy ``localCheckpoint``, so every plan is one
+  round deep and no round pays a checkpoint action of its own. A loop
+  with a stopping rule passes an exact changed-count (``_moved`` for
+  label and distance vectors, ``_peeled`` for shrinking edge sets);
+  that count materializes the cut in the same job, and the first round
+  that changes nothing ends the loop — every later round would be the
+  identity, so the answer is the full budget's. Left hand-rolled:
+  ``louvain`` (it reads its labels four times a round and has no
+  stopping count, so it keeps an eager cut), ``eigenvector_centrality``
+  and ``hits`` (their cut sits inside ``_l2_normalize``, between A·x and
+  its norm), ``betweenness_centrality`` and the SCC outer peel;
+- convergence, with ``check_convergence=True``: a fixpoint loop whose
+  budget ran out is certified by ``_assert_fixpoint`` — it raises
+  :class:`ConvergenceError` iff one more round would still change the
+  answer, so a budget that happens to land exactly on the fixpoint
+  passes; the fixed-round power methods certify their last round with
+  ``_assert_settled`` (max |Δ| over the final two iterates against
+  ``tol``, one action); frontier walks raise when the frontier was
+  still non-empty at the budget.
 """
 
 from __future__ import annotations
@@ -114,6 +125,94 @@ def _assert_settled(
         )
 
 
+def _endpoints(e: DataFrame) -> DataFrame:
+    """The vertex set of an edge table: distinct ``src`` ∪ ``dst`` as
+    ``id``."""
+    return (
+        e.select(F.col("src").alias("id"))
+        .union(e.select(F.col("dst").alias("id")))
+        .distinct()
+    )
+
+
+def _iterate(state: DataFrame, step, rounds: int, changed=None):
+    """Round driver of the value loops: ``rounds`` times, the state
+    becomes ``step(state)`` cut by a lazy ``localCheckpoint``. Lineage
+    then stays one round deep (a step that reads its state k times,
+    like k-core's three, would otherwise replay k^r subtrees by round
+    r), and the chain of pending checkpoint RDDs
+    is computed by the first action that needs it in one submission
+    instead of one eager (AQE-multiplied) job per round — q68 at sf0.1:
+    109 scheduled jobs -> single-digit (see OPTIMIZATION_r11.md).
+
+    ``changed(new, old)`` is an exact count, so its action computes
+    every partition of the new state and materializes the cut in the
+    same job; the first round that changes nothing stops the loop (the
+    step is deterministic, so every later round would be the identity).
+    Returns the last state, the state before it, and whether such a
+    no-change round was seen.
+    """
+    prev = state
+    for _ in range(rounds):
+        prev, state = state, step(state).localCheckpoint(eager=False)
+        if changed is not None and changed(state, prev) == 0:
+            return state, prev, True
+    return state, prev, False
+
+
+def _assert_fixpoint(state: DataFrame, step, changed, message: str) -> None:
+    """Fixpoint certificate of an :func:`_iterate` loop whose budget ran
+    out before a no-change round: raise :class:`ConvergenceError` iff
+    one more ``step`` still changes something. The step is
+    deterministic, so an unchanged state is the answer of every larger
+    budget; a changed one never comes back in the monotone loops, and
+    in label propagation it either moves on or cycles without a
+    fixpoint."""
+    if changed(step(state), state) > 0:
+        raise ConvergenceError(message)
+
+
+def _moved(col: str):
+    """``changed`` count of a label or distance vector: the vertices
+    whose ``col`` differs, NULL-safe, between two states."""
+    return lambda new, old: (
+        new.alias("n")
+        .join(old.alias("o"), "id")
+        .filter(~F.col(f"n.{col}").eqNullSafe(F.col(f"o.{col}")))
+        .count()
+    )
+
+
+def _peeled(new: DataFrame, old: DataFrame) -> int:
+    """``changed`` count of a peeling loop, whose new state is a subset
+    of the old: the rows one round dropped, |old| − |new|, in one
+    aggregate over both."""
+    return (
+        old.select(F.lit(1).alias("d"))
+        .union(new.select(F.lit(-1).alias("d")))
+        .agg(F.sum("d"))
+        .first()[0]
+        or 0
+    )
+
+
+def _min_label_step(edges: DataFrame, col: str):
+    """One min-label round along ``edges`` (src, dst): every vertex
+    takes the least ``col`` among its own and its in-neighbors'."""
+
+    def step(labels: DataFrame) -> DataFrame:
+        nbr = (
+            edges.join(labels.withColumnRenamed("id", "src"), "src")
+            .groupBy(F.col("dst").alias("id"))
+            .agg(F.min(col).alias("__nbr__"))
+        )
+        return labels.join(nbr, "id", "left").select(
+            "id", F.least(col, F.coalesce("__nbr__", F.col(col))).alias(col)
+        )
+
+    return step
+
+
 def _frontier_walk(
     edges: DataFrame, visited: DataFrame, keys: list, max_iter: int
 ) -> tuple[DataFrame, bool]:
@@ -187,11 +286,7 @@ def _rank_walk(
     only when an up-front probe finds a vertex without out-edges
     (never for symmetrized graphs).
     """
-    verts = tracked_persist(
-        e.select(F.col("src").alias("id"))
-        .union(e.select(F.col("dst").alias("id")))
-        .distinct()
-    )
+    verts = tracked_persist(_endpoints(e))
     n = verts.count()
     verts = _right_sized(verts, "id")
     weighted = "w" in e.columns
@@ -207,8 +302,8 @@ def _rank_walk(
     )
     ew = tracked_persist(right_size_keyed(e.join(out, "src"), "src"))
     mass = F.col("rank") * F.col("w") if weighted else F.col("rank")
-    ranks = verts.withColumn("rank", init(n))
-    for _ in range(iterations):
+
+    def step(ranks: DataFrame) -> DataFrame:
         contribs = (
             ew.join(ranks.withColumnRenamed("id", "src"), "src")
             .select("dst", (mass / F.col("out")).alias("contrib"))
@@ -222,19 +317,14 @@ def _rank_walk(
             if has_dangling
             else 0.0
         )
-        prev = ranks
-        ranks = verts.join(contribs, "id", "left").select(
+        return verts.join(contribs, "id", "left").select(
             "id",
             update(n, F.coalesce("in_mass", F.lit(0.0)), lost).alias("rank"),
         )
-        # Lineage grows linearly (ranks is referenced once per round),
-        # so per-round LAZY truncation keeps every catalyst plan one
-        # round deep while deferring execution: the chain of pending
-        # checkpoint RDDs forms a DAG that the first downstream action
-        # computes in one submission instead of one eager
-        # (AQE-multiplied) job per window — q68 at sf0.1: 109 scheduled
-        # jobs -> single-digit (see OPTIMIZATION_r11.md).
-        ranks = ranks.localCheckpoint(eager=False)
+
+    ranks, prev, _ = _iterate(
+        verts.withColumn("rank", init(n)), step, iterations
+    )
     if check_convergence and iterations > 0:
         _assert_settled(ranks, prev, ["rank"], tol, what)
     return ranks
@@ -301,13 +391,12 @@ def connected_components(
     Returns (id, component) with component = min vertex id reachable.
 
     ``check_convergence=True`` raises :class:`ConvergenceError` if
-    ``max_iter`` rounds end with labels still changing (graph diameter
-    exceeds the budget); the default keeps the documented truncation
-    convention (return the last iterate) that the fixed-round oracles
-    mirror.
+    ``max_iter`` rounds end short of the fixpoint, i.e. one more round
+    would still change a label (graph diameter exceeds the budget); the
+    default keeps the documented truncation convention (return the last
+    iterate) that the fixed-round oracles mirror.
     """
     und = tracked_persist(symmetrize(edges, src, dst))
-    converged = False
     labels = tracked_persist(
         und.select(F.col("src").alias("id"))
         .distinct()
@@ -316,22 +405,9 @@ def connected_components(
     # materialize, then right-size the edge table every round re-scans
     labels.count()
     und = _right_sized(und, "src")
-    for i in range(max_iter):
-        # neighbor labels: for each dst, min label of its srcs
-        neighbor = (
-            und.join(labels.withColumnRenamed("id", "src"), "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.min("component").alias("nbr_component"))
-        )
-        relaxed = (
-            labels.join(neighbor, "id", "left")
-            .select(
-                "id",
-                F.least(
-                    "component", F.coalesce("nbr_component", F.col("component"))
-                ).alias("component"),
-            )
-        )
+    relax = _min_label_step(und, "component")
+
+    def step(labels: DataFrame) -> DataFrame:
         # Path halving (round 11): every label value is itself a vertex
         # id in the SAME component (initially own id; the edge step
         # only adopts component-mates' labels; this step only adopts
@@ -346,42 +422,28 @@ def connected_components(
         # converged no faster — changed-counts nearly identical — and
         # the extra pending lazy checkpoint chained per round blew the
         # per-round wall up 4×/round past round ~9; reverted.)
-        relaxed = relaxed.localCheckpoint(eager=False)
+        relaxed = relax(labels).localCheckpoint(eager=False)
         hop = relaxed.select(
             F.col("id").alias("__t"), F.col("component").alias("__tc")
         )
-        updated = (
-            relaxed.join(hop, relaxed["component"] == hop["__t"], "left")
-            .select(
-                "id",
-                F.least(
-                    "component", F.coalesce("__tc", F.col("component"))
-                ).alias("component"),
-            )
+        halved = relaxed.join(hop, relaxed["component"] == hop["__t"], "left")
+        return halved.select(
+            "id",
+            F.least(
+                "component", F.coalesce("__tc", F.col("component"))
+            ).alias("component"),
         )
-        # Truncate lineage every round; lazy checkpoint (round 11) —
-        # the convergence count below shuffles every partition of
-        # `updated`, so it materializes the checkpoint inside the same
-        # job instead of paying a dedicated eager-checkpoint action per
-        # round (2 driver actions/round -> 1). The count is exact (no
-        # limit) precisely so that every partition is computed.
-        updated = updated.localCheckpoint(eager=False)
-        changed = (
-            updated.alias("u")
-            .join(labels.alias("l"), "id")
-            .filter("u.component < l.component")
-            .count()
-        )
-        labels.unpersist()
-        labels = updated
-        if changed == 0:
-            converged = True
-            break
-    if check_convergence and not converged:
-        raise ConvergenceError(
+
+    moved = _moved("component")
+    labels, _, settled = _iterate(labels, step, max_iter, moved)
+    if check_convergence and not settled:
+        _assert_fixpoint(
+            labels,
+            step,
+            moved,
             f"connected_components: labels still changing after "
             f"{max_iter} rounds — raise max_iter (diameter exceeds "
-            "the iteration budget)"
+            "the iteration budget)",
         )
     return labels
 
@@ -586,12 +648,15 @@ def label_propagation(
     Labels start as vertex ids; all updates in a round read the previous
     round's labels (synchronous), so the result is partitioning- and
     engine-independent — unlike the usual async LPA. Each round is one
-    join + one aggregation + one per-vertex top-1 window.
+    join + one aggregation + one per-vertex top-1 window, plus a count
+    of the labels it changed: the first round that changes none ends
+    the loop with the full budget's answer.
 
-    ``check_convergence=True`` raises :class:`ConvergenceError` if the
-    final round still changed any label (sync LPA can also 2-cycle on
-    bipartite structures — the check surfaces that too; the check costs
-    one extra join + count, only when the flag is set).
+    ``check_convergence=True`` raises :class:`ConvergenceError` if one
+    more round would still change a label (sync LPA can also 2-cycle on
+    bipartite structures — the check surfaces that too; it costs one
+    extra round + count, only when the flag is set and the budget ran
+    out).
     """
     und = tracked_persist(symmetrize(edges, src, dst))
     labels = tracked_persist(
@@ -603,39 +668,30 @@ def label_propagation(
     labels.count()
     und = _right_sized(und, "dst")
     top1 = Window.partitionBy("id").orderBy(F.desc("c"), F.asc("label"))
-    for i in range(iterations):
+
+    def step(labels: DataFrame) -> DataFrame:
         nbr = (
             und.join(labels.withColumnRenamed("id", "dst"), "dst")
             .groupBy(F.col("src").alias("id"), "label")
             .agg(F.count(F.lit(1)).alias("c"))
         )
-        updated = (
+        return (
             nbr.withColumn("rn", F.row_number().over(top1))
             .filter(F.col("rn") == 1)
             .select("id", "label")
         )
-        if (i + 1) % _CHECKPOINT_EVERY == 0:
-            updated = updated.localCheckpoint(eager=True)
-        else:
-            updated = tracked_persist(updated)
-        if check_convergence and i == iterations - 1:
-            changed = (
-                updated.alias("u")
-                .join(labels.alias("l"), "id")
-                .filter("u.label <> l.label")
-                .limit(1)
-                .count()
-            )
-            if changed > 0:
-                labels.unpersist()
-                updated.unpersist()
-                raise ConvergenceError(
-                    f"label_propagation: labels still changing after "
-                    f"{iterations} rounds — raise iterations (or the "
-                    "graph oscillates under synchronous updates)"
-                )
-        labels.unpersist()
-        labels = updated
+
+    moved = _moved("label")
+    labels, _, settled = _iterate(labels, step, iterations, moved)
+    if check_convergence and not settled:
+        _assert_fixpoint(
+            labels,
+            step,
+            moved,
+            f"label_propagation: labels still changing after "
+            f"{iterations} rounds — raise iterations (or the "
+            "graph oscillates under synchronous updates)",
+        )
     return labels
 
 
@@ -824,34 +880,31 @@ def katz_centrality(
         .distinct()
         .repartition("src")
     )
-    verts = tracked_persist(
-        e.select(F.col("src").alias("id"))
-        .union(e.select(F.col("dst").alias("id")))
-        .distinct()
-    )
+    verts = tracked_persist(_endpoints(e))
     # materialize, then right-size the per-round tables (round 11)
     verts.count()
     e = _right_sized(e, "src")
     verts = _right_sized(verts, "id")
-    scores = verts.withColumn("score", F.lit(float(beta)))
-    for _ in range(iterations):
-        prev_scores = scores
+
+    def step(scores: DataFrame) -> DataFrame:
         in_sum = (
             e.join(scores.withColumnRenamed("id", "src"), "src")
             .groupBy(F.col("dst").alias("id"))
             .agg(F.sum("score").alias("in_score"))
         )
-        scores = verts.join(in_sum, "id", "left").select(
+        return verts.join(in_sum, "id", "left").select(
             "id",
             (
                 F.lit(float(alpha)) * F.coalesce("in_score", F.lit(0.0))
                 + F.lit(float(beta))
             ).alias("score"),
         )
-        # per-round LAZY truncation (round 11, same change as pagerank)
-        scores = scores.localCheckpoint(eager=False)
+
+    scores, prev, _ = _iterate(
+        verts.withColumn("score", F.lit(float(beta))), step, iterations
+    )
     if check_convergence and iterations > 0:
-        _assert_settled(scores, prev_scores, ["score"], tol, "katz_centrality")
+        _assert_settled(scores, prev, ["score"], tol, "katz_centrality")
     return scores
 
 
@@ -877,11 +930,7 @@ def hits(
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         .distinct()
     )
-    verts = tracked_persist(
-        e.select(F.col("src").alias("id"))
-        .union(e.select(F.col("dst").alias("id")))
-        .distinct()
-    )
+    verts = tracked_persist(_endpoints(e))
     # materialize, then right-size the per-round tables (round 11)
     verts.count()
     e = _right_sized(e, "src")
@@ -945,7 +994,7 @@ def shortest_paths(
     ``check_convergence=True`` certifies the fixpoint: relaxation is
     monotone non-increasing, so two identical consecutive iterates mean
     no path can improve further; the check raises
-    :class:`ConvergenceError` if the final round still relaxed any
+    :class:`ConvergenceError` if one more round would still relax a
     vertex.
     """
     e = tracked_persist(
@@ -956,11 +1005,7 @@ def shortest_paths(
         )
         .repartition("src")
     )
-    verts = tracked_persist(
-        e.select(F.col("src").alias("id"))
-        .union(e.select(F.col("dst").alias("id")))
-        .distinct()
-    )
+    verts = tracked_persist(_endpoints(e))
     # materialize, then right-size the per-round tables (round 11)
     verts.count()
     e = _right_sized(e, "src")
@@ -971,8 +1016,8 @@ def shortest_paths(
             F.lit(None).cast("long")
         ),
     )
-    prev_dist = dist
-    for i in range(iterations):
+
+    def relax(dist: DataFrame) -> DataFrame:
         cand = (
             e.join(
                 dist.filter(F.col("dist").isNotNull()).withColumnRenamed(
@@ -984,62 +1029,25 @@ def shortest_paths(
             .groupBy("id")
             .agg(F.min("cand").alias("cand"))
         )
-        dist = dist.join(cand, "id", "left").select(
+        return dist.join(cand, "id", "left").select(
             "id",
             F.when(F.col("dist").isNull(), F.col("cand"))
             .when(F.col("cand").isNull(), F.col("dist"))
             .otherwise(F.least("dist", "cand"))
             .alias("dist"),
         )
-        # Each round references `dist` twice (relax source + the merge
-        # join), so the old every-5 cadence replayed up to 2^5 subtrees
-        # per window (round 11, measured: 291 jobs at sf0.1). Truncate
-        # every round; the exact changed-count materializes the lazy
-        # checkpoint in the same job AND detects the fixpoint —
-        # relaxation is monotone, so an unchanged round means every
-        # remaining round is the identity and results are bit-identical
-        # to running the full budget.
-        dist = dist.localCheckpoint(eager=False)
-        changed = (
-            dist.alias("cur")
-            .join(prev_dist.alias("p"), "id")
-            .filter(~F.col("cur.dist").eqNullSafe(F.col("p.dist")))
-            .count()
+
+    moved = _moved("dist")
+    dist, _, settled = _iterate(dist, relax, iterations, moved)
+    if check_convergence and not settled:
+        _assert_fixpoint(
+            dist,
+            relax,
+            moved,
+            f"shortest_paths: distances still relaxing after "
+            f"{iterations} rounds — raise iterations (longest "
+            "shortest path exceeds the budget)",
         )
-        prev_dist = dist
-        if changed == 0:
-            break
-    if check_convergence:
-        # fixpoint certificate: one more relaxation must change nothing
-        final_cand = (
-            e.join(
-                prev_dist.filter(F.col("dist").isNotNull()).withColumnRenamed(
-                    "id", "src"
-                ),
-                "src",
-            )
-            .select(
-                F.col("dst").alias("id"),
-                (F.col("dist") + F.col("cost")).alias("cand"),
-            )
-            .groupBy("id")
-            .agg(F.min("cand").alias("cand"))
-        )
-        still_relaxing = (
-            prev_dist.join(final_cand, "id", "left")
-            .filter(
-                F.col("cand").isNotNull()
-                & (F.col("dist").isNull() | (F.col("cand") < F.col("dist")))
-            )
-            .limit(1)
-            .count()
-        )
-        if still_relaxing:
-            raise ConvergenceError(
-                f"shortest_paths: distances still relaxing after "
-                f"{iterations} rounds — raise iterations (longest "
-                "shortest path exceeds the budget)"
-            )
     return dist
 
 
@@ -1050,13 +1058,10 @@ def _directed_reach(edges: DataFrame, max_iter: int) -> DataFrame:
     e = tracked_persist(
         edges.select("src", "dst").distinct().repartition("src")
     )
-    verts = (
-        e.select(F.col("src").alias("id"))
-        .union(e.select(F.col("dst").alias("id")))
-        .distinct()
-    )
-    visited = verts.select(F.col("id").alias("root"), "id").localCheckpoint(
-        eager=True
+    visited = (
+        _endpoints(e)
+        .select(F.col("id").alias("root"), "id")
+        .localCheckpoint(eager=True)
     )
     visited, _ = _frontier_walk(e, visited, ["root", "id"], max_iter)
     e.unpersist()
@@ -1105,8 +1110,9 @@ def strongly_connected_components(
 
     ``check_convergence=True`` raises :class:`ConvergenceError` whenever
     ANY bounded loop hit its budget before the fixpoint — the outer
-    peel with vertices left over, an inner coloring pass still
-    changing, or a backward collect with a live frontier. A truncated
+    peel with vertices left over, an inner coloring pass that one more
+    round would still change, or a backward collect with a live
+    frontier. A truncated
     coloring does not merely leave leftovers: it can split an SCC into
     several colors, so the certificate covers the inner loops too. The
     default keeps the documented truncation convention (leftovers
@@ -1125,12 +1131,7 @@ def strongly_connected_components(
         )
 
     rem_e = e0.repartition("src").localCheckpoint(eager=True)
-    rem_v = (
-        rem_e.select(F.col("src").alias("id"))
-        .union(rem_e.select(F.col("dst").alias("id")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    rem_v = _endpoints(rem_e).localCheckpoint(eager=True)
     done: list[DataFrame] = []
     truncated: list[str] = []
     for _outer in range(max_iter):
@@ -1160,39 +1161,21 @@ def strongly_connected_components(
             if rem_v.limit(1).count() == 0:
                 break
         # --- 2. forward coloring: min ancestor id to fixpoint ---
-        colors = rem_v.withColumn("color", F.col("id")).localCheckpoint(
-            eager=True
+        color_step = _min_label_step(rem_e, "color")
+        moved = _moved("color")
+        colors, _, settled = _iterate(
+            rem_v.withColumn("color", F.col("id")), color_step, max_iter, moved
         )
-        color_fixpoint = False
-        for _ in range(max_iter):
-            nbr = (
-                rem_e.join(colors.withColumnRenamed("id", "src"), "src")
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.min("color").alias("nc"))
+        if check_convergence and not settled:
+            # a truncated coloring can split an SCC into several colors
+            _assert_fixpoint(
+                colors,
+                color_step,
+                moved,
+                "strongly_connected_components: coloring still changing "
+                f"after max_iter={max_iter} rounds (outer round "
+                f"{_outer + 1}) — raise max_iter",
             )
-            upd = (
-                colors.join(nbr, "id", "left")
-                .select(
-                    "id",
-                    F.least(
-                        "color", F.coalesce("nc", F.col("color"))
-                    ).alias("color"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            changed = (
-                upd.alias("u")
-                .join(colors.alias("c"), "id")
-                .filter("u.color < c.color")
-                .limit(1)
-                .count()
-            )
-            colors = upd
-            if changed == 0:
-                color_fixpoint = True
-                break
-        if not color_fixpoint:
-            truncated.append(f"coloring (outer round {_outer + 1})")
         # --- 3. backward collect within color, from the color roots ---
         ce = (
             rem_e.join(
@@ -1550,49 +1533,29 @@ def kcore(
     (vertex-centric k-core, e.g. Quick et al.); no driver-side graph.
     Reference scope: graph algorithms tier (src/graph/).
     """
-    cur = symmetrize(edges, src, dst).localCheckpoint(eager=False)
-    n_edges = cur.count()
-    for i in range(n_iter):
+
+    def peel(cur: DataFrame) -> DataFrame:
         deg = cur.groupBy("src").agg(F.count(F.lit(1)).alias("__d__"))
         keep = deg.filter(F.col("__d__") >= k).select("src")
-        cur = (
+        return (
             cur.join(F.broadcast(keep), "src")
             .join(
                 F.broadcast(keep.withColumnRenamed("src", "dst")), "dst"
             )
             .select("src", "dst")
         )
-        # Each round references `cur` three times (degree agg + both
-        # broadcast builds), so un-truncated lineage RE-EXECUTES prior
-        # rounds with ~3^r fan-out — the old every-4 cadence paid up to
-        # dozens of subtree replays per window (round 11, measured:
-        # 49 jobs / 13 s of driver re-planning at sf0.1). Truncate
-        # every round; the count doubles as the materializing action
-        # AND the fixpoint detector: peeling is monotone, so a round
-        # that removes no edge is the fixpoint and every remaining
-        # round is the identity — results are bit-identical to running
-        # the full budget.
-        cur = cur.localCheckpoint(eager=False)
-        new_edges = cur.count()
-        if new_edges == n_edges:
-            break
-        n_edges = new_edges
-    if check_convergence:
-        # peeling reached its fixpoint iff one more round removes
-        # nothing: every surviving vertex already has degree >= k
-        cur = cur.localCheckpoint(eager=True)
-        still_peeling = (
-            cur.groupBy("src")
-            .agg(F.count(F.lit(1)).alias("__d__"))
-            .filter(F.col("__d__") < k)
-            .limit(1)
-            .count()
+
+    cur, _, settled = _iterate(
+        symmetrize(edges, src, dst), peel, n_iter, _peeled
+    )
+    if check_convergence and not settled:
+        _assert_fixpoint(
+            cur,
+            peel,
+            _peeled,
+            f"kcore: peel still removing vertices after {n_iter} "
+            "rounds — raise n_iter (peel depth exceeds the budget)",
         )
-        if still_peeling:
-            raise ConvergenceError(
-                f"kcore: peel still removing vertices after {n_iter} "
-                "rounds — raise n_iter (peel depth exceeds the budget)"
-            )
     return (
         cur.groupBy(F.col("src").alias("id"))
         .agg(F.count(F.lit(1)).alias("core_degree"))
@@ -1664,7 +1627,8 @@ def k_truss(
     Scale: the support join is the textbook distributed triangle
     enumeration (join on the lower-degree endpoint would halve wedge
     work; at the bounded analytic-graph sizes here the plain form
-    keeps the oracle mirror exact). Lineage is cut every other round.
+    keeps the oracle mirror exact). Every round is cut and counted; the
+    first round that removes no edge ends the loop.
     """
     und = symmetrize(edges, src, dst)
     cur = (
@@ -1672,10 +1636,6 @@ def k_truss(
         .select(F.col("src").alias("u"), F.col("dst").alias("v"))
         .distinct()
     )
-    # prev starts at cur (not None): with n_iter=0 the convergence
-    # certificate compares the edge set against itself instead of
-    # dereferencing an unset round.
-    prev = cur
 
     def _support(e: DataFrame) -> DataFrame:
         # Support is LEFT-joined back onto the edge set (coalesce 0):
@@ -1697,11 +1657,12 @@ def k_truss(
             "u", "v", F.coalesce("support", F.lit(0)).alias("support")
         )
 
-    for i in range(n_iter):
-        prev = cur
-        cur = _support(cur).filter(F.col("support") >= k - 2).select("u", "v")
-        if (i + 1) % 2 == 0:
-            cur = cur.localCheckpoint(eager=True)
+    def peel(e: DataFrame) -> DataFrame:
+        return _support(e).filter(F.col("support") >= k - 2).select("u", "v")
+
+    # with n_iter=0, prev is cur: the certificate compares the edge set
+    # against itself, as the fixed-round oracle does
+    cur, prev, _ = _iterate(cur, peel, n_iter, _peeled)
     out = _support(cur).filter(F.col("support") >= k - 2)
     if emit_convergence:
         c_prev = prev.agg(F.count(F.lit(1)).alias("__n_prev__"))

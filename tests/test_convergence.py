@@ -20,6 +20,7 @@ from pandrs_spark.operators.graph import (
     eigenvector_centrality,
     hits,
     katz_centrality,
+    kcore,
     label_propagation,
     pagerank,
     personalized_pagerank,
@@ -128,29 +129,6 @@ def test_pagerank_certificate_silent_when_converged(spark):
     }
     for v in (1, 2, 3):
         assert ranks[v] == pytest.approx(1 / 3, abs=1e-9)
-
-
-def test_kcore_convergence_certificate(spark):
-    """kcore's certificate raises when the peel budget is short of the
-    fixpoint and passes when it reaches it (a path graph peels one
-    endpoint pair per round under k=2... use a long path + k=2)."""
-    import pytest
-
-    from pandrs_spark.operators.graph import ConvergenceError, kcore
-
-    # path 0-1-2-...-9 with k=2: every round peels both endpoints, so
-    # the whole path dissolves after ~5 rounds; 1 round is NOT enough
-    edges = small_local_df(
-        spark, [(i, i + 1) for i in range(9)], "src long, dst long"
-    )
-    with pytest.raises(ConvergenceError):
-        kcore(edges, k=2, n_iter=1, check_convergence=True).count()
-    # a triangle IS its own 2-core: converged at any budget
-    tri = small_local_df(
-        spark, [(0, 1), (1, 2), (2, 0)], "src long, dst long"
-    )
-    out = kcore(tri, k=2, n_iter=2, check_convergence=True).collect()
-    assert len(out) == 3
 
 
 def _star(spark):
@@ -309,3 +287,82 @@ def test_weighted_pagerank_certificate_silent_when_converged(spark):
     ).collect()
     for r in ranks:
         assert r["rank"] == pytest.approx(1 / 3, abs=1e-9)
+
+
+def _lpa_graph(spark):
+    # two triangles joined by one edge, plus a two-edge tail: round 4
+    # is the last round that changes a label, so budget 4 lands exactly
+    # on the fixpoint
+    return small_local_df(
+        spark,
+        [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (5, 6), (6, 4), (1, 7), (7, 8)],
+        "src bigint, dst bigint",
+    )
+
+
+def _triangle(spark):
+    return small_local_df(spark, [(0, 1), (1, 2), (2, 0)], "src bigint, dst bigint")
+
+
+# name -> (graph, run(edges, budget, check_convergence), budgets)
+EXACTNESS_CASES = {
+    "cc_path10": (
+        lambda spark: _path_graph(spark, 10),
+        lambda e, b, check: connected_components(
+            e, max_iter=b, check_convergence=check
+        ),
+        range(6),
+    ),
+    "lpa_two_triangles_tail": (
+        _lpa_graph,
+        lambda e, b, check: label_propagation(
+            e, iterations=b, check_convergence=check
+        ),
+        range(6),
+    ),
+    # path 0-1-...-9 with k=2: every round peels both endpoints
+    "kcore_path9": (
+        lambda spark: _path_graph(spark, 9),
+        lambda e, b, check: kcore(e, k=2, n_iter=b, check_convergence=check),
+        range(7),
+    ),
+    # a triangle is its own 2-core: converged at any budget
+    "kcore_triangle": (
+        _triangle,
+        lambda e, b, check: kcore(e, k=2, n_iter=b, check_convergence=check),
+        range(3),
+    ),
+    "sssp_costed_path": (
+        _costed_path,
+        lambda e, b, check: shortest_paths(
+            e, 0, iterations=b, check_convergence=check
+        ),
+        range(5),
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(EXACTNESS_CASES))
+def test_fixpoint_certificate_is_exact(spark, case):
+    """For every budget, ``check_convergence=True`` raises iff that
+    budget's answer (flag off) differs from the converged answer — no
+    false alarm when a budget lands exactly on the fixpoint, and no
+    silent truncation."""
+    graph, run, budgets = EXACTNESS_CASES[case]
+    e = graph(spark)
+
+    def answer(budget):
+        return sorted(tuple(r) for r in run(e, budget, False).collect())
+
+    converged = answer(50)
+    wrong = []
+    for b in budgets:
+        truncated = answer(b) != converged
+        try:
+            run(e, b, True).collect()
+            raised = False
+        except ConvergenceError:
+            raised = True
+        if raised != truncated:
+            wrong.append((b, truncated, raised))
+    assert not wrong, f"(budget, truncated, raised): {wrong}"

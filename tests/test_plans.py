@@ -70,6 +70,38 @@ def test_flagship_query_plan_shape(spark):
 import pytest
 
 
+# Queries that MUTATE shared session state, so the registry plan sweep
+# builds them one at a time after the thread pool: the streaming set
+# (scoped_state_partitions sets and restores spark.sql.shuffle.partitions
+# session-wide) and everything that writes catalog tables or shared
+# warehouse/tmp paths. test_sequential_covers_state_scoping_queries
+# keeps the first group complete.
+SEQUENTIAL = frozenset({
+    # conf-mutating streaming sinks (scoped_state_partitions)
+    "q180_streaming_tumbling_counts",
+    "q181_streaming_dedup_counts",
+    "q203_stream_stream_conversions",
+    "q228_streaming_sliding_counts",
+    "q229_streaming_user_sessions",
+    "q238_streaming_user_drawdown",
+    "q299_streaming_incremental_rollup",
+    "q367_streaming_cms_maintenance",
+    "q372_streaming_static_enrichment",
+    "q393_streaming_ewma_anomalies",
+    # catalog-table / shared-path writers
+    "q168_upsert_latest_orders",
+    "q174_io_roundtrip_agg",
+    "q198_scd2_priority_history",
+    "q200_zorder_buckets",
+    "q243_bucketed_join_revenue",
+    "q354_orc_roundtrip_agg",
+    "q383_small_file_compaction",
+    "q394_snapshot_time_travel",
+    "q728_shard_export_manifest",
+    "q170_event_transitions",
+})
+
+
 @pytest.fixture(scope="module")
 def registry_plan_texts(spark):
     """Build every registered query ONCE and cache its simple-mode
@@ -81,41 +113,14 @@ def registry_plan_texts(spark):
     the sequential sweep was the suite's single most expensive item
     (576 s — many queries run real driver actions while building:
     derivation counts, iterative-loop rounds, MLlib fits). Most builds
-    are independent, so they run through a small thread pool; queries
-    that MUTATE shared session state build sequentially afterwards —
-    the streaming set (scoped_state_partitions sets/restores
-    spark.sql.shuffle.partitions session-wide) and everything that
-    writes catalog tables or shared warehouse/tmp paths. Pool failures
+    are independent, so they run through a small thread pool; the
+    ``SEQUENTIAL`` queries build one at a time afterwards. Pool failures
     retry once in the sequential calm (preserving the old retry
     semantics for transient warehouse collisions)."""
     import __spark_entry__ as entry
 
     spark.conf.set("spark.sql.debug.maxToStringFields", "2000")
     qs = entry.queries()
-    sequential = {
-        # conf-mutating streaming sinks (scoped_state_partitions)
-        "q180_streaming_tumbling_counts",
-        "q181_streaming_dedup_counts",
-        "q203_stream_stream_conversions",
-        "q228_streaming_sliding_counts",
-        "q229_streaming_user_sessions",
-        "q238_streaming_user_drawdown",
-        "q299_streaming_incremental_rollup",
-        "q367_streaming_cms_maintenance",
-        "q372_streaming_static_enrichment",
-        "q393_streaming_ewma_anomalies",
-        # catalog-table / shared-path writers
-        "q168_upsert_latest_orders",
-        "q174_io_roundtrip_agg",
-        "q198_scd2_priority_history",
-        "q200_zorder_buckets",
-        "q243_bucketed_join_revenue",
-        "q354_orc_roundtrip_agg",
-        "q383_small_file_compaction",
-        "q394_snapshot_time_travel",
-        "q728_shard_export_manifest",
-        "q170_event_transitions",
-    }
     texts: dict[str, str] = {}
     errors: dict[str, str] = {}
 
@@ -124,7 +129,7 @@ def registry_plan_texts(spark):
 
     from concurrent.futures import ThreadPoolExecutor
 
-    pooled = [n for n in qs if n not in sequential]
+    pooled = [n for n in qs if n not in SEQUENTIAL]
     retry: list[str] = []
 
     def _pooled_build(name):
@@ -139,7 +144,7 @@ def registry_plan_texts(spark):
                 texts[name] = text
             else:
                 retry.append(name)
-    for name in retry + [n for n in qs if n in sequential]:
+    for name in retry + [n for n in qs if n in SEQUENTIAL]:
         try:
             texts[name] = _build(name)
         except Exception:  # noqa: BLE001
@@ -149,6 +154,24 @@ def registry_plan_texts(spark):
                 errors[name] = f"build error {e}"
     assert not errors, errors
     return texts
+
+
+def test_sequential_covers_state_scoping_queries():
+    """Every registry query whose function calls
+    ``scoped_state_partitions`` (which sets spark.sql.shuffle.partitions
+    for the whole session while it runs) is in ``SEQUENTIAL``, so the
+    pooled plan sweep never builds it beside another query."""
+    import inspect
+
+    import __spark_entry__ as entry
+
+    scoping = {
+        name
+        for name, fn in entry.queries().items()
+        if "scoped_state_partitions(" in inspect.getsource(fn)
+    }
+    assert scoping, "no query calls scoped_state_partitions: stale scan?"
+    assert scoping <= SEQUENTIAL, sorted(scoping - SEQUENTIAL)
 
 
 def test_no_accidental_cartesian_products(spark, registry_plan_texts):

@@ -16,36 +16,42 @@ iteration is one shuffle. Scale posture:
   table to a size-derived partition count once it is materialized;
 - per-iteration state (ranks/labels/frontier) is small relative to
   edges and is what moves;
-- every frontier walk (BFS, closeness, reachability, the SCC collect
-  and the distance queries built on them) runs through
-  ``_frontier_walk``, which has ONE lineage-cut policy: each hop's
-  frontier is persisted, and every ``_CHECKPOINT_EVERY`` hops the
-  visited set is eager-checkpointed and the frontier's lineage is cut
-  too, so neither plan grows past one window whatever the walk's depth
-  (a multi-source walk, keyed by ``root``, checkpoints its visited set
-  every hop);
-- every value loop (the PageRank family, katz, label propagation, CC,
-  SSSP, k-core, k-truss and the SCC forward coloring) runs its rounds
-  through ``_iterate``, which has ONE cut placement: each round's new
-  state is cut with a lazy ``localCheckpoint``, so every plan is one
-  round deep and no round pays a checkpoint action of its own. A loop
-  with a stopping rule passes an exact changed-count (``_moved`` for
-  label and distance vectors, ``_peeled`` for shrinking edge sets);
-  that count materializes the cut in the same job, and the first round
-  that changes nothing ends the loop — every later round would be the
-  identity, so the answer is the full budget's. Left hand-rolled:
-  ``louvain`` (it reads its labels four times a round and has no
-  stopping count, so it keeps an eager cut), ``eigenvector_centrality``
-  and ``hits`` (their cut sits inside ``_l2_normalize``, between A·x and
-  its norm), ``betweenness_centrality`` and the SCC outer peel;
+- the iterative loops run their rounds through ``_iterate``, which
+  has ONE cut placement: each round's new state is cut with a lazy
+  ``localCheckpoint``, so every plan is one round deep and no round
+  pays a checkpoint action of its own (eigenvector and hits also cut
+  before each norm, inside ``_l2_normalize``). That covers the value
+  loops (the PageRank family, katz, eigenvector, hits, label
+  propagation, CC, SSSP, k-core, k-truss, the SCC forward coloring)
+  and the frontier walks (``_frontier_walk``: BFS, closeness,
+  reachability, the SCC collect and the distance queries built on
+  them; betweenness's forward pass), whose state is the visited set
+  stamped with the hop that found each row. A loop with a stopping
+  rule passes an exact changed-count (``_moved`` for label and
+  distance vectors, ``_peeled`` for shrinking edge sets, the rows a
+  hop stamped for a walk); that count materializes the cut in the same job, and the
+  first round that changes nothing ends the loop — every later round
+  would be the identity, so the answer is the full budget's;
+- left hand-rolled: ``louvain``, because its alternating parity makes
+  a round that moves nothing no fixpoint (the other parity may still
+  move), so it has no stopping count and keeps an eager cut; the SCC
+  outer peel, because each of its rounds runs the coloring and the
+  collect, two loops with their own budgets and certificates, and
+  certifying it on the driver would replay a whole round of both only
+  to learn what the empty remaining-vertex probe already says; the
+  backward pass of betweenness, a fold over the forward layers rather
+  than a fixpoint; ``dfs_preorder``'s stack walk, which runs inside one
+  pandas group rather than as Spark rounds;
 - convergence, with ``check_convergence=True``: a fixpoint loop whose
-  budget ran out is certified by ``_assert_fixpoint`` — it raises
-  :class:`ConvergenceError` iff one more round would still change the
-  answer, so a budget that happens to land exactly on the fixpoint
-  passes; the fixed-round power methods certify their last round with
-  ``_assert_settled`` (max |Δ| over the final two iterates against
-  ``tol``, one action); frontier walks raise when the frontier was
-  still non-empty at the budget.
+  budget ran out is certified by ONE exact rule — it raises
+  :class:`ConvergenceError` iff one more round (a hop, for a walk)
+  would still change the answer, so a budget that lands exactly on the
+  fixpoint passes (``_assert_fixpoint``; ``_frontier_walk`` applies the
+  same rule itself). The hand-rolled SCC outer peel is the exception:
+  it raises whenever vertices remain unpeeled, even when they are
+  singletons already labeled right. The fixed-round power methods
+  certify their last round with ``_assert_settled`` (max |Δ| over the
+  final two iterates against ``tol``, one action).
 """
 
 from __future__ import annotations
@@ -80,9 +86,6 @@ __all__ = [
     "from_adjacency",
     "dfs_preorder",
 ]
-
-_CHECKPOINT_EVERY = 5
-
 
 class ConvergenceError(RuntimeError):
     """Raised by iterative graph operators when ``check_convergence=True``
@@ -136,11 +139,11 @@ def _endpoints(e: DataFrame) -> DataFrame:
 
 
 def _iterate(state: DataFrame, step, rounds: int, changed=None):
-    """Round driver of the value loops: ``rounds`` times, the state
-    becomes ``step(state)`` cut by a lazy ``localCheckpoint``. Lineage
-    then stays one round deep (a step that reads its state k times,
-    like k-core's three, would otherwise replay k^r subtrees by round
-    r), and the chain of pending checkpoint RDDs
+    """Round driver of the value loops and frontier walks: ``rounds``
+    times, the state becomes ``step(state)`` cut by a lazy
+    ``localCheckpoint``. Lineage then stays one round deep (a step that
+    reads its state k times, like k-core's three, would otherwise replay
+    k^r subtrees by round r), and the chain of pending checkpoint RDDs
     is computed by the first action that needs it in one submission
     instead of one eager (AQE-multiplied) job per round — q68 at sf0.1:
     109 scheduled jobs -> single-digit (see OPTIMIZATION_r11.md).
@@ -219,45 +222,46 @@ def _frontier_walk(
     """Frontier BFS over ``edges`` (src, dst[, root]) from the seed set
     ``visited``, keyed by ``keys``: ``["id"]`` for one search,
     ``["root", "id"]`` for a multi-source walk where every root's
-    frontier advances in the same join. Each hop joins the frontier to
-    the edges (on ``root`` too when the edges carry one), keeps the
-    vertices not yet visited (the anti-join) and, when the state has a
-    ``hops`` column, stamps them with the hop. Returns the visited set
-    and whether the frontier emptied within ``max_iter`` hops.
+    frontier advances in the same join.
 
-    One lineage-cut policy for every caller: each hop's frontier is
-    persisted (the emptiness probe and the next hop both scan it) and
-    re-rooted on a lazy checkpoint every ``_CHECKPOINT_EVERY`` hops,
-    together with an eager checkpoint of the visited set. The next
-    frontier's plan references both the frontier and the visited set,
-    so uncut plans grow geometrically with depth; cutting both bounds
-    every plan to one window. A multi-source walk (a ``root`` key:
-    O(V²) pair state that its callers join again, often several times)
-    also checkpoints the visited set every hop, so the set it returns
-    is always a plan leaf.
+    The state is the visited set, each row stamped with the hop that
+    found it: the ``hops`` column when the seed set has one, else an
+    internal stamp dropped on return. A hop, run by :func:`_iterate`,
+    joins the rows stamped with the last hop to the edges (on ``root``
+    too when the edges carry one), keeps the vertices not yet visited
+    (the anti-join) and adds them with the new stamp. Its stopping count
+    is the number of rows it stamped, which also materializes the
+    round's cut, so the returned set is always a plan leaf. Returns the
+    visited set and whether it is the fixpoint: some hop found nothing,
+    or, when the budget ran out first, one more hop would find nothing
+    (an extra action only in that case).
     """
     tags = keys[:-1]
-    every = 1 if tags else _CHECKPOINT_EVERY
-    frontier = visited
-    for hop in range(1, max_iter + 1):
-        step = frontier.select(*tags, F.col("id").alias("src"))
-        nxt = (
-            edges.join(step, [c for c in step.columns if c in edges.columns])
+    stamp = "hops" if "hops" in visited.columns else "__hop__"
+    hop = 0
+
+    def step(state: DataFrame) -> DataFrame:
+        nonlocal hop
+        hop += 1
+        front = state.filter(F.col(stamp) == hop - 1).select(
+            *tags, F.col("id").alias("src")
+        )
+        found = (
+            edges.join(front, [c for c in front.columns if c in edges.columns])
             .select(*tags, F.col("dst").alias("id"))
             .distinct()
-            .join(visited, keys, "left_anti")
+            .join(state, keys, "left_anti")
         )
-        if "hops" in visited.columns:
-            nxt = nxt.withColumn("hops", F.lit(hop))
-        frontier = tracked_persist(nxt)
-        if frontier.limit(1).count() == 0:
-            return visited, True
-        visited = visited.union(frontier)
-        if hop % every == 0:
-            visited = visited.localCheckpoint(eager=True)
-        if hop % _CHECKPOINT_EVERY == 0:
-            frontier = frontier.localCheckpoint(eager=False)
-    return visited, False
+        return state.unionByName(found.withColumn(stamp, F.lit(hop)))
+
+    def stamped(new: DataFrame, _old: DataFrame) -> int:
+        return new.filter(F.col(stamp) == hop).count()
+
+    if stamp not in visited.columns:
+        visited = visited.withColumn(stamp, F.lit(0))
+    visited, _, settled = _iterate(visited, step, max_iter, stamped)
+    converged = settled or stamped(step(visited), visited) == 0
+    return visited.drop("__hop__"), converged
 
 
 def _rank_walk(
@@ -551,9 +555,10 @@ def bfs_hops(
     hop and keeps newly discovered vertices only — the frontier (small)
     moves to the edges (big, partitioned once).
 
-    ``check_convergence=True`` raises :class:`ConvergenceError` if the
-    frontier is still non-empty when ``max_iter`` is exhausted (the BFS
-    was truncated before exploring the reachable set)."""
+    ``check_convergence=True`` raises :class:`ConvergenceError` iff one
+    more hop after ``max_iter`` would still discover a vertex (the BFS
+    was truncated before exploring the reachable set); a budget that
+    ends exactly on the last discovering hop passes."""
     und = tracked_persist(symmetrize(edges, src, dst).repartition("src"))
     spark = edges.sparkSession
     visited = tracked_persist(
@@ -759,6 +764,10 @@ def closeness_centrality(
     scale pass ``roots`` (a DataFrame of ``id``) to compute landmark/
     pivot closeness over a sample of sources — the standard
     approximation — while the per-round dataflow stays identical.
+
+    ``check_convergence=True`` raises :class:`ConvergenceError` iff one
+    more hop after ``max_iter`` would still discover a (root, vertex)
+    pair, the same exact rule as :func:`bfs_hops`.
     """
     und = tracked_persist(symmetrize(edges, src, dst).repartition("src"))
     verts = und.select(F.col("src").alias("id")).distinct()
@@ -793,15 +802,13 @@ def _l2_normalize(scores: DataFrame, col: str) -> DataFrame:
     """Divide ``col`` by its L2 norm via a broadcast scalar join (keeps
     the whole round inside one plan — no driver round-trip).
 
-    The input is checkpointed first: the norm subplan references
-    ``scores`` a second time, so without materialization each iteration
-    would DOUBLE the lineage (2^k plan growth over k rounds) — the
-    classic iterative-Spark blowup. The score vector is |V| rows, so the
-    checkpoint is cheap at any scale. Lazy (eager=False, round 11): the
-    checkpoint materializes inside the next action that touches the
-    scores (the norm broadcast build) instead of paying a dedicated
-    driver job per normalize — one job per iteration saved, identical
-    values and identical lineage truncation.
+    The input is cut first (a lazy ``localCheckpoint``, materialized by
+    the norm's broadcast build): the norm subplan reads ``scores`` a
+    second time, and without the cut both reads replay the subtree that
+    computed it. This cut before each norm is on top of the power
+    methods' cut per round in :func:`_iterate`, and it pays: without it
+    q113 scheduled 201 Spark jobs instead of 133 and q114 378 instead
+    of 141 (sf0.1).
     """
     scores = scores.localCheckpoint(eager=False)
     norm = scores.agg(F.sqrt(F.sum(F.col(col) * F.col(col))).alias("__norm__"))
@@ -837,22 +844,27 @@ def eigenvector_centrality(
     verts.count()
     und = _right_sized(und, "dst")
     verts = _right_sized(verts, "id")
-    scores = _l2_normalize(verts.withColumn("score", F.lit(1.0)), "score")
-    for _ in range(iterations):
-        prev_scores = scores
+
+    def step(scores: DataFrame) -> DataFrame:
         nbr_sum = (
             und.join(scores.withColumnRenamed("id", "dst"), "dst")
             .groupBy(F.col("src").alias("id"))
             .agg(F.sum("score").alias("score"))
         )
-        scores = verts.join(nbr_sum, "id", "left").select(
-            "id", F.coalesce("score", F.lit(0.0)).alias("score")
+        return _l2_normalize(
+            verts.join(nbr_sum, "id", "left").select(
+                "id", F.coalesce("score", F.lit(0.0)).alias("score")
+            ),
+            "score",
         )
-        scores = _l2_normalize(scores, "score")
+
+    scores, prev, _ = _iterate(
+        _l2_normalize(verts.withColumn("score", F.lit(1.0)), "score"),
+        step,
+        iterations,
+    )
     if check_convergence and iterations > 0:
-        _assert_settled(
-            scores, prev_scores, ["score"], tol, "eigenvector_centrality"
-        )
+        _assert_settled(scores, prev, ["score"], tol, "eigenvector_centrality")
     return scores
 
 
@@ -935,40 +947,38 @@ def hits(
     verts.count()
     e = _right_sized(e, "src")
     verts = _right_sized(verts, "id")
-    hubs = verts.withColumn("hub", F.lit(1.0))
-    auths = verts.withColumn("authority", F.lit(1.0))
-    for _ in range(iterations):
-        prev_hubs, prev_auths = hubs, auths
-        auth_sum = (
-            e.join(hubs.withColumnRenamed("id", "src"), "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum("hub").alias("authority"))
+
+    def half_step(base, scores, frm: str, to: str, col: str, out: str):
+        # ``base`` plus ``out``: per ``to`` endpoint, the normalized sum
+        # of ``scores.col`` over its edges
+        summed = (
+            e.join(scores.select(F.col("id").alias(frm), col), frm)
+            .groupBy(F.col(to).alias("id"))
+            .agg(F.sum(col).alias(out))
         )
-        auths = verts.join(auth_sum, "id", "left").select(
-            "id", F.coalesce("authority", F.lit(0.0)).alias("authority")
+        return _l2_normalize(
+            base.join(summed, "id", "left").select(
+                *base.columns, F.coalesce(out, F.lit(0.0)).alias(out)
+            ),
+            out,
         )
-        auths = _l2_normalize(auths, "authority")
-        hub_sum = (
-            e.join(auths.withColumnRenamed("id", "dst"), "dst")
-            .groupBy(F.col("src").alias("id"))
-            .agg(F.sum("authority").alias("hub"))
-        )
-        hubs = verts.join(hub_sum, "id", "left").select(
-            "id", F.coalesce("hub", F.lit(0.0)).alias("hub")
-        )
-        hubs = _l2_normalize(hubs, "hub")
-        # _l2_normalize already lazily truncates both vectors every
-        # half-step — a dedicated eager checkpoint would only add jobs
+
+    # the hub half extends the authority half's frame, so no round joins
+    # the two vectors and the certificate stays one action
+    def step(scores: DataFrame) -> DataFrame:
+        auths = half_step(verts, scores, "src", "dst", "hub", "authority")
+        return half_step(auths, auths, "dst", "src", "authority", "hub")
+
+    scores, prev, _ = _iterate(
+        verts.select(
+            "id", F.lit(1.0).alias("authority"), F.lit(1.0).alias("hub")
+        ),
+        step,
+        iterations,
+    )
     if check_convergence and iterations > 0:
-        # both vectors in one join, so the certificate stays one action
-        _assert_settled(
-            auths.join(hubs, "id"),
-            prev_auths.join(prev_hubs, "id"),
-            ["authority", "hub"],
-            tol,
-            "hits",
-        )
-    return auths.join(hubs, "id")
+        _assert_settled(scores, prev, ["authority", "hub"], tol, "hits")
+    return scores
 
 
 def shortest_paths(
@@ -1134,6 +1144,17 @@ def strongly_connected_components(
     rem_v = _endpoints(rem_e).localCheckpoint(eager=True)
     done: list[DataFrame] = []
     truncated: list[str] = []
+
+    def retire(peeled: DataFrame):
+        # the vertices and edges that remain once ``peeled`` is removed
+        left = rem_v.join(peeled, "id", "left_anti").localCheckpoint(eager=True)
+        return left, (
+            rem_e.join(left.withColumnRenamed("id", "src"), "src", "left_semi")
+            .join(left.withColumnRenamed("id", "dst"), "dst", "left_semi")
+            .select("src", "dst")
+            .localCheckpoint(eager=True)
+        )
+
     for _outer in range(max_iter):
         if rem_v.limit(1).count() == 0:
             break
@@ -1147,17 +1168,7 @@ def strongly_connected_components(
         trimmed = trimmed.localCheckpoint(eager=True)
         if trimmed.limit(1).count() > 0:
             done.append(trimmed)
-            rem_v = rem_v.join(trimmed, "id", "left_anti").localCheckpoint(
-                eager=True
-            )
-            rem_e = (
-                rem_e.join(
-                    rem_v.withColumnRenamed("id", "src"), "src", "left_semi"
-                )
-                .join(rem_v.withColumnRenamed("id", "dst"), "dst", "left_semi")
-                .select("src", "dst")
-                .localCheckpoint(eager=True)
-            )
+            rem_v, rem_e = retire(trimmed)
             if rem_v.limit(1).count() == 0:
                 break
         # --- 2. forward coloring: min ancestor id to fixpoint ---
@@ -1199,24 +1210,17 @@ def strongly_connected_components(
             )
             .localCheckpoint(eager=True)
         )
-        visited = colors.filter(F.col("color") == F.col("id")).select(
+        roots = colors.filter(F.col("color") == F.col("id")).select(
             F.col("id").alias("root"), "id"
-        ).localCheckpoint(eager=True)
+        )
         visited, collect_fixpoint = _frontier_walk(
-            ce, visited, ["root", "id"], max_iter
+            ce, roots, ["root", "id"], max_iter
         )
         if not collect_fixpoint:
             truncated.append(f"backward collect (outer round {_outer + 1})")
         scc = visited.select("id", F.col("root").alias("component"))
-        scc = scc.localCheckpoint(eager=True)
         done.append(scc)
-        rem_v = rem_v.join(scc, "id", "left_anti").localCheckpoint(eager=True)
-        rem_e = (
-            rem_e.join(rem_v.withColumnRenamed("id", "src"), "src", "left_semi")
-            .join(rem_v.withColumnRenamed("id", "dst"), "dst", "left_semi")
-            .select("src", "dst")
-            .localCheckpoint(eager=True)
-        )
+        rem_v, rem_e = retire(scc)
     # max_iter exhausted with vertices still unpeeled: label the
     # leftovers by their own id (same truncation convention as every
     # bounded iterative operator here — raise max_iter for deeper
@@ -1259,42 +1263,50 @@ def betweenness_centrality(
     """
     und = tracked_persist(symmetrize(edges, src, dst).repartition("src"))
     verts = und.select(F.col("src").alias("id")).distinct()
-    # forward phase: (root, id, hops, sigma)
-    visited = tracked_persist(
-        verts.select(
-            F.col("id").alias("root"), "id", F.lit(0).alias("hops"),
-            F.lit(1.0).alias("sigma"),
-        )
-    )
-    frontier = visited
-    layers = [visited]
-    max_hop = 0
-    for hop in range(1, max_iter + 1):
-        expanded = (
-            und.join(frontier.withColumnRenamed("id", "src"), "src")
+    # forward phase: (root, id, hops, sigma), the rows of one hop's
+    # layer found together and stamped with it (as in _frontier_walk)
+    hop = 0
+
+    def expand(state: DataFrame) -> DataFrame:
+        nonlocal hop
+        hop += 1
+        found = (
+            und.join(
+                state.filter(F.col("hops") == hop - 1).withColumnRenamed(
+                    "id", "src"
+                ),
+                "src",
+            )
             .select("root", F.col("dst").alias("id"), "sigma")
-        )
-        new_frontier = (
-            expanded.join(visited.select("root", "id"), ["root", "id"], "left_anti")
+            .join(state, ["root", "id"], "left_anti")
             .groupBy("root", "id")
             .agg(F.sum("sigma").alias("sigma"))
-            .withColumn("hops", F.lit(hop))
-            .select("root", "id", "hops", "sigma")
-            .localCheckpoint(eager=True)
         )
-        if new_frontier.limit(1).count() == 0:
-            break
-        visited = visited.union(new_frontier).localCheckpoint(eager=True)
-        layers.append(new_frontier)
-        frontier = new_frontier
-        max_hop = hop
+        return state.unionByName(found.withColumn("hops", F.lit(hop)))
+
+    visited, _, settled = _iterate(
+        tracked_persist(
+            verts.select(
+                F.col("id").alias("root"), "id", F.lit(0).alias("hops"),
+                F.lit(1.0).alias("sigma"),
+            )
+        ),
+        expand,
+        max_iter,
+        lambda new, _old: new.filter(F.col("hops") == hop).count(),
+    )
+    max_hop = hop - 1 if settled else hop
+
+    def layer(h: int) -> DataFrame:
+        return visited.filter(F.col("hops") == h)
+
     # backward phase: delta per (root, id), deepest layer first
-    delta = layers[max_hop].select(
+    delta = layer(max_hop).select(
         "root", "id", F.lit(0.0).alias("delta")
     ) if max_hop > 0 else None
     acc = None
-    for hop in range(max_hop, 0, -1):
-        cur = layers[hop].join(
+    for h in range(max_hop, 0, -1):
+        cur = layer(h).join(
             delta.select("root", "id", "delta"), ["root", "id"], "left"
         ).select("root", "id", "sigma", F.coalesce("delta", F.lit(0.0)).alias("delta"))
         acc = cur if acc is None else acc.union(cur)
@@ -1310,7 +1322,7 @@ def betweenness_centrality(
                 F.col("delta").alias("w_delta"),
             )
             .join(
-                layers[hop - 1].select("root", "id", F.col("sigma").alias("p_sigma")),
+                layer(h - 1).select("root", "id", F.col("sigma").alias("p_sigma")),
                 ["root", "id"],
             )
             .groupBy("root", "id", "p_sigma")

@@ -26,7 +26,6 @@ __all__ = [
     "semi_join",
     "anti_join",
     "asof_join",
-    "broadcast_merge",
     "range_join",
     "interval_overlap_join",
     "upsert_latest",
@@ -83,10 +82,6 @@ def merge(
         piece = l_renamed[a] == r_in[b]
         cond = piece if cond is None else (cond & piece)
     return l_renamed.join(r_in, on=cond, how=how)
-
-
-def broadcast_merge(left: DataFrame, right: DataFrame, **kw) -> DataFrame:
-    return merge(left, right, broadcast_right=True, **kw)
 
 
 def semi_join(left: DataFrame, right: DataFrame, on: str | Sequence[str] | Column) -> DataFrame:

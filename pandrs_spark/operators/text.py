@@ -22,7 +22,6 @@ __all__ = [
     "tokens",
     "token_count",
     "shingles",
-    "distinct_token_ratio",
     "stopword_hits",
     "quality_score",
     "doc_fingerprint",
@@ -75,11 +74,6 @@ def shingles(tok: Column, k: int = 3) -> Column:
     return F.when(F.size(tok) >= k, sh).otherwise(
         F.array().cast("array<string>")
     )
-
-
-def distinct_token_ratio(tok: Column) -> Column:
-    """Type-token ratio — vocabulary diversity quality signal."""
-    return F.size(F.array_distinct(tok)) / F.size(tok)
 
 
 # PII scrub patterns (training-data hygiene). Plain RE2-safe regexes —

@@ -28,7 +28,6 @@ __all__ = [
     "global_row_number",
     "ntile_from_rank",
     "rolling",
-    "rolling_sum_exact",
     "rolling_corr",
     "expanding",
     "shift",
@@ -117,14 +116,6 @@ def rolling(
     if mp > 1:
         out = F.when(F.count(c).over(frame) >= mp, out)
     return out
-
-
-def rolling_sum_exact(col: Column | str, window: int, w: WindowSpec, scale: int = 2) -> Column:
-    """Order-independent rolling sum (scaled-BIGINT quantized, see
-    functions/deterministic.py)."""
-    from pandrs_spark.functions.deterministic import dsum_over
-
-    return dsum_over(col, w.rowsBetween(-(window - 1), 0), scale)
 
 
 def expanding(col: Column | str, w: WindowSpec, agg: str = "avg", min_periods: int = 1) -> Column:

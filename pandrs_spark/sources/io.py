@@ -49,7 +49,6 @@ __all__ = [
     "read_excel",
     "write_excel",
     "list_excel_sheets",
-    "excel_sheet_info",
     "write_excel_multi",
     "write_bucketed_table",
     "read_table",
@@ -154,7 +153,6 @@ def read_parquet(
     columns: list[str] | None = None,
     predicate: str | None = None,
     merge_schema: bool = False,
-    max_partition_bytes: int | None = None,
     recursive: bool = False,
 ) -> DataFrame:
     """Parquet scan with explicit pushdown hooks.
@@ -164,8 +162,6 @@ def read_parquet(
     bespoke ``read_parquet_with_predicates`` (src/io/parquet.rs:1502) and
     schema-evolution (:1440) entry points; here they are reader options.
     """
-    if max_partition_bytes is not None:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", str(max_partition_bytes))
     df = (
         spark.read.option("mergeSchema", merge_schema)
         .option("recursiveFileLookup", recursive)
@@ -366,14 +362,6 @@ def list_excel_sheets(path: str) -> list[str]:
     from pandrs_spark.sources.xlsx_lite import list_sheets
 
     return list_sheets(path)
-
-
-def excel_sheet_info(path: str) -> list[dict]:
-    """Per-sheet name/row/column metadata (reference
-    src/io/excel.rs:823 workbook analysis)."""
-    from pandrs_spark.sources.xlsx_lite import sheet_info
-
-    return sheet_info(path)
 
 
 def write_excel_multi(dfs: "dict[str, DataFrame]", path: str) -> None:

@@ -22,6 +22,8 @@ from contextlib import contextmanager
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pandrs_spark.operators.util import tracked_persist
+
 __all__ = [
     "scoped_state_partitions",
     "stream_stream_interval_join",
@@ -646,24 +648,15 @@ def incremental_aggregate_sink(
             merged = part
         # materialize before replacing the view the plan reads from,
         # then release the PREVIOUS batch's cache (its rows are folded
-        # into the new aggregate) so state stays O(distinct keys)
-        merged.cache().count()
+        # into the new aggregate) so state stays O(distinct keys). The
+        # FINAL batch's cache intentionally outlives the stream (it backs
+        # the live rollup view); tracking it lets release_persisted()
+        # reclaim it once the caller is done with the table
+        tracked_persist(merged).count()
         merged.createOrReplaceGlobalTempView(table)
-        # track in the global release registry too: the FINAL batch's
-        # cache intentionally outlives the stream (it backs the live
-        # rollup view), so release_persisted() must be able to reclaim
-        # it once the caller is done with the table
-        from pandrs_spark.frame import _PERSISTED
-
         while cached:
-            old = cached.pop()
-            old.unpersist(False)
-            try:
-                _PERSISTED.remove(old)
-            except ValueError:
-                pass
+            cached.pop().unpersist(False)
         cached.append(merged)
-        _PERSISTED.append(merged)
 
     return (
         df.writeStream.foreachBatch(_merge)

@@ -304,6 +304,17 @@ def _triangle(spark):
     return small_local_df(spark, [(0, 1), (1, 2), (2, 0)], "src bigint, dst bigint")
 
 
+def _fan_cycle(spark):
+    # cycle 0->1->2->3->4->0 plus chords 0->2, 0->3, 0->4: the forward
+    # coloring reaches every vertex in one round, but the backward
+    # collect from root 0 needs four hops (4, 3, 2, then 1)
+    return small_local_df(
+        spark,
+        [(0, 1), (1, 2), (2, 3), (3, 4), (4, 0), (0, 2), (0, 3), (0, 4)],
+        "src bigint, dst bigint",
+    )
+
+
 # name -> (graph, run(edges, budget, check_convergence), budgets)
 EXACTNESS_CASES = {
     "cc_path10": (
@@ -331,6 +342,27 @@ EXACTNESS_CASES = {
         _triangle,
         lambda e, b, check: kcore(e, k=2, n_iter=b, check_convergence=check),
         range(3),
+    ),
+    # path 0-1-2-3-4 from 0: hop 4 is the last that finds a vertex
+    "bfs_path4": (
+        lambda spark: _path_graph(spark, 4),
+        lambda e, b, check: bfs_hops(e, [0], max_iter=b, check_convergence=check),
+        range(7),
+    ),
+    # the end vertices need four hops to reach each other
+    "closeness_path4": (
+        lambda spark: _path_graph(spark, 4),
+        lambda e, b, check: closeness_centrality(
+            e, max_iter=b, check_convergence=check
+        ),
+        range(6),
+    ),
+    "scc_fan_cycle": (
+        _fan_cycle,
+        lambda e, b, check: strongly_connected_components(
+            e, max_iter=b, check_convergence=check
+        ),
+        range(7),
     ),
     "sssp_costed_path": (
         _costed_path,

@@ -3,15 +3,31 @@
 Mirrors the reference's table-registration entry points
 (``register_dataframe/csv/parquet`` — /root/reference
 src/distributed/core/context.rs:91,110,118) with Spark temp views.
-Reads are plain ``spark.read.parquet`` so Catalyst gets predicate
+Reads are ``spark.read.parquet`` scans, so Catalyst gets predicate
 pushdown, column pruning and partition pruning for free at any scale.
+
+Table metadata is resolved once per file, not once per load: a bare
+``spark.read.parquet`` launches a one-task Spark job only to infer the
+schema (0.09–0.14 s on a warm sf0.1 session), so
+:func:`read_parquet_raw` memoises each file's (TIMESTAMP(NANOS) columns,
+raw Spark schema) at its first read, and every later read hands that
+schema to ``spark.read.schema(...)``, which plans the same scan with no
+job. The memo holds metadata only (the in-memory data cache is
+:func:`enable_cache`, the bench's separate path); an entry is reused
+only while the file's (mtime, size) is unchanged, so a rewritten file is
+inferred again; it is guarded by a lock, so loads in threads can share
+it.
 """
 
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+from pandrs_spark.operators.util import scoped_conf
 
 __all__ = [
     "TABLES",
@@ -22,6 +38,7 @@ __all__ = [
     "register_views",
     "default_sf_dir",
     "ensure_nanos_readable",
+    "read_parquet_raw",
 ]
 
 TABLES = (
@@ -103,6 +120,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def _load_table_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one table and normalize dtype drift.
 
+    The scan is planned from the memoised schema
+    (:func:`read_parquet_raw`), so only the first load of a file in a
+    process pays Spark's schema-inference job; later loads of an
+    unchanged file launch no job at all.
+
     The driver has regenerated the testdata with different physical
     types between rounds (events.ts shipped as TIMESTAMP(NANOS) in one
     round and timestamp[us] the next), so the loader dispatches on the
@@ -118,32 +140,10 @@ def _load_table_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFra
     - anything else passes through unchanged.
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
-    nanos_cols = _nanos_timestamp_cols(path)
+    nanos_cols, df = read_parquet_raw(spark, path)
     if nanos_cols is None:
-        # Footer inspection unavailable (no pyarrow / unreadable
-        # footer): fall back to the name-based heuristic — set the conf
-        # (harmless when no nanos columns exist) and convert known
-        # timestamp-named bigints.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
+        # footer unreadable: convert known timestamp-named bigints
         nanos_cols = _NANOS_TS_COLS
-    elif nanos_cols:
-        # TIMESTAMP(NANOS) only surfaces as a readable type under
-        # nanosAsLong. Scope the conf to this read: the hadoop conf is
-        # captured when the DataFrame is created, so restoring right
-        # after spark.read.parquet does not disturb the (lazy) scan,
-        # and unrelated reads in the session are unaffected.
-        prev = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None)
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        try:
-            df = spark.read.parquet(path)
-        finally:
-            if prev is None:
-                spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
-            else:
-                spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prev)
-    else:
-        df = spark.read.parquet(path)
     from pyspark.sql import functions as F
 
     for col, dtype in df.dtypes:
@@ -154,6 +154,89 @@ def _load_table_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFra
                 col, F.timestamp_micros(F.expr(f"CAST({col} DIV 1000 AS BIGINT)"))
             )
     return df
+
+
+_NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+
+# path -> (stamp, (nanos columns or None, raw Spark schema))
+_SCHEMAS: dict[str, tuple[tuple, tuple[set[str] | None, StructType]]] = {}
+_SCHEMAS_LOCK = threading.Lock()
+
+
+def _stamp(path: str) -> tuple | None:
+    """What a rewrite of ``path`` alters: (mtime_ns, size) of the file,
+    or of every file under a dataset directory. None when ``path`` is
+    not local (then nothing is memoised)."""
+    try:
+        if os.path.isdir(path):
+            files = sorted(
+                os.path.join(d, f) for d, _, fs in os.walk(path) for f in fs
+            )
+        else:
+            files = [path]
+        return tuple(
+            (f, st.st_mtime_ns, st.st_size) for f in files for st in [os.stat(f)]
+        )
+    except OSError:
+        return None
+
+
+def _memo_hit(path: str, stamp: tuple | None):
+    """The memoised (nanos columns, raw schema) of ``path`` if its stamp
+    still matches, else None."""
+    with _SCHEMAS_LOCK:
+        hit = _SCHEMAS.get(path)
+    if stamp is None or hit is None or hit[0] != stamp:
+        return None
+    return hit[1]
+
+
+def read_parquet_raw(
+    spark: SparkSession, path: str
+) -> tuple[set[str] | None, DataFrame]:
+    """(TIMESTAMP(NANOS) columns or None, raw DataFrame) of the parquet
+    file or dataset at ``path``, with the schema memoised per path.
+
+    The first read of a file infers its schema (one Spark job) and
+    memoises it with the footer's nanos columns
+    (:func:`_nanos_timestamp_cols`); later reads hand the schema to
+    ``spark.read.schema``, which plans the same scan with no job. Both
+    read under the ``nanosAsLong`` setting the footer calls for. An
+    entry is reused only while its stamp (:func:`_stamp`: the file's
+    mtime and size) still matches. Thread-safe: concurrent first reads
+    each infer, and store the same entry."""
+    stamp = _stamp(path)
+    meta = _memo_hit(path, stamp)
+    if meta is not None:
+        nanos_cols, raw = meta
+        return nanos_cols, _read(spark, spark.read.schema(raw), path, nanos_cols)
+    nanos_cols = _nanos_timestamp_cols(path)
+    df = _read(spark, spark.read, path, nanos_cols)
+    if stamp is not None:
+        with _SCHEMAS_LOCK:
+            _SCHEMAS[path] = (stamp, (nanos_cols, df.schema))
+    return nanos_cols, df
+
+
+def _read(spark: SparkSession, reader, path: str, nanos_cols) -> DataFrame:
+    """``reader.parquet(path)`` under the ``nanosAsLong`` setting the
+    footer's ``nanos_cols`` call for."""
+    if nanos_cols is None:
+        # Footer inspection unavailable (no pyarrow / unreadable
+        # footer): fall back to the name-based heuristic — set the conf
+        # (harmless when no nanos columns exist); the loader converts
+        # known timestamp-named bigints.
+        spark.conf.set(_NANOS_AS_LONG, "true")
+        return reader.parquet(path)
+    if nanos_cols:
+        # TIMESTAMP(NANOS) only surfaces as a readable type under
+        # nanosAsLong. Scope the conf to this read: the hadoop conf is
+        # captured when the DataFrame is created, so restoring right
+        # after spark.read.parquet does not disturb the (lazy) scan,
+        # and unrelated reads in the session are unaffected.
+        with scoped_conf(spark, _NANOS_AS_LONG, "true"):
+            return reader.parquet(path)
+    return reader.parquet(path)
 
 
 # Name-based fallback when the parquet footer can't be inspected:
@@ -192,10 +275,13 @@ def ensure_nanos_readable(spark: SparkSession, path: str) -> bool:
     True. Leaving it set is safe for this engine — the loader dispatches
     on the footer, not the conf — and is required for the stream's whole
     lifetime. No-op (returns False) for non-nanos layouts, so the common
-    case never touches session state."""
-    nanos = _nanos_timestamp_cols(path)
+    case never touches session state. The footer's nanos columns come
+    from the :func:`read_parquet_raw` memo when the file was read
+    before."""
+    meta = _memo_hit(path, _stamp(path))
+    nanos = meta[0] if meta is not None else _nanos_timestamp_cols(path)
     if nanos is None or nanos:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        spark.conf.set(_NANOS_AS_LONG, "true")
         return True
     return False
 

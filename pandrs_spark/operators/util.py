@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import threading
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -12,6 +15,8 @@ __all__ = [
     "fan_out",
     "fan_out_groups",
     "right_size_keyed",
+    "right_sized_width",
+    "scoped_conf",
     "small_local_df",
     "tracked_persist",
 ]
@@ -33,6 +38,47 @@ def tracked_persist(df: DataFrame, level=None) -> DataFrame:
     df = df.persist(level) if level is not None else df.persist()
     _PERSISTED.append(df)
     return df
+
+
+# (session, key) -> (value before the first open scope, open scopes as
+# [token, value], oldest first); see scoped_conf
+_SCOPES: dict[tuple[str, str], tuple[str | None, list]] = {}
+_SCOPES_LOCK = threading.Lock()
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, key: str, value: str):
+    """Set the session conf ``key`` to ``value`` for the body of a
+    ``with`` block, then put back what was there before: the previous
+    value, or no value at all (the key is unset) when it had none. The
+    restore also runs when the body raises, so no scoped setting ever
+    leaks into the rest of the session.
+
+    Scopes of one key that overlap, nested or in threads sharing the
+    session, are restored together: closing one reinstates the value of
+    the latest scope still open, and the last to close puts back the
+    value from before the first. A plain save-and-restore would let two
+    overlapping threads each restore the other's setting and leave it
+    behind. While scopes overlap, the latest one's value holds."""
+    slot = (spark._jsparkSession.sessionUUID(), key)
+    token = object()
+    with _SCOPES_LOCK:
+        before, scopes = _SCOPES.setdefault(slot, (spark.conf.get(key, None), []))
+        scopes.append([token, value])
+        spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        with _SCOPES_LOCK:
+            scopes[:] = [s for s in scopes if s[0] is not token]
+            if scopes:
+                spark.conf.set(key, scopes[-1][1])
+            else:
+                del _SCOPES[slot]
+                if before is None:
+                    spark.conf.unset(key)
+                else:
+                    spark.conf.set(key, before)
 
 
 def small_local_df(
@@ -198,15 +244,25 @@ def right_size_keyed(
     returns ``df`` unchanged and keeps the shuffle-partition/AQE
     sizing, so production-scale tables are never squeezed.
     """
+    target = right_sized_width(df, bytes_per_task)
+    if target is None:
+        return df
+    return df.repartition(target, *[F.col(c) for c in key_cols])
+
+
+def right_sized_width(df: DataFrame, bytes_per_task: int = 1 << 22) -> int | None:
+    """The partition count :func:`right_size_keyed` gives ``df``, from
+    its optimizer size estimate; None when ``df`` is not provably
+    smaller than one task per core, or its size is unknown."""
     sc = df.sparkSession.sparkContext
     try:
         size = int(
             df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
         )
-    except Exception:  # noqa: BLE001 — stats unavailable: keep as-is
-        return df
+    except Exception:  # noqa: BLE001 — stats unavailable: not provably small
+        return None
     if size >= (1 << 62):
-        return df
+        return None
     # Floor at 2 partitions: hashpartitioning(k, 1) canonicalizes to
     # Exchange SinglePartition in the physical plan, which the
     # registry-wide census (tools/plan_report.py) rightly treats as a
@@ -223,8 +279,8 @@ def right_size_keyed(
     # frames therefore always collapse to 2; anything larger keeps the
     # one-task-per-core proof requirement (and AQE sizing) as before.
     if target >= max(sc.defaultParallelism, 3):
-        return df
-    return df.repartition(int(target), *[F.col(c) for c in key_cols])
+        return None
+    return int(target)
 
 
 def fan_out_groups(df: DataFrame, *key_cols: str) -> DataFrame:

@@ -660,14 +660,16 @@ def _events_static_and_stream(spark, sf_dir):
     """(static_df, stream_df) over events.parquet, both with normalized
     ``ts``. ensure_nanos_readable handles the TIMESTAMP(NANOS) layout:
     raw and streaming reads plan/execute outside load_table's scoped
-    conf, so the conf must cover the stream's whole lifetime."""
+    conf, so the conf must cover the stream's whole lifetime. Both reads
+    take the catalog's memoised schema, so neither runs an inference
+    job."""
     import os
 
-    from pandrs_spark.catalog import ensure_nanos_readable
+    from pandrs_spark.catalog import ensure_nanos_readable, read_parquet_raw
 
     path = os.path.join(sf_dir, "events.parquet")
     ensure_nanos_readable(spark, path)
-    static = spark.read.parquet(path)
+    _, static = read_parquet_raw(spark, path)
     # the glob-wrapped path ([t]) makes the file source treat the
     # single parquet FILE as a one-file directory listing
     glob_path = path[:-1] + f"[{path[-1]}]"

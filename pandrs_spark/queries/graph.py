@@ -84,7 +84,11 @@ def _trade_edges(spark, sf_dir):
 
 
 def _strong_edges(spark, sf_dir):
-    trade = _trade_edges(spark, sf_dir)
+    # Persisted before the probe: the average is a driver action over
+    # the four-way join on lineitem, and every caller then runs the
+    # strong edges themselves; unpersisted, the join ran twice (q69 at
+    # sf0.1: 10 -> 7 Spark jobs for this helper).
+    trade = tracked_persist(_trade_edges(spark, sf_dir))
     avg_cnt = trade.agg(F.avg("cnt")).first()[0]
     return trade.filter(F.col("cnt") > avg_cnt).select("src", "dst")
 

@@ -22,7 +22,7 @@ from contextlib import contextmanager
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from pandrs_spark.operators.util import tracked_persist
+from pandrs_spark.operators.util import scoped_conf, tracked_persist
 
 __all__ = [
     "scoped_state_partitions",
@@ -269,14 +269,11 @@ def scoped_state_partitions(spark, source_path: str, bytes_per_partition: int = 
         target = max(2, min(sc.defaultParallelism, int(size // bytes_per_partition) + 1))
     except OSError:
         target = None
-    old = spark.conf.get("spark.sql.shuffle.partitions", None)
-    if target is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(target))
-    try:
+    if target is None:
         yield
-    finally:
-        if target is not None and old is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", old)
+        return
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", str(target)):
+        yield
 
 
 def stream_to_memory(df: DataFrame, name: str, output_mode: str = "update"):

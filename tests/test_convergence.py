@@ -315,6 +315,18 @@ def _fan_cycle(spark):
     )
 
 
+def _two_cycle_tail(spark):
+    # 2-cycle 0<->1 feeding the chain 1->9->8->7->6 (with chords out of
+    # 0): one outer round retires the cycle and the trimmed sink 6, and
+    # the leftover chain 9->8->7 is acyclic, so its own-id labels are
+    # already the converged answer
+    return small_local_df(
+        spark,
+        [(0, 1), (1, 0), (1, 9), (9, 8), (8, 7), (7, 6), (0, 9), (0, 8), (0, 7)],
+        "src bigint, dst bigint",
+    )
+
+
 # name -> (graph, run(edges, budget, check_convergence), budgets)
 EXACTNESS_CASES = {
     "cc_path10": (
@@ -363,6 +375,13 @@ EXACTNESS_CASES = {
             e, max_iter=b, check_convergence=check
         ),
         range(7),
+    ),
+    "scc_two_cycle_tail": (
+        _two_cycle_tail,
+        lambda e, b, check: strongly_connected_components(
+            e, max_iter=b, check_convergence=check
+        ),
+        range(5),
     ),
     "sssp_costed_path": (
         _costed_path,

@@ -5,6 +5,7 @@ from __future__ import annotations
 import pytest
 
 from pandrs_spark.operators.graph import (
+    _frontier_walk,
     bfs_hops,
     connected_components,
     degrees,
@@ -12,7 +13,7 @@ from pandrs_spark.operators.graph import (
     symmetrize,
     triangle_count,
 )
-from pandrs_spark.operators.util import small_local_df
+from pandrs_spark.operators.util import scoped_conf, small_local_df
 
 
 @pytest.fixture()
@@ -43,6 +44,55 @@ def test_connected_components(two_component_graph):
     assert comp[1] == comp[2] == comp[3] == 1
     assert comp[4] == comp[5] == 4
     assert 6 not in comp  # self-loop-only vertex has no edges after closure
+
+
+def test_frontier_walk_leaves_aqe_setting_unchanged(spark):
+    """The walk plans its rounds with AQE off and puts the session's
+    setting back on return, and also when a hop fails to plan (here:
+    edges without a ``dst`` column)."""
+    key = "spark.sql.adaptive.enabled"
+    before = spark.conf.get(key)
+    e = small_local_df(spark, [(1, 2), (2, 3)], "src bigint, dst bigint")
+    assert {r["id"]: r["hops"] for r in bfs_hops(e, [1]).collect()} == {
+        1: 0,
+        2: 1,
+        3: 2,
+    }
+    assert spark.conf.get(key) == before
+    no_dst = small_local_df(spark, [(1, 2)], "src bigint, nbr bigint")
+    seeds = small_local_df(spark, [(1,)], "id bigint")
+    with pytest.raises(Exception, match="dst"):
+        _frontier_walk(no_dst, seeds, ["id"], 3)
+    assert spark.conf.get(key) == before
+
+
+def test_scoped_conf_unsets_a_key_it_found_unset(spark):
+    key = "spark.pandrs.test.scoped"
+    assert spark.conf.get(key, None) is None
+    with pytest.raises(ValueError):
+        with scoped_conf(spark, key, "on"):
+            assert spark.conf.get(key) == "on"
+            raise ValueError
+    assert spark.conf.get(key, None) is None
+
+
+def test_scoped_conf_overlapping_scopes_restore_the_original(spark):
+    """Nested scopes restore the enclosing scope's value; scopes that
+    close out of order (two threads sharing the session) leave the
+    latest open value, and the last to close restores the original."""
+    key = "spark.pandrs.test.overlap"
+    with scoped_conf(spark, key, "outer"):
+        with scoped_conf(spark, key, "inner"):
+            assert spark.conf.get(key) == "inner"
+        assert spark.conf.get(key) == "outer"
+    assert spark.conf.get(key, None) is None
+    first, second = scoped_conf(spark, key, "a"), scoped_conf(spark, key, "b")
+    first.__enter__()
+    second.__enter__()
+    first.__exit__(None, None, None)
+    assert spark.conf.get(key) == "b"
+    second.__exit__(None, None, None)
+    assert spark.conf.get(key, None) is None
 
 
 def test_pagerank_uniform_on_symmetric_cycle(spark):

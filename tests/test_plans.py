@@ -73,9 +73,11 @@ import pytest
 # Queries that MUTATE shared session state, so the registry plan sweep
 # builds them one at a time after the thread pool: the streaming set
 # (scoped_state_partitions sets and restores spark.sql.shuffle.partitions
-# session-wide) and everything that writes catalog tables or shared
+# session-wide), the frontier-walk callers (the walk plans its rounds
+# with AQE off and a right-sized shuffle width, set session-wide while
+# it runs) and everything that writes catalog tables or shared
 # warehouse/tmp paths. test_sequential_covers_state_scoping_queries
-# keeps the first group complete.
+# keeps the first two groups complete.
 SEQUENTIAL = frozenset({
     # conf-mutating streaming sinks (scoped_state_partitions)
     "q180_streaming_tumbling_counts",
@@ -88,6 +90,14 @@ SEQUENTIAL = frozenset({
     "q367_streaming_cms_maintenance",
     "q372_streaming_static_enrichment",
     "q393_streaming_ewma_anomalies",
+    # frontier walks (operators/graph._frontier_walk scopes AQE off)
+    "q69_trade_bfs_hops",
+    "q112_closeness_centrality",
+    "q122_strongly_connected",
+    "q516_eccentricity_diameter",
+    "q693_wiener_efficiency",
+    "q695_small_world_sigma",
+    "q698_bowtie_decomposition",
     # catalog-table / shared-path writers
     "q168_upsert_latest_orders",
     "q174_io_roundtrip_agg",
@@ -159,19 +169,26 @@ def registry_plan_texts(spark):
 def test_sequential_covers_state_scoping_queries():
     """Every registry query whose function calls
     ``scoped_state_partitions`` (which sets spark.sql.shuffle.partitions
-    for the whole session while it runs) is in ``SEQUENTIAL``, so the
-    pooled plan sweep never builds it beside another query."""
+    for the whole session while it runs) or a frontier walk (which sets
+    AQE off and the shuffle width while it runs) is in ``SEQUENTIAL``,
+    so the pooled plan sweep never builds it beside another query."""
     import inspect
+    import re
 
     import __spark_entry__ as entry
 
-    scoping = {
-        name
-        for name, fn in entry.queries().items()
-        if "scoped_state_partitions(" in inspect.getsource(fn)
+    scopers = {
+        "scoped_state_partitions": r"\bscoped_state_partitions\(",
+        "frontier walk": (
+            r"\b(bfs_hops|closeness_centrality|strongly_connected_components"
+            r"|_frontier_walk)\("
+        ),
     }
-    assert scoping, "no query calls scoped_state_partitions: stale scan?"
-    assert scoping <= SEQUENTIAL, sorted(scoping - SEQUENTIAL)
+    sources = {n: inspect.getsource(fn) for n, fn in entry.queries().items()}
+    for what, pattern in scopers.items():
+        scoping = {n for n, src in sources.items() if re.search(pattern, src)}
+        assert scoping, f"no query calls a {what}: stale scan?"
+        assert scoping <= SEQUENTIAL, (what, sorted(scoping - SEQUENTIAL))
 
 
 def test_no_accidental_cartesian_products(spark, registry_plan_texts):

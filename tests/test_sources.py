@@ -528,3 +528,81 @@ def test_compact_files_reduces_count_preserves_rows(spark, tmp_path):
     back = spark.read.parquet(dest)
     assert back.count() == 10000
     assert back.agg(F.sum("v")).first()[0] == 2 * sum(range(10000))
+
+
+def _jobs_launched(spark, fn) -> int:
+    """Spark jobs that ``fn()`` launches, counted in a job group of its
+    own. A one-job marker then runs in a second group; the listener bus
+    delivers events in order, so once the marker is visible every job
+    of ``fn`` is too."""
+    import time
+    import uuid
+
+    sc = spark.sparkContext
+    group, marker = (f"{tag}-{uuid.uuid4().hex}" for tag in ("probe", "marker"))
+    try:
+        sc.setJobGroup(group, group)
+        fn()
+        sc.setJobGroup(marker, marker)
+        sc.parallelize([0], 1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    deadline = time.monotonic() + 60
+    while not tracker.getJobIdsForGroup(marker):
+        assert time.monotonic() < deadline, "marker job never reported"
+        time.sleep(0.05)
+    return len(tracker.getJobIdsForGroup(group))
+
+
+def test_second_load_of_a_table_launches_no_job(spark, tmp_path):
+    """The first load of a file infers its schema with a Spark job; a
+    second load of the unchanged file takes the memoised schema and
+    launches none."""
+    import shutil
+
+    from pandrs_spark.catalog import default_sf_dir, load_table
+
+    shutil.copy(
+        os.path.join(default_sf_dir(), "nation.parquet"), tmp_path / "nation.parquet"
+    )
+    first = _jobs_launched(spark, lambda: load_table(spark, str(tmp_path), "nation"))
+    assert first >= 1
+    assert _jobs_launched(spark, lambda: load_table(spark, str(tmp_path), "nation")) == 0
+
+
+def test_rewritten_file_is_inferred_again(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pandrs_spark.catalog import load_table
+
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"a": pa.array([1, 2], pa.int64())}), path)
+    assert load_table(spark, str(tmp_path), "t").columns == ["a"]
+    pq.write_table(
+        pa.table({"a": pa.array([3], pa.int64()), "b": pa.array(["x"])}), path
+    )
+    df = load_table(spark, str(tmp_path), "t")
+    assert df.dtypes == [("a", "bigint"), ("b", "string")]
+    assert [tuple(r) for r in df.collect()] == [(3, "x")]
+
+
+def test_concurrent_loads_share_one_schema(spark, sf_dir):
+    """8 threads loading every table at once, from an empty memo, get
+    the schema a single-threaded load gets."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pandrs_spark import catalog
+
+    with catalog._SCHEMAS_LOCK:
+        catalog._SCHEMAS.clear()
+
+    def load_all(_):
+        return {t: catalog.load_table(spark, sf_dir, t).schema for t in catalog.TABLES}
+
+    with ThreadPoolExecutor(8) as pool:
+        seen = list(pool.map(load_all, range(8)))
+    expected = load_all(None)
+    assert all(s == expected for s in seen)

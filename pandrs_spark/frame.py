@@ -23,6 +23,7 @@ implemented with `isnull() | isnan()` guards on double columns only.
 from __future__ import annotations
 
 from collections.abc import Callable, Mapping, Sequence
+from contextvars import Context, ContextVar, copy_context
 from typing import Any
 
 from pyspark.sql import Column, DataFrame, Window
@@ -41,24 +42,46 @@ __all__ = ["Frame", "StrAccessor", "DtAccessor", "str_", "dt", "read_parquet", "
 # a pinned partition layout), so the handles are registered here and
 # released in bulk once the caller has materialized its results —
 # bench.py calls this between queries and the test session releases on
-# teardown.
-_PERSISTED: list[DataFrame] = []
+# teardown. The list belongs to the calling context (each thread has its
+# own), so two queries built side by side never release each other's
+# caches.
+_PERSISTED: ContextVar[list[DataFrame]] = ContextVar("pandrs_persisted")
+
+
+def _persisted() -> list[DataFrame]:
+    """The calling context's registered frames, created on first use."""
+    frames = _PERSISTED.get(None)
+    if frames is None:
+        frames = []
+        _PERSISTED.set(frames)
+    return frames
+
+
+def persist_context() -> Context:
+    """A copy of the calling context that shares its registered frames:
+    run a callback that Spark invokes on another thread (foreachBatch)
+    in it, and the caller's ``release_persisted()`` frees what the
+    callback persisted."""
+    _persisted()
+    return copy_context()
 
 
 def release_persisted() -> int:
-    """Unpersist every frame registered by ``tracked_persist``.
+    """Unpersist every frame that ``tracked_persist`` registered in the
+    calling context.
 
     Call after the plans built from those frames (sort_values(),
     concat_columns() results, ...) have been materialized; returns the
     number released.
     """
-    n = len(_PERSISTED)
-    for cached in _PERSISTED:
+    frames = _persisted()
+    n = len(frames)
+    for cached in frames:
         try:
             cached.unpersist(False)
         except Exception:
             pass
-    _PERSISTED.clear()
+    frames.clear()
     return n
 
 

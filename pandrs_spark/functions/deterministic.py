@@ -24,6 +24,13 @@ Beyond that (full 100 TB global sums of large products), aggregate
 per-partition-key first (the normal shape) or raise to the decimal
 variant consciously.
 
+One spelling on the Spark side: an exact float sum is ``dsum(x, s)``
+and a windowed one ``dsum_over(x, w, s)``; no module writes
+``F.sum(quantize(x, s)) / 10**s`` out by hand (tests/test_deterministic.py
+scans the package for it). Oracle SQL strings keep their hand-written
+``CAST(SUM(...) AS DOUBLE) / 1e6`` text: that text is the behaviour
+contract, and ``sql_dsum`` would write the scale as ``1000000.0``.
+
 Derived statistics (variance, correlation, t-stats) are computed from
 these exact sums with a *shared formula string* evaluated by both
 engines, so the double arithmetic tree is identical too.

@@ -354,8 +354,8 @@ def gesd_outlier_peel(
     for r in range(1, k + 1):
         st = remaining.agg(
             F.count(F.lit(1)).alias("__n__"),
-            (F.sum(quantize(x, 6)).cast("double") / 1e6).alias("__sx__"),
-            (F.sum(quantize(x * x, 6)).cast("double") / 1e6).alias("__sxx__"),
+            dsum(x, 6).alias("__sx__"),
+            dsum(x * x, 6).alias("__sxx__"),
         )
         scored = remaining.crossJoin(F.broadcast(st)).withColumn(
             "r_stat",
@@ -640,7 +640,6 @@ def mood_median_test(
             / e_below,
         ).alias("cell_chi2"),
     )
-    from pandrs_spark.functions.deterministic import quantize
 
     # chi2 totals a handful of per-group double cells — summed via the
     # quantized exact-long path so the statistic is partition-order
@@ -649,7 +648,7 @@ def mood_median_test(
     chi2 = cells.agg(
         F.when(
             F.count(F.lit(1)) == F.count("cell_chi2"),
-            F.sum(quantize("cell_chi2", 9)).cast("double") / 1e9,
+            dsum("cell_chi2", 9),
         ).alias("chi2")
     )
     return cells.crossJoin(F.broadcast(chi2))
@@ -683,7 +682,6 @@ def cramer_von_mises_2samp(
         F.sum("c1").cast("long").alias("n1"),
         F.sum("c2").cast("long").alias("n2"),
     )
-    from pandrs_spark.functions.deterministic import quantize
 
     d2 = (
         F.col("cum1") / F.col("n1") - F.col("cum2") / F.col("n2")
@@ -691,10 +689,7 @@ def cramer_von_mises_2samp(
     t = cdf.crossJoin(F.broadcast(totals)).agg(
         F.min("n1").alias("n1"),
         F.min("n2").alias("n2"),
-        (
-            F.sum(quantize((F.col("c1") + F.col("c2")) * d2, 9)).cast("double")
-            / 1e9
-        ).alias("t_sum"),
+        dsum((F.col("c1") + F.col("c2")) * d2, 9).alias("t_sum"),
     )
     return t.select(
         "n1",
@@ -727,7 +722,6 @@ def brunner_munzel(
     is partition-order invariant. One row out:
     (n1, n2, p_hat, w_stat).
     """
-    from pandrs_spark.functions.deterministic import quantize
     from pandrs_spark.operators.util import tracked_persist
     from pandrs_spark.operators.windows import global_prefix_counts
 
@@ -749,8 +743,8 @@ def brunner_munzel(
         F.sum("c1").cast("long").alias("n1"),
         F.sum("c2").cast("long").alias("n2"),
         # c*r is an exact multiple of 0.5 — scale-1 quantization exact
-        (F.sum(quantize(F.col("c1") * r, 1)).cast("double") / 10.0).alias("sr1"),
-        (F.sum(quantize(F.col("c2") * r, 1)).cast("double") / 10.0).alias("sr2"),
+        dsum(F.col("c1") * r, 1).alias("sr1"),
+        dsum(F.col("c2") * r, 1).alias("sr2"),
     )
     j = cdf.crossJoin(F.broadcast(stats))
     rbar1 = F.col("sr1") / F.col("n1")
@@ -762,12 +756,8 @@ def brunner_munzel(
         F.min("n2").alias("n2"),
         F.min("sr1").alias("sr1"),
         F.min("sr2").alias("sr2"),
-        (
-            F.sum(quantize(F.col("c1") * dev1 * dev1, 6)).cast("double") / 1e6
-        ).alias("ss1"),
-        (
-            F.sum(quantize(F.col("c2") * dev2 * dev2, 6)).cast("double") / 1e6
-        ).alias("ss2"),
+        dsum(F.col("c1") * dev1 * dev1, 6).alias("ss1"),
+        dsum(F.col("c2") * dev2 * dev2, 6).alias("ss2"),
     )
     n1 = F.col("n1").cast("double")
     n2 = F.col("n2").cast("double")
@@ -809,8 +799,6 @@ def ipf_rake(
     the margin cardinalities, a domain property of raking). Lineage is
     cut per round.
     """
-    from pandrs_spark.functions.deterministic import quantize
-
     w = cells.select(
         F.col(row_col).alias("__r"),
         F.col(col_col).alias("__c"),
@@ -825,10 +813,7 @@ def ipf_rake(
     )
     for _ in range(n_rounds):
         r_tot = w.groupBy("__r").agg(
-            (
-                F.sum(quantize(F.col("__n") * F.col("w"), 9)).cast("double")
-                / 1e9
-            ).alias("__cur_r")
+            dsum(F.col("__n") * F.col("w"), 9).alias("__cur_r")
         )
         w = (
             w.join(F.broadcast(r_tot), "__r")
@@ -841,10 +826,7 @@ def ipf_rake(
             )
         )
         c_tot = w.groupBy("__c").agg(
-            (
-                F.sum(quantize(F.col("__n") * F.col("w"), 9)).cast("double")
-                / 1e9
-            ).alias("__cur_c")
+            dsum(F.col("__n") * F.col("w"), 9).alias("__cur_c")
         )
         w = (
             w.join(F.broadcast(c_tot), "__c")
@@ -884,7 +866,6 @@ def ansari_bradley_test(
     T₁ the sample-1 score sum, and z uses the exact tie-conditional
     moments E[T₁] = n1·Σs/N, Var[T₁] = n1·n2·(N·Σs² − (Σs)²)/(N²(N−1)).
     """
-    from pandrs_spark.functions.deterministic import quantize
     from pandrs_spark.operators.windows import global_prefix_counts
 
     two = df.filter(F.col(group_col).isin([g1, g2]))
@@ -923,24 +904,14 @@ def ansari_bradley_test(
         (_f(hi) - _f(lo)).alias("s_sum"),
     )
     agg = blocks.groupBy("n1", "n2", "nn").agg(
-        (
-            F.sum(
-                quantize(
-                    F.col("c1") * F.col("s_sum") / (F.col("cnt") * F.col("nn")), 12
-                )
-            ).cast("double")
-            / 1e12
+        dsum(
+            F.col("c1") * F.col("s_sum") / (F.col("cnt") * F.col("nn")), 12
         ).alias("t1"),
-        (
-            F.sum(
-                quantize(
-                    F.col("s_sum")
-                    * F.col("s_sum")
-                    / (F.col("cnt") * F.col("nn") * F.col("nn")),
-                    12,
-                )
-            ).cast("double")
-            / 1e12
+        dsum(
+            F.col("s_sum")
+            * F.col("s_sum")
+            / (F.col("cnt") * F.col("nn") * F.col("nn")),
+            12,
         ).alias("ss2"),
         (F.sum("s_sum").cast("double") / F.col("nn") / F.col("nn")).alias("sbar"),
     )
@@ -987,7 +958,6 @@ def cucconi_test(
     the int64 envelope at any scale. Returns 1 row:
     (n1, n2, u, v, c).
     """
-    from pandrs_spark.functions.deterministic import quantize
     from pandrs_spark.operators.windows import global_prefix_counts
 
     two = df.filter(F.col(group_col).isin([g1, g2]))
@@ -1006,12 +976,8 @@ def cucconi_test(
     r_norm = (F.col("cum") - (F.col("cnt") - 1) / 2.0) / F.col("nn")
     s_norm = (F.col("nn") + 1.0) / F.col("nn") - r_norm
     sums = j.groupBy("n1", "n2", "nn").agg(
-        (
-            F.sum(quantize(F.col("c2") * r_norm * r_norm, 12)).cast("double") / 1e12
-        ).alias("sr2"),
-        (
-            F.sum(quantize(F.col("c2") * s_norm * s_norm, 12)).cast("double") / 1e12
-        ).alias("ss2"),
+        dsum(F.col("c2") * r_norm * r_norm, 12).alias("sr2"),
+        dsum(F.col("c2") * s_norm * s_norm, 12).alias("ss2"),
     )
     uv = sums.selectExpr(
         "n1",

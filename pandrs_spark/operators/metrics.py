@@ -114,8 +114,6 @@ def ranking_metrics(
     the global mean so the average is order-independent and
     engine-exact.
     """
-    from pandrs_spark.functions.deterministic import quantize
-
     idcg = sum(1.0 / __import__("math").log2(i + 1) for i in range(1, k + 1))
     p = pred.select(
         F.col(query_col).alias("__q"),
@@ -140,7 +138,7 @@ def ranking_metrics(
     )
     n = F.count(F.lit(1))
     mean9 = lambda c: F.round(  # noqa: E731
-        F.sum(quantize(c, 9)) / 1e9 / n, 6
+        dsum(c, 9) / n, 6
     )
     return perq.agg(
         n.alias("n_queries"),

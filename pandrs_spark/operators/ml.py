@@ -346,11 +346,7 @@ def feature_scores(long: DataFrame, top_k: int = 2) -> DataFrame:
     shared formula strings so Spark and the SQL oracle evaluate the
     identical double arithmetic tree.
     """
-    from pandrs_spark.functions.deterministic import (
-        CORR_FORMULA,
-        VAR_FORMULA,
-        dsum,
-    )
+    from pandrs_spark.functions.deterministic import CORR_FORMULA, VAR_FORMULA
 
     agg = long.groupBy("feature").agg(
         F.count("x").alias("n"),
@@ -1233,8 +1229,6 @@ def one_class_svm_flags(
     sf0.1: fixpoint at epoch 5 of 15 — 20 driver actions saved).
     Input vectors are L2-normalized first so distances are unit-scale.
     """
-    from pandrs_spark.functions.deterministic import dsum
-
     norm = F.sqrt(
         F.aggregate(
             F.transform(F.col(features_col), lambda v: v * v),
@@ -1242,10 +1236,13 @@ def one_class_svm_flags(
             lambda acc, v: acc + v,
         )
     )
-    pts = df.select(
-        F.col(id_col).alias("id"),
-        F.transform(F.col(features_col), lambda v: v / norm).alias("x"),
-    ).persist()
+    # the returned plan reads pts, so its persist outlives the call
+    pts = tracked_persist(
+        df.select(
+            F.col(id_col).alias("id"),
+            F.transform(F.col(features_col), lambda v: v / norm).alias("x"),
+        )
+    )
 
     n = pts.count()
     d = pts.select(F.size("x")).first()[0]
@@ -1315,13 +1312,11 @@ def one_class_svm_flags(
         c = c_next
 
     dec = F.lit(r2) - dist_sq(c)
-    out = pts.select(
+    return pts.select(
         "id",
         (F.round(dec * 1e6) / 1e6).alias("decision"),
         (dec < 0).cast("int").alias("is_outlier"),
     )
-    pts.unpersist()
-    return out
 
 
 def tsne_project(
@@ -1462,8 +1457,6 @@ def target_encode(
     bit-reproducible on any engine (a must: train/serve encoders have
     to agree exactly). One aggregate + one broadcast of the scalar
     prior. Returns (cat_col, n, encoded)."""
-    from pandrs_spark.functions.deterministic import dsum
-
     prior = df.agg(
         (dsum(target_col, scale) / F.count(target_col)).alias("__prior__")
     )
@@ -1708,8 +1701,6 @@ def em_gmm_1d(
     is mathematically inert on non-degenerate data, so the healthy-path
     double-arithmetic tree (and the oracle hash) is unchanged.
     """
-    from pandrs_spark.functions.deterministic import quantize
-
     sqrt2pi = 2.5066282746310002
     spark = df.sparkSession
     params = small_local_df(
@@ -1743,22 +1734,11 @@ def em_gmm_1d(
         e = j.select(F.col("x"), r.alias("r"))
         s = e.agg(
             F.count(F.lit(1)).alias("n"),
-            (F.sum(quantize("r", 9)).cast("double") / 1e9).alias("a"),
-            (F.sum(quantize(F.col("r") * F.col("x"), 9)).cast("double") / 1e9).alias("b"),
-            (
-                F.sum(quantize(F.col("r") * F.col("x") * F.col("x"), 9)).cast("double")
-                / 1e9
-            ).alias("c"),
-            (
-                F.sum(quantize((1.0 - F.col("r")) * F.col("x"), 9)).cast("double")
-                / 1e9
-            ).alias("d"),
-            (
-                F.sum(
-                    quantize((1.0 - F.col("r")) * F.col("x") * F.col("x"), 9)
-                ).cast("double")
-                / 1e9
-            ).alias("e"),
+            dsum("r", 9).alias("a"),
+            dsum(F.col("r") * F.col("x"), 9).alias("b"),
+            dsum(F.col("r") * F.col("x") * F.col("x"), 9).alias("c"),
+            dsum((1.0 - F.col("r")) * F.col("x"), 9).alias("d"),
+            dsum((1.0 - F.col("r")) * F.col("x") * F.col("x"), 9).alias("e"),
         )
         a_ok = F.col("a") != 0
         na = F.col("n") - F.col("a")
@@ -1843,6 +1823,54 @@ def ransac_line_consensus(
     return scored.orderBy(F.desc("n_inliers"), "t1", "t2").limit(1)
 
 
+def _irls_1d(
+    df: DataFrame, y_col: str, x_col: str, n_iter: int, link, mean, weight
+) -> DataFrame:
+    """``n_iter`` unrolled IRLS rounds of a one-feature GLM, shared by
+    :func:`poisson_irls_1d` and :func:`logistic_irls_1d`.
+
+    Start from b0 = link(ȳ), b1 = 0. Each round takes η = b0 + b1·x,
+    μ = mean(η), w = weight(μ) and z = η + (y−μ)/w, then solves the 2×2
+    weighted normal equations over five exact scale-6 sums in closed
+    form. Returns one row (n, b0, b1, mean_y).
+    """
+    d = df.select(
+        F.col(y_col).cast("long").alias("y"),
+        F.col(x_col).cast("double").alias("x"),
+    )
+    params = d.agg(
+        (F.sum("y").cast("long") / F.count(F.lit(1))).alias("ybar")
+    ).select(link(F.col("ybar")).alias("b0"), F.lit(0.0).alias("b1"))
+    for _ in range(n_iter):
+        j = d.crossJoin(F.broadcast(params))
+        eta = F.col("b0") + F.col("b1") * F.col("x")
+        mu = mean(eta)
+        w = weight(mu)
+        z = eta + (F.col("y") - mu) / w
+        s = j.select(F.col("x"), w.alias("w"), z.alias("z")).agg(
+            dsum("w", 6).alias("sw"),
+            dsum(F.col("w") * F.col("x"), 6).alias("swx"),
+            dsum(F.col("w") * F.col("x") * F.col("x"), 6).alias("swxx"),
+            dsum(F.col("w") * F.col("z"), 6).alias("swz"),
+            dsum(F.col("w") * F.col("x") * F.col("z"), 6).alias("swxz"),
+        )
+        det = F.col("sw") * F.col("swxx") - F.col("swx") * F.col("swx")
+        b1 = (F.col("sw") * F.col("swxz") - F.col("swx") * F.col("swz")) / det
+        params = s.select(
+            F.when(
+                det != 0, (F.col("swz") - b1 * F.col("swx")) / F.col("sw")
+            ).alias("b0"),
+            F.when(det != 0, b1).alias("b1"),
+        )
+    stats = d.agg(
+        F.count(F.lit(1)).cast("long").alias("n"),
+        (F.sum("y").cast("long") / F.count(F.lit(1))).alias("mean_y"),
+    )
+    return F.broadcast(stats).crossJoin(F.broadcast(params)).select(
+        "n", "b0", "b1", "mean_y"
+    )
+
+
 def poisson_irls_1d(
     df: DataFrame, y_col: str, x_col: str, n_iter: int = 3
 ) -> DataFrame:
@@ -1865,48 +1893,7 @@ def poisson_irls_1d(
     Scale: n_iter linear passes, each one map + one aggregate with a
     broadcast scalar parameter carry — the em_gmm_1d shape.
     """
-    from pandrs_spark.functions.deterministic import quantize
-
-    d = df.select(
-        F.col(y_col).cast("long").alias("y"),
-        F.col(x_col).cast("double").alias("x"),
-    )
-    spark = df.sparkSession
-    init = d.agg(
-        (F.sum("y").cast("long") / F.count(F.lit(1))).alias("ybar")
-    ).select(
-        F.log("ybar").alias("b0"), F.lit(0.0).alias("b1")
-    )
-    params = init
-    for _ in range(n_iter):
-        j = d.crossJoin(F.broadcast(params))
-        eta = F.col("b0") + F.col("b1") * F.col("x")
-        mu = F.exp(eta)
-        z = eta + (F.col("y") - mu) / mu
-        s = j.select(
-            F.col("x"), mu.alias("w"), z.alias("z")
-        ).agg(
-            (F.sum(quantize("w", 6)).cast("double") / 1e6).alias("sw"),
-            (F.sum(quantize(F.col("w") * F.col("x"), 6)).cast("double") / 1e6).alias("swx"),
-            (F.sum(quantize(F.col("w") * F.col("x") * F.col("x"), 6)).cast("double") / 1e6).alias("swxx"),
-            (F.sum(quantize(F.col("w") * F.col("z"), 6)).cast("double") / 1e6).alias("swz"),
-            (F.sum(quantize(F.col("w") * F.col("x") * F.col("z"), 6)).cast("double") / 1e6).alias("swxz"),
-        )
-        det = F.col("sw") * F.col("swxx") - F.col("swx") * F.col("swx")
-        b1 = (F.col("sw") * F.col("swxz") - F.col("swx") * F.col("swz")) / det
-        params = s.select(
-            F.when(
-                det != 0, (F.col("swz") - b1 * F.col("swx")) / F.col("sw")
-            ).alias("b0"),
-            F.when(det != 0, b1).alias("b1"),
-        )
-    stats = d.agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        (F.sum("y").cast("long") / F.count(F.lit(1))).alias("mean_y"),
-    )
-    return F.broadcast(stats).crossJoin(F.broadcast(params)).select(
-        "n", "b0", "b1", "mean_y"
-    )
+    return _irls_1d(df, y_col, x_col, n_iter, F.log, F.exp, lambda mu: mu)
 
 
 def logistic_irls_1d(
@@ -1928,44 +1915,12 @@ def logistic_irls_1d(
     Scale: n_iter linear passes, one map + one aggregate each, scalar
     parameter carry — the poisson_irls_1d shape exactly.
     """
-    from pandrs_spark.functions.deterministic import quantize
-
-    d = df.select(
-        F.col(y_col).cast("long").alias("y"),
-        F.col(x_col).cast("double").alias("x"),
-    )
-    init = d.agg(
-        (F.sum("y").cast("long") / F.count(F.lit(1))).alias("ybar")
-    ).select(
-        F.log(F.col("ybar") / (1 - F.col("ybar"))).alias("b0"),
-        F.lit(0.0).alias("b1"),
-    )
-    params = init
-    for _ in range(n_iter):
-        j = d.crossJoin(F.broadcast(params))
-        eta = F.col("b0") + F.col("b1") * F.col("x")
-        mu = 1.0 / (1.0 + F.exp(-eta))
-        w = mu * (1.0 - mu)
-        z = eta + (F.col("y") - mu) / w
-        s = j.select(F.col("x"), w.alias("w"), z.alias("z")).agg(
-            (F.sum(quantize("w", 6)).cast("double") / 1e6).alias("sw"),
-            (F.sum(quantize(F.col("w") * F.col("x"), 6)).cast("double") / 1e6).alias("swx"),
-            (F.sum(quantize(F.col("w") * F.col("x") * F.col("x"), 6)).cast("double") / 1e6).alias("swxx"),
-            (F.sum(quantize(F.col("w") * F.col("z"), 6)).cast("double") / 1e6).alias("swz"),
-            (F.sum(quantize(F.col("w") * F.col("x") * F.col("z"), 6)).cast("double") / 1e6).alias("swxz"),
-        )
-        det = F.col("sw") * F.col("swxx") - F.col("swx") * F.col("swx")
-        b1 = (F.col("sw") * F.col("swxz") - F.col("swx") * F.col("swz")) / det
-        params = s.select(
-            F.when(
-                det != 0, (F.col("swz") - b1 * F.col("swx")) / F.col("sw")
-            ).alias("b0"),
-            F.when(det != 0, b1).alias("b1"),
-        )
-    stats = d.agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        (F.sum("y").cast("long") / F.count(F.lit(1))).alias("mean_y"),
-    )
-    return F.broadcast(stats).crossJoin(F.broadcast(params)).select(
-        "n", "b0", "b1", "mean_y"
+    return _irls_1d(
+        df,
+        y_col,
+        x_col,
+        n_iter,
+        lambda p: F.log(p / (1 - p)),
+        lambda eta: 1.0 / (1.0 + F.exp(-eta)),
+        lambda mu: mu * (1.0 - mu),
     )

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from pandrs_spark.functions.deterministic import dsum
 from pandrs_spark.operators.util import fan_out
 
 __all__ = ["dot", "l2_norm", "cosine", "cosine_topk", "nearest_neighbors", "knn_topk_edges", "ivf_topk", "ivfadc_topk", "derive_lsh_config", "quantize_embeddings_int8", "semantic_dedup", "mmr_rerank", "embedding_decontaminate", "dimension_energy"]
@@ -1573,10 +1574,8 @@ def dimension_energy(
     )
     stats = dims.groupBy("dim").agg(
         F.count(F.lit(1)).alias("n"),
-        (F.sum(quantize("v", 6)).cast("double") / 1e6).alias("sx"),
-        (F.sum(quantize(F.col("v") * F.col("v"), 6)).cast("double") / 1e6).alias(
-            "sxx"
-        ),
+        dsum("v", 6).alias("sx"),
+        dsum(F.col("v") * F.col("v"), 6).alias("sxx"),
     )
     stats = stats.withColumn(
         "var_pop", F.expr("(sxx - sx * sx / n) / n")

@@ -15,6 +15,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
+from pandrs_spark.functions.deterministic import dsum, dsum_over
 from pandrs_spark.operators.util import fan_out_groups, small_local_df
 
 __all__ = [
@@ -250,7 +251,7 @@ def _seasonal_decompose(
     partition_by: Sequence[str],
     model: str,
 ) -> DataFrame:
-    from pandrs_spark.functions.deterministic import davg, dsum_over
+    from pandrs_spark.functions.deterministic import davg
 
     keys = list(partition_by)
     half = period // 2
@@ -554,7 +555,7 @@ def periodogram(
     independent of series length. Sums quantize to scaled BIGINT
     (functions/deterministic) so power is engine-reproducible.
     """
-    from pandrs_spark.functions.deterministic import dsum, quantize
+    from pandrs_spark.functions.deterministic import quantize
 
     spark = series.sparkSession
     n_mean = series.agg(
@@ -613,7 +614,7 @@ def ar2_fit(series: DataFrame, ts_col: str, value_col: str) -> DataFrame:
     solve happens in the projection. Returns one row: n_obs, phi1,
     phi2, rss, next_forecast (one-step-ahead).
     """
-    from pandrs_spark.functions.deterministic import dsum, quantize
+    from pandrs_spark.functions.deterministic import quantize
 
     n_mean = series.agg(
         F.count(F.lit(1)).alias("n"), dsum(value_col).alias("s")
@@ -796,8 +797,6 @@ def ts_feature_matrix(
     mean/std use dsum_over quantized sums so results are
     order-independent and oracle-exact.
     """
-    from pandrs_spark.functions.deterministic import dsum_over
-
     w = Window.partitionBy(series_col).orderBy(ts_col)
     wr = w.rowsBetween(-(window - 1), 0)
     v = F.col(value_col)
@@ -1085,8 +1084,6 @@ def sbc_demand_classification(
     one shuffle on the series key. Moments come from quantized exact
     long sums (functions/deterministic.py) so the result is
     partition-order invariant."""
-    from pandrs_spark.functions.deterministic import dsum
-
     x = F.col(value_col).cast("double")
     nz = F.when(x > 0, x)
     agg = df.groupBy(*partition_by).agg(
@@ -1212,8 +1209,6 @@ def logrank_test(
     terms are summed as quantized exact longs, so the statistic is
     partition-order invariant.
     """
-    from pandrs_spark.functions.deterministic import quantize
-
     g = F.col(group_col)
     e = F.col(event_col)
     grp = df.groupBy(duration_col).agg(
@@ -1258,8 +1253,8 @@ def logrank_test(
         F.min("n1_total").alias("n1"),
         F.min("n0_total").alias("n0"),
         F.sum("d1").cast("long").alias("o1"),
-        (F.sum(quantize(e1_term, 9)).cast("double") / 1e9).alias("e1"),
-        (F.sum(quantize(v_term, 9)).cast("double") / 1e9).alias("v"),
+        dsum(e1_term, 9).alias("e1"),
+        dsum(v_term, 9).alias("v"),
     )
     # v = 0 (every distinct event time has n1+n0 <= 1, or one arm is
     # empty) means the test carries no information: chi2 is NULL by
@@ -1471,9 +1466,7 @@ def page_hinkley(
         F.col(order_col).alias("__o"),
         F.col(value_col).alias("x"),
         F.row_number().over(w_ord).alias("i"),
-        (F.sum(quantize(value_col, 6)).over(w_in).cast("double") / 1e6).alias(
-            "sx"
-        ),
+        dsum_over(value_col, w_in, 6).alias("sx"),
     )
     w_run = Window.orderBy("__o").rowsBetween(Window.unboundedPreceding, 0)
     terms = pref.select(
@@ -1484,9 +1477,7 @@ def page_hinkley(
     cum = terms.select(
         "__o",
         "i",
-        (F.sum(quantize("term", 6)).over(w_run).cast("double") / 1e6).alias(
-            "c"
-        ),
+        dsum_over("term", w_run, 6).alias("c"),
     )
     ph = cum.select(
         "__o", "i", "c", (F.col("c") - F.min("c").over(w_run)).alias("ph_t")

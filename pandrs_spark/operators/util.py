@@ -33,10 +33,10 @@ def tracked_persist(df: DataFrame, level=None) -> DataFrame:
     call ``release_persisted()`` per query, so the cache-manager count
     returns to zero between queries.
     """
-    from pandrs_spark.frame import _PERSISTED
+    from pandrs_spark.frame import _persisted
 
     df = df.persist(level) if level is not None else df.persist()
-    _PERSISTED.append(df)
+    _persisted().append(df)
     return df
 
 

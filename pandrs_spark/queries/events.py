@@ -15,7 +15,12 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from pandrs_spark.catalog import load_table as T
-from pandrs_spark.functions.deterministic import dsum, sql_dsum, sql_dsum_over
+from pandrs_spark.functions.deterministic import (
+    dsum,
+    dsum_over,
+    sql_dsum,
+    sql_dsum_over,
+)
 from pandrs_spark.operators.joins import asof_join
 from pandrs_spark.operators.timeseries import date_range, ffill, resample, upsample_grid
 from pandrs_spark.operators.util import small_local_df
@@ -689,7 +694,7 @@ def _events_static_and_stream(spark, sf_dir):
 )
 def q180(spark, sf_dir):
     from pandrs_spark.streaming.windows import (
-        scoped_state_partitions,
+        run_available_now,
         stream_to_memory,
         tumbling,
         windowed_agg,
@@ -704,11 +709,12 @@ def q180(spark, sf_dir):
         watermark=("ts", "2 hours"),
     )
     sink = "q180_stream_sink"
-    with scoped_state_partitions(spark, os.path.join(sf_dir, "events.parquet")):
-        q = stream_to_memory(agg, sink, output_mode="complete")
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("q180 streaming query did not finish in 300s")
+    run_available_now(
+        spark,
+        os.path.join(sf_dir, "events.parquet"),
+        lambda: stream_to_memory(agg, sink, output_mode="complete"),
+        "q180",
+    )
     return (
         spark.table(sink)
         .select(
@@ -738,8 +744,8 @@ def q180(spark, sf_dir):
 )
 def q181(spark, sf_dir):
     from pandrs_spark.streaming.windows import (
-        scoped_state_partitions,
         dedup_within_watermark,
+        run_available_now,
         stream_to_memory,
     )
 
@@ -763,11 +769,12 @@ def q181(spark, sf_dir):
         F.count(F.lit(1)).alias("n_users")
     )
     sink = "q181_stream_sink"
-    with scoped_state_partitions(spark, os.path.join(sf_dir, "events.parquet")):
-        q = stream_to_memory(counts, sink, output_mode="complete")
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("q181 streaming query did not finish in 300s")
+    run_available_now(
+        spark,
+        os.path.join(sf_dir, "events.parquet"),
+        lambda: stream_to_memory(counts, sink, output_mode="complete"),
+        "q181",
+    )
     return (
         spark.table(sink)
         .select("event_type", F.col("n_users").cast("long").alias("n_users"))
@@ -875,7 +882,7 @@ def q193(spark, sf_dir):
 )
 def q203(spark, sf_dir):
     from pandrs_spark.streaming.windows import (
-        scoped_state_partitions,
+        run_available_now,
         stream_stream_interval_join,
         stream_to_memory,
     )
@@ -902,11 +909,12 @@ def q203(spark, sf_dir):
         watermark_delay=f"{delay_days} days",
     )
     sink = "q203_stream_sink"
-    with scoped_state_partitions(spark, os.path.join(sf_dir, "events.parquet")):
-        q = stream_to_memory(joined, sink, output_mode="append")
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("q203 streaming query did not finish in 300s")
+    run_available_now(
+        spark,
+        os.path.join(sf_dir, "events.parquet"),
+        lambda: stream_to_memory(joined, sink, output_mode="append"),
+        "q203",
+    )
     return (
         spark.table(sink)
         .groupBy(F.date_trunc("hour", "view_ts").alias("hour_start"))
@@ -937,7 +945,7 @@ def q203(spark, sf_dir):
 )
 def q228(spark, sf_dir):
     from pandrs_spark.streaming.windows import (
-        scoped_state_partitions,
+        run_available_now,
         sliding,
         stream_to_memory,
         windowed_agg,
@@ -952,11 +960,12 @@ def q228(spark, sf_dir):
         watermark=("ts", "4 hours"),
     )
     sink = "q228_stream_sink"
-    with scoped_state_partitions(spark, os.path.join(sf_dir, "events.parquet")):
-        q = stream_to_memory(agg, sink, output_mode="complete")
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("q228 streaming query did not finish in 300s")
+    run_available_now(
+        spark,
+        os.path.join(sf_dir, "events.parquet"),
+        lambda: stream_to_memory(agg, sink, output_mode="complete"),
+        "q228",
+    )
     return (
         spark.table(sink)
         .select(
@@ -1004,7 +1013,7 @@ def q228(spark, sf_dir):
 )
 def q229(spark, sf_dir):
     from pandrs_spark.streaming.windows import (
-        scoped_state_partitions,
+        run_available_now,
         session,
         stream_to_memory,
         windowed_agg,
@@ -1019,11 +1028,12 @@ def q229(spark, sf_dir):
         watermark=("ts", "2 hours"),
     )
     sink = "q229_stream_sink"
-    with scoped_state_partitions(spark, os.path.join(sf_dir, "events.parquet")):
-        q = stream_to_memory(agg, sink, output_mode="complete")
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("q229 streaming query did not finish in 300s")
+    run_available_now(
+        spark,
+        os.path.join(sf_dir, "events.parquet"),
+        lambda: stream_to_memory(agg, sink, output_mode="complete"),
+        "q229",
+    )
     return (
         spark.table(sink)
         .groupBy("user_id")
@@ -1058,7 +1068,7 @@ def q229(spark, sf_dir):
 )
 def q238(spark, sf_dir):
     from pandrs_spark.streaming.windows import (
-        scoped_state_partitions,
+        run_available_now,
         stateful_drawdown,
         stream_to_memory,
     )
@@ -1072,11 +1082,12 @@ def q238(spark, sf_dir):
         order_col="event_id",
     )
     sink = "q238_stream_sink"
-    with scoped_state_partitions(spark, os.path.join(sf_dir, "events.parquet")):
-        q = stream_to_memory(dd, sink, output_mode="update")
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("q238 streaming query did not finish in 300s")
+    run_available_now(
+        spark,
+        os.path.join(sf_dir, "events.parquet"),
+        lambda: stream_to_memory(dd, sink, output_mode="update"),
+        "q238",
+    )
     return (
         spark.table(sink)
         .groupBy("user_id")
@@ -1490,8 +1501,6 @@ _Q271_Z = "(value - sx / n) / SQRT((sxx - sx * sx / n) / (n - 1))"
     """,
 )
 def q271(spark, sf_dir):
-    from pandrs_spark.functions.deterministic import dsum_over
-
     ev = T(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
@@ -1934,22 +1943,23 @@ def q299(spark, sf_dir):
     from pandrs_spark.functions.deterministic import quantize
     from pandrs_spark.streaming.windows import (
         incremental_aggregate_sink,
-        scoped_state_partitions,
+        run_available_now,
     )
 
     _static, sdf = _events_static_and_stream(spark, sf_dir)
     enriched = sdf.select("event_type", quantize("value", 4).alias("vq"))
-    with scoped_state_partitions(spark, os.path.join(sf_dir, "events.parquet")):
-        q = incremental_aggregate_sink(
+    run_available_now(
+        spark,
+        os.path.join(sf_dir, "events.parquet"),
+        lambda: incremental_aggregate_sink(
             enriched,
             keys=["event_type"],
             count_col="n",
             sum_cols=["vq"],
             table="q299_inc_agg",
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("q299 streaming query did not finish in 300s")
+        ),
+        "q299",
+    )
     return (
         spark.table("global_temp.q299_inc_agg")
         .select(
@@ -2904,7 +2914,7 @@ def q367(spark, sf_dir):
     from pandrs_spark.operators.sketches import _cms_bucket
     from pandrs_spark.streaming.windows import (
         incremental_aggregate_sink,
-        scoped_state_partitions,
+        run_available_now,
     )
 
     _static, sdf = _events_static_and_stream(spark, sf_dir)
@@ -2917,17 +2927,18 @@ def q367(spark, sf_dir):
         )
         .select("__i__", _cms_bucket(width, fast_hash=False))
     )
-    with scoped_state_partitions(spark, os.path.join(sf_dir, "events.parquet")):
-        q = incremental_aggregate_sink(
+    run_available_now(
+        spark,
+        os.path.join(sf_dir, "events.parquet"),
+        lambda: incremental_aggregate_sink(
             hashed,
             keys=["__i__", "__b__"],
             count_col="__c__",
             sum_cols=[],
             table="q367_cms_grid",
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("q367 streaming query did not finish in 300s")
+        ),
+        "q367",
+    )
     grid = spark.table("global_temp.q367_cms_grid")
     ev = T(spark, sf_dir, "events")
     keys = ev.groupBy(F.col("event_type").cast("string").alias("__k__")).agg(
@@ -2963,8 +2974,6 @@ def q367(spark, sf_dir):
 # shuffle is the windowed aggregation's. Reference: streaming
 # enrichment surface of src/streaming/mod.rs:218.
 def _q372_oracle() -> str:
-    from pandrs_spark.functions.deterministic import sql_dsum
-
     return f"""
     WITH dim AS (
         SELECT DISTINCT user_id,
@@ -2984,9 +2993,8 @@ def _q372_oracle() -> str:
 
 @query("q372_streaming_static_enrichment", oracle=_q372_oracle())
 def q372(spark, sf_dir):
-    from pandrs_spark.functions.deterministic import dsum
     from pandrs_spark.streaming.windows import (
-        scoped_state_partitions,
+        run_available_now,
         stream_to_memory,
         tumbling,
         windowed_agg,
@@ -3012,11 +3020,12 @@ def q372(spark, sf_dir):
         watermark=("ts", "2 days"),
     )
     sink = "q372_stream_sink"
-    with scoped_state_partitions(spark, os.path.join(sf_dir, "events.parquet")):
-        q = stream_to_memory(agg, sink, output_mode="complete")
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("q372 streaming query did not finish in 300s")
+    run_available_now(
+        spark,
+        os.path.join(sf_dir, "events.parquet"),
+        lambda: stream_to_memory(agg, sink, output_mode="complete"),
+        "q372",
+    )
     return (
         spark.table(sink)
         .select(
@@ -3077,7 +3086,7 @@ def q372(spark, sf_dir):
 def q393(spark, sf_dir):
     from pandrs_spark.functions.deterministic import quantize
     from pandrs_spark.streaming.windows import (
-        scoped_state_partitions,
+        run_available_now,
         stateful_ewma_anomaly,
         stream_to_memory,
     )
@@ -3094,11 +3103,12 @@ def q393(spark, sf_dir):
         warmup=5,
     )
     sink = "q393_stream_sink"
-    with scoped_state_partitions(spark, os.path.join(sf_dir, "events.parquet")):
-        q = stream_to_memory(det, sink, output_mode="update")
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("q393 streaming query did not finish in 300s")
+    run_available_now(
+        spark,
+        os.path.join(sf_dir, "events.parquet"),
+        lambda: stream_to_memory(det, sink, output_mode="update"),
+        "q393",
+    )
     final = spark.table(sink).groupBy("user_id").agg(
         F.max("n_events").alias("n_events"),
         F.expr("max_by(ewma, n_events)").alias("__ewma__"),
@@ -3935,8 +3945,6 @@ def q427(spark, sf_dir):
     """,
 )
 def q438(spark, sf_dir):
-    from pandrs_spark.functions.deterministic import quantize
-
     ev = T(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = ev.select(
@@ -3961,9 +3969,7 @@ def q438(spark, sf_dir):
     return terms.agg(
         F.min("total").alias("n_transitions"),
         F.count(F.lit(1)).cast("long").alias("n_cells"),
-        (F.sum(quantize("term", 9)).cast("double") / 1e9).alias(
-            "entropy_rate_bits"
-        ),
+        dsum("term", 9).alias("entropy_rate_bits"),
     )
 
 
@@ -4028,7 +4034,7 @@ def q439(spark, sf_dir):
     ).filter(F.col("gap_s").isNotNull())
     per_u = gaps.groupBy("user_id").agg(
         F.count("gap_s").cast("long").alias("n"),
-        (F.sum(quantize("gap_s", 6)).cast("double") / 1e6).alias("sg"),
+        dsum("gap_s", 6).alias("sg"),
         F.sum(quantize(F.col("gap_s") * F.col("gap_s"), 0))
         .cast("double")
         .alias("sgg"),
@@ -4041,7 +4047,7 @@ def q439(spark, sf_dir):
     ).select(((sigma - mean) / (sigma + mean)).alias("burst"))
     agg = b.agg(
         F.count(F.lit(1)).cast("long").alias("n_users"),
-        (F.sum(quantize("burst", 9)).cast("double") / 1e9).alias("sb"),
+        dsum("burst", 9).alias("sb"),
     )
     return agg.select(
         "n_users",
@@ -4547,9 +4553,7 @@ def q463(spark, sf_dir):
             .alias("tail_seg")
         )
     )
-    rmst = terms.agg(
-        (F.sum(quantize("seg", 9)).cast("double") / 1e9).alias("rmst")
-    )
+    rmst = terms.agg(dsum("seg", 9).alias("rmst"))
     med = km.agg(
         F.min(F.when(F.col("surv") <= 0.5, F.col("t")))
         .cast("long")
@@ -4696,8 +4700,8 @@ def q541(spark, sf_dir):
     ang = ev.select("event_type", a.alias("a"))
     sums = ang.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        (F.sum(quantize(F.cos("a"), 9)).cast("double") / 1e9).alias("sc"),
-        (F.sum(quantize(F.sin("a"), 9)).cast("double") / 1e9).alias("ss"),
+        dsum(F.cos("a"), 9).alias("sc"),
+        dsum(F.sin("a"), 9).alias("ss"),
     )
     rbar = F.sqrt(F.col("sc") * F.col("sc") + F.col("ss") * F.col("ss")) / F.col(
         "n"
@@ -4765,14 +4769,7 @@ def q542(spark, sf_dir):
     e = F.col("n").cast("double") / F.col("k")
     chi = (
         hist.crossJoin(F.broadcast(tot))
-        .agg(
-            (
-                F.sum(
-                    quantize((F.col("o") - e) * (F.col("o") - e) / e, 9)
-                ).cast("double")
-                / 1e9
-            ).alias("chi2")
-        )
+        .agg(dsum((F.col("o") - e) * (F.col("o") - e) / e, 9).alias("chi2"))
     )
     j = tot.crossJoin(F.broadcast(chi))
     v = F.sqrt(F.col("chi2") / (F.col("n") * (F.col("k") - 1)))
@@ -4836,10 +4833,8 @@ def q600(spark, sf_dir):
     )
     s = gaps.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        (F.sum(quantize("g", 6)).cast("double") / 1e6).alias("sg"),
-        (F.sum(quantize(F.col("g") * F.col("g"), 6)).cast("double") / 1e6).alias(
-            "sgg"
-        ),
+        dsum("g", 6).alias("sg"),
+        dsum(F.col("g") * F.col("g"), 6).alias("sgg"),
     )
     out = s.selectExpr(
         "n AS n_gaps", "sg / n AS m", "(sgg / n) / (sg / n) AS lb"
@@ -4985,7 +4980,7 @@ def q606(spark, sf_dir):
     ) / (F.col("nij") + F.col("nji"))
     out = pairs.where(F.col("nij") + F.col("nji") > 0).agg(
         F.count(F.lit(1)).cast("long").alias("n_pairs"),
-        (F.sum(quantize(t, 9)).cast("double") / 1e9).alias("chi2"),
+        dsum(t, 9).alias("chi2"),
     )
     return out.select(
         "n_pairs", (quantize("chi2", 6) / 1e6).alias("bowker_chi2")
@@ -5241,14 +5236,10 @@ def q705(spark, sf_dir):
     )
     s = pts.agg(
         F.count(F.lit(1)).cast("long").alias("m"),
-        (F.sum(quantize("x", 9)).cast("double") / 1e9).alias("sx"),
-        (F.sum(quantize(F.col("x") * F.col("x"), 9)).cast("double") / 1e9).alias(
-            "sxx"
-        ),
-        (F.sum(quantize("y", 9)).cast("double") / 1e9).alias("sy"),
-        (F.sum(quantize(F.col("x") * F.col("y"), 9)).cast("double") / 1e9).alias(
-            "sxy"
-        ),
+        dsum("x", 9).alias("sx"),
+        dsum(F.col("x") * F.col("x"), 9).alias("sxx"),
+        dsum("y", 9).alias("sy"),
+        dsum(F.col("x") * F.col("y"), 9).alias("sxy"),
     )
     k = (F.col("m") * F.col("sxy") - F.col("sx") * F.col("sy")) / (
         F.col("m") * F.col("sxx") - F.col("sx") * F.col("sx")

@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from pandrs_spark.operators.util import tracked_persist
 
 from pandrs_spark.catalog import load_table as T
-from pandrs_spark.functions.deterministic import sql_quantize
+from pandrs_spark.functions.deterministic import dsum, sql_quantize
 from pandrs_spark.operators.graph import (
     _frontier_walk,
     bfs_hops,
@@ -1452,8 +1452,7 @@ def q519(spark, sf_dir):
             F.count(F.lit(1)).cast("long").alias("n_vertices"),
             (
                 quantize(
-                    F.sum(quantize("lcc", 9)).cast("double")
-                    / 1e9
+                    dsum("lcc", 9)
                     / F.count(F.lit(1)),
                     6,
                 )
@@ -1513,9 +1512,7 @@ def q529(spark, sf_dir):
     tail = deg.filter(F.col("d") >= 3)
     fit = tail.agg(
         F.count(F.lit(1)).cast("long").alias("n_tail"),
-        (
-            F.sum(quantize(F.log(F.col("d") / 2.5), 9)).cast("double") / 1e9
-        ).alias("slnd"),
+        dsum(F.log(F.col("d") / 2.5), 9).alias("slnd"),
     )
     nv = deg.agg(F.count(F.lit(1)).cast("long").alias("n_vertices"))
     return (
@@ -1601,24 +1598,14 @@ def q567(spark, sf_dir):
     x = tracked_persist(
         orders.join(cust, orders.o_custkey == cust.c_custkey)
         .groupBy(F.col("c_nationkey").alias("nk"))
-        .agg(
-            (F.sum(quantize("o_totalprice", 2)).cast("double") / 1e2 / 1e6).alias(
-                "xv"
-            )
-        )
+        .agg((dsum("o_totalprice", 2) / 1e6).alias("xv"))
     )
     mu = x.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        (F.sum(quantize("xv", 6)).cast("double") / 1e6 / F.count(F.lit(1))).alias(
-            "m"
-        ),
+        (dsum("xv", 6) / F.count(F.lit(1))).alias("m"),
     )
     zden = x.crossJoin(F.broadcast(mu)).agg(
-        (
-            F.sum(quantize((F.col("xv") - F.col("m")) * (F.col("xv") - F.col("m")), 9))
-            .cast("double")
-            / 1e9
-        ).alias("sz2")
+        dsum((F.col("xv") - F.col("m")) * (F.col("xv") - F.col("m")), 9).alias("sz2")
     )
     a = x.select(F.col("nk").alias("src"), F.col("xv").alias("xa"))
     b = x.select(F.col("nk").alias("dst"), F.col("xv").alias("xb"))
@@ -1628,17 +1615,11 @@ def q567(spark, sf_dir):
         .crossJoin(F.broadcast(mu))
         .agg(
             F.count(F.lit(1)).cast("long").alias("s0"),
-            (
-                F.sum(
-                    quantize((F.col("xa") - F.col("m")) * (F.col("xb") - F.col("m")), 9)
-                ).cast("double")
-                / 1e9
+            dsum(
+                (F.col("xa") - F.col("m")) * (F.col("xb") - F.col("m")), 9
             ).alias("szz"),
-            (
-                F.sum(
-                    quantize((F.col("xa") - F.col("xb")) * (F.col("xa") - F.col("xb")), 9)
-                ).cast("double")
-                / 1e9
+            dsum(
+                (F.col("xa") - F.col("xb")) * (F.col("xa") - F.col("xb")), 9
             ).alias("sdd"),
         )
     )
@@ -1743,15 +1724,15 @@ def q607(spark, sf_dir):
     )
     s = d.agg(
         F.count(F.lit(1)).cast("double").alias("n"),
-        (F.sum(quantize("y", 9)).cast("double") / 1e9).alias("sy"),
-        (F.sum(quantize("u", 9)).cast("double") / 1e9).alias("su"),
-        (F.sum(quantize("v", 9)).cast("double") / 1e9).alias("sv"),
-        (F.sum(quantize(F.col("y") * F.col("y"), 9)).cast("double") / 1e9).alias("syy"),
-        (F.sum(quantize(F.col("u") * F.col("u"), 9)).cast("double") / 1e9).alias("suu"),
-        (F.sum(quantize(F.col("v") * F.col("v"), 9)).cast("double") / 1e9).alias("svv"),
-        (F.sum(quantize(F.col("u") * F.col("y"), 9)).cast("double") / 1e9).alias("suy"),
-        (F.sum(quantize(F.col("v") * F.col("y"), 9)).cast("double") / 1e9).alias("svy"),
-        (F.sum(quantize(F.col("u") * F.col("v"), 9)).cast("double") / 1e9).alias("suv"),
+        dsum("y", 9).alias("sy"),
+        dsum("u", 9).alias("su"),
+        dsum("v", 9).alias("sv"),
+        dsum(F.col("y") * F.col("y"), 9).alias("syy"),
+        dsum(F.col("u") * F.col("u"), 9).alias("suu"),
+        dsum(F.col("v") * F.col("v"), 9).alias("svv"),
+        dsum(F.col("u") * F.col("y"), 9).alias("suy"),
+        dsum(F.col("v") * F.col("y"), 9).alias("svy"),
+        dsum(F.col("u") * F.col("v"), 9).alias("suv"),
     )
     c = s.selectExpr(
         "n", "sy", "su", "sv",
@@ -1857,11 +1838,7 @@ def q608(spark, sf_dir):
         p.join(F.broadcast(b), "j")
         .where(F.col("i") != F.col("j2"))
         .groupBy(F.col("i").alias("ii"), F.col("j2").alias("jj"))
-        .agg(
-            (F.sum(quantize(F.col("p") * F.col("pb"), 12)).cast("double") / 1e12).alias(
-                "pq"
-            )
-        )
+        .agg(dsum(F.col("p") * F.col("pb"), 12).alias("pq"))
     )
     terms = p.join(
         F.broadcast(two_hop),
@@ -1874,9 +1851,7 @@ def q608(spark, sf_dir):
             * (F.col("p") + F.coalesce(F.col("pq"), F.lit(0.0)))
         ).alias("c_ij"),
     )
-    out = terms.groupBy("node").agg(
-        (F.sum(quantize("c_ij", 9)).cast("double") / 1e9).alias("c")
-    )
+    out = terms.groupBy("node").agg(dsum("c_ij", 9).alias("c"))
     return out.select(
         F.col("node").alias("nation"),
         (quantize("c", 6) / 1e6).alias("burt_constraint"),
@@ -1943,15 +1918,11 @@ def q613(spark, sf_dir):
             "rs", "rd", (F.col("w") / F.col("ww")).alias("e")
         )
     )
-    tr = e.where(F.col("rs") == F.col("rd")).agg(
-        (F.sum(quantize("e", 12)).cast("double") / 1e12).alias("tr")
-    )
+    tr = e.where(F.col("rs") == F.col("rd")).agg(dsum("e", 12).alias("tr"))
     ma = e.groupBy("rs").agg(F.sum("e").alias("a"))
     mb = e.groupBy(F.col("rd").alias("rs")).agg(F.sum("e").alias("b"))
     sab = ma.join(F.broadcast(mb), "rs").agg(
-        (F.sum(quantize(F.col("a") * F.col("b"), 12)).cast("double") / 1e12).alias(
-            "sab"
-        )
+        dsum(F.col("a") * F.col("b"), 12).alias("sab")
     )
     nr = ma.agg(F.count(F.lit(1)).cast("long").alias("n_regions"))
     j = nr.crossJoin(F.broadcast(tr)).crossJoin(F.broadcast(sab))
@@ -2036,9 +2007,7 @@ def q693(spark, sf_dir):
     s = dist.agg(
         F.count(F.lit(1)).cast("long").alias("np"),
         F.sum("h").cast("long").alias("sd"),
-        (F.sum(quantize(1.0 / F.col("h"), 9)).cast("double") / 1e9).alias(
-            "sinv"
-        ),
+        dsum(1.0 / F.col("h"), 9).alias("sinv"),
     )
     return s.select(
         (F.col("np") / 2).cast("long").alias("n_pairs"),
@@ -2300,7 +2269,7 @@ def q695(spark, sf_dir):
     )
     cc = lcc.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        (F.sum(quantize("c", 9)).cast("double") / 1e9).alias("sc"),
+        dsum("c", 9).alias("sc"),
     )
     m = und.agg((F.count(F.lit(1)) / 2).cast("long").alias("m"))
     verts = und.select(F.col("src").alias("id")).distinct()
@@ -2426,12 +2395,7 @@ def q696(spark, sf_dir):
         .join(pb, "j0")
         .where(F.col("i") != F.col("j"))
         .groupBy("i", "j")
-        .agg(
-            (
-                F.sum(quantize(F.col("pa") * F.col("pb"), 9)).cast("double")
-                / 1e9
-            ).alias("pq")
-        )
+        .agg(dsum(F.col("pa") * F.col("pb"), 9).alias("pq"))
     )
     d = (
         p.select("i", "j")
@@ -2456,9 +2420,7 @@ def q696(spark, sf_dir):
             F.broadcast(nat), terms.i == nat.n_nationkey
         )
         .groupBy(F.col("n_name").alias("nation"))
-        .agg(
-            (F.sum(quantize("c", 9)).cast("double") / 1e9).alias("ci")
-        )
+        .agg(dsum("c", 9).alias("ci"))
     )
     return (
         cons.orderBy(quantize("ci", 9).asc(), F.asc("nation"))

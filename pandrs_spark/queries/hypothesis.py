@@ -1405,11 +1405,7 @@ def q466(spark, sf_dir):
     jt = (
         cdf.crossJoin(F.broadcast(tot))
         .groupBy(*[f"n{i}" for i in range(1, 6)])
-        .agg(
-            (F.sum(quantize(pair_sum, 1)).cast("double") / 10.0).alias(
-                "jt_stat"
-            )
-        )
+        .agg(dsum(pair_sum, 1).alias("jt_stat"))
     )
     n = sum(F.col(f"n{i}") for i in range(1, 6))
     sq = sum(F.col(f"n{i}") * F.col(f"n{i}") for i in range(1, 6))
@@ -1551,10 +1547,7 @@ def q476(spark, sf_dir):
             - F.greatest(F.col(cum) - F.col(cg), F.col("k")),
         )
         return j.groupBy("n", "k").agg(
-            (
-                F.sum(quantize(F.col("value") * interior, 2)).cast("double")
-                / 100.0
-            ).alias("int_sum"),
+            dsum(F.col("value") * interior, 2).alias("int_sum"),
             F.sum(
                 quantize(F.col("value") * F.col("value") * interior, 0)
             )
@@ -2386,7 +2379,7 @@ def q662(spark, sf_dir):
         F.sum("nr").cast("long").alias("tr"),
         F.sum("na").cast("long").alias("ta"),
         F.sum("nn").cast("long").alias("tn"),
-        (F.sum(quantize(o, 9)).cast("double") / 1e9).alias("dis"),
+        dsum(o, 9).alias("dis"),
     )
     de = (
         2.0
@@ -2504,9 +2497,7 @@ def q699(spark, sf_dir):
             ).alias("term")
         )
     )
-    s = seg.agg(
-        (F.sum(quantize("term", 6)).cast("double") / 1e6).alias("integ")
-    )
+    s = seg.agg(dsum("term", 6).alias("integ"))
     j = s.crossJoin(F.broadcast(tot))
     d2 = 2.0 * F.col("integ")
     st = (
@@ -2635,18 +2626,10 @@ def q700(spark, sf_dir):
     )
     agg_ = sbq.agg(
         F.countDistinct("yr").cast("long").alias("b"),
-        (
-            F.sum(quantize(F.col("s") * F.col("s"), 2)).cast("double") / 1e2
-        ).alias("a"),
+        dsum(F.col("s") * F.col("s"), 2).alias("a"),
     )
-    persq = sbq.groupBy("q").agg(
-        (F.sum(quantize("s", 2)).cast("double") / 1e2).alias("sq")
-    )
-    bsum = persq.agg(
-        (
-            F.sum(quantize(F.col("sq") * F.col("sq"), 2)).cast("double") / 1e2
-        ).alias("bb")
-    )
+    persq = sbq.groupBy("q").agg(dsum("s", 2).alias("sq"))
+    bsum = persq.agg(dsum(F.col("sq") * F.col("sq"), 2).alias("bb"))
     j = agg_.crossJoin(F.broadcast(bsum))
     bn = F.col("bb") / F.col("b")
     fstat = (F.col("b") - 1) * bn / (F.col("a") - bn)
@@ -2773,16 +2756,14 @@ def q701(spark, sf_dir):
     x = cust.select((F.col("c_acctbal").cast("double") / 1e4).alias("v"))
     m = x.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        (F.sum(quantize("v", 9)).cast("double") / 1e9).alias("s1"),
+        dsum("v", 9).alias("s1"),
     )
     dev = F.col("v") - F.col("s1") / F.col("n")
     cm = x.crossJoin(F.broadcast(m)).agg(
         F.first("n").alias("n"),
-        (F.sum(quantize(dev * dev, 9)).cast("double") / 1e9).alias("m2"),
-        (F.sum(quantize(dev * dev * dev, 9)).cast("double") / 1e9).alias("m3"),
-        (
-            F.sum(quantize(dev * dev * dev * dev, 9)).cast("double") / 1e9
-        ).alias("m4"),
+        dsum(dev * dev, 9).alias("m2"),
+        dsum(dev * dev * dev, 9).alias("m3"),
+        dsum(dev * dev * dev * dev, 9).alias("m4"),
     )
     n = F.col("n")
     nd = n.cast("double")

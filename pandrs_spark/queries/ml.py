@@ -16,6 +16,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from pandrs_spark.catalog import load_table as T
+from pandrs_spark.functions.deterministic import dsum, dsum_over
 from pandrs_spark.operators.ml import (
     equal_width_bins,
     kmeans_fit_predict,
@@ -886,7 +887,6 @@ def q152(spark, sf_dir):
     """,
 )
 def q153(spark, sf_dir):
-    from pandrs_spark.functions.deterministic import dsum_over
     from pandrs_spark.operators.metrics import regression_metrics
 
     from pyspark.sql import Window
@@ -1253,7 +1253,7 @@ def q343(spark, sf_dir):
 # per-brand agg); the part dimension joins broadcast. Reference:
 # elasticity/regression surface of src/stats/regression/mod.rs.
 def _q349_oracle() -> str:
-    from pandrs_spark.functions.deterministic import sql_dsum, sql_quantize
+    from pandrs_spark.functions.deterministic import sql_dsum
 
     return f"""
     WITH per_part AS (
@@ -1280,8 +1280,6 @@ def _q349_oracle() -> str:
 
 @query("q349_price_elasticity_by_brand", oracle=_q349_oracle())
 def q349(spark, sf_dir):
-    from pandrs_spark.functions.deterministic import dsum
-
     li = T(spark, sf_dir, "lineitem")
     pt = T(spark, sf_dir, "part")
     per_part = (
@@ -1444,7 +1442,6 @@ def _q363_oracle() -> str:
 
 @query("q363_embedding_outliers", oracle=_q363_oracle())
 def q363(spark, sf_dir):
-    from pandrs_spark.functions.deterministic import quantize
     from pandrs_spark.operators.util import fan_out
 
     emb = T(spark, sf_dir, "embeddings")
@@ -1453,10 +1450,8 @@ def q363(spark, sf_dir):
     ).select("vec_id", (F.col("pos") + 1).alias("pos"), F.col("vf").cast("double").alias("v"))
     stats = dims.groupBy("pos").agg(
         F.count(F.lit(1)).alias("n"),
-        (F.sum(quantize("v", 6)).cast("double") / 1000000.0).alias("sx"),
-        (
-            F.sum(quantize(F.col("v") * F.col("v"), 6)).cast("double") / 1000000.0
-        ).alias("sxx"),
+        dsum("v", 6).alias("sx"),
+        dsum(F.col("v") * F.col("v"), 6).alias("sxx"),
     )
     ds = stats.select(
         "pos",
@@ -1467,7 +1462,7 @@ def q363(spark, sf_dir):
     scored = (
         dims.join(F.broadcast(ds), "pos")
         .groupBy("vec_id")
-        .agg((F.sum(quantize(term, 6)).cast("double") / 1000000.0).alias("score"))
+        .agg(dsum(term, 6).alias("score"))
     )
     return (
         scored.select("vec_id", F.round("score", 6).alias("outlier_score"))
@@ -1793,7 +1788,7 @@ def _q380_oracle() -> str:
 
 @query("q380_split_conformal_intervals", oracle=_q380_oracle())
 def q380(spark, sf_dir):
-    from pandrs_spark.functions.deterministic import dsum, quantize
+    from pandrs_spark.functions.deterministic import quantize
     from pandrs_spark.operators.windows import global_prefix_counts
 
     od = T(spark, sf_dir, "orders")
@@ -1974,7 +1969,6 @@ def q388(spark, sf_dir):
     """,
 )
 def q410(spark, sf_dir):
-    from pandrs_spark.functions.deterministic import quantize
     from pandrs_spark.operators.util import fan_out
 
     emb = T(spark, sf_dir, "embeddings")
@@ -1984,9 +1978,7 @@ def q410(spark, sf_dir):
         "label", (F.col("pos") + 1).alias("dim"), F.col("vf").cast("double").alias("v")
     )
     cstats = dims.groupBy("label", "dim").agg(
-        (
-            F.sum(quantize("v", 6)).cast("double") / 1e6 / F.count(F.lit(1))
-        ).alias("mu")
+        (dsum("v", 6) / F.count(F.lit(1))).alias("mu")
     )
     cents = cstats.groupBy(F.col("label").alias("clabel")).agg(
         F.expr("transform(array_sort(collect_list(struct(dim, mu))), x -> x.mu)")
@@ -2015,9 +2007,7 @@ def q410(spark, sf_dir):
         .groupBy("label")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n"),
-            (
-                F.sum(quantize("sil", 9)).cast("double") / 1e9 / F.count(F.lit(1))
-            ).alias("mean_silhouette"),
+            (dsum("sil", 9) / F.count(F.lit(1))).alias("mean_silhouette"),
         )
         .orderBy("label")
     )
@@ -2170,11 +2160,7 @@ def q442(spark, sf_dir):
         ),
     )
     cent = tracked_persist(
-        pos.groupBy("label", "dim").agg(
-            (
-                F.sum(quantize("x", 9)).cast("double") / 1e9 / F.count(F.lit(1))
-            ).alias("m")
-        )
+        pos.groupBy("label", "dim").agg((dsum("x", 9) / F.count(F.lit(1))).alias("m"))
     )
     a = cent.select(
         F.col("label").alias("label_a"), "dim", F.col("m").alias("ma")
@@ -2187,18 +2173,9 @@ def q442(spark, sf_dir):
         .filter(F.col("label_a") < F.col("label_b"))
         .groupBy("label_a", "label_b")
         .agg(
-            (
-                F.sum(quantize(F.col("ma") * F.col("mb"), 9)).cast("double")
-                / 1e9
-            ).alias("dot"),
-            (
-                F.sum(quantize(F.col("ma") * F.col("ma"), 9)).cast("double")
-                / 1e9
-            ).alias("sa"),
-            (
-                F.sum(quantize(F.col("mb") * F.col("mb"), 9)).cast("double")
-                / 1e9
-            ).alias("sb"),
+            dsum(F.col("ma") * F.col("mb"), 9).alias("dot"),
+            dsum(F.col("ma") * F.col("ma"), 9).alias("sa"),
+            dsum(F.col("mb") * F.col("mb"), 9).alias("sb"),
         )
     )
     return pairs.select(
@@ -2319,7 +2296,7 @@ def q443(spark, sf_dir):
     """,
 )
 def q444(spark, sf_dir):
-    from pandrs_spark.functions.deterministic import dsum, quantize
+    from pandrs_spark.functions.deterministic import quantize
 
     orders = T(spark, sf_dir, "orders")
     cust = T(spark, sf_dir, "customer")
@@ -2596,8 +2573,7 @@ def q446(spark, sf_dir):
         .groupBy("doc_id", "source", "c", "n_docs", "nt")
         .agg(
             (
-                F.sum(quantize("term", 9)).cast("double") / 1e9
-                + F.log(F.col("n_docs").cast("double") / F.col("nt"))
+                dsum("term", 9) + F.log(F.col("n_docs").cast("double") / F.col("nt"))
             ).alias("score")
         )
     )
@@ -2736,13 +2712,7 @@ def q456(spark, sf_dir):
     proj = tracked_persist(
         pos.join(F.broadcast(signs), "d")
         .groupBy("vec_id", "j")
-        .agg(
-            (
-                F.sum(quantize(F.col("sgn") * F.col("x"), 9)).cast("double")
-                / 1e9
-                / 4.0
-            ).alias("y")
-        )
+        .agg((dsum(F.col("sgn") * F.col("x"), 9) / 4.0).alias("y"))
     )
     pa = pos.filter(F.col("vec_id") < 250)
     pb = pos.select(
@@ -2752,14 +2722,8 @@ def q456(spark, sf_dir):
         pa.join(pb, ["vec_id", "d"])
         .groupBy("vec_id")
         .agg(
-            (
-                F.sum(
-                    quantize(
-                        (F.col("x") - F.col("xb")) * (F.col("x") - F.col("xb")),
-                        9,
-                    )
-                ).cast("double")
-                / 1e9
+            dsum(
+                (F.col("x") - F.col("xb")) * (F.col("x") - F.col("xb")), 9
             ).alias("d2o")
         )
     )
@@ -2771,14 +2735,8 @@ def q456(spark, sf_dir):
         qa.join(qb, ["vec_id", "j"])
         .groupBy("vec_id")
         .agg(
-            (
-                F.sum(
-                    quantize(
-                        (F.col("y") - F.col("yb")) * (F.col("y") - F.col("yb")),
-                        9,
-                    )
-                ).cast("double")
-                / 1e9
+            dsum(
+                (F.col("y") - F.col("yb")) * (F.col("y") - F.col("yb")), 9
             ).alias("d2p")
         )
     )
@@ -2789,7 +2747,7 @@ def q456(spark, sf_dir):
     )
     agg = ratios.agg(
         F.count(F.lit(1)).cast("long").alias("n_pairs"),
-        (F.sum(quantize("ratio", 9)).cast("double") / 1e9).alias("sr"),
+        dsum("ratio", 9).alias("sr"),
         F.min("ratio").alias("mn"),
         F.max("ratio").alias("mx"),
     )
@@ -2870,13 +2828,7 @@ def q468(spark, sf_dir):
     per_c = tracked_persist(
         cust.join(orders, cust.c_custkey == orders.o_custkey)
         .groupBy(F.col("c_custkey").alias("cust"), "c_acctbal")
-        .agg(
-            (
-                F.sum(quantize("o_totalprice", 2)).cast("double")
-                / 100.0
-                / 1e6
-            ).alias("y")
-        )
+        .agg((dsum("o_totalprice", 2) / 1e6).alias("y"))
         .select(
             "cust",
             (F.col("c_acctbal").cast("double") / 1000.0).alias("x"),
@@ -2885,11 +2837,11 @@ def q468(spark, sf_dir):
     )
     m = per_c.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        (F.sum(quantize("x", 6)).cast("double") / 1e6).alias("sx"),
-        (F.sum(quantize("y", 6)).cast("double") / 1e6).alias("sy"),
-        (F.sum(quantize(F.col("x") * F.col("x"), 6)).cast("double") / 1e6).alias("sxx"),
-        (F.sum(quantize(F.col("y") * F.col("y"), 6)).cast("double") / 1e6).alias("syy"),
-        (F.sum(quantize(F.col("x") * F.col("y"), 6)).cast("double") / 1e6).alias("sxy"),
+        dsum("x", 6).alias("sx"),
+        dsum("y", 6).alias("sy"),
+        dsum(F.col("x") * F.col("x"), 6).alias("sxx"),
+        dsum(F.col("y") * F.col("y"), 6).alias("syy"),
+        dsum(F.col("x") * F.col("y"), 6).alias("sxy"),
     )
     cov = m.select(
         "n",
@@ -2950,20 +2902,16 @@ def q469(spark, sf_dir):
     orders = T(spark, sf_dir, "orders")
     per_c = cust.join(orders, cust.c_custkey == orders.o_custkey).groupBy(
         F.col("c_custkey").alias("cust"), "c_acctbal"
-    ).agg(
-        (
-            F.sum(quantize("o_totalprice", 2)).cast("double") / 100.0 / 1e6
-        ).alias("y")
-    ).select(
+    ).agg((dsum("o_totalprice", 2) / 1e6).alias("y")).select(
         (F.col("c_acctbal").cast("double") / 1000.0).alias("x"), "y"
     )
     m = per_c.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        (F.sum(quantize("x", 6)).cast("double") / 1e6).alias("sx"),
-        (F.sum(quantize("y", 6)).cast("double") / 1e6).alias("sy"),
-        (F.sum(quantize(F.col("x") * F.col("x"), 6)).cast("double") / 1e6).alias("sxx"),
-        (F.sum(quantize(F.col("y") * F.col("y"), 6)).cast("double") / 1e6).alias("syy"),
-        (F.sum(quantize(F.col("x") * F.col("y"), 6)).cast("double") / 1e6).alias("sxy"),
+        dsum("x", 6).alias("sx"),
+        dsum("y", 6).alias("sy"),
+        dsum(F.col("x") * F.col("x"), 6).alias("sxx"),
+        dsum(F.col("y") * F.col("y"), 6).alias("syy"),
+        dsum(F.col("x") * F.col("y"), 6).alias("sxy"),
     )
     a = F.col("sxx") / F.col("n") - (F.col("sx") / F.col("n")) * (F.col("sx") / F.col("n"))
     c = F.col("syy") / F.col("n") - (F.col("sy") / F.col("n")) * (F.col("sy") / F.col("n"))
@@ -3079,7 +3027,7 @@ def q474(spark, sf_dir):
     decile = F.expr(f"CAST((rnk * 10 + {n_tot} - 1) DIV {n_tot} AS INT)")
     agg = ranked.groupBy(decile.alias("decile")).agg(
         F.count(F.lit(1)).cast("long").alias("n_customers"),
-        (F.sum(quantize("mu", 6)).cast("double") / 1e6).alias("sm"),
+        dsum("mu", 6).alias("sm"),
         F.sum("y").cast("long").alias("sy"),
     )
     return agg.select(
@@ -3281,7 +3229,7 @@ def q509(spark, sf_dir):
     )
     per_bin = binned.groupBy("b").agg(
         F.count(F.lit(1)).cast("long").alias("nk"),
-        (F.sum(quantize("p", 9)).cast("double") / 1e9).alias("sp"),
+        dsum("p", 9).alias("sp"),
         F.sum("y").cast("long").alias("sy"),
     )
     tot = per_bin.agg(
@@ -3294,8 +3242,8 @@ def q509(spark, sf_dir):
     rel_t = F.col("nk") * (pk - yk) * (pk - yk)
     res_t = F.col("nk") * (yk - F.col("ybar")) * (yk - F.col("ybar"))
     parts = j.groupBy("n", "ybar").agg(
-        (F.sum(quantize(rel_t, 9)).cast("double") / 1e9).alias("srel"),
-        (F.sum(quantize(res_t, 9)).cast("double") / 1e9).alias("sres"),
+        dsum(rel_t, 9).alias("srel"),
+        dsum(res_t, 9).alias("sres"),
     )
     rel = F.col("srel") / F.col("n")
     res = F.col("sres") / F.col("n")
@@ -3636,16 +3584,14 @@ def q512(spark, sf_dir):
         F.least(F.floor(F.col("p") * 10).cast("int"), F.lit(9)).alias("b")
     ).agg(
         F.count(F.lit(1)).cast("long").alias("nk"),
-        (F.sum(quantize("p", 9)).cast("double") / 1e9).alias("sp"),
+        dsum("p", 9).alias("sp"),
         F.sum("y").cast("long").alias("sy"),
     )
     n = d.agg(F.count(F.lit(1)).cast("long").alias("n_users"))
     term = F.col("nk") * F.abs(
         F.col("sp") / F.col("nk") - F.col("sy").cast("double") / F.col("nk")
     )
-    ece = per_bin.agg(
-        (F.sum(quantize(term, 9)).cast("double") / 1e9).alias("se")
-    )
+    ece = per_bin.agg(dsum(term, 9).alias("se"))
     return (
         F.broadcast(n)
         .crossJoin(F.broadcast(fit))
@@ -3785,11 +3731,7 @@ def q513(spark, sf_dir):
     ap_f = (
         desc_pref.filter(F.col("pos") > 0)
         .crossJoin(F.broadcast(tot))
-        .agg(
-            (
-                F.sum(quantize(term / F.col("np"), 9)).cast("double") / 1e9
-            ).alias("ap")
-        )
+        .agg(dsum(term / F.col("np"), 9).alias("ap"))
     )
     return (
         tot.crossJoin(F.broadcast(auc_f))
@@ -4137,7 +4079,7 @@ def q591(spark, sf_dir):
         eval_orders.groupBy("b").agg(
             F.count(F.lit(1)).cast("double").alias("n"),
             F.sum("y").cast("double").alias("o"),
-            (F.sum(quantize("p", 9)).cast("double") / 1e9).alias("e"),
+            dsum("p", 9).alias("e"),
         )
     )
     term = (F.col("o") - F.col("e")) * (F.col("o") - F.col("e")) / (
@@ -4146,7 +4088,7 @@ def q591(spark, sf_dir):
     out = per_bin.agg(
         F.count(F.lit(1)).cast("long").alias("n_bins"),
         F.sum(F.col("n").cast("long")).cast("long").alias("n_eval"),
-        (F.sum(quantize(term, 9)).cast("double") / 1e9).alias("hl"),
+        dsum(term, 9).alias("hl"),
     )
     return out.select(
         "n_bins", "n_eval", (quantize("hl", 6) / 1e6).alias("hl_chi2")
@@ -4489,7 +4431,7 @@ def q683(spark, sf_dir):
     we = w.cast("double") * F.col("r") * F.col("c") / F.col("n")
     s = grid.groupBy("n").agg(
         F.sum(w.cast("long") * F.col("o")).cast("long").alias("wo"),
-        (F.sum(quantize(we, 9)).cast("double") / 1e9).alias("we"),
+        dsum(we, 9).alias("we"),
     )
     return s.select(
         F.col("n").alias("n_paired"),
@@ -4608,7 +4550,7 @@ def q684(spark, sf_dir):
         F.col("x").cast("double") / F.col("d")
     )
     s = xd.agg(
-        (F.sum(quantize(t, 9)).cast("double") / 1e9).alias("acc"),
+        dsum(t, 9).alias("acc"),
         F.max(F.when(F.col("d") == 10, F.col("x"))).cast("long").alias("x10"),
     )
     return s.select(
@@ -4702,7 +4644,7 @@ def q685(spark, sf_dir):
     d = tracked_persist(d)
     m = d.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        (F.sum(quantize("s", 2)).cast("double") / 1e2).alias("s1"),
+        dsum("s", 2).alias("s1"),
         F.sum(quantize(F.col("s") * F.col("s"), 0)).cast("double").alias("s2"),
     )
     mu = F.col("s1") / F.col("n")
@@ -4717,24 +4659,14 @@ def q685(spark, sf_dir):
     bins = z.groupBy(F.floor(F.col("p") * 10.0).cast("long").alias("b")).agg(
         F.count(F.lit(1)).cast("long").alias("nb"),
         F.sum("y").cast("long").alias("yb"),
-        (F.sum(quantize("p", 9)).cast("double") / 1e9).alias("sp"),
+        dsum("p", 9).alias("sp"),
     )
     wls = bins.agg(
         F.sum("nb").cast("long").alias("w"),
-        (F.sum(quantize("sp", 9)).cast("double") / 1e9).alias("swx"),
+        dsum("sp", 9).alias("swx"),
         F.sum("yb").cast("long").alias("swy"),
-        (
-            F.sum(quantize(F.col("sp") * F.col("sp") / F.col("nb"), 9)).cast(
-                "double"
-            )
-            / 1e9
-        ).alias("swxx"),
-        (
-            F.sum(quantize(F.col("sp") * F.col("yb") / F.col("nb"), 9)).cast(
-                "double"
-            )
-            / 1e9
-        ).alias("swxy"),
+        dsum(F.col("sp") * F.col("sp") / F.col("nb"), 9).alias("swxx"),
+        dsum(F.col("sp") * F.col("yb") / F.col("nb"), 9).alias("swxy"),
         F.count(F.lit(1)).cast("long").alias("n_bins"),
     )
     sl = (F.col("w") * F.col("swxy") - F.col("swx") * F.col("swy")) / (
@@ -4835,25 +4767,10 @@ def q686(spark, sf_dir):
     ).cast("double") / (F.col("m").cast("double") * (F.col("m") - 1))
     s = multi.agg(
         F.count(F.lit(1)).cast("long").alias("units"),
-        (F.sum(quantize(pa, 9)).cast("double") / 1e9).alias("spa"),
-        (
-            F.sum(quantize(F.col("nr").cast("double") / F.col("m"), 9)).cast(
-                "double"
-            )
-            / 1e9
-        ).alias("pr"),
-        (
-            F.sum(quantize(F.col("na").cast("double") / F.col("m"), 9)).cast(
-                "double"
-            )
-            / 1e9
-        ).alias("pa_"),
-        (
-            F.sum(quantize(F.col("nn").cast("double") / F.col("m"), 9)).cast(
-                "double"
-            )
-            / 1e9
-        ).alias("pn"),
+        dsum(pa, 9).alias("spa"),
+        dsum(F.col("nr").cast("double") / F.col("m"), 9).alias("pr"),
+        dsum(F.col("na").cast("double") / F.col("m"), 9).alias("pa_"),
+        dsum(F.col("nn").cast("double") / F.col("m"), 9).alias("pn"),
     )
     po = F.col("spa") / F.col("units")
     pe = (
@@ -5151,7 +5068,7 @@ def q724(spark, sf_dir):
     )
     m = f.groupBy("cov", "y").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        (F.sum(quantize("v", 2)).cast("double") / 100.0).alias("s"),
+        dsum("v", 2).alias("s"),
         F.sum(quantize(F.col("v") * F.col("v"), 0)).cast("double").alias("ss"),
     )
     w = m.groupBy("cov").agg(

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from pandrs_spark.catalog import load_table as T
+from pandrs_spark.functions.deterministic import dsum
 from pandrs_spark.operators.util import small_local_df
 from pandrs_spark.queries import query
 
@@ -87,25 +88,14 @@ def q669(spark, sf_dir):
         )
     )
     nrm = pos.groupBy("vec_id").agg(
-        F.sqrt(
-            F.sum(quantize(F.col("x") * F.col("x"), 9)).cast("double") / 1e9
-        ).alias("nr")
+        F.sqrt(dsum(F.col("x") * F.col("x"), 9)).alias("nr")
     )
     s = (
         pos.join(nrm, "vec_id")
         .groupBy("dim")
-        .agg(
-            (
-                F.sum(quantize(F.col("x") / F.col("nr"), 9)).cast("double")
-                / 1e9
-            ).alias("sd")
-        )
+        .agg(dsum(F.col("x") / F.col("nr"), 9).alias("sd"))
     )
-    agg = s.agg(
-        (
-            F.sum(quantize(F.col("sd") * F.col("sd"), 9)).cast("double") / 1e9
-        ).alias("ssq")
-    )
+    agg = s.agg(dsum(F.col("sd") * F.col("sd"), 9).alias("ssq"))
     nn = emb.agg(F.count(F.lit(1)).cast("long").alias("n"))
     j = agg.crossJoin(F.broadcast(nn))
     mc = (F.col("ssq") - F.col("n")) / (
@@ -322,23 +312,14 @@ def q671(spark, sf_dir):
         )
     )
     nn = emb.agg(F.count(F.lit(1)).cast("long").alias("n"))
-    mu = pos.groupBy("dim").agg(
-        (
-            F.sum(quantize("x", 9)).cast("double") / 1e9 / F.count(F.lit(1))
-        ).alias("m")
-    )
+    mu = pos.groupBy("dim").agg((dsum("x", 9) / F.count(F.lit(1))).alias("m"))
     b = pos.select(
         F.col("vec_id"), F.col("dim").alias("j"), F.col("x").alias("xb")
     )
     cells = (
         pos.join(b, "vec_id")
         .groupBy(F.col("dim").alias("i"), "j")
-        .agg(
-            (
-                F.sum(quantize(F.col("x") * F.col("xb"), 6)).cast("double")
-                / 1e6
-            ).alias("sxy")
-        )
+        .agg(dsum(F.col("x") * F.col("xb"), 6).alias("sxy"))
     )
     ma = mu.select(F.col("dim").alias("i"), F.col("m").alias("mi"))
     mb = mu.select(F.col("dim").alias("j"), F.col("m").alias("mj"))
@@ -364,10 +345,7 @@ def q671(spark, sf_dir):
             ).cast("double")
             / 1e9
         ).alias("tr"),
-        (
-            F.sum(quantize(F.col("cv") * F.col("cv"), 12)).cast("double")
-            / 1e12
-        ).alias("fro2"),
+        dsum(F.col("cv") * F.col("cv"), 12).alias("fro2"),
     )
     pr = F.col("tr") * F.col("tr") / F.col("fro2")
     return s.select(
@@ -451,37 +429,17 @@ def q672(spark, sf_dir):
     )
     cent = tracked_persist(
         pos.groupBy("label", "dim").agg(
-            (
-                F.sum(quantize("x", 9)).cast("double") / 1e9
-                / F.count(F.lit(1))
-            ).alias("m"),
+            (dsum("x", 9) / F.count(F.lit(1))).alias("m"),
             F.count(F.lit(1)).cast("long").alias("n_l"),
         )
     )
-    glob = pos.groupBy("dim").agg(
-        (
-            F.sum(quantize("x", 9)).cast("double") / 1e9 / F.count(F.lit(1))
-        ).alias("g")
-    )
+    glob = pos.groupBy("dim").agg((dsum("x", 9) / F.count(F.lit(1))).alias("g"))
     w = pos.join(cent, ["label", "dim"]).agg(
-        (
-            F.sum(
-                quantize((F.col("x") - F.col("m")) * (F.col("x") - F.col("m")), 9)
-            ).cast("double")
-            / 1e9
-        ).alias("wss")
+        dsum((F.col("x") - F.col("m")) * (F.col("x") - F.col("m")), 9).alias("wss")
     )
     b = cent.join(F.broadcast(glob), "dim").agg(
-        (
-            F.sum(
-                quantize(
-                    F.col("n_l")
-                    * (F.col("m") - F.col("g"))
-                    * (F.col("m") - F.col("g")),
-                    9,
-                )
-            ).cast("double")
-            / 1e9
+        dsum(
+            F.col("n_l") * (F.col("m") - F.col("g")) * (F.col("m") - F.col("g")), 9
         ).alias("bss")
     )
     kn = emb.agg(
@@ -576,10 +534,8 @@ def q673(spark, sf_dir):
     pairs = a.join(b, "r").select((dot / (na * nb)).alias("c"))
     s = pairs.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        (F.sum(quantize("c", 9)).cast("double") / 1e9).alias("s1"),
-        (F.sum(quantize(F.col("c") * F.col("c"), 9)).cast("double") / 1e9).alias(
-            "s2"
-        ),
+        dsum("c", 9).alias("s1"),
+        dsum(F.col("c") * F.col("c"), 9).alias("s2"),
         F.max(F.round("c", 6)).alias("mx"),
     )
     sd = F.sqrt(
@@ -669,33 +625,18 @@ def q674(spark, sf_dir):
         )
     )
     cent = tracked_persist(
-        pos.groupBy("label", "dim").agg(
-            (
-                F.sum(quantize("x", 9)).cast("double") / 1e9
-                / F.count(F.lit(1))
-            ).alias("m")
-        )
+        pos.groupBy("label", "dim").agg((dsum("x", 9) / F.count(F.lit(1))).alias("m"))
     )
     dist = (
         pos.join(cent, ["label", "dim"])
         .groupBy("vec_id", "label")
         .agg(
             F.sqrt(
-                F.sum(
-                    quantize(
-                        (F.col("x") - F.col("m")) * (F.col("x") - F.col("m")),
-                        9,
-                    )
-                ).cast("double")
-                / 1e9
+                dsum((F.col("x") - F.col("m")) * (F.col("x") - F.col("m")), 9)
             ).alias("dd")
         )
     )
-    scat = dist.groupBy("label").agg(
-        (
-            F.sum(quantize("dd", 9)).cast("double") / 1e9 / F.count(F.lit(1))
-        ).alias("s")
-    )
+    scat = dist.groupBy("label").agg((dsum("dd", 9) / F.count(F.lit(1))).alias("s"))
     cb = cent.select(
         F.col("label").alias("lb"), F.col("dim"), F.col("m").alias("mb")
     )
@@ -705,13 +646,7 @@ def q674(spark, sf_dir):
         .groupBy(F.col("label").alias("la"), "lb")
         .agg(
             F.sqrt(
-                F.sum(
-                    quantize(
-                        (F.col("m") - F.col("mb")) * (F.col("m") - F.col("mb")),
-                        9,
-                    )
-                ).cast("double")
-                / 1e9
+                dsum((F.col("m") - F.col("mb")) * (F.col("m") - F.col("mb")), 9)
             ).alias("md")
         )
     )
@@ -727,10 +662,7 @@ def q674(spark, sf_dir):
     )
     out = r.agg(
         F.count(F.lit(1)).cast("long").alias("n_labels"),
-        (
-            F.sum(quantize("rmax", 9)).cast("double") / 1e9
-            / F.count(F.lit(1))
-        ).alias("db"),
+        (dsum("rmax", 9) / F.count(F.lit(1))).alias("db"),
     )
     return out.select(
         "n_labels", (quantize("db", 6) / 1e6).alias("db_index")
@@ -1175,7 +1107,7 @@ def q722(spark, sf_dir):
         F.count(F.lit(1)).cast("long").alias("n_pairs"),
         (
             quantize(
-                (F.sum(quantize("hv", 9)).cast("double") / 1e9)
+                dsum("hv", 9)
                 / F.count(F.lit(1)),
                 9,
             )

@@ -1359,8 +1359,6 @@ def q344(spark, sf_dir):
 # fold through dsum. Reference: resampling surface of
 # src/stats/mod.rs (bootstrap :328).
 def _q371_oracle() -> str:
-    from pandrs_spark.functions.deterministic import sql_dsum, sql_quantize
-
     qn = sql_quantize("l_extendedprice * (1 - l_discount)", 2)
     qd = sql_quantize("CAST(l_quantity AS DOUBLE)", 2)
     return f"""
@@ -1837,9 +1835,7 @@ def q398(spark, sf_dir):
     tot = strata.agg(
         F.sum("n_pop").cast("long").alias("n_pop_total"),
         F.sum("n_samp").cast("long").alias("n_samp_total"),
-        (F.sum(quantize("contrib", 2)).cast("long") / 100.0).alias(
-            "contrib_total"
-        ),
+        dsum("contrib", 2).alias("contrib_total"),
     )
     naive = cust.filter(in_sample).agg(
         (dsum("c_acctbal") / F.count(F.lit(1))).alias("naive_mean")
@@ -1942,9 +1938,7 @@ def q401(spark, sf_dir):
         )
         * (F.col("v_next") - F.col("v"))
     )
-    w1 = pairs.agg(
-        (F.sum(quantize(term, 9)).cast("double") / 1e9).alias("s")
-    )
+    w1 = pairs.agg(dsum(term, 9).alias("s"))
     return tot.crossJoin(F.broadcast(w1)).select(
         F.col("na").alias("n_a"),
         F.col("nb").alias("n_b"),
@@ -2000,7 +1994,6 @@ def q401(spark, sf_dir):
 def q413(spark, sf_dir):
     from pyspark.sql import Window
 
-    from pandrs_spark.functions.deterministic import quantize
     from pandrs_spark.operators.windows import global_row_number
 
     cust = T(spark, sf_dir, "customer")
@@ -2038,12 +2031,8 @@ def q413(spark, sf_dir):
         mapped.groupBy("seg")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n"),
-            (F.sum(quantize("v", 2)).cast("long") / 100.0 / F.count(F.lit(1))).alias(
-                "mean_raw"
-            ),
-            (
-                F.sum(quantize("pv", 2)).cast("long") / 100.0 / F.count(F.lit(1))
-            ).alias("mean_normalized"),
+            (dsum("v", 2) / F.count(F.lit(1))).alias("mean_raw"),
+            (dsum("pv", 2) / F.count(F.lit(1))).alias("mean_normalized"),
         )
         .orderBy("seg")
     )
@@ -2379,7 +2368,7 @@ def q480(spark, sf_dir):
     ).select(F.col("c_mktsegment").alias("seg"), F.col("c_acctbal").alias("x"))
     agg = g.groupBy("seg").agg(
         F.count(F.lit(1)).alias("n"),
-        (F.sum(quantize("x", 2)).cast("double") / 100.0).alias("sx"),
+        dsum("x", 2).alias("sx"),
         F.sum(quantize(F.col("x") * F.col("x"), 0)).cast("double").alias("sxx"),
     )
     wide = agg.agg(
@@ -2471,20 +2460,16 @@ def q487(spark, sf_dir):
     )
     m = x.agg(
         F.count(F.lit(1)).alias("n"),
-        (F.sum(quantize("v", 9)).cast("double") / 1e9).alias("s"),
+        dsum("v", 9).alias("s"),
     )
     dev = F.col("v") - F.col("s") / F.col("n")
     cm = (
         x.crossJoin(F.broadcast(m))
         .agg(
             F.first("n").alias("n"),
-            (F.sum(quantize(dev * dev, 9)).cast("double") / 1e9).alias("m2"),
-            (F.sum(quantize(dev * dev * dev, 9)).cast("double") / 1e9).alias(
-                "m3"
-            ),
-            (
-                F.sum(quantize(dev * dev * dev * dev, 9)).cast("double") / 1e9
-            ).alias("m4"),
+            dsum(dev * dev, 9).alias("m2"),
+            dsum(dev * dev * dev, 9).alias("m3"),
+            dsum(dev * dev * dev * dev, 9).alias("m4"),
         )
     )
     skew = (F.col("m3") / F.col("n")) / F.pow(F.col("m2") / F.col("n"), 1.5)
@@ -2796,14 +2781,8 @@ def q492(spark, sf_dir):
     aggs = [F.count(F.lit(1)).cast("long").alias("n")]
     for c in ("i1", "i2", "i3", "i4", "tot"):
         tag = "t" if c == "tot" else c[1]
-        aggs.append(
-            (F.sum(quantize(c, 6)).cast("double") / 1e6).alias(f"s{tag}")
-        )
-        aggs.append(
-            (
-                F.sum(quantize(F.col(c) * F.col(c), 4)).cast("double") / 1e4
-            ).alias(f"ss{tag}")
-        )
+        aggs.append(dsum(c, 6).alias(f"s{tag}"))
+        aggs.append(dsum(F.col(c) * F.col(c), 4).alias(f"ss{tag}"))
     sums = w.agg(*aggs)
     item_var = sum(
         F.col(f"ss{i}") - F.col(f"s{i}") * F.col(f"s{i}") / F.col("n")
@@ -3089,11 +3068,7 @@ def q495(spark, sf_dir):
         F.col("l_returnflag").isin(["R", "N"])
     )
     grp_means = li.groupBy(F.col("l_returnflag").alias("g")).agg(
-        (
-            F.sum(quantize("l_extendedprice", 2)).cast("double")
-            / 100.0
-            / F.count(F.lit(1))
-        ).alias("mu")
+        (dsum("l_extendedprice", 2) / F.count(F.lit(1))).alias("mu")
     )
     dev = li.join(
         F.broadcast(grp_means), li.l_returnflag == grp_means.g
@@ -3128,13 +3103,9 @@ def q495(spark, sf_dir):
     )
     u2 = F.col("u") * F.col("u")
     sums = ranked.agg(
-        (F.sum(quantize(F.col("c1") * u2, 9)).cast("double") / 1e9).alias("t1"),
-        (F.sum(quantize(F.col("cnt") * u2, 9)).cast("double") / 1e9).alias(
-            "sr2"
-        ),
-        (F.sum(quantize(F.col("cnt") * u2 * u2, 9)).cast("double") / 1e9).alias(
-            "sr4"
-        ),
+        dsum(F.col("c1") * u2, 9).alias("t1"),
+        dsum(F.col("cnt") * u2, 9).alias("sr2"),
+        dsum(F.col("cnt") * u2 * u2, 9).alias("sr4"),
     ).crossJoin(F.broadcast(tot))
     nn = F.col("n1") + F.col("n2")
     rbar2 = F.col("sr2") / nn
@@ -3320,29 +3291,17 @@ def q523(spark, sf_dir):
         "vec_id",
         F.posexplode("emb").alias("i0", "x"),
     ).select("source", "vec_id", (F.col("i0") + 1).alias("i"), "x")
-    cent = vl.groupBy("source", "i").agg(
-        (
-            F.sum(quantize("x", 6)).cast("double") / 1e6 / F.count(F.lit(1))
-        ).alias("ci")
-    )
+    cent = vl.groupBy("source", "i").agg((dsum("x", 6) / F.count(F.lit(1))).alias("ci"))
     per_vec = (
         vl.join(cent, ["source", "i"])
         .groupBy("source", "vec_id")
         .agg(
-            (
-                F.sum(
-                    quantize(
-                        (F.col("x") - F.col("ci")) * (F.col("x") - F.col("ci")),
-                        9,
-                    )
-                ).cast("double")
-                / 1e9
-            ).alias("dd")
+            dsum((F.col("x") - F.col("ci")) * (F.col("x") - F.col("ci")), 9).alias("dd")
         )
     )
     intra = per_vec.groupBy("source").agg(
         F.countDistinct("vec_id").cast("long").alias("n_vecs"),
-        (F.sum(quantize("dd", 9)).cast("double") / 1e9).alias("sum_d2"),
+        dsum("dd", 9).alias("sum_d2"),
     )
     ca = cent.select(
         F.col("source").alias("sa"), "i", F.col("ci").alias("cia")
@@ -3355,15 +3314,8 @@ def q523(spark, sf_dir):
         .filter(F.col("sa") != F.col("sb"))
         .groupBy("sa", "sb")
         .agg(
-            (
-                F.sum(
-                    quantize(
-                        (F.col("cia") - F.col("cib"))
-                        * (F.col("cia") - F.col("cib")),
-                        9,
-                    )
-                ).cast("double")
-                / 1e9
+            dsum(
+                (F.col("cia") - F.col("cib")) * (F.col("cia") - F.col("cib")), 9
             ).alias("d2")
         )
     )
@@ -3602,11 +3554,7 @@ def q527(spark, sf_dir):
     rev = (
         orders.join(cust, orders.o_custkey == cust.c_custkey)
         .groupBy(F.col("c_mktsegment").alias("segment"), "o_custkey")
-        .agg(
-            (F.sum(quantize("o_totalprice", 2)).cast("double") / 100.0).alias(
-                "y"
-            )
-        )
+        .agg(dsum("o_totalprice", 2).alias("y"))
     )
     qs = rev.groupBy("segment").agg(
         F.count(F.lit(1)).cast("long").alias("n_customers"),
@@ -3714,17 +3662,12 @@ def q537(spark, sf_dir):
 
     li = T(spark, sf_dir, "lineitem")
     monthly = li.groupBy(F.date_trunc("month", "l_shipdate").alias("mth")).agg(
-        (
-            (F.sum(quantize("l_extendedprice", 2)).cast("double") / 100.0)
-            / 1e6
-        ).alias("y")
+        (dsum("l_extendedprice", 2) / 1e6).alias("y")
     )
     m = monthly.agg(
         F.count(F.lit(1)).alias("n"),
-        (F.sum(quantize("y", 6)).cast("double") / 1e6).alias("s"),
-        (F.sum(quantize(F.col("y") * F.col("y"), 6)).cast("double") / 1e6).alias(
-            "ss"
-        ),
+        dsum("y", 6).alias("s"),
+        dsum(F.col("y") * F.col("y"), 6).alias("ss"),
     )
     fit = m.select(
         "n",
@@ -3824,9 +3767,7 @@ def q540(spark, sf_dir):
         .groupBy(F.col("c_mktsegment").alias("seg"))
         .agg(
             F.count(F.lit(1)).cast("long").alias("n"),
-            (
-                F.sum(quantize("o_totalprice", 2)).cast("double") / 100.0 / 1e3
-            ).alias("s"),
+            (dsum("o_totalprice", 2) / 1e3).alias("s"),
             (
                 F.sum(
                     quantize(F.col("o_totalprice") * F.col("o_totalprice"), -4)
@@ -3912,11 +3853,7 @@ def q545(spark, sf_dir):
     s = (
         top.crossJoin(F.broadcast(th))
         .agg(
-            (
-                F.sum(quantize(F.log(F.col("x") / F.col("thr")), 9)).cast("double")
-                / 1e9
-                / 200.0
-            ).alias("ainv"),
+            (dsum(F.log(F.col("x") / F.col("thr")), 9) / 200.0).alias("ainv"),
             F.first("thr").alias("thr"),
         )
     )
@@ -3991,7 +3928,7 @@ def q546(spark, sf_dir):
         0.0
     ) + F.when(F.col("q") > 0, 0.5 * F.col("q") * F.log(F.col("q") / F.col("m"))).otherwise(0.0)
     js = terms.agg(
-        (F.sum(quantize(term, 12)).cast("double") / 1e12).alias("v"),
+        dsum(term, 12).alias("v"),
         F.count(F.lit(1)).cast("long").alias("n_bins"),
     )
     return js.select("n_bins", (quantize("v", 8) / 1e8).alias("js_nats"))
@@ -4042,7 +3979,7 @@ def q547(spark, sf_dir):
     orders = T(spark, sf_dir, "orders")
     per_g = orders.groupBy(F.col("o_orderpriority").alias("g")).agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        (F.sum(quantize("o_totalprice", 2)).cast("double") / 1e2 / 1e3).alias("s"),
+        (dsum("o_totalprice", 2) / 1e3).alias("s"),
         (
             F.sum(quantize(F.col("o_totalprice") * F.col("o_totalprice"), -4)).cast(
                 "double"
@@ -4061,12 +3998,8 @@ def q547(spark, sf_dir):
     agg = v.agg(
         F.count(F.lit(1)).cast("long").alias("k"),
         F.sum("n").cast("long").alias("nn"),
-        (F.sum(quantize((F.col("n") - 1) * F.log("s2"), 9)).cast("double") / 1e9).alias(
-            "sl"
-        ),
-        (F.sum(quantize((F.col("n") - 1) * F.col("s2"), 6)).cast("double") / 1e6).alias(
-            "sv"
-        ),
+        dsum((F.col("n") - 1) * F.log("s2"), 9).alias("sl"),
+        dsum((F.col("n") - 1) * F.col("s2"), 6).alias("sv"),
         F.sum(1.0 / (F.col("n") - 1)).alias("sinv"),
     )
     t = ((F.col("nn") - F.col("k")) * F.log(F.col("sv") / (F.col("nn") - F.col("k"))) - F.col("sl")) / (
@@ -4130,7 +4063,7 @@ def q548(spark, sf_dir):
         .groupBy(F.col("c_mktsegment").alias("seg"))
         .agg(
             F.count(F.lit(1)).cast("long").alias("n"),
-            (F.sum(quantize("o_totalprice", 2)).cast("double") / 1e2 / 1e3).alias("s"),
+            (dsum("o_totalprice", 2) / 1e3).alias("s"),
             (
                 F.sum(
                     quantize(F.col("o_totalprice") * F.col("o_totalprice"), -4)
@@ -4153,9 +4086,7 @@ def q548(spark, sf_dir):
     )
     mse = v.agg(
         (
-            F.sum(quantize((F.col("n") - 1) * F.col("s2"), 6)).cast("double")
-            / 1e6
-            / (F.sum("n") - F.count(F.lit(1)))
+            dsum((F.col("n") - 1) * F.col("s2"), 6) / (F.sum("n") - F.count(F.lit(1)))
         ).alias("mse")
     )
     a = v.select(
@@ -4317,30 +4248,17 @@ def q573(spark, sf_dir):
     n = F.col("a") + F.col("b") + F.col("c") + F.col("d")
     terms = cells.agg(
         F.count(F.lit(1)).cast("long").alias("k_strata"),
-        (F.sum(quantize(F.col("a") * F.col("d") / n, 9)).cast("double") / 1e9).alias(
-            "sad"
-        ),
-        (F.sum(quantize(F.col("b") * F.col("c") / n, 9)).cast("double") / 1e9).alias(
-            "sbc"
-        ),
+        dsum(F.col("a") * F.col("d") / n, 9).alias("sad"),
+        dsum(F.col("b") * F.col("c") / n, 9).alias("sbc"),
         F.sum("a").cast("double").alias("sa"),
-        (
-            F.sum(quantize((F.col("a") + F.col("b")) * (F.col("a") + F.col("c")) / n, 9))
-            .cast("double")
-            / 1e9
-        ).alias("se"),
-        (
-            F.sum(
-                quantize(
-                    (F.col("a") + F.col("b"))
-                    * (F.col("c") + F.col("d"))
-                    * (F.col("a") + F.col("c"))
-                    * (F.col("b") + F.col("d"))
-                    / (n * n * (n - 1)),
-                    9,
-                )
-            ).cast("double")
-            / 1e9
+        dsum((F.col("a") + F.col("b")) * (F.col("a") + F.col("c")) / n, 9).alias("se"),
+        dsum(
+            (F.col("a") + F.col("b"))
+            * (F.col("c") + F.col("d"))
+            * (F.col("a") + F.col("c"))
+            * (F.col("b") + F.col("d"))
+            / (n * n * (n - 1)),
+            9,
         ).alias("sv"),
     )
     return terms.select(
@@ -4437,26 +4355,17 @@ def q574(spark, sf_dir):
     m2 = cells.groupBy("r2").agg(F.sum("o").alias("q"))
     tot = cells.agg(F.sum("o").alias("n"))
     num = cells.agg(
-        (
-            F.sum(quantize(F.abs(F.col("r1") - F.col("r2")) / 4.0 * F.col("o"), 6))
-            .cast("double")
-            / 1e6
-        ).alias("wo")
+        dsum(F.abs(F.col("r1") - F.col("r2")) / 4.0 * F.col("o"), 6).alias("wo")
     )
     den = (
         m1.crossJoin(F.broadcast(m2))
         .crossJoin(F.broadcast(tot))
         .agg(
-            (
-                F.sum(
-                    quantize(
-                        F.abs(F.col("r1") - F.col("r2"))
-                        / 4.0
-                        * (F.col("p") * F.col("q") / F.col("n")),
-                        6,
-                    )
-                ).cast("double")
-                / 1e6
+            dsum(
+                F.abs(F.col("r1") - F.col("r2"))
+                / 4.0
+                * (F.col("p") * F.col("q") / F.col("n")),
+                6,
             ).alias("we")
         )
     )
@@ -4643,11 +4552,7 @@ def q586(spark, sf_dir):
             F.date_trunc("month", "o_orderdate").alias("mth"),
             F.col("c_mktsegment").alias("seg"),
         )
-        .agg(
-            (F.sum(quantize("o_totalprice", 2)).cast("double") / 1e2 / 1e6).alias(
-                "rev"
-            )
-        )
+        .agg((dsum("o_totalprice", 2) / 1e6).alias("rev"))
     )
     w_m = Window.partitionBy("mth").orderBy(F.col("rev").desc(), F.col("seg").asc())
     ranked = cells.select("mth", "seg", F.row_number().over(w_m).alias("rk"))
@@ -4737,7 +4642,7 @@ def q589(spark, sf_dir):
     part = T(spark, sf_dir, "part")
     per_b = part.groupBy(F.col("p_brand").alias("brand")).agg(
         F.count(F.lit(1)).cast("double").alias("n"),
-        (F.sum(quantize("p_retailprice", 2)).cast("double") / 1e2 / 1e3).alias("s"),
+        (dsum("p_retailprice", 2) / 1e3).alias("s"),
         (
             F.sum(quantize(F.col("p_retailprice") * F.col("p_retailprice"), -2)).cast(
                 "double"
@@ -4749,12 +4654,9 @@ def q589(spark, sf_dir):
     agg = per_b.agg(
         F.count(F.lit(1)).cast("double").alias("k"),
         F.sum("n").alias("nn"),
-        (F.sum(quantize("s", 6)).cast("double") / 1e6).alias("st"),
-        (F.sum(quantize("ss", 6)).cast("double") / 1e6).alias("sst"),
-        (
-            F.sum(quantize(F.col("s") * F.col("s") / F.col("n"), 9)).cast("double")
-            / 1e9
-        ).alias("sgg"),
+        dsum("s", 6).alias("st"),
+        dsum("ss", 6).alias("sst"),
+        dsum(F.col("s") * F.col("s") / F.col("n"), 9).alias("sgg"),
         F.sum(F.col("n") * F.col("n")).alias("snn"),
     )
     ms = agg.selectExpr(
@@ -4919,25 +4821,17 @@ def q618(spark, sf_dir):
         orders.join(cust, orders.o_custkey == cust.c_custkey)
         .groupBy(F.col("c_mktsegment").alias("seg"), "o_custkey")
         .agg(
-            (F.sum(quantize("o_totalprice", 2)).cast("double") / 1e2 / 1e3).alias(
-                "x"
-            ),
+            (dsum("o_totalprice", 2) / 1e3).alias("x"),
             F.count(F.lit(1)).cast("double").alias("y"),
         )
     )
     s = per_c.groupBy("seg").agg(
         F.count(F.lit(1)).cast("double").alias("n"),
-        (F.sum(quantize("x", 6)).cast("double") / 1e6).alias("sx"),
-        (F.sum(quantize("y", 2)).cast("double") / 1e2).alias("sy"),
-        (F.sum(quantize(F.col("x") * F.col("x"), 6)).cast("double") / 1e6).alias(
-            "sxx"
-        ),
-        (F.sum(quantize(F.col("y") * F.col("y"), 2)).cast("double") / 1e2).alias(
-            "syy"
-        ),
-        (F.sum(quantize(F.col("x") * F.col("y"), 6)).cast("double") / 1e6).alias(
-            "sxy"
-        ),
+        dsum("x", 6).alias("sx"),
+        dsum("y", 2).alias("sy"),
+        dsum(F.col("x") * F.col("x"), 6).alias("sxx"),
+        dsum(F.col("y") * F.col("y"), 2).alias("syy"),
+        dsum(F.col("x") * F.col("y"), 6).alias("sxy"),
     )
     r = (F.col("sx") / F.col("n")) / (F.col("sy") / F.col("n"))
     v = (
@@ -5008,11 +4902,7 @@ def q619(spark, sf_dir):
     per_c = tracked_persist(
         cust.join(orders, cust.c_custkey == orders.o_custkey)
         .groupBy("c_custkey", F.col("c_acctbal").alias("bal"))
-        .agg(
-            (F.sum(quantize("o_totalprice", 2)).cast("double") / 1e2 / 1e3).alias(
-                "sp"
-            )
-        )
+        .agg((dsum("o_totalprice", 2) / 1e3).alias("sp"))
     )
     cuts = per_c.agg(
         F.expr("percentile(bal, 0.05)").alias("bl"),
@@ -5026,17 +4916,11 @@ def q619(spark, sf_dir):
     )
     s = w.agg(
         F.count(F.lit(1)).cast("double").alias("n"),
-        (F.sum(quantize("x", 6)).cast("double") / 1e6).alias("sx"),
-        (F.sum(quantize("y", 6)).cast("double") / 1e6).alias("sy"),
-        (F.sum(quantize(F.col("x") * F.col("x"), 6)).cast("double") / 1e6).alias(
-            "sxx"
-        ),
-        (F.sum(quantize(F.col("y") * F.col("y"), 6)).cast("double") / 1e6).alias(
-            "syy"
-        ),
-        (F.sum(quantize(F.col("x") * F.col("y"), 6)).cast("double") / 1e6).alias(
-            "sxy"
-        ),
+        dsum("x", 6).alias("sx"),
+        dsum("y", 6).alias("sy"),
+        dsum(F.col("x") * F.col("x"), 6).alias("sxx"),
+        dsum(F.col("y") * F.col("y"), 6).alias("syy"),
+        dsum(F.col("x") * F.col("y"), 6).alias("sxy"),
     )
     out = s.selectExpr(
         "CAST(n AS BIGINT) AS n_customers",

@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from pandrs_spark.catalog import load_table as T
-from pandrs_spark.functions.deterministic import sql_quantize
+from pandrs_spark.functions.deterministic import dsum, sql_quantize
 from pandrs_spark.operators.dedup import (
     exact_dedup_clusters,
     lsh_candidate_pairs,
@@ -1178,8 +1178,6 @@ def q237(spark, sf_dir):
     """,
 )
 def q275(spark, sf_dir):
-    from pandrs_spark.functions.deterministic import dsum
-
     docs = T(spark, sf_dir, "documents")
     ntok = F.size(
         F.filter(F.split("text", "\\s+"), lambda x: x != F.lit(""))
@@ -2642,7 +2640,7 @@ def q447(spark, sf_dir):
     scored = per_doc.select("source", flesch.alias("flesch"))
     agg = scored.groupBy("source").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
-        (F.sum(quantize("flesch", 9)).cast("double") / 1e9).alias("sf"),
+        dsum("flesch", 9).alias("sf"),
     )
     return agg.select(
         "source",
@@ -3087,7 +3085,6 @@ def q481(spark, sf_dir):
     """,
 )
 def q502(spark, sf_dir):
-    from pandrs_spark.functions.deterministic import quantize
     from pandrs_spark.operators.util import tracked_persist
 
     docs = T(spark, sf_dir, "documents")
@@ -3178,10 +3175,10 @@ def q502(spark, sf_dir):
 
     fit = pts.agg(
         F.count(F.lit(1)).alias("n"),
-        (F.sum(qz("x", 9)).cast("double") / 1e9).alias("sx"),
-        (F.sum(qz(F.col("x") * F.col("x"), 9)).cast("double") / 1e9).alias("sxx"),
-        (F.sum(qz("y", 9)).cast("double") / 1e9).alias("sy"),
-        (F.sum(qz(F.col("x") * F.col("y"), 9)).cast("double") / 1e9).alias("sxy"),
+        dsum("x", 9).alias("sx"),
+        dsum(F.col("x") * F.col("x"), 9).alias("sxx"),
+        dsum("y", 9).alias("sy"),
+        dsum(F.col("x") * F.col("y"), 9).alias("sxy"),
     )
     totals = first_seen.agg(
         F.count(F.lit(1)).cast("long").alias("vocab_full")
@@ -3927,14 +3924,8 @@ def q569(spark, sf_dir):
         )
     )
     h = pairs.groupBy("target_lang", "model_lang").agg(
-        (
-            F.sum(
-                quantize(
-                    -F.col("ct") * F.log((F.col("cs") + 1.0) / (F.col("ns") + F.col("v"))),
-                    6,
-                )
-            ).cast("double")
-            / 1e6
+        dsum(
+            -F.col("ct") * F.log((F.col("cs") + 1.0) / (F.col("ns") + F.col("v"))), 6
         ).alias("nll"),
         F.sum("ct").cast("long").alias("nt"),
     )
@@ -4276,14 +4267,12 @@ def q601(spark, sf_dir):
     )
     rel = tracked_persist(rel)
     wstats = rel.groupBy("tok").agg(
-        (F.sum(quantize("f", 12)).cast("double") / 1e12 / F.count(F.lit(1))).alias(
-            "mu"
-        ),
+        (dsum("f", 12) / F.count(F.lit(1))).alias("mu"),
         F.sqrt(
             (
-                F.sum(quantize(F.col("f") * F.col("f"), 15)).cast("double") / 1e15
-                - (F.sum(quantize("f", 12)).cast("double") / 1e12)
-                * (F.sum(quantize("f", 12)).cast("double") / 1e12)
+                dsum(F.col("f") * F.col("f"), 15)
+                - dsum("f", 12)
+                * dsum("f", 12)
                 / F.count(F.lit(1))
             )
             / (F.count(F.lit(1)) - 1)
@@ -4304,11 +4293,7 @@ def q601(spark, sf_dir):
         (F.col("tok") == F.col("tok_b")) & (F.col("lang") < F.col("lang_b")),
     )
     out = pairs.groupBy(F.col("lang").alias("lang_a"), "lang_b").agg(
-        (
-            F.sum(quantize(F.abs(F.col("z") - F.col("zb")), 9)).cast("double")
-            / 1e9
-            / F.count(F.lit(1))
-        ).alias("d")
+        (dsum(F.abs(F.col("z") - F.col("zb")), 9) / F.count(F.lit(1))).alias("d")
     )
     return out.select(
         "lang_a", "lang_b", (quantize("d", 6) / 1e6).alias("burrows_delta")
@@ -4374,15 +4359,13 @@ def q617(spark, sf_dir):
     # sqrt(3)/pi = 0.5513288954217921 — shared decimal literal
     fit = lens.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        (F.sum(quantize("lx", 9)).cast("double") / 1e9 / F.count(F.lit(1))).alias(
-            "mu"
-        ),
+        (dsum("lx", 9) / F.count(F.lit(1))).alias("mu"),
         (
             F.sqrt(
                 (
-                    F.sum(quantize(F.col("lx") * F.col("lx"), 9)).cast("double") / 1e9
-                    - (F.sum(quantize("lx", 9)).cast("double") / 1e9)
-                    * (F.sum(quantize("lx", 9)).cast("double") / 1e9)
+                    dsum(F.col("lx") * F.col("lx"), 9)
+                    - dsum("lx", 9)
+                    * dsum("lx", 9)
                     / F.count(F.lit(1))
                 )
                 / (F.count(F.lit(1)) - 1)

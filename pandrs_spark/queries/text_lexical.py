@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from pandrs_spark.catalog import load_table as T
-from pandrs_spark.functions.deterministic import quantize, sql_quantize
+from pandrs_spark.functions.deterministic import dsum, quantize, sql_quantize
 from pandrs_spark.queries import query
 
 _WS = "string_split_regex(lower(text), '\\s+')"
@@ -385,8 +385,8 @@ def q649(spark, sf_dir):
     p = F.col("c").cast("double") / F.col("n")
     s = freq.crossJoin(F.broadcast(nn)).agg(
         F.count(F.lit(1)).cast("long").alias("v"),
-        (F.sum(quantize(-p * F.log(p), 12)).cast("double") / 1e12).alias("sh"),
-        (F.sum(quantize(p * p, 15)).cast("double") / 1e15).alias("p2"),
+        dsum(-p * F.log(p), 12).alias("sh"),
+        dsum(p * p, 15).alias("p2"),
     )
     return s.select(
         F.col("v").alias("hill_0"),
@@ -568,8 +568,8 @@ def q687(spark, sf_dir):
     )
     mo = grid.groupBy("w").agg(
         F.count(F.lit(1)).alias("k"),
-        (F.sum(quantize("fr", 12)).cast("double") / 1e12).alias("s1"),
-        (F.sum(quantize(F.col("fr") * F.col("fr"), 12)).cast("double") / 1e12)
+        dsum("fr", 12).alias("s1"),
+        dsum(F.col("fr") * F.col("fr"), 12)
         .alias("s2"),
     )
     z = grid.join(F.broadcast(mo), "w").select(
@@ -589,13 +589,7 @@ def q687(spark, sf_dir):
     pairs = z.join(b, "w").where(F.col("source") < F.col("source_b"))
     g = pairs.groupBy(
         F.col("source").alias("source_a"), "source_b"
-    ).agg(
-        (
-            F.sum(quantize(F.abs(F.col("z") - F.col("zb")), 9)).cast("double")
-            / 1e9
-            / F.count(F.lit(1))
-        ).alias("d")
-    )
+    ).agg((dsum(F.abs(F.col("z") - F.col("zb")), 9) / F.count(F.lit(1))).alias("d"))
     return g.select(
         "source_a",
         "source_b",

@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from pandrs_spark.catalog import load_table as T
-from pandrs_spark.functions.deterministic import sql_quantize
+from pandrs_spark.functions.deterministic import dsum, sql_quantize
 from pandrs_spark.operators.similarity import cosine_topk, nearest_neighbors
 from pandrs_spark.queries import query
 from pandrs_spark.queries.text import _WS
@@ -650,7 +650,6 @@ def _q431_mean_sql(first_byte: int) -> str:
     """,
 )
 def q431(spark, sf_dir):
-    from pandrs_spark.functions.deterministic import quantize
     from pandrs_spark.operators.multimodal import (
         attach_media_struct,
         decode_image_features,
@@ -683,15 +682,9 @@ def q431(spark, sf_dir):
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("width").cast("bigint").alias("sum_width"),
             F.sum("height").cast("bigint").alias("sum_height"),
-            (F.sum(quantize(F.col("features")[0], 9)).cast("double") / 1e9).alias(
-                "sum_mean_b"
-            ),
-            (F.sum(quantize(F.col("features")[1], 9)).cast("double") / 1e9).alias(
-                "sum_mean_g"
-            ),
-            (F.sum(quantize(F.col("features")[2], 9)).cast("double") / 1e9).alias(
-                "sum_mean_r"
-            ),
+            dsum(F.col("features")[0], 9).alias("sum_mean_b"),
+            dsum(F.col("features")[1], 9).alias("sum_mean_g"),
+            dsum(F.col("features")[2], 9).alias("sum_mean_r"),
         )
         .orderBy("source")
     )
@@ -832,7 +825,6 @@ def _q483_mean_sql(first_byte: int) -> str:
     """,
 )
 def q483(spark, sf_dir):
-    from pandrs_spark.functions.deterministic import quantize
     from pandrs_spark.operators.multimodal import (
         attach_media_struct,
         decode_image_features,
@@ -865,15 +857,9 @@ def q483(spark, sf_dir):
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("width").cast("bigint").alias("sum_width"),
             F.sum("height").cast("bigint").alias("sum_height"),
-            (F.sum(quantize(F.col("features")[0], 9)).cast("double") / 1e9).alias(
-                "sum_mean_r"
-            ),
-            (F.sum(quantize(F.col("features")[1], 9)).cast("double") / 1e9).alias(
-                "sum_mean_g"
-            ),
-            (F.sum(quantize(F.col("features")[2], 9)).cast("double") / 1e9).alias(
-                "sum_mean_b"
-            ),
+            dsum(F.col("features")[0], 9).alias("sum_mean_r"),
+            dsum(F.col("features")[1], 9).alias("sum_mean_g"),
+            dsum(F.col("features")[2], 9).alias("sum_mean_b"),
         )
         .orderBy("source")
     )
@@ -1226,8 +1212,6 @@ _Q289_STD = "SQRT((sxx - sx * sx / n) / (n - 1))"
     """,
 )
 def q289(spark, sf_dir):
-    from pandrs_spark.functions.deterministic import quantize
-
     emb = T(spark, sf_dir, "embeddings")
     dims = emb.select(
         F.posexplode(F.col("embedding").cast("array<double>")).alias(
@@ -1236,8 +1220,8 @@ def q289(spark, sf_dir):
     )
     st = dims.groupBy("dim").agg(
         F.count(F.lit(1)).alias("n"),
-        (F.sum(quantize("x", 9)) / 1e9).alias("sx"),
-        (F.sum(quantize(F.col("x") * F.col("x"), 9)) / 1e9).alias("sxx"),
+        dsum("x", 9).alias("sx"),
+        dsum(F.col("x") * F.col("x"), 9).alias("sxx"),
     )
     return st.select(
         F.col("dim").cast("int").alias("dim"),
@@ -1312,7 +1296,7 @@ def q311(spark, sf_dir):
         F.posexplode(F.col("embedding").cast("array<double>")).alias("dim", "x"),
     )
     cent = dims.groupBy("label", "dim").agg(
-        ((F.sum(quantize("x", 9)) / 1e9) / F.count(F.lit(1))).alias("c")
+        (dsum("x", 9) / F.count(F.lit(1))).alias("c")
     )
     carr = cent.groupBy("label").agg(
         F.transform(
@@ -1674,7 +1658,7 @@ def q603(spark, sf_dir):
     )
     s = mu.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        (F.sum(quantize(F.log("mu"), 9)).cast("double") / 1e9).alias("slm"),
+        dsum(F.log("mu"), 9).alias("slm"),
     )
     return s.select(
         F.col("n").alias("n_points"),
@@ -1730,10 +1714,8 @@ def q604(spark, sf_dir):
     per_l = tracked_persist(
         norms.groupBy("label").agg(
             F.count(F.lit(1)).cast("double").alias("n"),
-            (F.sum(quantize("nm", 9)).cast("double") / 1e9).alias("s"),
-            (F.sum(quantize(F.col("nm") * F.col("nm"), 9)).cast("double") / 1e9).alias(
-                "ss"
-            ),
+            dsum("nm", 9).alias("s"),
+            dsum(F.col("nm") * F.col("nm"), 9).alias("ss"),
         )
     )
     spread = per_l.agg(

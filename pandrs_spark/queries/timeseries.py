@@ -14,6 +14,7 @@ from pandrs_spark.functions.deterministic import (
     CORR_FORMULA,
     davg,
     dsum,
+    dsum_over,
     quantize,
     sql_davg,
     sql_dsum,
@@ -521,8 +522,6 @@ def q83(spark, sf_dir):
     """,
 )
 def q84(spark, sf_dir):
-    from pandrs_spark.functions.deterministic import dsum_over
-
     li = T(spark, sf_dir, "lineitem")
     daily = li.groupBy(F.date_trunc("day", "l_shipdate").alias("day")).agg(
         dsum("l_extendedprice").alias("rev")
@@ -766,8 +765,6 @@ def q103(spark, sf_dir):
     """,
 )
 def q105(spark, sf_dir):
-    from pandrs_spark.functions.deterministic import dsum_over
-
     li = T(spark, sf_dir, "lineitem")
     daily = li.groupBy(F.date_trunc("day", "l_shipdate").alias("day")).agg(
         dsum("l_extendedprice").alias("rev")
@@ -1762,8 +1759,6 @@ def q356(spark, sf_dir):
 # Reference: distribution-fitting surface of src/stats/mod.rs
 # (PPCC q319's sibling, on the regression path).
 def _q366_oracle() -> str:
-    from pandrs_spark.functions.deterministic import sql_dsum
-
     return f"""
     WITH delays AS (
         SELECT DATEDIFF('day', o.o_orderdate, l.l_shipdate) AS t
@@ -1864,8 +1859,6 @@ def q366(spark, sf_dir):
 # both engines. Reference: src/time_series/forecasting.rs (SES :436 is the
 # same recursion shape, fitted; adstock is the fixed-λ transform).
 def _q376_oracle() -> str:
-    from pandrs_spark.functions.deterministic import sql_dsum, sql_quantize
-
     term = sql_quantize(
         "s.rev * POWER(CAST(0.7 AS DOUBLE), DATEDIFF('month', s.m, t.m))", 4
     )
@@ -1892,8 +1885,6 @@ def _q376_oracle() -> str:
 
 @query("q376_adstock_monthly_revenue", oracle=_q376_oracle())
 def q376(spark, sf_dir):
-    from pandrs_spark.functions.deterministic import dsum, quantize
-
     od = T(spark, sf_dir, "orders")
     monthly = od.groupBy(
         F.date_trunc("month", "o_orderdate").alias("m")
@@ -2790,8 +2781,6 @@ def _q418_var(col: str) -> str:
     """,
 )
 def q418(spark, sf_dir):
-    from pandrs_spark.functions.deterministic import quantize
-
     li = T(spark, sf_dir, "lineitem")
     daily = li.groupBy(F.date_trunc("day", "l_shipdate").alias("day")).agg(
         dsum("l_extendedprice").alias("rev")
@@ -2807,8 +2796,8 @@ def q418(spark, sf_dir):
 
     def var_of(col):
         n = F.count(F.lit(1))
-        sx = F.sum(quantize(col, 4)).cast("double") / 1e4
-        sxx = F.sum(quantize(F.col(col) * F.col(col), 4)).cast("double") / 1e4
+        sx = dsum(col, 4)
+        sxx = dsum(F.col(col) * F.col(col), 4)
         return sxx / n - (sx / n) * (sx / n)
 
     vars_ = comp.agg(
@@ -2871,7 +2860,6 @@ def q418(spark, sf_dir):
     """,
 )
 def q426(spark, sf_dir):
-    from pandrs_spark.functions.deterministic import quantize
     from pandrs_spark.operators.util import tracked_persist
 
     li = T(spark, sf_dir, "lineitem")
@@ -2970,7 +2958,6 @@ def q426(spark, sf_dir):
     """,
 )
 def q451(spark, sf_dir):
-    from pandrs_spark.functions.deterministic import dsum, quantize
     from pandrs_spark.operators.util import tracked_persist
     from pandrs_spark.operators.windows import global_row_number
 
@@ -2996,9 +2983,7 @@ def q451(spark, sf_dir):
         "blk",
         "t",
         "x",
-        (
-            F.sum(quantize("x", 2)).over(wb).cast("double") / 100.0 / F.col("s")
-        ).alias("mean_x"),
+        (dsum_over("x", wb, 2) / F.col("s")).alias("mean_x"),
         (
             F.sum(quantize(F.col("x") * F.col("x"), 0)).over(wb).cast("double")
             / F.col("s")
@@ -3018,17 +3003,15 @@ def q451(spark, sf_dir):
     )
     per_s = rs.groupBy("s").agg(
         F.count(F.lit(1)).cast("long").alias("n_blocks"),
-        (
-            F.sum(quantize("rs", 9)).cast("double") / 1e9 / F.count(F.lit(1))
-        ).alias("mean_rs"),
+        (dsum("rs", 9) / F.count(F.lit(1))).alias("mean_rs"),
     )
     lns = F.log(F.col("s").cast("double"))
     fit = per_s.agg(
         F.count(F.lit(1)).alias("k"),
-        (F.sum(quantize(lns, 9)).cast("double") / 1e9).alias("sx"),
-        (F.sum(quantize(F.log("mean_rs"), 9)).cast("double") / 1e9).alias("sy"),
-        (F.sum(quantize(lns * lns, 9)).cast("double") / 1e9).alias("sxx"),
-        (F.sum(quantize(lns * F.log("mean_rs"), 9)).cast("double") / 1e9).alias("sxy"),
+        dsum(lns, 9).alias("sx"),
+        dsum(F.log("mean_rs"), 9).alias("sy"),
+        dsum(lns * lns, 9).alias("sxx"),
+        dsum(lns * F.log("mean_rs"), 9).alias("sxy"),
     )
     tot = per_s.agg(F.sum("n_blocks").cast("long").alias("n_blocks"))
     slope = (F.col("k") * F.col("sxy") - F.col("sx") * F.col("sy")) / (
@@ -3095,7 +3078,6 @@ def q451(spark, sf_dir):
     """,
 )
 def q452(spark, sf_dir):
-    from pandrs_spark.functions.deterministic import dsum, quantize
     from pandrs_spark.operators.util import tracked_persist
 
     li = T(spark, sf_dir, "lineitem")
@@ -3137,10 +3119,10 @@ def q452(spark, sf_dir):
         .groupBy("brand_q", "brand_p")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            (F.sum(quantize(F.log("pb"), 9)).cast("double") / 1e9).alias("sx"),
-            (F.sum(quantize(F.log("qa"), 9)).cast("double") / 1e9).alias("sy"),
-            (F.sum(quantize(F.log("pb") * F.log("pb"), 9)).cast("double") / 1e9).alias("sxx"),
-            (F.sum(quantize(F.log("pb") * F.log("qa"), 9)).cast("double") / 1e9).alias("sxy"),
+            dsum(F.log("pb"), 9).alias("sx"),
+            dsum(F.log("qa"), 9).alias("sy"),
+            dsum(F.log("pb") * F.log("pb"), 9).alias("sxx"),
+            dsum(F.log("pb") * F.log("qa"), 9).alias("sxy"),
         )
     )
     slope = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")) / (
@@ -3220,7 +3202,6 @@ def q452(spark, sf_dir):
     """,
 )
 def q459(spark, sf_dir):
-    from pandrs_spark.functions.deterministic import dsum, quantize
     from pandrs_spark.operators.util import tracked_persist
 
     li = T(spark, sf_dir, "lineitem")
@@ -3238,15 +3219,7 @@ def q459(spark, sf_dir):
     denom = (
         train.withColumn("prev", F.lag("y").over(Window.orderBy("i")))
         .filter(F.col("prev").isNotNull())
-        .agg(
-            (
-                F.sum(quantize(F.abs(F.col("y") - F.col("prev")), 2)).cast(
-                    "double"
-                )
-                / 100.0
-                / F.count("prev")
-            ).alias("d")
-        )
+        .agg((dsum(F.abs(F.col("y") - F.col("prev")), 2) / F.count("prev")).alias("d"))
     )
     anchors = train.agg(
         F.max(F.when(F.col("i") == n_tot - 6, F.col("y"))).alias("y_last"),
@@ -3273,11 +3246,7 @@ def q459(spark, sf_dir):
     ens = (F.col("f_naive") + F.col("f_snaive") + F.col("f_drift")) / 3.0
 
     def mae(fc):
-        return (
-            F.sum(quantize(F.abs(F.col("y") - fc), 2)).cast("double")
-            / 100.0
-            / F.count(F.lit(1))
-        )
+        return dsum(F.abs(F.col("y") - fc), 2) / F.count(F.lit(1))
 
     errs = holdout.agg(
         mae(F.col("f_naive")).alias("mae_naive"),
@@ -3373,7 +3342,6 @@ def q459(spark, sf_dir):
     """,
 )
 def q460(spark, sf_dir):
-    from pandrs_spark.functions.deterministic import quantize
     from pandrs_spark.operators.util import tracked_persist
 
     orders = T(spark, sf_dir, "orders")
@@ -3389,11 +3357,7 @@ def q460(spark, sf_dir):
             F.col("r_name").alias("region"),
             F.date_trunc("month", "o_orderdate").alias("mth"),
         )
-        .agg(
-            (F.sum(quantize("o_totalprice", 2)).cast("double") / 100.0 / 1e6).alias(
-                "rev"
-            )
-        )
+        .agg((dsum("o_totalprice", 2) / 1e6).alias("rev"))
     )
     wide = tracked_persist(
         rev.groupBy("mth")
@@ -3405,10 +3369,10 @@ def q460(spark, sf_dir):
     )
     ols = wide.agg(
         F.count(F.lit(1)).alias("n"),
-        (F.sum(quantize("x", 6)).cast("double") / 1e6).alias("sx"),
-        (F.sum(quantize("y", 6)).cast("double") / 1e6).alias("sy"),
-        (F.sum(quantize(F.col("x") * F.col("x"), 6)).cast("double") / 1e6).alias("sxx"),
-        (F.sum(quantize(F.col("x") * F.col("y"), 6)).cast("double") / 1e6).alias("sxy"),
+        dsum("x", 6).alias("sx"),
+        dsum("y", 6).alias("sy"),
+        dsum(F.col("x") * F.col("x"), 6).alias("sxx"),
+        dsum(F.col("x") * F.col("y"), 6).alias("sxy"),
     )
     beta = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")) / (
         F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
@@ -3429,9 +3393,9 @@ def q460(spark, sf_dir):
     ).filter(F.col("elag").isNotNull())
     sums = pairs.agg(
         F.count(F.lit(1)).alias("n2"),
-        (F.sum(quantize(F.col("elag") * F.col("de"), 6)).cast("double") / 1e6).alias("sxy2"),
-        (F.sum(quantize(F.col("elag") * F.col("elag"), 6)).cast("double") / 1e6).alias("sxx2"),
-        (F.sum(quantize(F.col("de") * F.col("de"), 6)).cast("double") / 1e6).alias("syy2"),
+        dsum(F.col("elag") * F.col("de"), 6).alias("sxy2"),
+        dsum(F.col("elag") * F.col("elag"), 6).alias("sxx2"),
+        dsum(F.col("de") * F.col("de"), 6).alias("syy2"),
     )
     phi = F.col("sxy2") / F.col("sxx2")
     adf_t = phi / F.sqrt(
@@ -3500,13 +3464,9 @@ def q460(spark, sf_dir):
     """,
 )
 def q461(spark, sf_dir):
-    from pandrs_spark.functions.deterministic import dsum, quantize
-
     li = T(spark, sf_dir, "lineitem")
     daily = li.groupBy(F.date_trunc("day", "l_shipdate").alias("day")).agg(
-        ((F.sum(quantize("l_extendedprice", 2)).cast("double") / 100.0) / 1e6).alias(
-            "x"
-        )
+        (dsum("l_extendedprice", 2) / 1e6).alias("x")
     )
     from pandrs_spark.operators.timeseries import page_hinkley
 
@@ -3565,7 +3525,6 @@ def q461(spark, sf_dir):
     """,
 )
 def q462(spark, sf_dir):
-    from pandrs_spark.functions.deterministic import quantize
     from pandrs_spark.operators.util import tracked_persist
 
     orders = T(spark, sf_dir, "orders")
@@ -3600,7 +3559,7 @@ def q462(spark, sf_dir):
         spine.crossJoin(F.broadcast(grid))
         .groupBy("p", "q")
         .agg(
-            (F.sum(quantize(err2, 2)).cast("double") / 100.0).alias("sse"),
+            dsum(err2, 2).alias("sse"),
             F.count(F.lit(1)).cast("long").alias("n_weeks"),
         )
     )
@@ -3720,7 +3679,6 @@ def q465(spark, sf_dir):
     """,
 )
 def q478(spark, sf_dir):
-    from pandrs_spark.functions.deterministic import quantize
     from pandrs_spark.operators.util import tracked_persist
 
     li = T(spark, sf_dir, "lineitem")
@@ -3728,10 +3686,8 @@ def q478(spark, sf_dir):
         F.col("l_partkey").alias("part"),
         F.date_trunc("month", "l_shipdate").alias("mth"),
     ).agg(
-        (F.sum(quantize("l_quantity", 2)).cast("double") / 100.0).alias("q"),
-        (F.sum(quantize("l_extendedprice", 2)).cast("double") / 100.0).alias(
-            "v"
-        ),
+        dsum("l_quantity", 2).alias("q"),
+        dsum("l_extendedprice", 2).alias("v"),
     )
     priced = tracked_persist(
         pm.filter(F.col("q") > 0).select(
@@ -3748,16 +3704,8 @@ def q478(spark, sf_dir):
         priced.join(prev, ["part", "mth"])
         .groupBy("mth")
         .agg(
-            (
-                F.sum(quantize(F.col("p") * F.col("q_prev"), 2)).cast("double")
-                / 100.0
-            ).alias("num"),
-            (
-                F.sum(
-                    quantize(F.col("p_prev") * F.col("q_prev"), 2)
-                ).cast("double")
-                / 100.0
-            ).alias("den"),
+            dsum(F.col("p") * F.col("q_prev"), 2).alias("num"),
+            dsum(F.col("p_prev") * F.col("q_prev"), 2).alias("den"),
         )
     )
     w_run = Window.orderBy("mth").rowsBetween(Window.unboundedPreceding, 0)
@@ -3810,18 +3758,12 @@ def q478(spark, sf_dir):
     """,
 )
 def q482(spark, sf_dir):
-    from pandrs_spark.functions.deterministic import quantize
     from pandrs_spark.operators.hypothesis import anova_oneway
 
     li = T(spark, sf_dir, "lineitem")
     monthly = li.groupBy(
         F.date_trunc("month", "l_shipdate").alias("mth")
-    ).agg(
-        (
-            (F.sum(quantize("l_extendedprice", 2)).cast("double") / 100.0)
-            / 1e6
-        ).alias("rev")
-    )
+    ).agg((dsum("l_extendedprice", 2) / 1e6).alias("rev"))
     g = monthly.select(
         F.month("mth").alias("moy"), F.col("rev")
     )
@@ -3847,14 +3789,9 @@ _MONTHLY_REV_SQL = """
 def _monthly_rev(spark, sf_dir):
     """Monthly revenue rollup in millions (quantized exact sum) — the
     shared calendar-bounded series behind the trend/changepoint tier."""
-    from pandrs_spark.functions.deterministic import quantize
-
     li = T(spark, sf_dir, "lineitem")
     return li.groupBy(F.date_trunc("month", "l_shipdate").alias("mth")).agg(
-        (
-            (F.sum(quantize("l_extendedprice", 2)).cast("double") / 100.0)
-            / 1e6
-        ).alias("rev")
+        (dsum("l_extendedprice", 2) / 1e6).alias("rev")
     )
 
 
@@ -3987,8 +3924,6 @@ def q484(spark, sf_dir):
     """,
 )
 def q485(spark, sf_dir):
-    from pandrs_spark.functions.deterministic import quantize
-
     monthly = _monthly_rev(spark, sf_dir)
     w_ord = Window.orderBy("mth")
     d = monthly.select(
@@ -4004,9 +3939,9 @@ def q485(spark, sf_dir):
         F.count(F.lit(1)).alias("n"),
         F.sum(F.col("x").cast("bigint")).cast("double").alias("sx"),
         F.sum((F.col("x") * F.col("x")).cast("bigint")).cast("double").alias("sxx"),
-        (F.sum(quantize("y", 6)).cast("double") / 1e6).alias("sy"),
-        (F.sum(quantize(F.col("x") * F.col("y"), 6)).cast("double") / 1e6).alias("sxy"),
-        (F.sum(quantize(F.col("y") * F.col("y"), 6)).cast("double") / 1e6).alias("syy"),
+        dsum("y", 6).alias("sy"),
+        dsum(F.col("x") * F.col("y"), 6).alias("sxy"),
+        dsum(F.col("y") * F.col("y"), 6).alias("syy"),
     )
 
     def ssr_expr():
@@ -4017,9 +3952,7 @@ def q485(spark, sf_dir):
         return F.col("syy") - b0 * F.col("sy") - b1 * F.col("sxy")
 
     per_seg = sums.select("n", "sx", "sxx", "sy", "sxy", "syy", ssr_expr().alias("ssr_s"))
-    seg_tot = per_seg.agg(
-        (F.sum(quantize("ssr_s", 9)).cast("double") / 1e9).alias("ssr_seg_raw")
-    )
+    seg_tot = per_seg.agg(dsum("ssr_s", 9).alias("ssr_seg_raw"))
     pooled = sums.agg(
         F.sum("n").cast("long").alias("n"),
         F.sum("sx").alias("sx"),
@@ -4071,8 +4004,6 @@ def _ols_resid(spark, sf_dir):
     exact sums; scalar coefficients carried by broadcast crossJoin) —
     shared by the DW autocorrelation and BP heteroscedasticity
     diagnostics."""
-    from pandrs_spark.functions.deterministic import quantize
-
     monthly = _monthly_rev(spark, sf_dir)
     w_ord = Window.orderBy("mth")
     d = monthly.select(
@@ -4084,10 +4015,8 @@ def _ols_resid(spark, sf_dir):
         F.count(F.lit(1)).alias("n"),
         F.sum("x").alias("sx"),
         F.sum(F.col("x") * F.col("x")).alias("sxx"),
-        (F.sum(quantize("y", 6)).cast("double") / 1e6).alias("sy"),
-        (F.sum(quantize(F.col("x") * F.col("y"), 6)).cast("double") / 1e6).alias(
-            "sxy"
-        ),
+        dsum("y", 6).alias("sy"),
+        dsum(F.col("x") * F.col("y"), 6).alias("sxy"),
     )
     b1 = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")) / (
         F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
@@ -4132,7 +4061,6 @@ def _ols_resid(spark, sf_dir):
     """,
 )
 def q486(spark, sf_dir):
-    from pandrs_spark.functions.deterministic import quantize
     from pandrs_spark.operators.util import tracked_persist
 
     resid = tracked_persist(_ols_resid(spark, sf_dir))
@@ -4141,18 +4069,11 @@ def q486(spark, sf_dir):
     )
     pairs = resid.join(lag, "x")
     num = pairs.agg(
-        (
-            F.sum(
-                quantize((F.col("e") - F.col("e0")) * (F.col("e") - F.col("e0")), 9)
-            ).cast("double")
-            / 1e9
-        ).alias("sd")
+        dsum((F.col("e") - F.col("e0")) * (F.col("e") - F.col("e0")), 9).alias("sd")
     )
     den = resid.agg(
         F.count(F.lit(1)).cast("long").alias("n_months"),
-        (F.sum(quantize(F.col("e") * F.col("e"), 9)).cast("double") / 1e9).alias(
-            "se"
-        ),
+        dsum(F.col("e") * F.col("e"), 9).alias("se"),
     )
     j = num.crossJoin(F.broadcast(den))
     return j.select(
@@ -4192,15 +4113,11 @@ def q486(spark, sf_dir):
     """,
 )
 def q488(spark, sf_dir):
-    from pandrs_spark.functions.deterministic import quantize
-
     monthly = _monthly_rev(spark, sf_dir)
     stats = monthly.agg(
         F.count(F.lit(1)).alias("n"),
-        (F.sum(quantize("rev", 6)).cast("double") / 1e6).alias("s"),
-        (F.sum(quantize(F.col("rev") * F.col("rev"), 6)).cast("double") / 1e6).alias(
-            "ss"
-        ),
+        dsum("rev", 6).alias("s"),
+        dsum(F.col("rev") * F.col("rev"), 6).alias("ss"),
     )
     dev = monthly.crossJoin(F.broadcast(stats)).select(
         "mth",
@@ -4256,8 +4173,6 @@ def q488(spark, sf_dir):
     """,
 )
 def q489(spark, sf_dir):
-    from pandrs_spark.functions.deterministic import quantize
-
     resid = _ols_resid(spark, sf_dir)
     # (e/100)^2 units — see oracle comment: nR^2 is invariant under a
     # linear rescale of u; raw e^2*e^2 at scale 9 overflowed at sf0.1
@@ -4268,13 +4183,9 @@ def q489(spark, sf_dir):
         F.count(F.lit(1)).alias("n"),
         F.sum("x").alias("sx"),
         F.sum(F.col("x") * F.col("x")).alias("sxx"),
-        (F.sum(quantize("u", 9)).cast("double") / 1e9).alias("su"),
-        (F.sum(quantize(F.col("x") * F.col("u"), 9)).cast("double") / 1e9).alias(
-            "sxu"
-        ),
-        (F.sum(quantize(F.col("u") * F.col("u"), 9)).cast("double") / 1e9).alias(
-            "suu"
-        ),
+        dsum("u", 9).alias("su"),
+        dsum(F.col("x") * F.col("u"), 9).alias("sxu"),
+        dsum(F.col("u") * F.col("u"), 9).alias("suu"),
     )
     r2_num = (F.col("n") * F.col("sxu") - F.col("sx") * F.col("su")) ** 2
     r2_den = (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")) * (
@@ -4330,7 +4241,6 @@ def q489(spark, sf_dir):
     """,
 )
 def q520(spark, sf_dir):
-    from pandrs_spark.functions.deterministic import quantize
     from pandrs_spark.operators.util import tracked_persist
 
     monthly = _monthly_rev(spark, sf_dir)
@@ -4351,15 +4261,8 @@ def q520(spark, sf_dir):
     drift = F.col("y_prev") + (F.col("ylast") - F.col("y1")) / (F.col("n") - 1)
     errs = pairs.crossJoin(F.broadcast(anchors)).agg(
         F.count(F.lit(1)).cast("long").alias("n_steps"),
-        (
-            F.sum(
-                quantize((F.col("y") - F.col("y_prev")) ** 2, 9)
-            ).cast("double")
-            / 1e9
-        ).alias("sse_naive"),
-        (
-            F.sum(quantize((F.col("y") - drift) ** 2, 9)).cast("double") / 1e9
-        ).alias("sse_drift"),
+        dsum((F.col("y") - F.col("y_prev")) ** 2, 9).alias("sse_naive"),
+        dsum((F.col("y") - drift) ** 2, 9).alias("sse_drift"),
     )
     return errs.select(
         "n_steps",
@@ -4414,8 +4317,6 @@ def q520(spark, sf_dir):
     """,
 )
 def q521(spark, sf_dir):
-    from pandrs_spark.functions.deterministic import quantize
-
     monthly = _monthly_rev(spark, sf_dir)
     w_ord = Window.orderBy("mth")
     d = monthly.select(
@@ -4496,19 +4397,12 @@ def q521(spark, sf_dir):
     """,
 )
 def q531(spark, sf_dir):
-    from pandrs_spark.functions.deterministic import quantize
-
     li = T(spark, sf_dir, "lineitem")
     supp = T(spark, sf_dir, "supplier")
     rev = (
         li.join(supp, li.l_suppkey == supp.s_suppkey)
         .groupBy(F.col("s_nationkey").alias("nation"))
-        .agg(
-            (
-                (F.sum(quantize("l_extendedprice", 2)).cast("double") / 100.0)
-                / 1e6
-            ).alias("y")
-        )
+        .agg((dsum("l_extendedprice", 2) / 1e6).alias("y"))
     )
     w = Window.orderBy("y", "nation")
     ranked = rev.select(
@@ -4590,7 +4484,6 @@ def q531(spark, sf_dir):
     """,
 )
 def q532(spark, sf_dir):
-    from pandrs_spark.functions.deterministic import quantize
     from pandrs_spark.operators.util import tracked_persist
 
     monthly = _monthly_rev(spark, sf_dir)
@@ -4675,7 +4568,6 @@ def q532(spark, sf_dir):
     """,
 )
 def q533(spark, sf_dir):
-    from pandrs_spark.functions.deterministic import quantize
     from pandrs_spark.operators.util import tracked_persist
 
     monthly = _monthly_rev(spark, sf_dir)
@@ -4758,7 +4650,6 @@ def q533(spark, sf_dir):
     """,
 )
 def q538(spark, sf_dir):
-    from pandrs_spark.functions.deterministic import quantize
     from pandrs_spark.operators.util import tracked_persist
 
     resid = tracked_persist(_ols_resid(spark, sf_dir))
@@ -4789,12 +4680,7 @@ def q538(spark, sf_dir):
         .crossJoin(a)
         .join(b, F.col("xb2") == F.col("xa") - F.col("l"))
         .groupBy("l", "w")
-        .agg(
-            (
-                F.sum(quantize(F.col("va") * F.col("vb"), 9)).cast("double")
-                / 1e9
-            ).alias("s_l")
-        )
+        .agg(dsum(F.col("va") * F.col("vb"), 9).alias("s_l"))
     )
     nw_sum = gamma.agg(
         F.sum(
@@ -4859,14 +4745,9 @@ def q538(spark, sf_dir):
     """,
 )
 def q539(spark, sf_dir):
-    from pandrs_spark.functions.deterministic import quantize
-
     li = T(spark, sf_dir, "lineitem")
     monthly = li.groupBy(F.date_trunc("month", "l_shipdate").alias("mth")).agg(
-        (
-            (F.sum(quantize("l_extendedprice", 2)).cast("double") / 100.0)
-            / 1e6
-        ).alias("y"),
+        (dsum("l_extendedprice", 2) / 1e6).alias("y"),
         F.count(F.lit(1)).cast("long").alias("w"),
     )
     w_ord = Window.orderBy("mth")
@@ -4877,11 +4758,11 @@ def q539(spark, sf_dir):
     )
     s = d.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        (F.sum(quantize("w", 2)).cast("double") / 1e2).alias("sw"),
-        (F.sum(quantize(F.col("w") * F.col("x"), 2)).cast("double") / 1e2).alias("swx"),
-        (F.sum(quantize(F.col("w") * F.col("x") * F.col("x"), 2)).cast("double") / 1e2).alias("swxx"),
-        (F.sum(quantize(F.col("w") * F.col("y"), 6)).cast("double") / 1e6).alias("swy"),
-        (F.sum(quantize(F.col("w") * F.col("x") * F.col("y"), 6)).cast("double") / 1e6).alias("swxy"),
+        dsum("w", 2).alias("sw"),
+        dsum(F.col("w") * F.col("x"), 2).alias("swx"),
+        dsum(F.col("w") * F.col("x") * F.col("x"), 2).alias("swxx"),
+        dsum(F.col("w") * F.col("y"), 6).alias("swy"),
+        dsum(F.col("w") * F.col("x") * F.col("y"), 6).alias("swxy"),
     )
     b1 = (F.col("sw") * F.col("swxy") - F.col("swx") * F.col("swy")) / (
         F.col("sw") * F.col("swxx") - F.col("swx") * F.col("swx")

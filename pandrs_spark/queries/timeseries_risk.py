@@ -20,6 +20,8 @@ from pyspark.sql import functions as F
 from pandrs_spark.catalog import load_table as T
 from pandrs_spark.functions.deterministic import (
     CORR_FORMULA,
+    dsum,
+    dsum_over,
     sql_dsum,
     sql_quantize,
 )
@@ -148,9 +150,7 @@ def q544(spark, sf_dir):
 
     li = T(spark, sf_dir, "lineitem")
     daily = li.groupBy(F.col("l_shipdate").alias("d")).agg(
-        ((F.sum(quantize("l_extendedprice", 2)).cast("double") / 100.0) / 1e6).alias(
-            "rev"
-        )
+        (dsum("l_extendedprice", 2) / 1e6).alias("rev")
     )
     w_ord = Window.orderBy("d")
     idx = daily.select(F.row_number().over(w_ord).alias("x"), "rev")
@@ -168,9 +168,7 @@ def q544(spark, sf_dir):
     w_rk = Window.orderBy(F.col("r").asc(), F.col("x").asc())
     ranked = ret.select("r", F.row_number().over(w_rk).alias("rk"))
     worst = ranked.crossJoin(F.broadcast(n)).where(F.col("rk") <= F.col("k"))
-    cv = worst.groupBy("n", "k").agg(
-        (F.sum(quantize("r", 9)).cast("double") / 1e9 / F.first("k")).alias("es")
-    )
+    cv = worst.groupBy("n", "k").agg((dsum("r", 9) / F.first("k")).alias("es"))
     j = cv.crossJoin(F.broadcast(var95))
     return j.select(
         F.col("n").alias("n_returns"),
@@ -206,14 +204,10 @@ def _monthly_joint(spark, sf_dir):
     Granger/CCF/lead-lag tier. Revenue in 1e6 units, counts in 1e3
     units so every second moment stays inside the 1e-9 quantization
     envelope."""
-    from pandrs_spark.functions.deterministic import quantize
-
     li = T(spark, sf_dir, "lineitem")
     orders = T(spark, sf_dir, "orders")
     mrev = li.groupBy(F.date_trunc("month", "l_shipdate").alias("mth")).agg(
-        ((F.sum(quantize("l_extendedprice", 2)).cast("double") / 100.0) / 1e6).alias(
-            "rev"
-        )
+        (dsum("l_extendedprice", 2) / 1e6).alias("rev")
     )
     mcnt = orders.groupBy(F.date_trunc("month", "o_orderdate").alias("mth")).agg(
         (F.count(F.lit(1)).cast("double") / 1e3).alias("cnt")
@@ -289,15 +283,15 @@ def q549(spark, sf_dir):
     pairs = joint.select("x", F.col("rev").alias("y")).join(prev, "x")
     s = pairs.agg(
         F.count(F.lit(1)).cast("double").alias("n"),
-        (F.sum(quantize("y", 6)).cast("double") / 1e6).alias("sy"),
-        (F.sum(quantize("u", 6)).cast("double") / 1e6).alias("su"),
-        (F.sum(quantize("v", 6)).cast("double") / 1e6).alias("sv"),
-        (F.sum(quantize(F.col("y") * F.col("y"), 9)).cast("double") / 1e9).alias("syy"),
-        (F.sum(quantize(F.col("u") * F.col("u"), 9)).cast("double") / 1e9).alias("suu"),
-        (F.sum(quantize(F.col("v") * F.col("v"), 9)).cast("double") / 1e9).alias("svv"),
-        (F.sum(quantize(F.col("u") * F.col("y"), 9)).cast("double") / 1e9).alias("suy"),
-        (F.sum(quantize(F.col("v") * F.col("y"), 9)).cast("double") / 1e9).alias("svy"),
-        (F.sum(quantize(F.col("u") * F.col("v"), 9)).cast("double") / 1e9).alias("suv"),
+        dsum("y", 6).alias("sy"),
+        dsum("u", 6).alias("su"),
+        dsum("v", 6).alias("sv"),
+        dsum(F.col("y") * F.col("y"), 9).alias("syy"),
+        dsum(F.col("u") * F.col("u"), 9).alias("suu"),
+        dsum(F.col("v") * F.col("v"), 9).alias("svv"),
+        dsum(F.col("u") * F.col("y"), 9).alias("suy"),
+        dsum(F.col("v") * F.col("y"), 9).alias("svy"),
+        dsum(F.col("u") * F.col("v"), 9).alias("suv"),
     )
     c = s.selectExpr(
         "n",
@@ -368,7 +362,7 @@ def q549(spark, sf_dir):
     """,
 )
 def q550(spark, sf_dir):
-    from pandrs_spark.functions.deterministic import CORR_FORMULA, quantize
+    from pandrs_spark.functions.deterministic import quantize
     from pandrs_spark.operators.util import tracked_persist
 
     joint = tracked_persist(_monthly_joint(spark, sf_dir))
@@ -380,17 +374,11 @@ def q550(spark, sf_dir):
     )
     s = lagged.groupBy("lag").agg(
         F.count(F.lit(1)).cast("double").alias("n"),
-        (F.sum(quantize("xv", 6)).cast("double") / 1e6).alias("sx"),
-        (F.sum(quantize("yv", 6)).cast("double") / 1e6).alias("sy"),
-        (F.sum(quantize(F.col("xv") * F.col("xv"), 9)).cast("double") / 1e9).alias(
-            "sxx"
-        ),
-        (F.sum(quantize(F.col("yv") * F.col("yv"), 9)).cast("double") / 1e9).alias(
-            "syy"
-        ),
-        (F.sum(quantize(F.col("xv") * F.col("yv"), 9)).cast("double") / 1e9).alias(
-            "sxy"
-        ),
+        dsum("xv", 6).alias("sx"),
+        dsum("yv", 6).alias("sy"),
+        dsum(F.col("xv") * F.col("xv"), 9).alias("sxx"),
+        dsum(F.col("yv") * F.col("yv"), 9).alias("syy"),
+        dsum(F.col("xv") * F.col("yv"), 9).alias("sxy"),
     )
     r = s.selectExpr(
         "lag",
@@ -471,9 +459,7 @@ def q551(spark, sf_dir):
 
     li = T(spark, sf_dir, "lineitem")
     daily = li.groupBy(F.col("l_shipdate").alias("d")).agg(
-        ((F.sum(quantize("l_extendedprice", 2)).cast("double") / 100.0) / 1e6).alias(
-            "rev"
-        )
+        (dsum("l_extendedprice", 2) / 1e6).alias("rev")
     )
     w_ord = Window.orderBy("d")
     idx = daily.select(F.row_number().over(w_ord).alias("x"), "rev")
@@ -485,34 +471,21 @@ def q551(spark, sf_dir):
     )
     mu = ret.agg(
         F.count(F.lit(1)).cast("double").alias("n"),
-        (
-            F.sum(quantize("r", 9)).cast("double") / 1e9 / F.count(F.lit(1))
-        ).alias("m"),
+        (dsum("r", 9) / F.count(F.lit(1))).alias("m"),
     )
     w5 = Window.orderBy("x").rowsBetween(-4, 0)
     rq = ret.select(
         "x", F.sum("r").over(w5).alias("s5"), F.count(F.lit(1)).over(w5).alias("w")
     )
     s1 = ret.crossJoin(F.broadcast(mu)).agg(
-        (
-            F.sum(quantize((F.col("r") - F.col("m")) * (F.col("r") - F.col("m")), 12))
-            .cast("double")
-            / 1e12
-        ).alias("ss1")
+        dsum((F.col("r") - F.col("m")) * (F.col("r") - F.col("m")), 12).alias("ss1")
     )
     sq = (
         rq.where(F.col("w") == 5)
         .crossJoin(F.broadcast(mu))
         .agg(
-            (
-                F.sum(
-                    quantize(
-                        (F.col("s5") - 5 * F.col("m")) * (F.col("s5") - 5 * F.col("m")),
-                        12,
-                    )
-                )
-                .cast("double")
-                / 1e12
+            dsum(
+                (F.col("s5") - 5 * F.col("m")) * (F.col("s5") - 5 * F.col("m")), 12
             ).alias("ssq")
         )
     )
@@ -590,7 +563,7 @@ def q551(spark, sf_dir):
     """,
 )
 def q552(spark, sf_dir):
-    from pandrs_spark.functions.deterministic import CORR_FORMULA, quantize
+    from pandrs_spark.functions.deterministic import quantize
     from pandrs_spark.operators.util import tracked_persist
 
     resid = tracked_persist(_ols_resid(spark, sf_dir))
@@ -605,28 +578,18 @@ def q552(spark, sf_dir):
     # normalize by the mean squared residual (quantized-sum mean, so
     # both engines divide by the identical double) — corr/LM invariant,
     # and w stays O(1) at every SF (see oracle comment)
-    mw = rawp.agg(
-        (
-            F.sum(quantize("w", 6)).cast("double") / 1e6 / F.count(F.lit(1))
-        ).alias("m")
-    )
+    mw = rawp.agg((dsum("w", 6) / F.count(F.lit(1))).alias("m"))
     pairs = rawp.crossJoin(F.broadcast(mw)).select(
         (F.col("w") / F.col("m")).alias("w"),
         (F.col("wl") / F.col("m")).alias("wl"),
     )
     s = pairs.agg(
         F.count(F.lit(1)).cast("double").alias("n"),
-        (F.sum(quantize("w", 9)).cast("double") / 1e9).alias("sx"),
-        (F.sum(quantize("wl", 9)).cast("double") / 1e9).alias("sy"),
-        (F.sum(quantize(F.col("w") * F.col("w"), 12)).cast("double") / 1e12).alias(
-            "sxx"
-        ),
-        (F.sum(quantize(F.col("wl") * F.col("wl"), 12)).cast("double") / 1e12).alias(
-            "syy"
-        ),
-        (F.sum(quantize(F.col("w") * F.col("wl"), 12)).cast("double") / 1e12).alias(
-            "sxy"
-        ),
+        dsum("w", 9).alias("sx"),
+        dsum("wl", 9).alias("sy"),
+        dsum(F.col("w") * F.col("w"), 12).alias("sxx"),
+        dsum(F.col("wl") * F.col("wl"), 12).alias("syy"),
+        dsum(F.col("w") * F.col("wl"), 12).alias("sxy"),
     )
     corr = CORR_FORMULA.format(n="n", sx="sx", sy="sy", sxx="sxx", syy="syy", sxy="sxy")
     lm = s.selectExpr("n", f"n * ({corr}) * ({corr}) AS lm")
@@ -746,8 +709,6 @@ def _brand_cells(spark, sf_dir):
     index tier (q478's Laspeyres, q555's Paasche/Fisher, q556's
     Törnqvist). One fact-table aggregate; everything downstream is
     brand×month sized."""
-    from pandrs_spark.functions.deterministic import quantize
-
     li = T(spark, sf_dir, "lineitem")
     part = T(spark, sf_dir, "part")
     return (
@@ -757,11 +718,8 @@ def _brand_cells(spark, sf_dir):
             F.col("p_brand").alias("brand"),
         )
         .agg(
-            (
-                (F.sum(quantize("l_extendedprice", 2)).cast("double") / 100.0 / 1e3)
-                / (F.sum(quantize("l_quantity", 2)).cast("double") / 100.0)
-            ).alias("p"),
-            (F.sum(quantize("l_quantity", 2)).cast("double") / 100.0 / 1e3).alias("q"),
+            ((dsum("l_extendedprice", 2) / 1e3) / dsum("l_quantity", 2)).alias("p"),
+            (dsum("l_quantity", 2) / 1e3).alias("q"),
         )
     )
 
@@ -807,18 +765,10 @@ def q555(spark, sf_dir):
     )
     j = cells.join(F.broadcast(base), "brand")
     m = j.groupBy("mth").agg(
-        (F.sum(quantize(F.col("p") * F.col("q0"), 9)).cast("double") / 1e9).alias(
-            "ptq0"
-        ),
-        (F.sum(quantize(F.col("p0") * F.col("q0"), 9)).cast("double") / 1e9).alias(
-            "p0q0"
-        ),
-        (F.sum(quantize(F.col("p") * F.col("q"), 9)).cast("double") / 1e9).alias(
-            "ptqt"
-        ),
-        (F.sum(quantize(F.col("p0") * F.col("q"), 9)).cast("double") / 1e9).alias(
-            "p0qt"
-        ),
+        dsum(F.col("p") * F.col("q0"), 9).alias("ptq0"),
+        dsum(F.col("p0") * F.col("q0"), 9).alias("p0q0"),
+        dsum(F.col("p") * F.col("q"), 9).alias("ptqt"),
+        dsum(F.col("p0") * F.col("q"), 9).alias("p0qt"),
     )
     return m.select(
         "mth",
@@ -892,14 +842,8 @@ def q556(spark, sf_dir):
         shares.join(F.broadcast(w0), "brand")
         .groupBy("mth")
         .agg(
-            (
-                F.sum(
-                    quantize(
-                        0.5 * (F.col("w0") + F.col("w")) * F.log(F.col("p") / F.col("p0")),
-                        12,
-                    )
-                ).cast("double")
-                / 1e12
+            dsum(
+                0.5 * (F.col("w0") + F.col("w")) * F.log(F.col("p") / F.col("p0")), 12
             ).alias("lnt")
         )
     )
@@ -971,10 +915,9 @@ def q561(spark, sf_dir):
             0.2
             * F.sqrt(
                 (
-                    F.sum(quantize(F.col("rev") * F.col("rev"), 9)).cast("double")
-                    / 1e9
-                    - (F.sum(quantize("rev", 6)).cast("double") / 1e6)
-                    * (F.sum(quantize("rev", 6)).cast("double") / 1e6)
+                    dsum(F.col("rev") * F.col("rev"), 9)
+                    - dsum("rev", 6)
+                    * dsum("rev", 6)
                     / F.count(F.lit(1))
                 )
                 / (F.count(F.lit(1)) - 1)
@@ -1076,11 +1019,8 @@ def q562(spark, sf_dir):
         F.sum("c").cast("long").alias("n_triples"),
     )
     ent = dist.crossJoin(F.broadcast(tot)).agg(
-        (
-            F.sum(
-                quantize(-(F.col("c") / F.col("t")) * F.log(F.col("c") / F.col("t")), 12)
-            ).cast("double")
-            / 1e12
+        dsum(
+            -(F.col("c") / F.col("t")) * F.log(F.col("c") / F.col("t")), 12
         ).alias("h"),
         F.first("k").alias("n_patterns"),
         F.first("n_triples").alias("n_triples"),
@@ -1163,15 +1103,11 @@ def q563(spark, sf_dir):
 
     li = T(spark, sf_dir, "lineitem")
     daily = li.groupBy(F.col("l_shipdate").alias("d")).agg(
-        ((F.sum(quantize("l_extendedprice", 2)).cast("double") / 100.0) / 1e6).alias(
-            "rev"
-        )
+        (dsum("l_extendedprice", 2) / 1e6).alias("rev")
     )
     t0 = daily.agg(
         F.min("d").alias("d0"),
-        (F.sum(quantize("rev", 6)).cast("double") / 1e6 / F.count(F.lit(1))).alias(
-            "mu"
-        ),
+        (dsum("rev", 6) / F.count(F.lit(1))).alias("mu"),
     )
     pts = tracked_persist(
         daily.crossJoin(F.broadcast(t0)).select(
@@ -1189,14 +1125,8 @@ def q563(spark, sf_dir):
         .agg(
             (
                 F.atan2(
-                    F.sum(quantize(F.sin(2 * F.col("w") * F.col("t")), 12)).cast(
-                        "double"
-                    )
-                    / 1e12,
-                    F.sum(quantize(F.cos(2 * F.col("w") * F.col("t")), 12)).cast(
-                        "double"
-                    )
-                    / 1e12,
+                    dsum(F.sin(2 * F.col("w") * F.col("t")), 12),
+                    dsum(F.cos(2 * F.col("w") * F.col("t")), 12),
                 )
                 / (2 * F.col("w"))
             ).alias("tau")
@@ -1212,15 +1142,15 @@ def q563(spark, sf_dir):
                 0.5
                 * (
                     F.pow(
-                        F.sum(quantize(F.col("xc") * cosw, 12)).cast("double") / 1e12,
+                        dsum(F.col("xc") * cosw, 12),
                         F.lit(2.0),
                     )
-                    / (F.sum(quantize(cosw * cosw, 12)).cast("double") / 1e12)
+                    / dsum(cosw * cosw, 12)
                     + F.pow(
-                        F.sum(quantize(F.col("xc") * sinw, 12)).cast("double") / 1e12,
+                        dsum(F.col("xc") * sinw, 12),
                         F.lit(2.0),
                     )
-                    / (F.sum(quantize(sinw * sinw, 12)).cast("double") / 1e12)
+                    / dsum(sinw * sinw, 12)
                 )
             ).alias("power")
         )
@@ -1273,8 +1203,8 @@ def q566(spark, sf_dir):
     err = idx.join(fc, "x").select((F.col("rev") - F.col("f")).alias("e"))
     s = err.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        (F.sum(quantize("e", 6)).cast("double") / 1e6).alias("se"),
-        (F.sum(quantize(F.abs("e"), 6)).cast("double") / 1e6).alias("sae"),
+        dsum("e", 6).alias("se"),
+        dsum(F.abs("e"), 6).alias("sae"),
     )
     return s.select(
         F.col("n").alias("n_obs"),
@@ -1334,18 +1264,12 @@ def q583(spark, sf_dir):
     daily = li.groupBy(
         F.col("l_shipdate").alias("d"),
         F.date_trunc("month", "l_shipdate").alias("mth"),
-    ).agg(
-        ((F.sum(quantize("l_extendedprice", 2)).cast("double") / 100.0) / 1e6).alias(
-            "rev"
-        )
-    )
+    ).agg((dsum("l_extendedprice", 2) / 1e6).alias("rev"))
     mx = daily.groupBy("mth").agg(F.max("rev").alias("m"))
     s = mx.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        (F.sum(quantize("m", 6)).cast("double") / 1e6).alias("sm"),
-        (F.sum(quantize(F.col("m") * F.col("m"), 9)).cast("double") / 1e9).alias(
-            "smm"
-        ),
+        dsum("m", 6).alias("sm"),
+        dsum(F.col("m") * F.col("m"), 9).alias("smm"),
     )
     fit = s.selectExpr(
         "n",
@@ -1416,9 +1340,7 @@ def q584(spark, sf_dir):
 
     li = T(spark, sf_dir, "lineitem")
     daily = li.groupBy(F.col("l_shipdate").alias("d")).agg(
-        ((F.sum(quantize("l_extendedprice", 2)).cast("double") / 100.0) / 1e6).alias(
-            "rev"
-        )
+        (dsum("l_extendedprice", 2) / 1e6).alias("rev")
     )
     w_ord = Window.orderBy("d")
     idx = daily.select(F.row_number().over(w_ord).alias("x"), "rev")
@@ -1493,18 +1415,13 @@ def q585(spark, sf_dir):
     resid = tracked_persist(_ols_resid(spark, sf_dir))
     tot = resid.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        (F.sum(quantize(F.col("e") * F.col("e"), 9)).cast("double") / 1e9).alias(
-            "se"
-        ),
+        dsum(F.col("e") * F.col("e"), 9).alias("se"),
     )
     w_ord = Window.orderBy("x").rowsBetween(Window.unboundedPreceding, 0)
     walk = resid.select(
         "mth",
         "x",
-        (
-            F.sum(quantize(F.col("e") * F.col("e"), 9)).over(w_ord).cast("double")
-            / 1e9
-        ).alias("cse"),
+        dsum_over(F.col("e") * F.col("e"), w_ord, 9).alias("cse"),
     )
     dev = walk.crossJoin(F.broadcast(tot)).select(
         "mth",
@@ -1568,9 +1485,7 @@ def q587(spark, sf_dir):
 
     li = T(spark, sf_dir, "lineitem")
     daily = li.groupBy(F.col("l_shipdate").alias("d")).agg(
-        ((F.sum(quantize("l_extendedprice", 2)).cast("double") / 100.0) / 1e6).alias(
-            "rev"
-        )
+        (dsum("l_extendedprice", 2) / 1e6).alias("rev")
     )
     w_ord = Window.orderBy("d")
     idx = daily.select(F.row_number().over(w_ord).alias("x"), "rev")
@@ -1578,10 +1493,8 @@ def q587(spark, sf_dir):
     ret = idx.join(nxt, "x").select(F.log(F.col("rev2") / F.col("rev")).alias("r"))
     s = ret.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        (F.sum(quantize("r", 9)).cast("double") / 1e9).alias("sr"),
-        (F.sum(quantize(F.col("r") * F.col("r"), 12)).cast("double") / 1e12).alias(
-            "srr"
-        ),
+        dsum("r", 9).alias("sr"),
+        dsum(F.col("r") * F.col("r"), 12).alias("srr"),
     )
     return s.selectExpr(
         "n AS n_returns",
@@ -1654,7 +1567,7 @@ def q588(spark, sf_dir):
     li = T(spark, sf_dir, "lineitem")
     joint = _monthly_joint(spark, sf_dir)
     q = li.groupBy(F.date_trunc("month", "l_shipdate").alias("mth")).agg(
-        (F.sum(quantize("l_quantity", 2)).cast("double") / 1e2 / 1e3).alias("qty")
+        (dsum("l_quantity", 2) / 1e3).alias("qty")
     )
     withz = joint.join(q, "mth").select(
         F.col("cnt").alias("xv"),
@@ -1663,15 +1576,15 @@ def q588(spark, sf_dir):
     )
     s = withz.agg(
         F.count(F.lit(1)).cast("double").alias("n"),
-        (F.sum(quantize("xv", 6)).cast("double") / 1e6).alias("sx"),
-        (F.sum(quantize("yv", 6)).cast("double") / 1e6).alias("sy"),
-        (F.sum(quantize("zv", 6)).cast("double") / 1e6).alias("sz"),
-        (F.sum(quantize(F.col("xv") * F.col("xv"), 9)).cast("double") / 1e9).alias("sxx"),
-        (F.sum(quantize(F.col("yv") * F.col("yv"), 9)).cast("double") / 1e9).alias("syy"),
-        (F.sum(quantize(F.col("zv") * F.col("zv"), 9)).cast("double") / 1e9).alias("szz"),
-        (F.sum(quantize(F.col("xv") * F.col("yv"), 9)).cast("double") / 1e9).alias("sxy"),
-        (F.sum(quantize(F.col("xv") * F.col("zv"), 9)).cast("double") / 1e9).alias("sxz"),
-        (F.sum(quantize(F.col("yv") * F.col("zv"), 9)).cast("double") / 1e9).alias("syz"),
+        dsum("xv", 6).alias("sx"),
+        dsum("yv", 6).alias("sy"),
+        dsum("zv", 6).alias("sz"),
+        dsum(F.col("xv") * F.col("xv"), 9).alias("sxx"),
+        dsum(F.col("yv") * F.col("yv"), 9).alias("syy"),
+        dsum(F.col("zv") * F.col("zv"), 9).alias("szz"),
+        dsum(F.col("xv") * F.col("yv"), 9).alias("sxy"),
+        dsum(F.col("xv") * F.col("zv"), 9).alias("sxz"),
+        dsum(F.col("yv") * F.col("zv"), 9).alias("syz"),
     )
     from pandrs_spark.functions.deterministic import CORR_FORMULA as CF
 
@@ -1834,17 +1747,11 @@ def q598(spark, sf_dir):
     daily = li.groupBy(
         F.col("l_shipdate").alias("d"),
         F.date_trunc("week", "l_shipdate").alias("wk"),
-    ).agg(
-        ((F.sum(quantize("l_extendedprice", 2)).cast("double") / 100.0) / 1e6).alias(
-            "rev"
-        )
-    )
+    ).agg((dsum("l_extendedprice", 2) / 1e6).alias("rev"))
     sub = tracked_persist(
         daily.groupBy("wk")
         .agg(
-            (F.sum(quantize("rev", 6)).cast("double") / 1e6 / F.count(F.lit(1))).alias(
-                "xbar"
-            ),
+            (dsum("rev", 6) / F.count(F.lit(1))).alias("xbar"),
             (F.max("rev") - F.min("rev")).alias("r"),
             F.count(F.lit(1)).alias("nd"),
         )
@@ -1852,12 +1759,8 @@ def q598(spark, sf_dir):
     )
     lines = sub.agg(
         F.count(F.lit(1)).cast("long").alias("n_weeks"),
-        (F.sum(quantize("xbar", 9)).cast("double") / 1e9 / F.count(F.lit(1))).alias(
-            "xbb"
-        ),
-        (F.sum(quantize("r", 9)).cast("double") / 1e9 / F.count(F.lit(1))).alias(
-            "rbar"
-        ),
+        (dsum("xbar", 9) / F.count(F.lit(1))).alias("xbb"),
+        (dsum("r", 9) / F.count(F.lit(1))).alias("rbar"),
     )
     j = sub.crossJoin(F.broadcast(lines))
     out = j.groupBy("n_weeks", "xbb", "rbar").agg(
@@ -1951,14 +1854,12 @@ def q599(spark, sf_dir):
     )
     base = idx.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        (F.sum(quantize("rev", 6)).cast("double") / 1e6 / F.count(F.lit(1))).alias(
-            "mu"
-        ),
+        (dsum("rev", 6) / F.count(F.lit(1))).alias("mu"),
         F.sqrt(
             (
-                F.sum(quantize(F.col("rev") * F.col("rev"), 9)).cast("double") / 1e9
-                - (F.sum(quantize("rev", 6)).cast("double") / 1e6)
-                * (F.sum(quantize("rev", 6)).cast("double") / 1e6)
+                dsum(F.col("rev") * F.col("rev"), 9)
+                - dsum("rev", 6)
+                * dsum("rev", 6)
                 / F.count(F.lit(1))
             )
             / (F.count(F.lit(1)) - 1)
@@ -1970,14 +1871,8 @@ def q599(spark, sf_dir):
         .crossJoin(F.broadcast(base))
         .groupBy("xb", "mu")
         .agg(
-            (
-                F.sum(
-                    quantize(
-                        0.2 * F.pow(F.lit(0.8), F.col("xb") - F.col("x")) * F.col("rev"),
-                        9,
-                    )
-                ).cast("double")
-                / 1e9
+            dsum(
+                0.2 * F.pow(F.lit(0.8), F.col("xb") - F.col("x")) * F.col("rev"), 9
             ).alias("wsum")
         )
         .select(
@@ -2077,16 +1972,10 @@ def q602(spark, sf_dir):
     )
     mu = idx.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        (F.sum(quantize("rev", 6)).cast("double") / 1e6 / F.count(F.lit(1))).alias(
-            "m"
-        ),
+        (dsum("rev", 6) / F.count(F.lit(1))).alias("m"),
     )
     c0 = idx.crossJoin(F.broadcast(mu)).agg(
-        (
-            F.sum(quantize((F.col("rev") - F.col("m")) * (F.col("rev") - F.col("m")), 9))
-            .cast("double")
-            / 1e9
-        ).alias("c")
+        dsum((F.col("rev") - F.col("m")) * (F.col("rev") - F.col("m")), 9).alias("c")
     )
     lagged = idx.select(
         F.col("x"),
@@ -2100,11 +1989,8 @@ def q602(spark, sf_dir):
         .crossJoin(F.broadcast(mu))
         .groupBy("lag")
         .agg(
-            (
-                F.sum(
-                    quantize((F.col("rev") - F.col("m")) * (F.col("rb") - F.col("m")), 9)
-                ).cast("double")
-                / 1e9
+            dsum(
+                (F.col("rev") - F.col("m")) * (F.col("rb") - F.col("m")), 9
             ).alias("cl")
         )
     )
@@ -2246,9 +2132,7 @@ def q620(spark, sf_dir):
     )
     mu = idx.agg(
         F.count(F.lit(1)).cast("double").alias("n"),
-        (F.sum(quantize("rev", 6)).cast("double") / 1e6 / F.count(F.lit(1))).alias(
-            "m"
-        ),
+        (dsum("rev", 6) / F.count(F.lit(1))).alias("m"),
     )
     harm = small_local_df(spark, [(k,) for k in range(1, 13)], "k int")
     arg = 6.283185307179586 * F.col("k") * F.col("t") / F.col("n")
@@ -2259,17 +2143,11 @@ def q620(spark, sf_dir):
         .agg(
             (
                 F.pow(
-                    F.sum(quantize((F.col("rev") - F.col("m")) * F.cos(arg), 12)).cast(
-                        "double"
-                    )
-                    / 1e12,
+                    dsum((F.col("rev") - F.col("m")) * F.cos(arg), 12),
                     F.lit(2.0),
                 )
                 + F.pow(
-                    F.sum(quantize((F.col("rev") - F.col("m")) * F.sin(arg), 12)).cast(
-                        "double"
-                    )
-                    / 1e12,
+                    dsum((F.col("rev") - F.col("m")) * F.sin(arg), 12),
                     F.lit(2.0),
                 )
             ).alias("p")
@@ -2281,14 +2159,8 @@ def q620(spark, sf_dir):
         pw.crossJoin(F.broadcast(tot))
         .where(F.col("p") > 0)
         .agg(
-            (
-                F.sum(
-                    quantize(
-                        -(F.col("p") / F.col("sp")) * F.log(F.col("p") / F.col("sp")),
-                        9,
-                    )
-                ).cast("double")
-                / 1e9
+            dsum(
+                -(F.col("p") / F.col("sp")) * F.log(F.col("p") / F.col("sp")), 9
             ).alias("h")
         )
     )
@@ -2351,14 +2223,10 @@ def q626(spark, sf_dir):
     pairs = idx.select("x", F.col("rev").alias("y")).join(prev, "x")
     s = pairs.agg(
         F.count(F.lit(1)).cast("double").alias("n"),
-        (F.sum(quantize("y", 6)).cast("double") / 1e6).alias("sy"),
-        (F.sum(quantize("yl", 6)).cast("double") / 1e6).alias("sl"),
-        (F.sum(quantize(F.col("yl") * F.col("yl"), 9)).cast("double") / 1e9).alias(
-            "sll"
-        ),
-        (F.sum(quantize(F.col("yl") * F.col("y"), 9)).cast("double") / 1e9).alias(
-            "sly"
-        ),
+        dsum("y", 6).alias("sy"),
+        dsum("yl", 6).alias("sl"),
+        dsum(F.col("yl") * F.col("yl"), 9).alias("sll"),
+        dsum(F.col("yl") * F.col("y"), 9).alias("sly"),
     )
     phi = (F.col("n") * F.col("sly") - F.col("sl") * F.col("sy")) / (
         F.col("n") * F.col("sll") - F.col("sl") * F.col("sl")
@@ -2427,11 +2295,7 @@ def q628(spark, sf_dir):
             F.sum(F.col("x") * F.col("x"))
             - F.sum("x") * F.sum("x") / F.count(F.lit(1))
         ).alias("sxx"),
-        (
-            F.sum(quantize(F.col("e") * F.col("e"), 9)).cast("double")
-            / 1e9
-            / (F.count(F.lit(1)) - 2)
-        ).alias("s2"),
+        (dsum(F.col("e") * F.col("e"), 9) / (F.count(F.lit(1)) - 2)).alias("s2"),
     )
     j = resid.crossJoin(F.broadcast(xm))
     h = 1.0 / F.col("n") + (F.col("x") - F.col("xbar")) * (
@@ -2499,12 +2363,8 @@ def q631(spark, sf_dir):
     ).otherwise((F.col("f") - F.col("y")) * 0.1)
     s = pairs.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        (F.sum(quantize(l50, 9)).cast("double") / 1e9 / F.count(F.lit(1))).alias(
-            "l50"
-        ),
-        (F.sum(quantize(l90, 9)).cast("double") / 1e9 / F.count(F.lit(1))).alias(
-            "l90"
-        ),
+        (dsum(l50, 9) / F.count(F.lit(1))).alias("l50"),
+        (dsum(l90, 9) / F.count(F.lit(1))).alias("l90"),
     )
     return s.select(
         F.col("n").alias("n_obs"),
@@ -2585,9 +2445,7 @@ def q632(spark, sf_dir):
     ) / 9.0
     s = rows_.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        (F.sum(quantize(term, 9)).cast("double") / 1e9 / F.count(F.lit(1))).alias(
-            "crps"
-        ),
+        (dsum(term, 9) / F.count(F.lit(1))).alias("crps"),
     )
     return s.select(
         F.col("n").alias("n_obs"), (quantize("crps", 6) / 1e6).alias("crps")
@@ -2694,7 +2552,7 @@ def q633(spark, sf_dir):
     li = T(spark, sf_dir, "lineitem")
     uv = li.groupBy(F.date_trunc("month", "l_shipdate").alias("mth")).agg(
         (
-            (F.sum(quantize("l_extendedprice", 2)).cast("double") / 100.0)
+            dsum("l_extendedprice", 2)
             / F.sum(F.col("l_quantity").cast("bigint")).cast("double")
         ).alias("p")
     )
@@ -2709,11 +2567,9 @@ def q633(spark, sf_dir):
     pairs = dp.select("x", F.col("d").alias("dx")).join(nxt, "x")
     s = pairs.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        (F.sum(quantize("dx", 6)).cast("double") / 1e6).alias("sx"),
-        (F.sum(quantize("dy", 6)).cast("double") / 1e6).alias("sy"),
-        (
-            F.sum(quantize(F.col("dx") * F.col("dy"), 6)).cast("double") / 1e6
-        ).alias("sxy"),
+        dsum("dx", 6).alias("sx"),
+        dsum("dy", 6).alias("sy"),
+        dsum(F.col("dx") * F.col("dy"), 6).alias("sxy"),
     )
     c = s.select(
         "n",
@@ -2722,11 +2578,7 @@ def q633(spark, sf_dir):
             / (F.col("n") - 1)
         ).alias("cov"),
     )
-    mp = uv.agg(
-        (F.sum(quantize("p", 6)).cast("double") / 1e6 / F.count(F.lit(1))).alias(
-            "pbar"
-        )
-    )
+    mp = uv.agg((dsum("p", 6) / F.count(F.lit(1))).alias("pbar"))
     out = c.crossJoin(F.broadcast(mp))
     return out.select(
         F.col("n").alias("n_pairs"),
@@ -2789,9 +2641,7 @@ def q634(spark, sf_dir):
 
     li = T(spark, sf_dir, "lineitem")
     daily = li.groupBy(F.date_trunc("day", "l_shipdate").alias("day")).agg(
-        ((F.sum(quantize("l_extendedprice", 2)).cast("double") / 100.0)).alias(
-            "rev"
-        )
+        dsum("l_extendedprice", 2).alias("rev")
     )
     bars = daily.groupBy(F.date_trunc("month", "day").alias("mth")).agg(
         F.min_by("rev", "day").alias("o"),
@@ -2804,16 +2654,8 @@ def q634(spark, sf_dir):
     ln2 = float(2.0)
     t = bars.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        (F.sum(quantize(hl * hl, 9)).cast("double") / 1e9).alias("shl"),
-        (
-            F.sum(
-                quantize(
-                    0.5 * hl * hl - (2.0 * F.log(F.lit(ln2)) - 1.0) * co * co,
-                    9,
-                )
-            ).cast("double")
-            / 1e9
-        ).alias("sgk"),
+        dsum(hl * hl, 9).alias("shl"),
+        dsum(0.5 * hl * hl - (2.0 * F.log(F.lit(ln2)) - 1.0) * co * co, 9).alias("sgk"),
     )
     return t.select(
         F.col("n").alias("n_months"),
@@ -2868,10 +2710,7 @@ def q635(spark, sf_dir):
 
     li = T(spark, sf_dir, "lineitem")
     daily = li.groupBy(F.date_trunc("day", "l_shipdate").alias("day")).agg(
-        (
-            (F.sum(quantize("l_extendedprice", 2)).cast("double") / 100.0)
-            / 1e6
-        ).alias("rev"),
+        (dsum("l_extendedprice", 2) / 1e6).alias("rev"),
         F.sum(F.col("l_quantity").cast("bigint")).cast("double").alias("vol"),
     )
     idx = tracked_persist(
@@ -2891,9 +2730,7 @@ def q635(spark, sf_dir):
     )
     g = r.groupBy("mth").agg(
         F.count(F.lit(1)).cast("long").alias("n_days"),
-        (
-            F.sum(quantize("illiq", 9)).cast("double") / 1e9 / F.count(F.lit(1))
-        ).alias("m"),
+        (dsum("illiq", 9) / F.count(F.lit(1))).alias("m"),
     )
     return g.select(
         "mth", "n_days", (quantize("m", 6) / 1e6).alias("amihud")
@@ -2958,20 +2795,10 @@ def q636(spark, sf_dir):
     )
     s = ret.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        (F.sum(quantize("r", 9)).cast("double") / 1e9).alias("s1"),
-        (F.sum(quantize(F.col("r") * F.col("r"), 9)).cast("double") / 1e9).alias(
-            "s2"
-        ),
-        (
-            F.sum(
-                quantize(
-                    F.when(F.col("r") < 0, F.col("r") * F.col("r")).otherwise(
-                        0.0
-                    ),
-                    9,
-                )
-            ).cast("double")
-            / 1e9
+        dsum("r", 9).alias("s1"),
+        dsum(F.col("r") * F.col("r"), 9).alias("s2"),
+        dsum(
+            F.when(F.col("r") < 0, F.col("r") * F.col("r")).otherwise(0.0), 9
         ).alias("sdn"),
     )
     runmax = F.max("rev").over(
@@ -3054,10 +2881,8 @@ def q637(spark, sf_dir):
     d = idx.select((100.0 * (F.col("rev") / runmax - 1.0)).alias("dd"))
     u = d.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        (F.sum(quantize(F.col("dd") * F.col("dd"), 9)).cast("double") / 1e9).alias(
-            "sq"
-        ),
-        (F.sum(quantize(-F.col("dd"), 9)).cast("double") / 1e9).alias("sa"),
+        dsum(F.col("dd") * F.col("dd"), 9).alias("sq"),
+        dsum(-F.col("dd"), 9).alias("sa"),
     )
     prv = idx.select((F.col("x") + 1).alias("x"), F.col("rev").alias("prev"))
     ret = idx.join(prv, "x").select(
@@ -3065,7 +2890,7 @@ def q637(spark, sf_dir):
     )
     g = ret.agg(
         F.count(F.lit(1)).cast("long").alias("nr"),
-        (F.sum(quantize("r", 9)).cast("double") / 1e9).alias("s1"),
+        dsum("r", 9).alias("s1"),
     )
     out = u.crossJoin(F.broadcast(g))
     ui = F.sqrt(F.col("sq") / F.col("n"))
@@ -3149,21 +2974,16 @@ def q638(spark, sf_dir):
     ret = tracked_persist(_monthly_ret(spark, sf_dir).select("r"))
     m = ret.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        (F.sum(quantize("r", 9)).cast("double") / 1e9).alias("s1"),
+        dsum("r", 9).alias("s1"),
     )
     dev = F.col("r") - F.col("s1") / F.col("n")
     cm = (
         ret.crossJoin(F.broadcast(m))
         .agg(
             F.first("n").alias("n"),
-            (F.sum(quantize(dev * dev, 12)).cast("double") / 1e12).alias("m2"),
-            (F.sum(quantize(dev * dev * dev, 12)).cast("double") / 1e12).alias(
-                "m3"
-            ),
-            (
-                F.sum(quantize(dev * dev * dev * dev, 12)).cast("double")
-                / 1e12
-            ).alias("m4"),
+            dsum(dev * dev, 12).alias("m2"),
+            dsum(dev * dev * dev, 12).alias("m3"),
+            dsum(dev * dev * dev * dev, 12).alias("m4"),
             (F.first("s1") / F.first("n")).alias("mu"),
         )
     )
@@ -3265,10 +3085,8 @@ def q651(spark, sf_dir):
         F.count(F.lit(1)).alias("n"),
         F.sum("x").alias("sx"),
         F.sum(F.col("x") * F.col("x")).alias("sxx"),
-        (F.sum(quantize("y", 6)).cast("double") / 1e6).alias("sy"),
-        (F.sum(quantize(F.col("y") * F.col("y"), 6)).cast("double") / 1e6).alias(
-            "syy"
-        ),
+        dsum("y", 6).alias("sy"),
+        dsum(F.col("y") * F.col("y"), 6).alias("syy"),
     )
     resid = _ols_resid(spark, sf_dir)
     h = F.lit(1.0) / F.col("n") + (
@@ -3278,7 +3096,7 @@ def q651(spark, sf_dir):
     )
     t = F.col("e") / (1.0 - h)
     terms = resid.crossJoin(F.broadcast(st)).agg(
-        (F.sum(quantize(t * t, 9)).cast("double") / 1e9).alias("press"),
+        dsum(t * t, 9).alias("press"),
         F.first("n").alias("n"),
         F.first("sy").alias("sy"),
         F.first("syy").alias("syy"),
@@ -3350,11 +3168,7 @@ def q652(spark, sf_dir):
         F.sum(F.col("x") * F.col("x")).alias("sxx"),
     )
     resid = _ols_resid(spark, sf_dir)
-    rss = resid.agg(
-        (
-            F.sum(quantize(F.col("e") * F.col("e"), 9)).cast("double") / 1e9
-        ).alias("sse")
-    )
+    rss = resid.agg(dsum(F.col("e") * F.col("e"), 9).alias("sse"))
     scored = resid.crossJoin(F.broadcast(st)).crossJoin(F.broadcast(rss))
     h = F.lit(1.0) / F.col("n") + (
         (F.col("x") - F.col("sx") / F.col("n"))
@@ -3451,13 +3265,9 @@ def q653(spark, sf_dir):
             F.count(F.lit(1)).alias("n"),
             F.sum("x").alias("sx"),
             F.sum(F.col("x") * F.col("x")).alias("sxx"),
-            (F.sum(quantize(ycol, 9)).cast("double") / 1e9).alias("sy"),
-            (F.sum(quantize(F.col("x") * ycol, 9)).cast("double") / 1e9).alias(
-                "sxy"
-            ),
-            (F.sum(quantize(ycol * ycol, 9)).cast("double") / 1e9).alias(
-                "syy"
-            ),
+            dsum(ycol, 9).alias("sy"),
+            dsum(F.col("x") * ycol, 9).alias("sxy"),
+            dsum(ycol * ycol, 9).alias("syy"),
         )
 
     def slope_var(pfx):
@@ -3581,10 +3391,10 @@ def q654(spark, sf_dir):
             F.count(F.lit(1)).alias("n"),
             F.sum("x").alias("sx"),
             F.sum(F.col("x") * F.col("x")).alias("sxx"),
-            (F.sum(quantize("y", 6)).cast("double") / 1e6).alias("sy"),
-            (F.sum(quantize(F.col("x") * F.col("y"), 6)).cast("double") / 1e6)
+            dsum("y", 6).alias("sy"),
+            dsum(F.col("x") * F.col("y"), 6)
             .alias("sxy"),
-            (F.sum(quantize(F.col("y") * F.col("y"), 6)).cast("double") / 1e6)
+            dsum(F.col("y") * F.col("y"), 6)
             .alias("syy"),
         )
     )
@@ -3684,13 +3494,9 @@ def q655(spark, sf_dir):
         F.col("a0") + F.col("a1") * F.col("x")
     )
     fwl = resid.crossJoin(F.broadcast(zc)).agg(
-        (
-            F.sum(quantize(F.col("e") * F.col("e"), 9)).cast("double") / 1e9
-        ).alias("rss1"),
-        (F.sum(quantize(F.col("e") * zstar, 6)).cast("double") / 1e6).alias(
-            "sez"
-        ),
-        (F.sum(quantize(zstar * zstar, 6)).cast("double") / 1e6).alias("szz"),
+        dsum(F.col("e") * F.col("e"), 9).alias("rss1"),
+        dsum(F.col("e") * zstar, 6).alias("sez"),
+        dsum(zstar * zstar, 6).alias("szz"),
         F.max("n").cast("long").alias("n"),
     )
     gain = F.col("sez") * F.col("sez") / F.col("szz")
@@ -3774,14 +3580,10 @@ def q656(spark, sf_dir):
         F.count(F.lit(1)).alias("n"),
         F.sum("x").alias("sx"),
         F.sum(F.col("x") * F.col("x")).alias("sxx"),
-        (F.sum(quantize("u", 9)).cast("double") / 1e9).alias("su"),
-        (F.sum(quantize(F.col("x") * F.col("u"), 9)).cast("double") / 1e9).alias(
-            "sxu"
-        ),
-        (F.sum(quantize("w", 9)).cast("double") / 1e9).alias("sw"),
-        (F.sum(quantize(F.col("x") * F.col("w"), 9)).cast("double") / 1e9).alias(
-            "sxw"
-        ),
+        dsum("u", 9).alias("su"),
+        dsum(F.col("x") * F.col("u"), 9).alias("sxu"),
+        dsum("w", 9).alias("sw"),
+        dsum(F.col("x") * F.col("w"), 9).alias("sxw"),
     )
     bu = (F.col("n") * F.col("sxu") - F.col("sx") * F.col("su")) / (
         F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
@@ -3799,9 +3601,9 @@ def q656(spark, sf_dir):
     r1 = F.col("u") - (F.col("au") + F.col("bu") * F.col("x"))
     ws = F.col("w") - (F.col("aw") + F.col("bw") * F.col("x"))
     fwl = pairs.crossJoin(F.broadcast(cf)).agg(
-        (F.sum(quantize(r1 * r1, 9)).cast("double") / 1e9).alias("s11"),
-        (F.sum(quantize(r1 * ws, 9)).cast("double") / 1e9).alias("s1w"),
-        (F.sum(quantize(ws * ws, 9)).cast("double") / 1e9).alias("sww"),
+        dsum(r1 * r1, 9).alias("s11"),
+        dsum(r1 * ws, 9).alias("s1w"),
+        dsum(ws * ws, 9).alias("sww"),
         F.max("n").cast("long").alias("n"),
     )
     return fwl.select(
@@ -3907,29 +3709,17 @@ def q663(spark, sf_dir):
     r4 = lagret(4)
     m1 = r1.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        (F.sum(quantize("r", 9)).cast("double") / 1e9).alias("s1"),
+        dsum("r", 9).alias("s1"),
     )
     mu = F.col("s1") / F.col("n")
     v1 = r1.crossJoin(F.broadcast(m1)).agg(
-        (
-            F.sum(quantize((F.col("r") - mu) * (F.col("r") - mu), 12)).cast(
-                "double"
-            )
-            / 1e12
-        ).alias("ss"),
+        dsum((F.col("r") - mu) * (F.col("r") - mu), 12).alias("ss"),
         F.first("n").alias("n"),
         F.first("s1").alias("s1"),
     )
     v4 = r4.crossJoin(F.broadcast(m1)).agg(
         F.count(F.lit(1)).cast("long").alias("m"),
-        (
-            F.sum(
-                quantize(
-                    (F.col("r") - 4.0 * mu) * (F.col("r") - 4.0 * mu), 12
-                )
-            ).cast("double")
-            / 1e12
-        ).alias("ss4"),
+        dsum((F.col("r") - 4.0 * mu) * (F.col("r") - 4.0 * mu), 12).alias("ss4"),
     )
     w = v1.crossJoin(F.broadcast(v4))
     vr = (F.col("ss4") / (F.col("m") - 1)) / (
@@ -4023,8 +3813,8 @@ def q664(spark, sf_dir):
         F.count(F.lit(1)).alias("t"),
         F.sum("x").alias("sx"),
         F.sum(F.col("x") * F.col("x")).alias("sxx"),
-        (F.sum(quantize("rev", 6)).cast("double") / 1e6).alias("sy"),
-        (F.sum(quantize(F.col("x") * F.col("rev"), 6)).cast("double") / 1e6)
+        dsum("rev", 6).alias("sy"),
+        dsum(F.col("x") * F.col("rev"), 6)
         .alias("sxy"),
     )
     b = (F.col("t") * F.col("sxy") - F.col("sx") * F.col("sy")) / (
@@ -4038,11 +3828,7 @@ def q664(spark, sf_dir):
         .where(F.col("x") <= F.col("n") - 12)
         .agg(
             (
-                F.sum(quantize(F.abs(F.col("rev") - F.col("prev")), 9)).cast(
-                    "double"
-                )
-                / 1e9
-                / F.count(F.lit(1))
+                dsum(F.abs(F.col("rev") - F.col("prev")), 9) / F.count(F.lit(1))
             ).alias("naive_mae")
         )
     )
@@ -4053,21 +3839,16 @@ def q664(spark, sf_dir):
         .crossJoin(F.broadcast(drift))
         .agg(
             (
-                F.sum(
-                    quantize(
-                        F.abs(
-                            F.col("rev")
-                            - (
-                                F.col("lvl")
-                                + (F.col("x") - (F.col("n") - 12))
-                                * F.col("b")
-                                / 2.0
-                            )
-                        ),
-                        9,
-                    )
-                ).cast("double")
-                / 1e9
+                dsum(
+                    F.abs(
+                        F.col("rev")
+                        - (
+                            F.col("lvl")
+                            + (F.col("x") - (F.col("n") - 12)) * F.col("b") / 2.0
+                        )
+                    ),
+                    9,
+                )
                 / F.count(F.lit(1))
             ).alias("mae"),
             F.first("t").alias("t"),
@@ -4171,23 +3952,14 @@ def q665(spark, sf_dir):
             F.log(F.col("rev") / F.col("prev")).alias("r"),
         )
     )
-    mu = lr.agg(
-        (
-            F.sum(quantize("r", 12)).cast("double") / 1e12 / F.count(F.lit(1))
-        ).alias("m")
-    )
+    mu = lr.agg((dsum("r", 12) / F.count(F.lit(1))).alias("m"))
     prof = tracked_persist(
         lr.crossJoin(F.broadcast(mu)).select(
             "t",
-            (
-                F.sum(quantize(F.col("r") - F.col("m"), 12))
-                .over(
-                    Window.orderBy("t").rowsBetween(
-                        Window.unboundedPreceding, 0
-                    )
-                )
-                .cast("double")
-                / 1e12
+            dsum_over(
+                F.col("r") - F.col("m"),
+                Window.orderBy("t").rowsBetween(Window.unboundedPreceding, 0),
+                12,
             ).alias("y"),
         )
     )
@@ -4207,10 +3979,10 @@ def q665(spark, sf_dir):
             F.count(F.lit(1)).alias("n"),
             F.sum("u").alias("su"),
             F.sum(F.col("u") * F.col("u")).alias("suu"),
-            (F.sum(quantize("y", 12)).cast("double") / 1e12).alias("sy"),
-            (F.sum(quantize(F.col("u") * F.col("y"), 12)).cast("double") / 1e12)
+            dsum("y", 12).alias("sy"),
+            dsum(F.col("u") * F.col("y"), 12)
             .alias("suy"),
-            (F.sum(quantize(F.col("y") * F.col("y"), 12)).cast("double") / 1e12)
+            dsum(F.col("y") * F.col("y"), 12)
             .alias("syy"),
         )
         .where(F.col("n") == F.col("s"))
@@ -4223,21 +3995,15 @@ def q665(spark, sf_dir):
     ) / F.col("n")
     fs = fits.groupBy("s").agg(
         F.count(F.lit(1)).cast("long").alias("n_seg"),
-        F.sqrt(
-            F.sum(quantize(rss_n, 12)).cast("double")
-            / 1e12
-            / F.count(F.lit(1))
-        ).alias("f"),
+        F.sqrt(dsum(rss_n, 12) / F.count(F.lit(1))).alias("f"),
     )
     ls = F.log(F.col("s").cast("double"))
     ll = fs.agg(
         F.count(F.lit(1)).alias("k"),
         F.sum(ls).alias("sx"),
         F.sum(ls * ls).alias("sxx"),
-        (F.sum(quantize(F.log("f"), 9)).cast("double") / 1e9).alias("sy"),
-        (F.sum(quantize(ls * F.log("f"), 9)).cast("double") / 1e9).alias(
-            "sxy"
-        ),
+        dsum(F.log("f"), 9).alias("sy"),
+        dsum(ls * F.log("f"), 9).alias("sxy"),
         F.sum("n_seg").cast("long").alias("n_segments"),
     )
     alpha = (F.col("k") * F.col("sxy") - F.col("sx") * F.col("sy")) / (
@@ -4480,9 +4246,7 @@ def q668(spark, sf_dir):
         F.sum(F.col("n_i") * F.col("n_i")).cast("long").alias("sn2"),
         F.sum("syq").cast("long").alias("gq"),
         F.sum("syyq").cast("long").alias("syy_all"),
-        (
-            F.sum(quantize(ti * ti / F.col("n_i"), 6)).cast("double") / 1e6
-        ).alias("st2"),
+        dsum(ti * ti / F.col("n_i"), 6).alias("st2"),
     )
     g_d = F.col("gq").cast("double") / 1e4
     msb = (F.col("st2") - g_d * g_d / F.col("n")) / (F.col("p") - 1)

@@ -184,8 +184,6 @@ def q259(spark, sf_dir):
     """,
 )
 def q260(spark, sf_dir):
-    from pandrs_spark.functions.deterministic import quantize
-
     li = T(spark, sf_dir, "lineitem")
     rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     part_rev = li.groupBy("l_partkey").agg(
@@ -360,8 +358,6 @@ def q263(spark, sf_dir):
     """,
 )
 def q264(spark, sf_dir):
-    from pandrs_spark.functions.deterministic import quantize
-
     li = T(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= "1996-01-01")
         & (F.col("l_shipdate") < "1997-01-01")
@@ -1145,7 +1141,6 @@ def q279(spark, sf_dir):
     """,
 )
 def q283(spark, sf_dir):
-    from pandrs_spark.functions.deterministic import quantize
     from pandrs_spark.operators.windows import global_prefix_sum
 
     cust = T(spark, sf_dir, "customer").select(
@@ -1533,7 +1528,6 @@ _Q296_CV = "SQRT((sxx - sx * sx / n) / (n - 1)) / (sx / n)"
     """,
 )
 def q296(spark, sf_dir):
-    from pandrs_spark.functions.deterministic import quantize
     from pandrs_spark.operators.windows import global_prefix_sum
 
     li = T(spark, sf_dir, "lineitem")
@@ -1775,8 +1769,6 @@ def q302(spark, sf_dir):
     """,
 )
 def q303(spark, sf_dir):
-    from pandrs_spark.functions.deterministic import quantize
-
     li = T(spark, sf_dir, "lineitem")
     supp = T(spark, sf_dir, "supplier")
     nation = T(spark, sf_dir, "nation")
@@ -1847,8 +1839,6 @@ _Q304_CORR = (
     """,
 )
 def q304(spark, sf_dir):
-    from pandrs_spark.functions.deterministic import quantize
-
     li = T(spark, sf_dir, "lineitem")
     part = T(spark, sf_dir, "part").select("p_partkey", "p_brand")
     d, q = F.col("l_discount"), F.col("l_quantity")
@@ -1857,11 +1847,11 @@ def q304(spark, sf_dir):
         .groupBy("p_brand")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            (F.sum(quantize(d, 4)) / 1e4).alias("sx"),
-            (F.sum(quantize(q, 2)) / 1e2).alias("sy"),
-            (F.sum(quantize(d * d, 6)) / 1e6).alias("sxx"),
-            (F.sum(quantize(q * q, 2)) / 1e2).alias("syy"),
-            (F.sum(quantize(d * q, 4)) / 1e4).alias("sxy"),
+            dsum(d, 4).alias("sx"),
+            dsum(q, 2).alias("sy"),
+            dsum(d * d, 6).alias("sxx"),
+            dsum(q * q, 2).alias("syy"),
+            dsum(d * q, 4).alias("sxy"),
         )
     )
     return st.select(
@@ -2032,8 +2022,6 @@ def q306(spark, sf_dir):
     """,
 )
 def q307(spark, sf_dir):
-    from pandrs_spark.functions.deterministic import quantize
-
     li = T(spark, sf_dir, "lineitem")
     orders = T(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= "1996-01-01")
@@ -2673,8 +2661,6 @@ def q318(spark, sf_dir):
 )
 def q320(spark, sf_dir):
     from pyspark.sql import Window as W
-
-    from pandrs_spark.functions.deterministic import quantize
 
     li = T(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= "1996-01-01")
@@ -3603,8 +3589,6 @@ def q361(spark, sf_dir):
 # aggregate — map-side at any scale. Reference: distributional-audit
 # surface of src/stats/mod.rs (behavioral spec only).
 def _q370_oracle() -> str:
-    from pandrs_spark.functions.deterministic import sql_dsum
-
     return """
     WITH digits AS (
         SELECT CAST(SUBSTR(CAST(CAST(FLOOR(o_totalprice) AS BIGINT)
@@ -3646,8 +3630,6 @@ def _q370_oracle() -> str:
 
 @query("q370_benford_first_digit", oracle=_q370_oracle())
 def q370(spark, sf_dir):
-    from pandrs_spark.functions.deterministic import dsum
-
     od = T(spark, sf_dir, "orders").filter(F.col("o_totalprice") >= 1)
     digits = od.select(
         F.substring(
@@ -3897,8 +3879,6 @@ def q385(spark, sf_dir):
     """,
 )
 def q395(spark, sf_dir):
-    from pandrs_spark.functions.deterministic import quantize
-
     orders = T(spark, sf_dir, "orders")
     counts = orders.groupBy(F.col("o_orderpriority").alias("priority")).agg(
         F.count(F.lit(1)).alias("n")
@@ -3963,27 +3943,16 @@ def q395(spark, sf_dir):
 )
 def q496(spark, sf_dir):
     orders = T(spark, sf_dir, "orders")
-    rev = orders.groupBy("o_custkey").agg(
-        (
-            (F.sum(quantize("o_totalprice", 2)).cast("double") / 100.0) / 1e6
-        ).alias("y")
-    )
+    rev = orders.groupBy("o_custkey").agg((dsum("o_totalprice", 2) / 1e6).alias("y"))
     m = rev.agg(
         F.count(F.lit(1)).alias("n"),
-        (F.sum(quantize("y", 9)).cast("double") / 1e9).alias("s"),
+        dsum("y", 9).alias("s"),
     )
     ybar = F.col("s") / F.col("n")
     t = rev.crossJoin(F.broadcast(m)).agg(
         F.first("n").alias("n"),
-        (
-            F.sum(quantize(F.sqrt(F.col("y") / ybar), 9)).cast("double") / 1e9
-        ).alias("ssqrt"),
-        (
-            F.sum(
-                quantize((F.col("y") / ybar) * F.log(F.col("y") / ybar), 9)
-            ).cast("double")
-            / 1e9
-        ).alias("stheil"),
+        dsum(F.sqrt(F.col("y") / ybar), 9).alias("ssqrt"),
+        dsum((F.col("y") / ybar) * F.log(F.col("y") / ybar), 9).alias("stheil"),
     )
     return t.select(
         F.col("n").cast("long").alias("n_customers"),
@@ -4060,9 +4029,7 @@ def q497(spark, sf_dir):
         (
             -F.sum(quantize(F.col("p") * F.log("p"), 9)).cast("double") / 1e9
         ).alias("shannon_h"),
-        (
-            1 - F.sum(quantize(F.col("p") * F.col("p"), 9)).cast("double") / 1e9
-        ).alias("simpson_d"),
+        (1 - dsum(F.col("p") * F.col("p"), 9)).alias("simpson_d"),
     )
     return ent.select(
         "nation",
@@ -4113,18 +4080,15 @@ def q498(spark, sf_dir):
         .groupBy(F.col("p_brand").alias("brand"), F.col("l_suppkey").alias("supp"))
         .agg(
             (
-                F.sum(
-                    quantize(F.col("l_extendedprice") / F.col("l_quantity"), 4)
-                ).cast("double")
-                / 1e4
+                dsum(F.col("l_extendedprice") / F.col("l_quantity"), 4)
                 / F.count(F.lit(1))
             ).alias("price")
         )
     )
     per_brand = per_pair.groupBy("brand").agg(
         F.count(F.lit(1)).cast("long").alias("n_suppliers"),
-        (F.sum(quantize("price", 6)).cast("double") / 1e6).alias("s"),
-        (F.sum(quantize(F.col("price") * F.col("price"), 2)).cast("double") / 1e2).alias("ss"),
+        dsum("price", 6).alias("s"),
+        dsum(F.col("price") * F.col("price"), 2).alias("ss"),
         F.max("price").alias("mx"),
         F.min("price").alias("mn"),
     )
@@ -4285,9 +4249,7 @@ def q500(spark, sf_dir):
         aged.groupBy("bucket")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_parts"),
-            (F.sum(quantize("p_retailprice", 2)).cast("double") / 100.0).alias(
-                "locked_value"
-            ),
+            dsum("p_retailprice", 2).alias("locked_value"),
         )
         .orderBy("bucket")
     )
@@ -4513,8 +4475,6 @@ def q517(spark, sf_dir):
     """,
 )
 def q518(spark, sf_dir):
-    from pandrs_spark.functions.deterministic import quantize
-
     orders = T(spark, sf_dir, "orders")
     cust = T(spark, sf_dir, "customer")
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
@@ -4602,8 +4562,6 @@ def q518(spark, sf_dir):
 def q530(spark, sf_dir):
     import math
 
-    from pandrs_spark.functions.deterministic import quantize
-
     li = T(spark, sf_dir, "lineitem")
     baskets = li.groupBy("l_orderkey").agg(
         F.count(F.lit(1)).cast("long").alias("k")
@@ -4681,8 +4639,6 @@ def q530(spark, sf_dir):
     """,
 )
 def q534(spark, sf_dir):
-    from pandrs_spark.functions.deterministic import quantize
-
     li = T(spark, sf_dir, "lineitem")
     part = T(spark, sf_dir, "part")
     pp = (
@@ -4751,8 +4707,6 @@ def q534(spark, sf_dir):
     """,
 )
 def q535(spark, sf_dir):
-    from pandrs_spark.functions.deterministic import quantize
-
     li = T(spark, sf_dir, "lineitem")
     part = T(spark, sf_dir, "part")
     firsts = li.groupBy("l_partkey").agg(
@@ -4808,8 +4762,6 @@ def q535(spark, sf_dir):
     """,
 )
 def q536(spark, sf_dir):
-    from pandrs_spark.functions.deterministic import quantize
-
     orders = T(spark, sf_dir, "orders")
     dup = (
         orders.groupBy(
@@ -5003,12 +4955,7 @@ def q703(spark, sf_dir):
     )
     share = F.col("yq").cast("double") / F.col("ty")
     tt = spend.crossJoin(F.broadcast(tot)).agg(
-        (
-            F.sum(quantize(share * F.log(share * F.col("n")), 9)).cast(
-                "double"
-            )
-            / 1e9
-        ).alias("t_total")
+        dsum(share * F.log(share * F.col("n")), 9).alias("t_total")
     )
     grp = spend.groupBy("reg").agg(
         F.count(F.lit(1)).cast("long").alias("ng"),
@@ -5017,9 +4964,7 @@ def q703(spark, sf_dir):
     gs = F.col("yg").cast("double") / F.col("ty")
     ns = F.col("ng").cast("double") / F.col("n")
     tb = grp.crossJoin(F.broadcast(tot)).agg(
-        (F.sum(quantize(gs * F.log(gs / ns), 9)).cast("double") / 1e9).alias(
-            "t_between"
-        )
+        dsum(gs * F.log(gs / ns), 9).alias("t_between")
     )
     j = tt.crossJoin(F.broadcast(tb)).crossJoin(F.broadcast(tot))
     return j.select(

@@ -85,7 +85,6 @@ from pandrs_spark.queries import query
     """,
 )
 def q403(spark, sf_dir):
-    from pandrs_spark.functions.deterministic import quantize
     from pandrs_spark.operators.hypothesis import msprt_two_proportion
 
     orders = T(spark, sf_dir, "orders")
@@ -165,8 +164,6 @@ def q403(spark, sf_dir):
     """,
 )
 def q406(spark, sf_dir):
-    from pandrs_spark.functions.deterministic import quantize
-
     li = T(spark, sf_dir, "lineitem")
 
     def year(y):
@@ -187,10 +184,10 @@ def q406(spark, sf_dir):
     joined = base.join(cur, "l_partkey")
     sums = joined.agg(
         F.count(F.lit(1)).cast("long").alias("n_parts"),
-        (F.sum(quantize(F.col("p1") * F.col("q0"), 2)).cast("long") / 100.0).alias("s_p1q0"),
-        (F.sum(quantize(F.col("p0") * F.col("q0"), 2)).cast("long") / 100.0).alias("s_p0q0"),
-        (F.sum(quantize(F.col("p1") * F.col("q1"), 2)).cast("long") / 100.0).alias("s_p1q1"),
-        (F.sum(quantize(F.col("p0") * F.col("q1"), 2)).cast("long") / 100.0).alias("s_p0q1"),
+        dsum(F.col("p1") * F.col("q0"), 2).alias("s_p1q0"),
+        dsum(F.col("p0") * F.col("q0"), 2).alias("s_p0q0"),
+        dsum(F.col("p1") * F.col("q1"), 2).alias("s_p1q1"),
+        dsum(F.col("p0") * F.col("q1"), 2).alias("s_p0q1"),
     )
     lasp = F.col("s_p1q0") / F.col("s_p0q0")
     paas = F.col("s_p1q1") / F.col("s_p0q1")
@@ -327,8 +324,6 @@ def q407(spark, sf_dir):
     """,
 )
 def q411(spark, sf_dir):
-    from pandrs_spark.functions.deterministic import quantize
-
     orders = T(spark, sf_dir, "orders")
     obs = orders.select(
         F.when(
@@ -341,7 +336,7 @@ def q411(spark, sf_dir):
     )
     cells = obs.groupBy("treated", "post").agg(
         F.count(F.lit(1)).alias("n"),
-        (F.sum(quantize("y", 2)).cast("double") / 100.0).alias("sy"),
+        dsum("y", 2).alias("sy"),
         F.sum(quantize(F.col("y") * F.col("y"), 0)).cast("double").alias("syy"),
     )
     m = cells.withColumn("mean", F.col("sy") / F.col("n")).withColumn(
@@ -433,8 +428,6 @@ def q411(spark, sf_dir):
     """,
 )
 def q412(spark, sf_dir):
-    from pandrs_spark.functions.deterministic import quantize
-
     li = T(spark, sf_dir, "lineitem")
     mx = li.agg(F.max("l_shipdate").alias("mxd"))
     lam = F.log(F.lit(2.0)) / 30.0
@@ -508,7 +501,6 @@ def q412(spark, sf_dir):
     """,
 )
 def q416(spark, sf_dir):
-    from pandrs_spark.functions.deterministic import quantize
     from pandrs_spark.operators.util import tracked_persist
 
     orders = T(spark, sf_dir, "orders")
@@ -615,8 +607,6 @@ def q416(spark, sf_dir):
     """,
 )
 def q420(spark, sf_dir):
-    from pandrs_spark.functions.deterministic import quantize
-
     orders = T(spark, sf_dir, "orders")
     cust = T(spark, sf_dir, "customer")
     obs = orders.join(cust, orders.o_custkey == cust.c_custkey).select(
@@ -632,7 +622,7 @@ def q420(spark, sf_dir):
     )
     cells = obs.groupBy("band", "arm").agg(
         F.count(F.lit(1)).alias("n"),
-        (F.sum(quantize("y", 2)).cast("double") / 100.0).alias("sy"),
+        dsum("y", 2).alias("sy"),
         F.sum(quantize(F.col("y") * F.col("y"), 0)).cast("double").alias("syy"),
     )
     m = cells.withColumn("mean", F.col("sy") / F.col("n")).withColumn(
@@ -657,12 +647,8 @@ def q420(spark, sf_dir):
         strata.crossJoin(F.broadcast(tot))
         .agg(
             F.min("n").alias("n"),
-            (F.sum(quantize(w * F.col("diff"), 9)).cast("double") / 1e9).alias(
-                "ate"
-            ),
-            (
-                F.sum(quantize(w * w * F.col("v_h"), 9)).cast("double") / 1e9
-            ).alias("var_ate"),
+            dsum(w * F.col("diff"), 9).alias("ate"),
+            dsum(w * w * F.col("v_h"), 9).alias("var_ate"),
         )
     )
     return agg.select(
@@ -789,8 +775,6 @@ def q421(spark, sf_dir):
     """,
 )
 def q423(spark, sf_dir):
-    from pandrs_spark.functions.deterministic import quantize
-
     orders = T(spark, sf_dir, "orders")
     obs = orders.select(
         F.when(
@@ -887,8 +871,6 @@ def q423(spark, sf_dir):
     """,
 )
 def q424(spark, sf_dir):
-    from pandrs_spark.functions.deterministic import quantize
-
     li = T(spark, sf_dir, "lineitem")
     part = T(spark, sf_dir, "part")
     rates = (
@@ -995,7 +977,6 @@ def q425(spark, sf_dir):
         "k",
         (F.col("y") * (0.9 + 0.2 * u)).alias("shocked_y"),
     )
-    from pandrs_spark.functions.deterministic import quantize
 
     scen = shocked.groupBy("k").agg(
         F.sum(quantize("shocked_y", 2)).cast("long").alias("totq")
@@ -1096,7 +1077,6 @@ def q425(spark, sf_dir):
     """,
 )
 def q428(spark, sf_dir):
-    from pandrs_spark.functions.deterministic import quantize
     from pandrs_spark.operators.util import tracked_persist
 
     cust = T(spark, sf_dir, "customer")
@@ -1109,7 +1089,7 @@ def q428(spark, sf_dir):
         )
         .agg(
             F.coalesce(
-                F.sum(quantize("o_totalprice", 2)).cast("double") / 100.0,
+                dsum("o_totalprice", 2),
                 F.lit(0.0),
             ).alias("y")
         )
@@ -1122,12 +1102,10 @@ def q428(spark, sf_dir):
     )
     ols = spend.agg(
         F.count(F.lit(1)).alias("n"),
-        (F.sum(quantize("x", 2)).cast("double") / 100.0).alias("sx"),
+        dsum("x", 2).alias("sx"),
         F.sum(quantize(F.col("x") * F.col("x"), 0)).cast("double").alias("sxx"),
         F.sum("tr").cast("double").alias("st"),
-        (F.sum(quantize(F.col("tr") * F.col("x"), 2)).cast("double") / 100.0).alias(
-            "stx"
-        ),
+        dsum(F.col("tr") * F.col("x"), 2).alias("stx"),
     )
     b1 = (F.col("n") * F.col("stx") - F.col("sx") * F.col("st")) / (
         F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
@@ -1145,37 +1123,13 @@ def q428(spark, sf_dir):
         ),
     )
     sums = wtd.agg(
-        (
-            F.sum(quantize(F.col("tr") * F.col("y") / F.col("p"), 2)).cast(
-                "double"
-            )
-            / 100.0
-        ).alias("syt"),
-        (
-            F.sum(quantize(F.col("tr") / F.col("p"), 6)).cast("double") / 1e6
-        ).alias("swt"),
-        (
-            F.sum(
-                quantize(
-                    (1.0 - F.col("tr")) * F.col("y") / (1.0 - F.col("p")), 2
-                )
-            ).cast("double")
-            / 100.0
-        ).alias("syc"),
-        (
-            F.sum(quantize((1.0 - F.col("tr")) / (1.0 - F.col("p")), 6)).cast(
-                "double"
-            )
-            / 1e6
-        ).alias("swc"),
-        (
-            F.sum(quantize(F.col("tr") * F.col("y"), 2)).cast("double") / 100.0
-        ).alias("nyt"),
+        dsum(F.col("tr") * F.col("y") / F.col("p"), 2).alias("syt"),
+        dsum(F.col("tr") / F.col("p"), 6).alias("swt"),
+        dsum((1.0 - F.col("tr")) * F.col("y") / (1.0 - F.col("p")), 2).alias("syc"),
+        dsum((1.0 - F.col("tr")) / (1.0 - F.col("p")), 6).alias("swc"),
+        dsum(F.col("tr") * F.col("y"), 2).alias("nyt"),
         F.sum("tr").cast("double").alias("nt"),
-        (
-            F.sum(quantize((1.0 - F.col("tr")) * F.col("y"), 2)).cast("double")
-            / 100.0
-        ).alias("nyc"),
+        dsum((1.0 - F.col("tr")) * F.col("y"), 2).alias("nyc"),
         F.sum(1.0 - F.col("tr")).cast("double").alias("nc"),
     )
     ate = F.col("syt") / F.col("swt") - F.col("syc") / F.col("swc")
@@ -1239,8 +1193,6 @@ def q428(spark, sf_dir):
     """,
 )
 def q430(spark, sf_dir):
-    from pandrs_spark.functions.deterministic import quantize
-
     li = T(spark, sf_dir, "lineitem")
     part = T(spark, sf_dir, "part")
     rates = (
@@ -1256,8 +1208,8 @@ def q430(spark, sf_dir):
     r = F.col("good").cast("double") / F.col("n")
     mom = rates.agg(
         F.count(F.lit(1)).alias("k"),
-        (F.sum(quantize(r, 9)).cast("double") / 1e9).alias("sr"),
-        (F.sum(quantize(r * r, 9)).cast("double") / 1e9).alias("srr"),
+        dsum(r, 9).alias("sr"),
+        dsum(r * r, 9).alias("srr"),
     )
     m = F.col("sr") / F.col("k")
     v = (F.col("srr") - F.col("sr") * F.col("sr") / F.col("k")) / (
@@ -1363,41 +1315,27 @@ def q430(spark, sf_dir):
     """,
 )
 def q464(spark, sf_dir):
-    from pandrs_spark.functions.deterministic import quantize
     from pandrs_spark.operators.util import tracked_persist
 
     li = T(spark, sf_dir, "lineitem")
     crit = tracked_persist(
         li.groupBy(F.col("l_suppkey").alias("supp")).agg(
-            (
-                F.sum(quantize("l_extendedprice", 2)).cast("double")
-                / 100.0
-                / 1e6
-            ).alias("rev"),
-            (
-                F.sum(quantize("l_discount", 2)).cast("double")
-                / 100.0
-                / F.count(F.lit(1))
-            ).alias("disc"),
+            (dsum("l_extendedprice", 2) / 1e6).alias("rev"),
+            (dsum("l_discount", 2) / F.count(F.lit(1))).alias("disc"),
             F.countDistinct("l_partkey").cast("double").alias("breadth"),
         )
     )
     norms = crit.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        F.sqrt(
-            F.sum(quantize(F.col("rev") * F.col("rev"), 6)).cast("double") / 1e6
-        ).alias("nr"),
-        F.sqrt(
-            F.sum(quantize(F.col("disc") * F.col("disc"), 9)).cast("double")
-            / 1e9
-        ).alias("nd"),
+        F.sqrt(dsum(F.col("rev") * F.col("rev"), 6)).alias("nr"),
+        F.sqrt(dsum(F.col("disc") * F.col("disc"), 9)).alias("nd"),
         F.sqrt(
             F.sum(quantize(F.col("breadth") * F.col("breadth"), 0)).cast(
                 "double"
             )
         ).alias("nb"),
-        (F.sum(quantize("rev", 6)).cast("double") / 1e6).alias("sr"),
-        (F.sum(quantize("disc", 9)).cast("double") / 1e9).alias("sd"),
+        dsum("rev", 6).alias("sr"),
+        dsum("disc", 9).alias("sd"),
         F.sum(quantize("breadth", 0)).cast("double").alias("sb"),
     )
     j = crit.crossJoin(F.broadcast(norms))
@@ -1407,15 +1345,9 @@ def q464(spark, sf_dir):
         return p * F.log(p)
 
     ent = j.groupBy("n", "sr", "sd", "sb").agg(
-        (
-            -(F.sum(quantize(ent_term("rev", "sr"), 9)).cast("double") / 1e9)
-        ).alias("ser"),
-        (
-            -(F.sum(quantize(ent_term("disc", "sd"), 9)).cast("double") / 1e9)
-        ).alias("sed"),
-        (
-            -(F.sum(quantize(ent_term("breadth", "sb"), 9)).cast("double") / 1e9)
-        ).alias("seb"),
+        (-dsum(ent_term("rev", "sr"), 9)).alias("ser"),
+        (-dsum(ent_term("disc", "sd"), 9)).alias("sed"),
+        (-dsum(ent_term("breadth", "sb"), 9)).alias("seb"),
     ).select(
         (F.col("ser") / F.log(F.col("n").cast("double"))).alias("er"),
         (F.col("sed") / F.log(F.col("n").cast("double"))).alias("ed"),
@@ -1516,7 +1448,6 @@ def _q471_abc_sql(alias: str, lo: str, hi: str) -> str:
     """,
 )
 def q471(spark, sf_dir):
-    from pandrs_spark.functions.deterministic import quantize
     from pandrs_spark.operators.util import tracked_persist
     from pandrs_spark.operators.windows import global_prefix_counts
 
@@ -1594,8 +1525,6 @@ def q471(spark, sf_dir):
     """,
 )
 def q472(spark, sf_dir):
-    from pandrs_spark.functions.deterministic import quantize
-
     li = T(spark, sf_dir, "lineitem")
     part = T(spark, sf_dir, "part")
     ps = li.groupBy(
@@ -1614,7 +1543,7 @@ def q472(spark, sf_dir):
         F.sum(F.when(F.col("n_suppliers") == 1, 1).otherwise(0))
         .cast("long")
         .alias("n_single_sourced"),
-        (F.sum(quantize("top_share", 9)).cast("double") / 1e9).alias("ss"),
+        dsum("top_share", 9).alias("ss"),
     )
     return agg.select(
         "brand",
@@ -1696,7 +1625,6 @@ def _q475_round(i: int, prev: str) -> str:
     """,
 )
 def q475(spark, sf_dir):
-    from pandrs_spark.functions.deterministic import quantize
     from pandrs_spark.operators.util import tracked_persist
 
     cust = T(spark, sf_dir, "customer")
@@ -1794,7 +1722,6 @@ def _q477_side_sql(alias: str, cond: str) -> str:
     """,
 )
 def q477(spark, sf_dir):
-    from pandrs_spark.functions.deterministic import quantize
     from pandrs_spark.operators.util import tracked_persist
 
     cust = T(spark, sf_dir, "customer")
@@ -1805,21 +1732,15 @@ def q477(spark, sf_dir):
         )
         .join(orders, cust.c_custkey == orders.o_custkey)
         .groupBy("c_custkey", "c_acctbal")
-        .agg(
-            (
-                F.sum(quantize("o_totalprice", 2)).cast("double")
-                / 100.0
-                / 1e3
-            ).alias("y")
-        )
+        .agg((dsum("o_totalprice", 2) / 1e3).alias("y"))
         .select(F.col("c_acctbal").alias("x"), "y")
     )
 
     def side(cond, pre):
         agg = pts.filter(cond).agg(
             F.count(F.lit(1)).alias(f"n_{pre}"),
-            (F.sum(quantize("x", 2)).cast("double") / 100.0).alias(f"sx_{pre}"),
-            (F.sum(quantize("y", 2)).cast("double") / 100.0).alias(f"sy_{pre}"),
+            dsum("x", 2).alias(f"sx_{pre}"),
+            dsum("y", 2).alias(f"sy_{pre}"),
             F.sum(quantize(F.col("x") * F.col("x"), 0))
             .cast("double")
             .alias(f"sxx_{pre}"),
@@ -1938,25 +1859,15 @@ def q557(spark, sf_dir):
     )
     tot = cells.agg(F.sum("na").alias("ta"), F.sum("nb").alias("tb"))
     parts = cells.crossJoin(F.broadcast(tot)).agg(
-        (
-            F.sum(
-                quantize(
-                    (F.col("na") / F.col("ta") - F.col("nb") / F.col("tb"))
-                    * (F.col("sb") / F.col("nb")),
-                    12,
-                )
-            ).cast("double")
-            / 1e12
+        dsum(
+            (F.col("na") / F.col("ta") - F.col("nb") / F.col("tb"))
+            * (F.col("sb") / F.col("nb")),
+            12,
         ).alias("explained"),
-        (
-            F.sum(
-                quantize(
-                    (F.col("na") / F.col("ta"))
-                    * (F.col("sa") / F.col("na") - F.col("sb") / F.col("nb")),
-                    12,
-                )
-            ).cast("double")
-            / 1e12
+        dsum(
+            (F.col("na") / F.col("ta"))
+            * (F.col("sa") / F.col("na") - F.col("sb") / F.col("nb")),
+            12,
         ).alias("unexplained"),
         F.count(F.lit(1)).cast("long").alias("n_cells"),
     )
@@ -2019,7 +1930,7 @@ def q558(spark, sf_dir):
     part = T(spark, sf_dir, "part")
     per_b = part.groupBy(F.col("p_brand").alias("brand")).agg(
         F.count(F.lit(1)).cast("double").alias("n"),
-        (F.sum(quantize("p_retailprice", 2)).cast("double") / 1e2 / 1e3).alias("s"),
+        (dsum("p_retailprice", 2) / 1e3).alias("s"),
         (
             F.sum(quantize(F.col("p_retailprice") * F.col("p_retailprice"), -2)).cast(
                 "double"
@@ -2041,18 +1952,12 @@ def q558(spark, sf_dir):
     )
     g = m.agg(
         F.count(F.lit(1)).cast("double").alias("k"),
-        (F.sum(quantize("mi", 9)).cast("double") / 1e9 / F.count(F.lit(1))).alias(
-            "mbar"
-        ),
-        (F.sum(quantize("vi", 12)).cast("double") / 1e12 / F.count(F.lit(1))).alias(
-            "vbar"
-        ),
+        (dsum("mi", 9) / F.count(F.lit(1))).alias("mbar"),
+        (dsum("vi", 12) / F.count(F.lit(1))).alias("vbar"),
     )
     ss = m.crossJoin(F.broadcast(g)).agg(
-        (
-            F.sum(quantize((F.col("mi") - F.col("mbar")) * (F.col("mi") - F.col("mbar")), 12))
-            .cast("double")
-            / 1e12
+        dsum(
+            (F.col("mi") - F.col("mbar")) * (F.col("mi") - F.col("mbar")), 12
         ).alias("s2")
     )
     j = m.crossJoin(F.broadcast(g)).crossJoin(F.broadcast(ss))
@@ -2132,12 +2037,10 @@ def q559(spark, sf_dir):
     )
     samp = marked.where(F.col("u") < F.col("pi")).agg(
         F.count(F.lit(1)).cast("long").alias("n_sampled"),
-        (F.sum(quantize(F.col("y") / F.col("pi"), 2)).cast("double") / 1e2 / 1e6).alias(
-            "ht_total"
-        ),
+        (dsum(F.col("y") / F.col("pi"), 2) / 1e6).alias("ht_total"),
     )
     tru = marked.agg(
-        (F.sum(quantize("y", 2)).cast("double") / 1e2 / 1e6).alias("true_total"),
+        (dsum("y", 2) / 1e6).alias("true_total"),
         F.count(F.lit(1)).cast("long").alias("n_frame"),
     )
     j = samp.crossJoin(F.broadcast(tru))
@@ -2232,25 +2135,15 @@ def q560(spark, sf_dir):
     tot = strata.agg(
         F.sum("n_frame").alias("nf"),
         F.sum("n_samp").alias("ns"),
-        (F.sum(quantize("s_samp", 6)).cast("double") / 1e6).alias("ssum"),
+        dsum("s_samp", 6).alias("ssum"),
     )
     ps = strata.crossJoin(F.broadcast(tot)).agg(
-        (
-            F.sum(
-                quantize(
-                    (F.col("n_frame") / F.col("nf")) * (F.col("s_samp") / F.col("n_samp")),
-                    12,
-                )
-            ).cast("double")
-            / 1e12
+        dsum(
+            (F.col("n_frame") / F.col("nf")) * (F.col("s_samp") / F.col("n_samp")), 12
         ).alias("psm"),
         F.count(F.lit(1)).cast("long").alias("n_strata"),
     )
-    tru = marked.agg(
-        (
-            F.sum(quantize("y", 2)).cast("double") / 1e2 / 1e3 / F.count(F.lit(1))
-        ).alias("tm")
-    )
+    tru = marked.agg((dsum("y", 2) / 1e3 / F.count(F.lit(1))).alias("tm"))
     j = ps.crossJoin(F.broadcast(tot)).crossJoin(F.broadcast(tru))
     return j.select(
         "n_strata",
@@ -2329,12 +2222,8 @@ def q610(spark, sf_dir):
         li.join(supp, li.l_suppkey == supp.s_suppkey)
         .groupBy(F.col("s_nationkey").alias("nk"))
         .agg(
-            (F.sum(quantize("l_extendedprice", 2)).cast("double") / 1e2 / 1e6).alias(
-                "rev"
-            ),
-            (
-                F.sum(quantize("l_discount", 4)).cast("double") / 1e4 / F.count(F.lit(1))
-            ).alias("disc"),
+            (dsum("l_extendedprice", 2) / 1e6).alias("rev"),
+            (dsum("l_discount", 4) / F.count(F.lit(1))).alias("disc"),
             F.count_distinct("l_partkey").cast("double").alias("parts"),
         )
     )
@@ -2423,8 +2312,8 @@ def q571(spark, sf_dir):
         li.join(part, li.l_partkey == part.p_partkey)
         .groupBy(F.col("p_brand").alias("brand"))
         .agg(
-            (F.sum(quantize("l_quantity", 2)).cast("double") / 1e2).alias("qty"),
-            (F.sum(quantize("l_extendedprice", 2)).cast("double") / 1e2).alias("rev"),
+            dsum("l_quantity", 2).alias("qty"),
+            dsum("l_extendedprice", 2).alias("rev"),
         )
     )
     j = per_b.crossJoin(F.broadcast(span))
@@ -2541,12 +2430,10 @@ def q572(spark, sf_dir):
     )
     monthly = li.groupBy(
         "l_partkey", F.date_trunc("month", "l_shipdate").alias("mth")
-    ).agg((F.sum(quantize("l_quantity", 2)).cast("double") / 1e2).alias("mq"))
+    ).agg(dsum("l_quantity", 2).alias("mq"))
     mdem = monthly.groupBy("l_partkey").agg(
-        (F.sum(quantize("mq", 2)).cast("double") / 1e2).alias("s"),
-        (F.sum(quantize(F.col("mq") * F.col("mq"), 2)).cast("double") / 1e2).alias(
-            "ss"
-        ),
+        dsum("mq", 2).alias("s"),
+        dsum(F.col("mq") * F.col("mq"), 2).alias("ss"),
     )
     cv = (
         mdem.crossJoin(F.broadcast(span))
@@ -2858,22 +2745,16 @@ def q590(spark, sf_dir):
 
     orders = T(spark, sf_dir, "orders")
     spend = tracked_persist(
-        orders.groupBy("o_custkey").agg(
-            (F.sum(quantize("o_totalprice", 2)).cast("double") / 1e2 / 1e3).alias(
-                "x"
-            )
-        )
+        orders.groupBy("o_custkey").agg((dsum("o_totalprice", 2) / 1e3).alias("x"))
     )
     mu = spend.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        (F.sum(quantize("x", 6)).cast("double") / 1e6).alias("lt"),
-        (F.sum(quantize("x", 6)).cast("double") / 1e6 / F.count(F.lit(1))).alias(
-            "m"
-        ),
+        dsum("x", 6).alias("lt"),
+        (dsum("x", 6) / F.count(F.lit(1))).alias("m"),
     )
     below = spend.crossJoin(F.broadcast(mu)).where(F.col("x") < F.col("m")).agg(
         F.count(F.lit(1)).cast("long").alias("nb"),
-        (F.sum(quantize("x", 6)).cast("double") / 1e6).alias("lb"),
+        dsum("x", 6).alias("lb"),
     )
     j = mu.crossJoin(F.broadcast(below))
     return j.select(
@@ -2949,15 +2830,10 @@ def q593(spark, sf_dir):
 
     li = T(spark, sf_dir, "lineitem")
     per_p = li.groupBy("l_partkey").agg(
-        (
-            F.sum(
-                quantize(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 0.1, 2)
-            ).cast("double")
-            / 1e2
+        dsum(
+            F.col("l_extendedprice") * (1 - F.col("l_discount")) * 0.1, 2
         ).alias("margin"),
-        (
-            F.sum(quantize(F.col("l_extendedprice") * 0.5, 2)).cast("double") / 1e2
-        ).alias("cost"),
+        dsum(F.col("l_extendedprice") * 0.5, 2).alias("cost"),
     )
     per_p = per_p.withColumn("density", F.col("margin") / F.col("cost"))
     ranked = tracked_persist(
@@ -2971,7 +2847,7 @@ def q593(spark, sf_dir):
     )
     funded = ranked.where(F.col("run_cost") <= 10000000.0).agg(
         F.count(F.lit(1)).cast("long").alias("n_full"),
-        (F.sum(quantize("margin", 2)).cast("double") / 1e2).alias("full_margin"),
+        dsum("margin", 2).alias("full_margin"),
         F.max("run_cost").alias("used"),
     )
     marginal = (
@@ -3044,13 +2920,8 @@ def q594(spark, sf_dir):
         li.join(part, li.l_partkey == part.p_partkey)
         .groupBy(F.col("p_brand").alias("brand"))
         .agg(
-            (
-                F.sum(
-                    quantize(F.col("l_extendedprice") * (1 - F.col("l_discount")), 2)
-                ).cast("double")
-                / 1e2
-            ).alias("rev"),
-            (F.sum(quantize("l_quantity", 2)).cast("double") / 1e2).alias("qty"),
+            dsum(F.col("l_extendedprice") * (1 - F.col("l_discount")), 2).alias("rev"),
+            dsum("l_quantity", 2).alias("qty"),
         )
     )
     b = per_b.select(
@@ -3138,28 +3009,18 @@ def q595(spark, sf_dir):
             F.col("p_brand").alias("brand"),
             F.date_trunc("month", "l_shipdate").alias("mth"),
         )
-        .agg(
-            (F.sum(quantize("l_extendedprice", 2)).cast("double") / 1e2 / 1e6).alias(
-                "rb"
-            )
-        )
+        .agg((dsum("l_extendedprice", 2) / 1e6).alias("rb"))
     )
-    mkt = cells.groupBy("mth").agg(
-        (F.sum(quantize("rb", 6)).cast("double") / 1e6).alias("rm")
-    )
+    mkt = cells.groupBy("mth").agg(dsum("rb", 6).alias("rm"))
     s = (
         cells.join(F.broadcast(mkt), "mth")
         .groupBy("brand")
         .agg(
             F.count(F.lit(1)).cast("double").alias("n"),
-            (F.sum(quantize("rb", 6)).cast("double") / 1e6).alias("sb"),
-            (F.sum(quantize("rm", 6)).cast("double") / 1e6).alias("sm"),
-            (F.sum(quantize(F.col("rb") * F.col("rm"), 9)).cast("double") / 1e9).alias(
-                "sbm"
-            ),
-            (F.sum(quantize(F.col("rm") * F.col("rm"), 9)).cast("double") / 1e9).alias(
-                "smm"
-            ),
+            dsum("rb", 6).alias("sb"),
+            dsum("rm", 6).alias("sm"),
+            dsum(F.col("rb") * F.col("rm"), 9).alias("sbm"),
+            dsum(F.col("rm") * F.col("rm"), 9).alias("smm"),
         )
     )
     beta = (F.col("sbm") - F.col("sb") * F.col("sm") / F.col("n")) / (
@@ -3230,24 +3091,15 @@ def q596(spark, sf_dir):
             F.col("p_brand").alias("brand"),
             F.date_trunc("month", "l_shipdate").alias("mth"),
         )
-        .agg(
-            (F.sum(quantize("l_extendedprice", 2)).cast("double") / 1e2 / 1e6).alias(
-                "rb"
-            )
-        )
+        .agg((dsum("l_extendedprice", 2) / 1e6).alias("rb"))
     )
-    tot = cells.groupBy("mth").agg(
-        (F.sum(quantize("rb", 6)).cast("double") / 1e6).alias("rm")
-    )
+    tot = cells.groupBy("mth").agg(dsum("rb", 6).alias("rm"))
     hhi = (
         cells.join(F.broadcast(tot), "mth")
         .groupBy("mth")
         .agg(
-            (
-                F.sum(
-                    quantize((F.col("rb") / F.col("rm")) * (F.col("rb") / F.col("rm")), 12)
-                ).cast("double")
-                / 1e12
+            dsum(
+                (F.col("rb") / F.col("rm")) * (F.col("rb") / F.col("rm")), 12
             ).alias("h")
         )
     )
@@ -3257,10 +3109,8 @@ def q596(spark, sf_dir):
         F.count(F.lit(1)).cast("double").alias("n"),
         F.sum(F.col("x").cast("double")).alias("sx"),
         F.sum(F.col("x").cast("double") * F.col("x")).alias("sxx"),
-        (F.sum(quantize("h", 9)).cast("double") / 1e9).alias("sy"),
-        (F.sum(quantize(F.col("x") * F.col("h"), 9)).cast("double") / 1e9).alias(
-            "sxy"
-        ),
+        dsum("h", 9).alias("sy"),
+        dsum(F.col("x") * F.col("h"), 9).alias("sxy"),
     )
     slope = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")) / (
         F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
@@ -3340,12 +3190,7 @@ def q611(spark, sf_dir):
             F.when(F.col("p_brand") == "Brand#12", 1).otherwise(0).alias("hit"),
         )
         .agg(
-            (
-                F.sum(
-                    quantize(F.col("l_extendedprice") * (1 - F.col("l_discount")), 2)
-                ).cast("double")
-                / 1e2
-            ).alias("rev"),
+            dsum(F.col("l_extendedprice") * (1 - F.col("l_discount")), 2).alias("rev"),
         )
     )
     per_p = tracked_persist(
@@ -3456,12 +3301,7 @@ def q612(spark, sf_dir):
         .join(F.broadcast(pb), "brand")
         .crossJoin(F.broadcast(tot))
         .agg(
-            (
-                F.sum(quantize((F.col("x") - e) * (F.col("x") - e) / e, 9)).cast(
-                    "double"
-                )
-                / 1e9
-            ).alias("x2"),
+            dsum((F.col("x") - e) * (F.col("x") - e) / e, 9).alias("x2"),
             F.first("m").alias("m"),
             F.first("b").alias("b"),
         )
@@ -3524,7 +3364,6 @@ def q612(spark, sf_dir):
     """,
 )
 def q615(spark, sf_dir):
-    from pandrs_spark.functions.deterministic import quantize
     from pandrs_spark.operators.util import tracked_persist
     from pyspark.sql import Window
 
@@ -3611,7 +3450,6 @@ def q615(spark, sf_dir):
     """,
 )
 def q616(spark, sf_dir):
-    from pandrs_spark.functions.deterministic import quantize
     from pandrs_spark.operators.util import tracked_persist
 
     orders = T(spark, sf_dir, "orders")
@@ -3690,10 +3528,8 @@ def q621(spark, sf_dir):
     )
     s = lt.groupBy("priority").agg(
         F.count(F.lit(1)).cast("double").alias("n"),
-        (F.sum(quantize("y", 6)).cast("double") / 1e6).alias("sy"),
-        (F.sum(quantize(F.col("y") * F.col("y"), 6)).cast("double") / 1e6).alias(
-            "syy"
-        ),
+        dsum("y", 6).alias("sy"),
+        dsum(F.col("y") * F.col("y"), 6).alias("syy"),
     )
     snr_s = -10 * F.log10(F.col("syy") / F.col("n"))
     snr_n = 10 * F.log10(
@@ -3754,10 +3590,8 @@ def q622(spark, sf_dir):
     )
     s = w.agg(
         F.count(F.lit(1)).cast("double").alias("n"),
-        (F.sum(quantize("w", 6)).cast("double") / 1e6).alias("sw"),
-        (F.sum(quantize(F.col("w") * F.col("w"), 6)).cast("double") / 1e6).alias(
-            "sww"
-        ),
+        dsum("w", 6).alias("sw"),
+        dsum(F.col("w") * F.col("w"), 6).alias("sww"),
     )
     neff = F.col("sw") * F.col("sw") / F.col("sww")
     return s.select(
@@ -3813,10 +3647,8 @@ def q623(spark, sf_dir):
     ).select(((F.col("o_totalprice") - F.col("u")) / 1e4).alias("y"))
     s = exc.agg(
         F.count(F.lit(1)).cast("double").alias("n"),
-        (F.sum(quantize("y", 6)).cast("double") / 1e6).alias("sy"),
-        (F.sum(quantize(F.col("y") * F.col("y"), 6)).cast("double") / 1e6).alias(
-            "syy"
-        ),
+        dsum("y", 6).alias("sy"),
+        dsum(F.col("y") * F.col("y"), 6).alias("syy"),
     )
     m2v = (F.col("sy") / F.col("n")) * (F.col("sy") / F.col("n")) / (
         (F.col("syy") - F.col("sy") * F.col("sy") / F.col("n")) / (F.col("n") - 1)
@@ -3971,20 +3803,10 @@ def q627(spark, sf_dir):
         .groupBy(F.col("p_brand").alias("brand"))
         .agg(
             F.count(F.lit(1)).cast("double").alias("n"),
-            (F.sum(quantize("l_discount", 4)).cast("double") / 1e4).alias("sx"),
-            (F.sum(quantize("l_quantity", 2)).cast("double") / 1e2).alias("sy"),
-            (
-                F.sum(quantize(F.col("l_discount") * F.col("l_discount"), 6)).cast(
-                    "double"
-                )
-                / 1e6
-            ).alias("sxx"),
-            (
-                F.sum(quantize(F.col("l_discount") * F.col("l_quantity"), 4)).cast(
-                    "double"
-                )
-                / 1e4
-            ).alias("sxy"),
+            dsum("l_discount", 4).alias("sx"),
+            dsum("l_quantity", 2).alias("sy"),
+            dsum(F.col("l_discount") * F.col("l_discount"), 6).alias("sxx"),
+            dsum(F.col("l_discount") * F.col("l_quantity"), 4).alias("sxy"),
         )
     )
     pooled = per_b.agg(
@@ -4008,11 +3830,7 @@ def q627(spark, sf_dir):
         )
         .cast("long")
         .alias("n_reversed"),
-        (
-            F.sum(quantize(F.col("n") * F.col("b_w"), 6)).cast("double")
-            / 1e6
-            / F.sum("n")
-        ).alias("b_within"),
+        (dsum(F.col("n") * F.col("b_w"), 6) / F.sum("n")).alias("b_within"),
     )
     j = agg.crossJoin(F.broadcast(pooled))
     return j.select(
@@ -4117,9 +3935,7 @@ def q630(spark, sf_dir):
     )
     ate = scored.agg(
         F.count(F.lit(1)).cast("long").alias("n_obs"),
-        (F.sum(quantize(term, 9)).cast("double") / 1e9 / F.count(F.lit(1))).alias(
-            "dr"
-        ),
+        (dsum(term, 9) / F.count(F.lit(1))).alias("dr"),
     )
     return ate.select("n_obs", (quantize("dr", 6) / 1e6).alias("ate_dr_k"))
 
@@ -4385,12 +4201,7 @@ def q641(spark, sf_dir):
     pairs = sh.join(b, "cls").where(F.col("reg") < F.col("regb"))
     return pairs.groupBy(
         F.col("reg").alias("region_a"), F.col("regb").alias("region_b")
-    ).agg(
-        (
-            F.sum(quantize(F.least(F.col("s"), F.col("sb")), 9)).cast("double")
-            / 1e9
-        ).alias("fk_index")
-    )
+    ).agg(dsum(F.least(F.col("s"), F.col("sb")), 9).alias("fk_index"))
 
 
 # --- q642: Duncan & Duncan (1955) dissimilarity of BUILDING vs
@@ -4571,11 +4382,7 @@ def q643(spark, sf_dir):
         .join(F.broadcast(ct), "cls")
         .crossJoin(F.broadcast(tt))
         .groupBy(F.col("nat").alias("nation"))
-        .agg(
-            (F.sum(quantize(term, 9)).cast("double") / 1e9).alias(
-                "krugman_index"
-            )
-        )
+        .agg(dsum(term, 9).alias("krugman_index"))
     )
 
 
@@ -4758,10 +4565,8 @@ def q675(spark, sf_dir):
     )
     s = lt.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        (F.sum(quantize("d", 2)).cast("double") / 1e2).alias("s1"),
-        (F.sum(quantize(F.col("d") * F.col("d"), 2)).cast("double") / 1e2).alias(
-            "s2"
-        ),
+        dsum("d", 2).alias("s1"),
+        dsum(F.col("d") * F.col("d"), 2).alias("s2"),
     )
     mu = F.col("s1") / F.col("n")
     sig = F.sqrt(
@@ -4942,7 +4747,7 @@ def q677(spark, sf_dir):
         )
         .agg(
             (
-                (F.sum(quantize("l_extendedprice", 2)).cast("double") / 100.0)
+                dsum("l_extendedprice", 2)
                 / F.sum(F.col("l_quantity").cast("bigint")).cast("double")
             ).alias("p")
         )
@@ -4959,10 +4764,10 @@ def q677(spark, sf_dir):
     rel = F.col("p1") / F.col("p0")
     s = wide.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        (F.sum(quantize(rel, 9)).cast("double") / 1e9).alias("srel"),
-        (F.sum(quantize(F.log(rel), 9)).cast("double") / 1e9).alias("slog"),
-        (F.sum(quantize("p0", 4)).cast("double") / 1e4).alias("sp0"),
-        (F.sum(quantize("p1", 4)).cast("double") / 1e4).alias("sp1"),
+        dsum(rel, 9).alias("srel"),
+        dsum(F.log(rel), 9).alias("slog"),
+        dsum("p0", 4).alias("sp0"),
+        dsum("p1", 4).alias("sp1"),
     )
     return s.select(
         F.col("n").alias("n_parts"),
@@ -5092,9 +4897,7 @@ def q678(spark, sf_dir):
             ).alias("tr")
         )
     )
-    s = seg.agg(
-        (1.0 - F.sum(quantize("tr", 9)).cast("double") / 1e9).alias("s")
-    )
+    s = seg.agg((1.0 - dsum("tr", 9)).alias("s"))
     return s.crossJoin(F.broadcast(n_orders)).select(
         "n_orders", (quantize("s", 6) / 1e6).alias("suits_index")
     )
@@ -5153,11 +4956,11 @@ def q679(spark, sf_dir):
     ly = F.log(F.col("f").cast("double"))
     s = spec.agg(
         F.count(F.lit(1)).cast("long").alias("m"),
-        (F.sum(quantize(lx, 9)).cast("double") / 1e9).alias("sx"),
-        (F.sum(quantize(lx * lx, 9)).cast("double") / 1e9).alias("sxx"),
-        (F.sum(quantize(ly, 9)).cast("double") / 1e9).alias("sy"),
-        (F.sum(quantize(ly * ly, 9)).cast("double") / 1e9).alias("syy"),
-        (F.sum(quantize(lx * ly, 9)).cast("double") / 1e9).alias("sxy"),
+        dsum(lx, 9).alias("sx"),
+        dsum(lx * lx, 9).alias("sxx"),
+        dsum(ly, 9).alias("sy"),
+        dsum(ly * ly, 9).alias("syy"),
+        dsum(lx * ly, 9).alias("sxy"),
     )
     num = F.col("m") * F.col("sxy") - F.col("sx") * F.col("sy")
     den = F.col("m") * F.col("sxx") - F.col("sx") * F.col("sx")
@@ -5280,8 +5083,8 @@ def q680(spark, sf_dir):
         (F.col("c1") > 0) & (F.col("c2") > 0), (p1 - p2) * F.log(p1 / p2)
     )
     terms = j.groupBy("n1", "n2", "mincell").agg(
-        (F.sum(quantize(hh, 9)).cast("double") / 1e9).alias("sh"),
-        (F.sum(quantize(tv, 9)).cast("double") / 1e9).alias("stv"),
+        dsum(hh, 9).alias("sh"),
+        dsum(tv, 9).alias("stv"),
         (
             F.sum(
                 F.when(
@@ -5426,8 +5229,8 @@ def q689(spark, sf_dir):
     re = ((F.col("w1") + F.col("w2")) / 2.0) * (F.col("r1") - F.col("r2"))
     s = wide.agg(
         F.count(F.lit(1)).cast("long").alias("n_segments"),
-        (F.sum(quantize(ce, 9)).cast("double") / 1e9).alias("comp"),
-        (F.sum(quantize(re, 9)).cast("double") / 1e9).alias("rate"),
+        dsum(ce, 9).alias("comp"),
+        dsum(re, 9).alias("rate"),
     )
     return s.select(
         "n_segments",
@@ -5531,8 +5334,8 @@ def q690(spark, sf_dir):
     pern = j.groupBy("nat").agg(
         F.sum("n").cast("long").alias("n_obs"),
         F.sum("u").cast("long").alias("u_obs"),
-        (F.sum(quantize(dsr_t, 9)).cast("double") / 1e9).alias("dsr"),
-        (F.sum(quantize(exp_t, 9)).cast("double") / 1e9).alias("expected"),
+        dsum(dsr_t, 9).alias("dsr"),
+        dsum(exp_t, 9).alias("expected"),
     )
     return pern.select(
         F.col("nat").alias("nation"),

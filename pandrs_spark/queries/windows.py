@@ -13,6 +13,7 @@ from pandrs_spark.catalog import load_table as T
 from pandrs_spark.functions.deterministic import (
     davg,
     dsum,
+    dsum_over,
     sql_davg,
     sql_dsum,
     sql_dsum_over,
@@ -304,7 +305,6 @@ def q87(spark, sf_dir):
     """,
 )
 def q156(spark, sf_dir):
-    from pandrs_spark.functions.deterministic import dsum_over
     from pandrs_spark.operators.windows import cumcount, cummax, cummin
 
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
@@ -471,7 +471,6 @@ _Q297_SIG = "SQRT((sxx - sx * sx / n) / (n - 1))"
     """,
 )
 def q297(spark, sf_dir):
-    from pandrs_spark.functions.deterministic import quantize
     from pandrs_spark.operators.windows import ewm_mean
 
     ev = T(spark, sf_dir, "events")
@@ -489,8 +488,8 @@ def q297(spark, sf_dir):
     )
     stats = daily.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
-        (F.sum(quantize("x", 4)) / 1e4).alias("sx"),
-        (F.sum(quantize(F.col("x") * F.col("x"), 4)) / 1e4).alias("sxx"),
+        dsum("x", 4).alias("sx"),
+        dsum(F.col("x") * F.col("x"), 4).alias("sxx"),
     )
     lim = stats.select(
         F.col("event_type").alias("et"),

@@ -22,10 +22,12 @@ from contextlib import contextmanager
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pandrs_spark.frame import persist_context
 from pandrs_spark.operators.util import scoped_conf, tracked_persist
 
 __all__ = [
     "scoped_state_partitions",
+    "run_available_now",
     "stream_stream_interval_join",
     "incremental_aggregate_sink",
     "stateful_drawdown",
@@ -274,6 +276,19 @@ def scoped_state_partitions(spark, source_path: str, bytes_per_partition: int = 
         return
     with scoped_conf(spark, "spark.sql.shuffle.partitions", str(target)):
         yield
+
+
+def run_available_now(spark, source_path: str, start, name: str) -> None:
+    """Run an availableNow stream to completion: ``start()`` starts it
+    inside :func:`scoped_state_partitions` sized to ``source_path``, and
+    the call returns once the stream has drained its source. A stream
+    still running after 300 s is stopped and raises ``TimeoutError``
+    naming ``name``."""
+    with scoped_state_partitions(spark, source_path):
+        q = start()
+        if not q.awaitTermination(300):
+            q.stop()
+            raise TimeoutError(f"{name} streaming query did not finish in 300s")
 
 
 def stream_to_memory(df: DataFrame, name: str, output_mode: str = "update"):
@@ -624,7 +639,7 @@ def incremental_aggregate_sink(
     sums = list(sum_cols)
     cached: list[DataFrame] = []  # previous batch's materialized agg
 
-    def _merge(batch_df: DataFrame, batch_id: int):
+    def _fold(batch_df: DataFrame):
         spark = batch_df.sparkSession
         aggs = [F.count(F.lit(1)).cast("long").alias(count_col)] + [
             F.sum(c).alias(f"sum_{c}") for c in sums
@@ -655,8 +670,12 @@ def incremental_aggregate_sink(
             cached.pop().unpersist(False)
         cached.append(merged)
 
+    # foreachBatch calls back on a Py4J thread: fold in the context the
+    # stream started from, so the final batch's persist is the caller's
+    # to release
+    ctx = persist_context()
     return (
-        df.writeStream.foreachBatch(_merge)
+        df.writeStream.foreachBatch(lambda batch_df, _id: ctx.run(_fold, batch_df))
         .trigger(availableNow=True)
         .start()
     )

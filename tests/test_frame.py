@@ -677,9 +677,44 @@ def test_release_persisted_unpins_sort_cache(spark):
     df = small_local_df(spark, [(3,), (1,), (2,)], "n long")
     out = Frame(df).sort_values("n")
     assert [r["n"] for r in out.collect()] == [1, 2, 3]
-    assert len(frame_mod._PERSISTED) >= 1
+    assert len(frame_mod._persisted()) >= 1
     released = frame_mod.release_persisted()
-    assert released >= 1 and frame_mod._PERSISTED == []
+    assert released >= 1 and frame_mod._persisted() == []
+
+
+def test_release_persisted_leaves_other_threads_caches(spark):
+    """Each thread releases only what it persisted itself: a query built
+    beside another must not unpersist the other's pinned frames."""
+    import threading
+
+    from pandrs_spark.frame import release_persisted
+    from pandrs_spark.operators.util import tracked_persist
+
+    persisted = threading.Barrier(2)
+    b_released = threading.Event()
+    seen = {}
+
+    def worker(name, ks):
+        df = tracked_persist(small_local_df(spark, [(k,) for k in ks], "k long"))
+        df.count()
+        persisted.wait()
+        if name == "a":
+            b_released.wait()
+            seen["a_cached_after_b"] = df.storageLevel.useMemory
+            seen["a_released"] = release_persisted()
+        else:
+            seen["b_released"] = release_persisted()
+            b_released.set()
+
+    threads = [
+        threading.Thread(target=worker, args=("a", [1, 2])),
+        threading.Thread(target=worker, args=("b", [3, 4, 5])),
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(120)
+    assert seen == {"b_released": 1, "a_cached_after_b": True, "a_released": 1}
 
 
 def test_register_named_sql_function(spark):

@@ -70,35 +70,21 @@ def test_flagship_query_plan_shape(spark):
 import pytest
 
 
-# Queries that MUTATE shared session state, so the registry plan sweep
-# builds them one at a time after the thread pool: the streaming set
-# (scoped_state_partitions sets and restores spark.sql.shuffle.partitions
-# session-wide), the frontier-walk callers (the walk plans its rounds
-# with AQE off and a right-sized shuffle width, set session-wide while
-# it runs) and everything that writes catalog tables or shared
-# warehouse/tmp paths. test_sequential_covers_state_scoping_queries
-# keeps the first two groups complete.
-SEQUENTIAL = frozenset({
-    # conf-mutating streaming sinks (scoped_state_partitions)
-    "q180_streaming_tumbling_counts",
-    "q181_streaming_dedup_counts",
-    "q203_stream_stream_conversions",
-    "q228_streaming_sliding_counts",
-    "q229_streaming_user_sessions",
-    "q238_streaming_user_drawdown",
-    "q299_streaming_incremental_rollup",
-    "q367_streaming_cms_maintenance",
-    "q372_streaming_static_enrichment",
-    "q393_streaming_ewma_anomalies",
-    # frontier walks (operators/graph._frontier_walk scopes AQE off)
-    "q69_trade_bfs_hops",
-    "q112_closeness_centrality",
-    "q122_strongly_connected",
-    "q516_eccentricity_diameter",
-    "q693_wiener_efficiency",
-    "q695_small_world_sigma",
-    "q698_bowtie_decomposition",
-    # catalog-table / shared-path writers
+# Operators that set a session conf for as long as they run: the
+# streaming runs (scoped_state_partitions sets and restores
+# spark.sql.shuffle.partitions session-wide) and the frontier walks (the
+# walk plans its rounds with AQE off and a right-sized shuffle width).
+# A query whose source calls one of them is found by this scan.
+CONF_SCOPERS = {
+    "streaming state width": r"\b(scoped_state_partitions|run_available_now)\(",
+    "frontier walk": (
+        r"\b(bfs_hops|closeness_centrality|strongly_connected_components"
+        r"|_frontier_walk)\("
+    ),
+}
+
+# Queries that write catalog tables or shared warehouse/tmp paths.
+SHARED_PATH_WRITERS = frozenset({
     "q168_upsert_latest_orders",
     "q174_io_roundtrip_agg",
     "q198_scd2_priority_history",
@@ -112,6 +98,26 @@ SEQUENTIAL = frozenset({
 })
 
 
+def conf_scoping_queries() -> dict[str, set[str]]:
+    """Registry queries per ``CONF_SCOPERS`` entry whose source calls it."""
+    import inspect
+    import re
+
+    import __spark_entry__ as entry
+
+    sources = {n: inspect.getsource(fn) for n, fn in entry.queries().items()}
+    return {
+        what: {n for n, src in sources.items() if re.search(pattern, src)}
+        for what, pattern in CONF_SCOPERS.items()
+    }
+
+
+def sequential_queries() -> frozenset[str]:
+    """Queries that MUTATE shared session state, so the registry plan
+    sweep builds them one at a time after the thread pool."""
+    return SHARED_PATH_WRITERS.union(*conf_scoping_queries().values())
+
+
 @pytest.fixture(scope="module")
 def registry_plan_texts(spark):
     """Build every registered query ONCE and cache its simple-mode
@@ -123,11 +129,13 @@ def registry_plan_texts(spark):
     the sequential sweep was the suite's single most expensive item
     (576 s — many queries run real driver actions while building:
     derivation counts, iterative-loop rounds, MLlib fits). Most builds
-    are independent, so they run through a small thread pool; the
-    ``SEQUENTIAL`` queries build one at a time afterwards. Pool failures
+    are independent, so they run through a small thread pool; those in
+    ``sequential_queries()`` build one at a time afterwards. Pool failures
     retry once in the sequential calm (preserving the old retry
     semantics for transient warehouse collisions)."""
     import __spark_entry__ as entry
+
+    from pandrs_spark.frame import release_persisted
 
     spark.conf.set("spark.sql.debug.maxToStringFields", "2000")
     qs = entry.queries()
@@ -139,7 +147,8 @@ def registry_plan_texts(spark):
 
     from concurrent.futures import ThreadPoolExecutor
 
-    pooled = [n for n in qs if n not in SEQUENTIAL]
+    sequential = sequential_queries()
+    pooled = [n for n in qs if n not in sequential]
     retry: list[str] = []
 
     def _pooled_build(name):
@@ -147,6 +156,10 @@ def registry_plan_texts(spark):
             return name, _build(name), None
         except Exception as e:  # noqa: BLE001 — plan-only sweep
             return name, None, str(e)
+        finally:
+            # the persists belong to this worker thread's context; the
+            # session teardown releases only the main thread's
+            release_persisted()
 
     with ThreadPoolExecutor(max_workers=6) as pool:
         for name, text, err in pool.map(_pooled_build, pooled):
@@ -154,7 +167,7 @@ def registry_plan_texts(spark):
                 texts[name] = text
             else:
                 retry.append(name)
-    for name in retry + [n for n in qs if n in SEQUENTIAL]:
+    for name in retry + [n for n in qs if n in sequential]:
         try:
             texts[name] = _build(name)
         except Exception:  # noqa: BLE001
@@ -167,28 +180,15 @@ def registry_plan_texts(spark):
 
 
 def test_sequential_covers_state_scoping_queries():
-    """Every registry query whose function calls
-    ``scoped_state_partitions`` (which sets spark.sql.shuffle.partitions
-    for the whole session while it runs) or a frontier walk (which sets
-    AQE off and the shuffle width while it runs) is in ``SEQUENTIAL``,
-    so the pooled plan sweep never builds it beside another query."""
-    import inspect
-    import re
-
-    import __spark_entry__ as entry
-
-    scopers = {
-        "scoped_state_partitions": r"\bscoped_state_partitions\(",
-        "frontier walk": (
-            r"\b(bfs_hops|closeness_centrality|strongly_connected_components"
-            r"|_frontier_walk)\("
-        ),
-    }
-    sources = {n: inspect.getsource(fn) for n, fn in entry.queries().items()}
-    for what, pattern in scopers.items():
-        scoping = {n for n, src in sources.items() if re.search(pattern, src)}
-        assert scoping, f"no query calls a {what}: stale scan?"
-        assert scoping <= SEQUENTIAL, (what, sorted(scoping - SEQUENTIAL))
+    """The source scan behind ``sequential_queries`` still finds the
+    queries that open a conf scope: a renamed operator would leave every
+    such query in the thread pool. The q69 frontier walk and the q180
+    stream are known members."""
+    found = conf_scoping_queries()
+    for what, names in found.items():
+        assert names, f"no query calls a {what}: stale scan?"
+    assert "q180_streaming_tumbling_counts" in found["streaming state width"]
+    assert "q69_trade_bfs_hops" in found["frontier walk"]
 
 
 def test_no_accidental_cartesian_products(spark, registry_plan_texts):

@@ -437,6 +437,9 @@ def test_incremental_aggregate_sink_matches_batch(spark, tmp_path):
         stream_from_directory,
     )
 
+    from pandrs_spark.frame import release_persisted
+
+    release_persisted()
     sch = "ts timestamp, key string, v double"
     rows = [
         (dt.datetime(2024, 1, 1, 0, i % 50, i % 60 if i % 60 != i % 50 else (i + 1) % 60), ["a", "b", "c"][i % 3], float(i))
@@ -460,6 +463,9 @@ def test_incremental_aggregate_sink_matches_batch(spark, tmp_path):
     assert got["a"] == (30, float(sum(i for i in range(90) if i % 3 == 0)))
     assert got["b"] == (30, float(sum(i for i in range(90) if i % 3 == 1)))
     assert got["c"] == (30, float(sum(i for i in range(90) if i % 3 == 2)))
+    # foreachBatch persisted each batch's aggregate on a callback
+    # thread; they are still the caller's to release
+    assert release_persisted() >= 1
 
 
 def test_stream_stream_left_outer_join_emits_unmatched(spark, tmp_path):

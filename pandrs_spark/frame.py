@@ -1131,10 +1131,9 @@ class Frame:
         return self._wrap(equal_width_bins(self._df, col, n_bins, out))
 
     def qcut(self, col: str, n_bins: int, out: str = "bin") -> "Frame":
-        # Default quantile_bins path: broadcast quantile-edge threshold
-        # binning (ties share a bin — pandas qcut semantics; no order
-        # column is involved). Pass exact_parity=True + tiebreak to
-        # quantile_bins directly for the legacy NTILE rank-split.
+        # quantile_bins: broadcast quantile-edge threshold binning (ties
+        # share a bin — pandas qcut semantics; no order column is
+        # involved).
         from pandrs_spark.operators.ml import quantile_bins
 
         return self._wrap(quantile_bins(self._df, col, n_bins, out))

@@ -136,27 +136,15 @@ def quantile_bins(
     col: str,
     n_bins: int,
     out: str = "bin",
-    tiebreak=None,
-    exact_parity: bool = False,
-    approx_edges: bool = False,
     duplicates: str = "drop",
 ) -> DataFrame:
     """pandas ``qcut`` (compat :2370).
 
-    Default path (scale-safe, and actually CLOSER to pandas qcut than
-    NTILE): compute the n_bins−1 interpolated quantile edges in ONE
+    Scale-safe, and closer to pandas qcut than NTILE: compute the
+    n_bins−1 interpolated quantile edges in ONE
     aggregate, broadcast them as literals, and bucket each row by
     comparison — a map-only pass, no global sort, no one-task window.
-    Ties share a bin (qcut semantics). ``approx_edges=True`` swaps the
-    exact ``percentile`` aggregate for the fully-mergeable
-    ``approx_percentile`` sketch — the 100 TB path (the exact aggregate
-    buffers the column's values; the sketch is O(1/accuracy) state).
-
-    ``exact_parity=True`` restores the legacy NTILE assignment
-    (equal-count buckets split by global rank, ``tiebreak`` making the
-    order total). NTILE needs a partitionless window — every row in one
-    task — so it is ONLY for bounded inputs where rank-split parity
-    matters more than scale.
+    Ties share a bin (qcut semantics).
 
     ``duplicates``: heavily-tied/constant columns can produce IDENTICAL
     quantile edges, which would silently skip bin numbers (bucket-by-
@@ -170,10 +158,6 @@ def quantile_bins(
         raise ValueError(
             f"quantile_bins: duplicates must be 'drop' or 'raise', got {duplicates!r}"
         )
-    if exact_parity:
-        order = [F.col(col)] + [F.col(t) for t in (tiebreak or [])]
-        w = Window.orderBy(*order)
-        return df.withColumn(out, (F.ntile(n_bins).over(w) - 1).cast("int"))
     qs = [i / n_bins for i in range(1, n_bins)]
     if not qs:
         # n_bins=1: everything non-null is bin 0 (ntile(1) parity)
@@ -183,14 +167,7 @@ def quantile_bins(
             .otherwise(F.lit(None))
             .cast("int"),
         )
-    if approx_edges:
-        edge_expr = F.expr(
-            f"approx_percentile({col}, array({','.join(str(q) for q in qs)}), 10000)"
-        )
-    else:
-        edge_expr = F.expr(
-            f"percentile({col}, array({','.join(str(q) for q in qs)}))"
-        )
+    edge_expr = F.expr(f"percentile({col}, array({','.join(str(q) for q in qs)}))")
     edges = df.agg(edge_expr.alias("e")).first()["e"]
     if edges is None:
         # empty frame or all-null column: no edges exist; null in →
@@ -960,15 +937,23 @@ def decision_tree_metrics(
     from pyspark.ml.feature import VectorAssembler
 
     cols = list(feature_cols)
+    assemble = VectorAssembler(inputCols=cols, outputCol="__features__").transform
+    # MLlib samples the split candidates with one seed per input
+    # partition, so the tree follows how the rows are partitioned: the
+    # same rows in 2 or 4 scan partitions grew different trees. The fit
+    # reads a hash partitioning on the row values, sized by the row
+    # count, with each partition sorted: a layout that is a function of
+    # the data alone. Scoring reads ``df`` as it is.
+    width = max(1, -(-df.count() // (1 << 17)))
+    keyed = [*cols, label_col]
     # NOT persisted (round-11 negative result): the tree learner caches
     # its own BaggedPoint RDD internally, so the only re-evaluation is
     # the single cheap scoring scan — the cache fill measured as a wash
     # (3.34 s -> 3.5-3.7 s at sf0.1).
-    feat = VectorAssembler(inputCols=cols, outputCol="__features__").transform(df)
     model = DecisionTreeClassifier(
         featuresCol="__features__", labelCol=label_col, maxDepth=max_depth, seed=seed
-    ).fit(feat)
-    scored = model.transform(feat)
+    ).fit(assemble(df.repartition(width, *keyed).sortWithinPartitions(*keyed)))
+    scored = model.transform(assemble(df))
     return scored.agg(
         F.count(F.lit(1)).alias("n"),
         F.round(

@@ -188,64 +188,13 @@ def _hyperplanes(n_tables: int, n_planes: int, dim: int, seed: int) -> list[list
     return rng.randn(n_tables, n_planes, dim).round(6).tolist()
 
 
-def lsh_bucket_ids(
-    vec: Column, planes: list[list[float]]
-) -> Column:
-    """Sign-pattern bucket id of a vector under one bank of hyperplanes:
-    bit_i = [vec · plane_i >= 0], bucket = Σ bit_i << i. Pure array
-    expressions — JVM-side, no UDF."""
-    bits = []
-    for i, p in enumerate(planes):
-        d = dot(vec, F.array(*[F.lit(float(x)) for x in p]))
-        bits.append(F.when(d >= 0, F.lit(1 << i)).otherwise(F.lit(0)))
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out
-
-
-def lsh_bucket_array(vec_col: str, banks: list[list[list[float]]]) -> Column:
-    """All per-table bucket ids of a vector at once: ``array<int>`` with
-    element t = :func:`lsh_bucket_ids`(vec, banks[t]) — identical
-    arithmetic (same zip_with/aggregate left-fold dot, same ``>= 0``
-    sign test, same ``1 << i`` bit packing), built as ONE parsed
-    expression instead of n_tables × n_planes Python-side trees.
-
-    Why (round 11, measured): constructing the per-plane expressions
-    through the PySpark column API costs one py4j round-trip per
-    operator node — at q177's derived depth (132 tables × 5 planes ×
-    64 dims) that was **73 s of driver-side plan BUILD time** before
-    any task ran (q88: 19 s). One ``F.expr`` string parse builds the
-    same logical tree in milliseconds, and the nested plane-coefficient
-    literal constant-folds into a single array literal, so the
-    optimizer walks a tree of a few nodes instead of ~40k per
-    reference. Wire format: plane coefficients are rounded to 6
-    decimals (``_hyperplanes``), so ``repr`` round-trips exactly and
-    the parsed double literals are bit-identical to the old
-    ``F.lit(float(x))`` path.
-    """
-    lit = (
-        "array("
-        + ",".join(
-            "array("
-            + ",".join(
-                "array(" + ",".join(f"{x!r}D" for x in p) + ")" for p in table
-            )
-            + ")"
-            for table in banks
-        )
-        + ")"
-    )
-    return F.expr(_bucket_array_expr(vec_col, lit))
-
-
 def _bucket_array_expr(vec_ref: str, banks_ref: str) -> str:
-    """The shared all-tables bucket expression over two SQL references
-    (a vector column and an array<array<array<double>>> of banks) —
-    the single source of the fold arithmetic for the inline-literal
-    (:func:`lsh_bucket_array`) form and for the broadcast-banks form
-    that tests/test_similarity.py certifies :func:`lsh_bucket_explode`
-    against."""
+    """The all-tables bucket expression over two SQL references (a
+    vector column and an array<array<array<double>>> of banks): element
+    t is the sign-pattern bucket id of the vector under bank t,
+    bit_i = [vec · plane_i >= 0], bucket = Σ bit_i << i, as a left-fold
+    dot (zip_with/aggregate). The JVM fold that tests/test_similarity.py
+    certifies :func:`lsh_bucket_explode` against."""
     return (
         f"transform({banks_ref}, tb -> aggregate(sequence(0, size(tb) - 1), 0, "
         f"(acc, i) -> acc + IF(aggregate(zip_with({vec_ref}, tb[i], "
@@ -261,8 +210,9 @@ def lsh_bucket_explode(
     *keep: str,
 ) -> DataFrame:
     """``(keep..., t, bucket)`` — one row per (vector, table), bucket =
-    :func:`lsh_bucket_ids`(vec, banks[t]). Row set is identical to
-    ``df.select(*keep, posexplode(lsh_bucket_array(vec_col, banks)))``.
+    the sign-pattern id of the vector under bank t. Row set is identical
+    to a ``posexplode`` of :func:`_bucket_array_expr` over the vector
+    and the banks.
 
     Round 12 (guide §4.2, VERDICT r11 item 4): the bucket projection is
     a dense (n_vectors × n_tables·n_planes) matrix of 64-dim dot

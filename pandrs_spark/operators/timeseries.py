@@ -1,11 +1,16 @@
 """Time-series operators (SURVEY.md §2.11): resample, date ranges,
-gap filling (ffill/bfill/linear interpolation), autocorrelation.
+gap filling (ffill/bfill/linear interpolation), autocorrelation,
+smoothing and forecasting, change points, survival curves.
 
-All are window/sequence expressions — no driver-side loops — so a
-billion independent series (partitioned by series id) process in
-parallel. Reference: src/time_series/core.rs (resample :387, ffill
-:657, bfill :683), src/temporal/date_range/mod.rs:153,
-src/time_series/analysis.rs (ACF :829).
+Most are window/sequence expressions. The recursions with no closed
+form (SES, Holt, damped Holt, Holt-Winters, ARIMA, BOCPD, Croston, TSB,
+the reorder-policy simulation) are pandas folds, one per series, all
+run by ``operators.util._per_series_fold``. Either way nothing loops on
+the driver, so a billion independent series (partitioned by series id)
+process in parallel. Reference: src/time_series/core.rs (resample
+:387, ffill :657, bfill :683), src/temporal/date_range/mod.rs:153,
+src/time_series/analysis.rs (ACF :829),
+src/time_series/forecasting.rs (:437-788).
 """
 
 from __future__ import annotations
@@ -16,7 +21,7 @@ from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
 from pandrs_spark.functions.deterministic import dsum, dsum_over
-from pandrs_spark.operators.util import fan_out_groups, small_local_df
+from pandrs_spark.operators.util import _field_ddl, _per_series_fold, small_local_df
 
 __all__ = [
     "nelson_aalen",
@@ -318,12 +323,8 @@ def ses_fitted(
     internal weighted-average formulation drifted ~1e-6 from the
     closed-form oracle at sf0.1 revenue magnitudes ~5e8, where double
     ulps at the 6-decimal rounding edge are visible)."""
-    schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
-    schema += f", {out_col} double"
-    order_cols = list(order_by)
 
     def _ses(pdf):
-        pdf = pdf.sort_values(order_cols, kind="mergesort")
         vals = pdf[value_col].to_numpy(dtype=float)
         out = []
         s = None
@@ -333,7 +334,8 @@ def ses_fitted(
         pdf[out_col] = out
         return pdf
 
-    return fan_out_groups(df, *partition_by).groupBy(*partition_by).applyInPandas(_ses, schema=schema)
+    schema = f"{_field_ddl(df)}, {out_col} double"
+    return _per_series_fold(df, partition_by, order_by, _ses, schema)
 
 
 def holt_forecast(
@@ -350,12 +352,8 @@ def holt_forecast(
     level l_t = α·x_t + (1−α)(l_{t−1}+b_{t−1}); trend b_t =
     β(l_t−l_{t−1}) + (1−β)b_{t−1}; forecast x̂_{t+h} = l_t + h·b_t.
     Returns the input plus the h-step-ahead forecast made at each row."""
-    schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
-    schema += f", {out_col} double"
-    order_cols = list(order_by)
 
     def _holt(pdf):
-        pdf = pdf.sort_values(order_cols, kind="mergesort").reset_index(drop=True)
         vals = pdf[value_col].to_numpy(dtype=float)
         fc = [float("nan")] * len(vals)
         if len(vals) >= 2:
@@ -369,7 +367,8 @@ def holt_forecast(
         pdf[out_col] = fc
         return pdf
 
-    return fan_out_groups(df, *partition_by).groupBy(*partition_by).applyInPandas(_holt, schema=schema)
+    schema = f"{_field_ddl(df)}, {out_col} double"
+    return _per_series_fold(df, partition_by, order_by, _holt, schema)
 
 
 def holt_winters_forecast(
@@ -399,12 +398,8 @@ def holt_winters_forecast(
     """
     if seasonal not in ("add", "mul"):
         raise ValueError(f"seasonal must be 'add' or 'mul', got {seasonal!r}")
-    schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
-    schema += f", {out_col} double"
-    order_cols = list(order_by)
 
     def _hw(pdf):
-        pdf = pdf.sort_values(order_cols, kind="mergesort").reset_index(drop=True)
         x = pdf[value_col].to_numpy(dtype=float)
         n = len(x)
         fc = [float("nan")] * n
@@ -435,7 +430,8 @@ def holt_winters_forecast(
         pdf[out_col] = fc
         return pdf
 
-    return fan_out_groups(df, *partition_by).groupBy(*partition_by).applyInPandas(_hw, schema=schema)
+    schema = f"{_field_ddl(df)}, {out_col} double"
+    return _per_series_fold(df, partition_by, order_by, _hw, schema)
 
 
 def arima_forecast(
@@ -480,18 +476,10 @@ def arima_forecast(
     if len(ar_coef) != p or len(ma_coef) != q:
         raise ValueError("len(ar) must equal p and len(ma) must equal q")
     keep = [*partition_by, *order_by, value_col]
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in df.schema.fields
-        if f.name in keep
-    )
-    schema += ", dy double, fitted double, resid double, next_fc double"
-    order_cols = list(order_by)
 
     def _arima(pdf):
         import numpy as np
 
-        pdf = pdf.sort_values(order_cols, kind="mergesort").reset_index(drop=True)
         x = pdf[value_col].to_numpy(dtype=float)
         # difference d times, remembering the last value at each level
         # for the final integration step
@@ -532,7 +520,11 @@ def arima_forecast(
         out["next_fc"] = fc
         return out
 
-    return fan_out_groups(df, *partition_by).groupBy(*partition_by).applyInPandas(_arima, schema=schema)
+    schema = (
+        f"{_field_ddl(df, keep)}, dy double, fitted double, resid double, "
+        "next_fc double"
+    )
+    return _per_series_fold(df, partition_by, order_by, _arima, schema)
 
 
 def periodogram(
@@ -862,7 +854,6 @@ def bocpd_changepoints(
         import pandas as pd
 
         lg = np.vectorize(lgamma)
-        pdf = pdf.sort_values(ts_col, kind="mergesort")
         x = pdf[value_col].to_numpy(dtype=float)
         n = len(x)
         # Normal-Gamma prior
@@ -920,14 +911,7 @@ def bocpd_changepoints(
             }
         )
 
-    from pandrs_spark.operators.util import fan_out_groups
-
-    # CPU-dense grouped recursion: pre-partition by the series key with
-    # an explicit count so AQE's byte-sized coalescing can't collapse
-    # all series onto one task (round 11, measured 7 s single-task)
-    return fan_out_groups(df, series_col).groupBy(series_col).applyInPandas(
-        _bocpd, schema=out_schema
-    )
+    return _per_series_fold(df, [series_col], [ts_col], _bocpd, out_schema)
 
 
 def kaplan_meier(
@@ -1020,15 +1004,9 @@ def croston_forecast(
     scale horizontally; each series' history is bounded by the calendar
     spine, not the data volume.
     """
-    order_cols = list(order_by)
     part_cols = list(partition_by)
-    key_fields = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in df.schema.fields
-        if f.name in part_cols
-    )
     schema = (
-        key_fields + ", n_periods long, n_nonzero long, "
+        _field_ddl(df, part_cols) + ", n_periods long, n_nonzero long, "
         "croston_size double, croston_interval double, "
         "croston_fc double, sba_fc double"
     )
@@ -1036,7 +1014,6 @@ def croston_forecast(
     def _croston(pdf):
         import pandas as pd
 
-        pdf = pdf.sort_values(order_cols, kind="mergesort")
         xs = pdf[value_col].to_numpy(dtype=float)
         z = p = None
         q = 1.0
@@ -1065,7 +1042,7 @@ def croston_forecast(
         )
         return pd.DataFrame(row)
 
-    return fan_out_groups(df, *part_cols).groupBy(*part_cols).applyInPandas(_croston, schema=schema)
+    return _per_series_fold(df, part_cols, order_by, _croston, schema)
 
 
 def sbc_demand_classification(
@@ -1137,22 +1114,15 @@ def tsb_forecast(
     p = 1/i; earlier periods carry no state. One row out per series
     (final state); per-series applyInPandas fold, horizontally
     scalable exactly like Croston."""
-    order_cols = list(order_by)
     part_cols = list(partition_by)
-    key_fields = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in df.schema.fields
-        if f.name in part_cols
-    )
     schema = (
-        key_fields + ", n_periods long, n_nonzero long, "
+        _field_ddl(df, part_cols) + ", n_periods long, n_nonzero long, "
         "tsb_prob double, tsb_size double, tsb_fc double"
     )
 
     def _tsb(pdf):
         import pandas as pd
 
-        pdf = pdf.sort_values(order_cols, kind="mergesort")
         xs = pdf[value_col].to_numpy(dtype=float)
         z = p = None
         i = 0.0
@@ -1182,7 +1152,7 @@ def tsb_forecast(
         )
         return pd.DataFrame(row)
 
-    return fan_out_groups(df, *part_cols).groupBy(*part_cols).applyInPandas(_tsb, schema=schema)
+    return _per_series_fold(df, part_cols, order_by, _tsb, schema)
 
 
 def logrank_test(
@@ -1293,15 +1263,9 @@ def reorder_policy_sim(
     One row per series: (n_periods, n_stockouts, n_orders,
     final_on_hand, fill_rate = 1 - stockouts/periods). Per-series
     applyInPandas fold — horizontally scalable like Croston/TSB."""
-    order_cols = list(order_by)
     part_cols = list(partition_by)
-    key_fields = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in df.schema.fields
-        if f.name in part_cols
-    )
     schema = (
-        key_fields + ", n_periods long, n_stockouts long, n_orders long, "
+        _field_ddl(df, part_cols) + ", n_periods long, n_stockouts long, n_orders long, "
         "final_on_hand double, fill_rate double"
     )
     s_pt, s_up = float(reorder_point), float(order_up_to)
@@ -1309,7 +1273,6 @@ def reorder_policy_sim(
     def _sim(pdf):
         import pandas as pd
 
-        pdf = pdf.sort_values(order_cols, kind="mergesort")
         xs = pdf[value_col].to_numpy(dtype=float)
         oh, orders, so = s_up, 0, 0
         for x in xs:
@@ -1331,7 +1294,7 @@ def reorder_policy_sim(
         )
         return pd.DataFrame(row)
 
-    return fan_out_groups(df, *part_cols).groupBy(*part_cols).applyInPandas(_sim, schema=schema)
+    return _per_series_fold(df, part_cols, order_by, _sim, schema)
 
 
 def nelson_aalen(
@@ -1406,17 +1369,9 @@ def holt_damped_forecast(
     for long horizons. Same per-series applyInPandas fold shape as
     Holt; the oracle replays the identical recursion via list_reduce.
     """
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-    )
-    schema += f", {out_col} double"
-    order_cols = list(order_by)
     phi_h = sum(phi**i for i in range(1, horizon + 1))
 
     def _fold(pdf):
-        pdf = pdf.sort_values(order_cols, kind="mergesort").reset_index(
-            drop=True
-        )
         vals = pdf[value_col].to_numpy(dtype=float)
         fc = [float("nan")] * len(vals)
         if len(vals) >= 2:
@@ -1430,7 +1385,8 @@ def holt_damped_forecast(
         pdf[out_col] = fc
         return pdf
 
-    return fan_out_groups(df, *partition_by).groupBy(*partition_by).applyInPandas(_fold, schema=schema)
+    schema = f"{_field_ddl(df)}, {out_col} double"
+    return _per_series_fold(df, partition_by, order_by, _fold, schema)
 
 
 def page_hinkley(

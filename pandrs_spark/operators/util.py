@@ -2,7 +2,9 @@
 
 from __future__ import annotations
 
+import functools
 import threading
+from collections.abc import Sequence
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
@@ -13,7 +15,6 @@ __all__ = [
     "UnboundedBuildError",
     "assert_bounded",
     "fan_out",
-    "fan_out_groups",
     "right_size_keyed",
     "right_sized_width",
     "scoped_conf",
@@ -283,27 +284,53 @@ def right_sized_width(df: DataFrame, bytes_per_task: int = 1 << 22) -> int | Non
     return int(target)
 
 
-def fan_out_groups(df: DataFrame, *key_cols: str) -> DataFrame:
-    """Explicitly hash-partition ``df`` by the group key ahead of a
-    CPU-dense ``groupBy(...).applyInPandas`` (round 11).
+def _field_ddl(df: DataFrame, names=None) -> str:
+    """DDL of ``df``'s columns, in frame order; only those in ``names``
+    when given."""
+    return ", ".join(
+        f"{f.name} {f.dataType.simpleString()}"
+        for f in df.schema.fields
+        if names is None or f.name in names
+    )
 
-    AQE sizes post-shuffle partitions by BYTES; a grouped Python
-    recursion (BOCPD, ARIMA folds) carries kilobytes but burns seconds
-    per group, so the advisory-size coalescing collapses thousands of
-    groups onto one task (measured: q155's 7 s single-task stage while
-    31 cores idled). An explicit repartition with an explicit partition
-    count is exempt from AQE coalescing, and because it already
-    produces the HashPartitioning the grouped-map operator needs, NO
-    extra exchange is added — the plan has the same single shuffle,
-    just with a CPU-sized partition count. ``defaultParallelism``
-    scales with the cluster, so the knob is scale-adaptive, not a
-    local constant.
+
+def _per_series_fold(
+    df: DataFrame, keys: Sequence[str], order: Sequence[str], fold, schema: str
+) -> DataFrame:
+    """Run ``fold`` once per series — per distinct ``keys`` value — over
+    that series' rows stably sorted by ``order`` (mergesort, with a fresh
+    0..n-1 index), and return the union of the frames it returns, typed
+    by the DDL ``schema``. The distributed shape of every recursion that
+    has no closed-form window expression (EWM, SES, Holt, ARIMA, BOCPD,
+    Croston): series are independent and spread across tasks, while each
+    one runs sequentially in one pandas frame, so a series must fit one
+    worker.
+
+    Keyed input is first hash-partitioned by ``keys`` with an explicit
+    count. AQE sizes post-shuffle partitions by BYTES; a grouped Python
+    recursion carries kilobytes but burns seconds per group, so the
+    advisory-size coalescing collapses thousands of series onto one task
+    (measured: q155's 7 s single-task stage while 31 cores idled). An
+    explicit repartition with an explicit partition count is exempt from
+    AQE coalescing, and because it already produces the HashPartitioning
+    the grouped-map operator needs, NO extra exchange is added — the plan
+    has the same single shuffle, just with a CPU-sized partition count.
+    ``defaultParallelism`` scales with the cluster. A keyless fold is one
+    global series: nothing to spread.
+
+    The sorting wrapper carries ``fold``'s name, which is what the plan's
+    FlatMapGroupsInPandas node prints.
     """
-    if not key_cols:
-        # a keyless grouped-map is one global group — nothing to spread
-        return df
-    sc = df.sparkSession.sparkContext
-    return df.repartition(sc.defaultParallelism, *[F.col(c) for c in key_cols])
+    keys, order = list(keys), list(order)
+
+    @functools.wraps(fold)
+    def run(pdf):
+        return fold(pdf.sort_values(order, kind="mergesort").reset_index(drop=True))
+
+    if keys:
+        width = df.sparkSession.sparkContext.defaultParallelism
+        df = df.repartition(width, *[F.col(k) for k in keys])
+    return df.groupBy(*keys).applyInPandas(run, schema=schema)
 
 
 class UnboundedBuildError(RuntimeError):

@@ -4,7 +4,11 @@ pandas-style rolling/expanding/EWM plus shift/diff/pct_change/cum* and
 rank methods, expressed as Spark window functions so they distribute:
 partitioned by group keys, ordered by an explicit order column
 (pandas' implicit row order does not exist at scale — callers must
-say what "previous row" means).
+say what "previous row" means). Two shapes are not window
+expressions: EWM is recursive, so it is a pandas fold per series
+(``operators.util._per_series_fold``); the global prefix operators
+(``global_*``) share one ordered scan over per-partition offsets
+(:func:`_partition_offset_scan`), so no window runs without a partition.
 
 Reference parity: src/series/window.rs (Rolling :12, Expanding :25,
 EWM :35), src/dataframe/enhanced_window.rs, compat shift/diff/
@@ -18,7 +22,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
-from pandrs_spark.operators.util import fan_out_groups, tracked_persist
+from pandrs_spark.operators.util import _field_ddl, _per_series_fold, tracked_persist
 
 __all__ = [
     "ordered_window",
@@ -230,28 +234,11 @@ def ewm_mean(
     """Exponentially-weighted mean per group (pandas semantics,
     src/series/window.rs:555-640 is the spec; ignore_na :602 — when
     False, intervening NAs still decay the weights of older points).
-
-    Inherently recursive → no closed-form window expression, so this is
-    the documented Pandas-UDF path: ``applyInPandas`` per group, Arrow
-    batch transfer, pandas' own ewm for exact parity. Groups are
-    independent → scales horizontally; within-group is sequential, as
-    the definition requires.
-    """
-    import pandas as pd  # noqa: F401
-
-    schema_fields = df.schema.fields
-    out_schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in schema_fields)
-    out_schema += f", {out_col} double"
-    order_cols = list(order_by)
-
-    def _ewm(pdf):
-        pdf = pdf.sort_values(order_cols, kind="mergesort")
-        pdf[out_col] = pdf[value_col].ewm(
-            alpha=alpha, adjust=adjust, ignore_na=ignore_na
-        ).mean()
-        return pdf
-
-    return fan_out_groups(df, *partition_by).groupBy(*partition_by).applyInPandas(_ewm, schema=out_schema)
+    Same as :func:`ewm_stat` with ``stat="mean"``."""
+    return ewm_stat(
+        df, value_col, order_by, partition_by, alpha, "mean", adjust, ignore_na,
+        out_col=out_col,
+    )
 
 
 def ewm_stat(
@@ -266,20 +253,19 @@ def ewm_stat(
     bias: bool = False,
     out_col: str = "ewm",
 ) -> DataFrame:
-    """EWM mean/std/var per group (src/series/window.rs:640,:673,:715).
+    """EWM mean/std/var per group (src/series/window.rs:555,:640,:673,
+    :715).
 
-    Same applyInPandas shape as :func:`ewm_mean`; pandas provides exact
-    parity for the debiasing weights (``bias=False`` matches the
-    reference's sample-weighted variance).
+    Inherently recursive → no closed-form window expression, so this is
+    a per-series pandas fold (:func:`_per_series_fold`) over pandas' own
+    ewm for exact parity; ``bias=False`` matches the reference's
+    sample-weighted variance. Groups are independent → scales
+    horizontally; within-group is sequential, as the definition requires.
     """
     if stat not in ("mean", "std", "var"):
         raise ValueError("stat must be mean|std|var")
-    schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
-    schema += f", {out_col} double"
-    order_cols = list(order_by)
 
     def _ewm(pdf):
-        pdf = pdf.sort_values(order_cols, kind="mergesort")
         e = pdf[value_col].ewm(alpha=alpha, adjust=adjust, ignore_na=ignore_na)
         if stat == "mean":
             pdf[out_col] = e.mean()
@@ -289,7 +275,72 @@ def ewm_stat(
             pdf[out_col] = e.var(bias=bias)
         return pdf
 
-    return fan_out_groups(df, *partition_by).groupBy(*partition_by).applyInPandas(_ewm, schema=schema)
+    schema = f"{_field_ddl(df)}, {out_col} double"
+    return _per_series_fold(df, partition_by, order_by, _ewm, schema)
+
+
+def _add(acc, total):
+    return acc + (total or 0)
+
+
+def _max(acc, total):
+    if total is None:
+        return acc
+    return total if acc is None or total > acc else acc
+
+
+def _partition_offset_scan(
+    df: DataFrame,
+    order_exprs: Sequence[Column],
+    totals: dict[str, Column],
+    fold=_add,
+    start=0,
+    tags: dict[str, Column] | None = None,
+) -> tuple[DataFrame, WindowSpec, list[Column | None]]:
+    """The ordered scan behind every GLOBAL prefix operator here, without
+    the single-partition ``Window.orderBy`` collapse.
+
+    One range sort keeps every core busy. Each row is tagged with its
+    partition id ``__pid__`` (then with the ``tags`` columns), and the
+    tagged frame is persisted, so the offset job and the downstream plan
+    see the SAME partition layout (spark_partition_id is only stable on
+    a materialized partitioning). One collect brings back each
+    partition's ``totals`` — one row per partition. The driver folds
+    them in partition order: partition p's offset is ``start`` folded
+    with the totals of partitions 0..p-1, and a partition whose offset
+    is still None gets no map entry (a NULL offset).
+
+    Returns the persisted frame (the caller drops ``__pid__``), the
+    partition-local running window (rows up to the current one) and,
+    per total, its offset column: a map lookup on ``__pid__``, or None
+    when no partition has an offset (empty input; for max, also when no
+    earlier partition holds a non-null value).
+    """
+    from pyspark import StorageLevel
+
+    sdf = df.orderBy(*order_exprs).withColumn("__pid__", F.spark_partition_id())
+    for name, col in (tags or {}).items():
+        sdf = sdf.withColumn(name, col)
+    sdf = tracked_persist(sdf, StorageLevel.MEMORY_AND_DISK)
+    rows = sdf.groupBy("__pid__").agg(
+        *[c.alias(name) for name, c in totals.items()]
+    ).collect()
+    rows.sort(key=lambda r: r["__pid__"])
+    offsets: list[Column | None] = []
+    for name in totals:
+        pairs: list = []
+        acc = start
+        for row in rows:
+            if acc is not None:
+                pairs += [F.lit(row["__pid__"]), F.lit(acc)]
+            acc = fold(acc, row[name])
+        offsets.append(F.create_map(*pairs)[F.col("__pid__")] if pairs else None)
+    w = (
+        Window.partitionBy("__pid__")
+        .orderBy(*order_exprs)
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    return sdf, w, offsets
 
 
 def global_prefix_sum(
@@ -299,45 +350,26 @@ def global_prefix_sum(
     out_col: str = "running_total",
     scale: int = 2,
 ) -> DataFrame:
-    """Distributed GLOBAL running total under a total order — without
-    the single-partition ``Window.orderBy`` collapse: range-sort keeps
-    every core busy, each partition computes its own quantized prefix
-    sum, and a tiny per-partition total map (collected, one row per
-    partition) supplies the additive offsets. Same partition-offset
-    scheme as global_row_number below.
+    """Distributed GLOBAL running total under a total order, through
+    :func:`_partition_offset_scan`: each partition computes its own
+    quantized prefix sum, and the per-partition totals supply the
+    additive offsets.
 
     Values are quantized to scaled BIGINT for the cross-partition
     fold, so the running total is EXACT and order-independent within a
     partition — the float sum never leaves one task. Returns the frame
     sorted by ``order_exprs`` with ``out_col`` (double) appended.
     """
-    from pyspark import StorageLevel
-
     v = F.col(value_col) if isinstance(value_col, str) else value_col
     m = 10**scale
     q = (v * m + F.when(v < 0, -0.5).otherwise(0.5)).cast("long")
-    sdf = tracked_persist(
-        df.orderBy(*order_exprs)
-        .withColumn("__pid__", F.spark_partition_id())
-        .withColumn("__q__", q),
-        StorageLevel.MEMORY_AND_DISK,
+    sdf, w, [offset] = _partition_offset_scan(
+        df, order_exprs, {"t": F.sum("__q__")}, tags={"__q__": q}
     )
-    totals = sdf.groupBy("__pid__").agg(F.sum("__q__").alias("t")).collect()
-    pairs: list = []
-    acc = 0
-    for row in sorted(totals, key=lambda r: r["__pid__"]):
-        pairs += [F.lit(row["__pid__"]), F.lit(acc)]
-        acc += row["t"] or 0
-    if not pairs:
+    if offset is None:
         return sdf.drop("__pid__", "__q__").withColumn(
             out_col, F.lit(None).cast("double")
         )
-    offset = F.create_map(*pairs)[F.col("__pid__")]
-    w = (
-        Window.partitionBy("__pid__")
-        .orderBy(*order_exprs)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
     return (
         sdf.withColumn(
             out_col,
@@ -354,47 +386,25 @@ def global_prefix_counts(
 ) -> DataFrame:
     """EXACT global running sums of integer columns under a total
     order — the distributed-ECDF primitive (rank histograms, CDF
-    differences). Same partition-offset scheme as global_prefix_sum,
-    but (a) BIGINT-exact with no quantization (inputs are counts) and
-    (b) several columns in ONE sort + ONE offset collect:
-    ``counts={"cum1": "c1", "cum2": "c2"}`` appends both running
-    totals. This replaces the partitionless
+    differences). One :func:`_partition_offset_scan`, like
+    global_prefix_sum, but (a) BIGINT-exact with no quantization
+    (inputs are counts) and (b) several columns in ONE sort + ONE offset
+    collect: ``counts={"cum1": "c1", "cum2": "c2"}`` appends both
+    running totals. This replaces the partitionless
     ``Window.orderBy(value)`` over a distinct-value histogram, whose
     cardinality for continuous measures approaches the ROW count — the
     one-task collapse the registry plan fence forbids.
     """
-    from pyspark import StorageLevel
-
-    sdf = tracked_persist(
-        df.orderBy(*order_exprs).withColumn("__pid__", F.spark_partition_id()),
-        StorageLevel.MEMORY_AND_DISK,
+    sdf, w, offsets = _partition_offset_scan(
+        df, order_exprs, {out: F.sum(src) for out, src in counts.items()}
     )
-    totals = sdf.groupBy("__pid__").agg(
-        *[F.sum(src).alias(out) for out, src in counts.items()]
-    ).collect()
-    if not totals:
-        out_df = sdf.drop("__pid__")
-        for out in counts:
-            out_df = out_df.withColumn(out, F.lit(None).cast("long"))
-        return out_df
-    pairs: dict[str, list] = {out: [] for out in counts}
-    acc = {out: 0 for out in counts}
-    for row in sorted(totals, key=lambda r: r["__pid__"]):
-        for out in counts:
-            pairs[out] += [F.lit(row["__pid__"]), F.lit(acc[out])]
-            acc[out] += row[out] or 0
-    w = (
-        Window.partitionBy("__pid__")
-        .orderBy(*order_exprs)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    out_df = sdf
-    for out, src in counts.items():
-        offset = F.create_map(*pairs[out])[F.col("__pid__")]
-        out_df = out_df.withColumn(
-            out, (offset + F.sum(src).over(w)).cast("long")
+    if offsets[0] is None:
+        return sdf.drop("__pid__").withColumns(
+            {out: F.lit(None).cast("long") for out in counts}
         )
-    return out_df.drop("__pid__")
+    for (out, src), offset in zip(counts.items(), offsets):
+        sdf = sdf.withColumn(out, (offset + F.sum(src).over(w)).cast("long"))
+    return sdf.drop("__pid__")
 
 
 def global_row_number(
@@ -402,39 +412,22 @@ def global_row_number(
     order_exprs: Sequence[Column],
     out_col: str = "rn",
 ) -> DataFrame:
-    """Distributed GLOBAL 1-based row number under a total order —
-    without the single-partition ``Window.orderBy`` collapse:
-    range-sort keeps every core busy, each partition numbers its own
-    rows, and a tiny per-partition count map (collected, one row per
-    partition) supplies the additive offsets. Same partition-offset
-    scheme as global_prefix_sum above / Frame.sort_values.
+    """Distributed GLOBAL 1-based row number under a total order,
+    through :func:`_partition_offset_scan`: each partition numbers its
+    own rows, and the per-partition row counts supply the additive
+    offsets.
 
     With a TOTAL order (include a unique tiebreak column) the result
     equals ``row_number() OVER (ORDER BY ...)`` exactly, and global
     rank statistics follow arithmetically: percent_rank =
     (rn−1)/(n−1), cume_dist = rn/n, ntile(k) from (rn, n, k) — see
     queries/windows.py q53 for the derivation.
-
-    Persists the sorted frame so the offset job and the downstream plan
-    see the SAME partition layout (spark_partition_id is only stable on
-    a materialized partitioning).
     """
-    from pyspark import StorageLevel
-
-    sdf = tracked_persist(
-        df.orderBy(*order_exprs).withColumn("__pid__", F.spark_partition_id()),
-        StorageLevel.MEMORY_AND_DISK,
+    sdf, w, [offset] = _partition_offset_scan(
+        df, order_exprs, {"c": F.count(F.lit(1))}
     )
-    counts = sdf.groupBy("__pid__").agg(F.count(F.lit(1)).alias("c")).collect()
-    pairs: list = []
-    acc = 0
-    for row in sorted(counts, key=lambda r: r["__pid__"]):
-        pairs += [F.lit(row["__pid__"]), F.lit(acc)]
-        acc += row["c"]
-    if not pairs:
+    if offset is None:
         return sdf.drop("__pid__").withColumn(out_col, F.lit(None).cast("long"))
-    offset = F.create_map(*pairs)[F.col("__pid__")]
-    w = Window.partitionBy("__pid__").orderBy(*order_exprs)
     return (
         sdf.withColumn(
             out_col, (offset + F.row_number().over(w)).cast("long")
@@ -522,39 +515,16 @@ def global_prefix_max(
 ) -> DataFrame:
     """EXACT global running MAX of an integer/orderable column under a
     total order — the skyline/frontier primitive, completing the
-    partition-offset family (global_prefix_counts sums,
-    global_row_number numbers; this one folds max). Same scheme: one
-    range sort keeps every core busy, each partition computes its local
-    running max, and a collected one-row-per-partition max map supplies
+    :func:`_partition_offset_scan` family (global_prefix_counts sums,
+    global_row_number numbers; this one folds max). Each partition
+    computes its local running max, and the per-partition maxes supply
     each partition's prefix offset (max is associative+commutative, so
     the per-partition prefix combine is order-safe). NO partitionless
     window anywhere. NULLs are ignored (like SQL MAX); rows before the
     first non-null get a NULL running max."""
-    from pyspark import StorageLevel
-
-    sdf = tracked_persist(
-        df.orderBy(*order_exprs).withColumn("__pid__", F.spark_partition_id()),
-        StorageLevel.MEMORY_AND_DISK,
-    )
-    totals = sdf.groupBy("__pid__").agg(F.max(src_col).alias("__m__")).collect()
-    pairs: list = []
-    running = None
-    for row in sorted(totals, key=lambda r: r["__pid__"]):
-        # absent map key ⇒ NULL offset ⇒ local-only max (first partitions)
-        if running is not None:
-            pairs += [F.lit(row["__pid__"]), F.lit(running)]
-        m = row["__m__"]
-        if m is not None:
-            running = m if running is None or m > running else running
-    w = (
-        Window.partitionBy("__pid__")
-        .orderBy(*order_exprs)
-        .rowsBetween(Window.unboundedPreceding, 0)
+    sdf, w, [offset] = _partition_offset_scan(
+        df, order_exprs, {"m": F.max(src_col)}, fold=_max, start=None
     )
     local = F.max(src_col).over(w)
-    if pairs:
-        offset = F.create_map(*pairs)[F.col("__pid__")]
-        out = F.greatest(offset, local)
-    else:
-        out = local
+    out = local if offset is None else F.greatest(offset, local)
     return sdf.withColumn(out_col, out).drop("__pid__")

@@ -23,7 +23,6 @@ __all__ = [
     "num_shuffles",
     "has_broadcast_join",
     "wholestage_codegen_spans",
-    "unbounded_partitionless_windows",
     "unbounded_partitionless_windows_text",
 ]
 
@@ -112,12 +111,14 @@ def _is_order_spec(group: str) -> bool:
 _LIMIT_NODES = ("GlobalLimit", "TakeOrderedAndProject", "CollectLimit", "LocalLimit")
 
 
-def unbounded_partitionless_windows(df: DataFrame) -> list[str]:
+def unbounded_partitionless_windows_text(text: str) -> list[str]:
     """Window / WindowGroupLimit nodes with an EMPTY partition spec whose
-    input is not bounded by a limit — i.e. the plan funnels every input
-    row into one task (Spark's ``WindowExec: No Partition Defined``
-    path). At 100 TB this is a scale-killer, so the registry-wide plan
-    sweep pins zero of them outside an explicit bounded whitelist.
+    input is not bounded by a limit, in the ``simple``-mode plan text of
+    a query (``plan_text(df, "simple")``; sweeps cache one per query) —
+    i.e. the plan funnels every input row into one task (Spark's
+    ``WindowExec: No Partition Defined`` path). At 100 TB this is a
+    scale-killer, so the registry-wide plan sweep pins zero of them
+    outside an explicit bounded whitelist.
 
     Detection: in ``simple``-mode plan text a Window node prints
     ``Window [exprs], [partitionSpec], [orderSpec]`` when partitioned
@@ -128,12 +129,6 @@ def unbounded_partitionless_windows(df: DataFrame) -> list[str]:
     k survivors of a TakeOrdered top-k is bounded by construction.
     Returns the offending plan lines (empty list = clean).
     """
-    return unbounded_partitionless_windows_text(plan_text(df, "simple"))
-
-
-def unbounded_partitionless_windows_text(text: str) -> list[str]:
-    """Text-mode variant of :func:`unbounded_partitionless_windows` for
-    sweeps that cache one ``simple`` plan per query."""
     lines = text.splitlines()
 
     def _depth(line: str) -> int:

@@ -10,6 +10,12 @@ pandrs_spark.functions.deterministic.
 
 from __future__ import annotations
 
+import atexit
+import functools
+import os
+import shutil
+import tempfile
+
 import pandas as pd
 from pyspark.sql import Window
 from pyspark.sql import functions as F
@@ -26,6 +32,27 @@ from pandrs_spark.functions.deterministic import (
 from pandrs_spark.operators.joins import anti_join, merge, semi_join
 from pandrs_spark.operators.util import small_local_df
 from pandrs_spark.queries import query
+
+
+@functools.cache
+def _process_scratch(pid: int) -> str:
+    """This process's scratch directory, made on first use and removed
+    at exit: the files outlive the query that wrote them, since the
+    frame it returns reads them lazily. Keyed by the process id, so a
+    forked child makes its own."""
+    root = tempfile.mkdtemp(prefix=f"pandrs_{pid}_")
+    atexit.register(shutil.rmtree, root, True)
+    return root
+
+
+def _scratch_path(kind: str, sf_dir: str) -> str:
+    """Where a query that writes files and reads them back keeps them:
+    ``<kind>_<sf>`` under :func:`_process_scratch`, so two processes
+    running the registry at one scale factor never write into each
+    other's files."""
+    return os.path.join(
+        _process_scratch(os.getpid()), f"{kind}_{os.path.basename(sf_dir)}"
+    )
 
 
 # --- q01: TPC-H Q1 shape — filter → groupBy → sum/avg/count → sort ----------
@@ -1420,9 +1447,6 @@ def q168(spark, sf_dir):
     """,
 )
 def q174(spark, sf_dir):
-    import os
-    import tempfile
-
     from pandrs_spark.sources.io import read_csv, read_json, write_csv, write_json
 
     li = T(spark, sf_dir, "lineitem").select(
@@ -1430,9 +1454,7 @@ def q174(spark, sf_dir):
         F.col("l_quantity").cast("long").alias("l_quantity"),
         "l_orderkey",
     )
-    base = os.path.join(
-        tempfile.gettempdir(), f"pandrs_roundtrip_{os.path.basename(sf_dir)}"
-    )
+    base = _scratch_path("roundtrip", sf_dir)
     write_csv(li, f"{base}_csv")
     write_json(li, f"{base}_json")
     schema = "l_returnflag string, l_quantity long, l_orderkey long"
@@ -3158,17 +3180,12 @@ def q256(spark, sf_dir):
     """,
 )
 def q354(spark, sf_dir):
-    import os
-    import tempfile
-
     from pandrs_spark.sources.io import read_orc, write_orc
 
     od = T(spark, sf_dir, "orders").select(
         "o_orderpriority", "o_orderkey", "o_totalprice"
     )
-    base = os.path.join(
-        tempfile.gettempdir(), f"pandrs_orc_{os.path.basename(sf_dir)}"
-    )
+    base = _scratch_path("orc", sf_dir)
     write_orc(od, base, partition_by=["o_orderpriority"])
     back = read_orc(
         spark,
@@ -3208,16 +3225,11 @@ def q354(spark, sf_dir):
 )
 def q383(spark, sf_dir):
     import math
-    import os
-    import shutil
-    import tempfile
 
     from pandrs_spark.sources.io import compact_files
 
     od = T(spark, sf_dir, "orders")
-    base = os.path.join(
-        tempfile.gettempdir(), f"pandrs_compact_{os.path.basename(sf_dir)}"
-    )
+    base = _scratch_path("compact", sf_dir)
     src, dest = os.path.join(base, "src"), os.path.join(base, "dest")
     shutil.rmtree(base, ignore_errors=True)
     od.repartition(40).write.mode("overwrite").parquet(src)
@@ -3269,19 +3281,13 @@ def q383(spark, sf_dir):
     """,
 )
 def q394(spark, sf_dir):
-    import os
-    import shutil
-    import tempfile
-
     from pandrs_spark.sources.io import (
         commit_table_version,
         read_table_version,
     )
 
     od = T(spark, sf_dir, "orders")
-    tdir = os.path.join(
-        tempfile.gettempdir(), f"pandrs_tt_{os.path.basename(sf_dir)}"
-    )
+    tdir = _scratch_path("tt", sf_dir)
     shutil.rmtree(tdir, ignore_errors=True)
     commit_table_version(
         spark, od.filter(F.col("o_orderdate") < "1995-01-01"), tdir, "append"

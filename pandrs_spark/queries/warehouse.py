@@ -2785,8 +2785,8 @@ def q336(spark, sf_dir):
 # Monetary (quantized total spend); each scored 1-4 by comparison
 # against the three exact interpolated quartile edges, computed in ONE
 # global aggregate and broadcast — a map-only assignment, no global
-# sort / NTILE (the percentile aggregate swaps to the mergeable
-# approx_percentile sketch at 100 TB, cf. quantile_bins). Ties at an
+# sort / NTILE (at 100 TB the percentile aggregate can swap to the
+# mergeable approx_percentile sketch). Ties at an
 # edge share the lower score in both engines. Output is the segment
 # rollup: count + mean spend per (r, f, m) cell. Reference: qcut-based
 # segmentation surface of src/dataframe/transform.rs.

@@ -43,7 +43,6 @@ __all__ = [
     "parse_kafka_json",
     "KAFKA_WIRE_SCHEMA",
     "stream_to_memory",
-    "count_window_foreach_batch",
     "global_agg",
     "dedup_within_watermark",
     "stream_static_enrich",
@@ -303,29 +302,6 @@ def stream_to_memory(df: DataFrame, name: str, output_mode: str = "update"):
     )
 
 
-def count_window_foreach_batch(
-    df: DataFrame, n: int, keys: Sequence[str], order_col: str, agg_fn
-):
-    """Count-based windows (WindowType::Count, window.rs:44) have no
-    Structured Streaming builtin; process each micro-batch with a
-    row_number() % n bucketing inside foreachBatch.
-
-    ``agg_fn(bucketed_batch_df) -> DataFrame`` receives the batch with a
-    ``__count_window`` column appended.
-    """
-    from pyspark.sql import Window
-
-    def _handle(batch_df: DataFrame, batch_id: int):
-        w = Window.partitionBy(*keys).orderBy(order_col)
-        bucketed = batch_df.withColumn(
-            "__count_window",
-            F.floor((F.row_number().over(w) - 1) / n),
-        )
-        agg_fn(bucketed)
-
-    return df.writeStream.foreachBatch(_handle)
-
-
 def count_window_stateful(
     stream_df: DataFrame,
     key_col: str,
@@ -344,10 +320,8 @@ def count_window_stateful(
     windows: window k covers elements [k·slide, k·slide + size) in each
     key's arrival order, exactly the reference's sliding count window.
     State is the (possibly partial) trailing buffer — O(max(size,
-    slide)) per key, so a million keys stream in bounded memory;
-    contrast with the foreachBatch variant
-    (:func:`count_window_foreach_batch`) which re-windows whole
-    micro-batches and cannot carry partial windows across batches.
+    slide)) per key, so a million keys stream in bounded memory, and a
+    partial window carries across micro-batches.
     """
     if slide is None:
         slide = size

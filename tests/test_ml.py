@@ -66,7 +66,7 @@ def test_equal_width_bins(spark, xy):
 
 
 def test_quantile_bins_balanced(spark, xy):
-    out = quantile_bins(xy, "x", 5, tiebreak=["y"])
+    out = quantile_bins(xy, "x", 5)
     counts = out.groupBy("bin").count().collect()
     assert all(r["count"] == 2 for r in counts) and len(counts) == 5
 
@@ -259,6 +259,27 @@ def test_decision_tree_separable(spark):
     r = decision_tree_metrics(df, ["x"], "y", max_depth=3).first()
     assert r["n"] == 100 and r["accuracy"] == 1.0
     assert r["depth"] >= 1 and r["num_nodes"] >= 3
+
+
+def test_decision_tree_independent_of_partitioning(spark):
+    """Past 10,000 rows MLlib samples its split candidates, one seed per
+    input partition; the same rows in 2 or in 4 partitions must still
+    grow the same tree."""
+    from pandrs_spark.operators.ml import decision_tree_metrics
+
+    rows = []
+    for i in range(20000):
+        a = (i * 7919) % 1000 / 10.0
+        b = (i * 104729) % 997 / 9.97
+        c = (i * 1299709) % 991 / 99.1
+        y = int((i * 15485863) % 100 < 20 + 0.3 * a - 0.1 * b)
+        rows.append((a, b, c, y))
+    df = small_local_df(spark, rows, "a double, b double, c double, y bigint")
+    r2, r4 = (
+        decision_tree_metrics(df.repartition(n), ["a", "b", "c"], "y").first()
+        for n in (2, 4)
+    )
+    assert r2 == r4
 
 
 def test_isolation_forest_flags_planted_outlier(spark):

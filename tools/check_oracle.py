@@ -19,7 +19,8 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
@@ -63,6 +64,12 @@ def main() -> int:
     only = set(args[1:])
 
     from pandrs_spark.session import get_spark
+
+    # Python workers get the environment, not this sys.path: they must
+    # find pandrs_spark to unpickle UDFs from any working directory.
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        filter(None, [ROOT, os.environ.get("PYTHONPATH")])
+    )
 
     import __spark_entry__ as E
 

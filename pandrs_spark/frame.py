@@ -30,6 +30,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, FloatType
 
+from pandrs_spark.operators import timeseries as _ts, windows as _win
 from pandrs_spark.operators.util import small_local_df
 from pandrs_spark.operators.windows import global_row_number
 
@@ -591,10 +592,8 @@ class Frame:
                 continue
             miss = _missing(df, c)
             if limit is not None:
-                w = (
-                    Window.partitionBy(*partition_by)
-                    .orderBy(self._order)
-                    .rowsBetween(Window.unboundedPreceding, 0)
+                w = self._ordered(partition_by).rowsBetween(
+                    Window.unboundedPreceding, 0
                 )
                 miss = miss & (F.sum(miss.cast("int")).over(w) <= limit)
             df = df.withColumn(
@@ -610,12 +609,10 @@ class Frame:
     ) -> "Frame":
         """Forward-fill; ``limit=N`` stops propagating N rows past the
         last observation (pandas ffill limit)."""
-        w = Window.partitionBy(*partition_by).orderBy(self._order)
-        back = w.rowsBetween(Window.unboundedPreceding, 0)
+        w = self._ordered(partition_by)
         if limit is None:
-            return self.assign(
-                **{c: F.last(F.col(c), ignorenulls=True).over(back) for c in cols}
-            )
+            return self.assign(**{c: _ts.ffill(c, w) for c in cols})
+        back = w.rowsBetween(Window.unboundedPreceding, 0)
         rn = F.row_number().over(w)
         out = self._df.withColumn("__rn__", rn)
         for c in cols:
@@ -638,12 +635,10 @@ class Frame:
         partition_by: Sequence[str] = (),
         limit: int | None = None,
     ) -> "Frame":
-        w = Window.partitionBy(*partition_by).orderBy(self._order)
-        fwd = w.rowsBetween(0, Window.unboundedFollowing)
+        w = self._ordered(partition_by)
         if limit is None:
-            return self.assign(
-                **{c: F.first(F.col(c), ignorenulls=True).over(fwd) for c in cols}
-            )
+            return self.assign(**{c: _ts.bfill(c, w) for c in cols})
+        fwd = w.rowsBetween(0, Window.unboundedFollowing)
         rn = F.row_number().over(w)
         out = self._df.withColumn("__rn__", rn)
         for c in cols:
@@ -876,51 +871,38 @@ class Frame:
         return self._wrap(out)
 
     # -- ordered column ops (§2.5c) ------------------------------------------
+    def _ordered(self, partition_by: Sequence[str]):
+        return Window.partitionBy(*partition_by).orderBy(self._order)
+
     def shift(self, col: str, n: int = 1, partition_by: Sequence[str] = (), out: str | None = None) -> "Frame":
-        w = Window.partitionBy(*partition_by).orderBy(self._order)
-        fn = F.lag(F.col(col), n) if n >= 0 else F.lead(F.col(col), -n)
-        return self.assign(**{out or f"{col}_shift": fn.over(w)})
+        w = self._ordered(partition_by)
+        return self.assign(**{out or f"{col}_shift": _win.shift(col, n, w)})
 
     def diff(self, col: str, partition_by: Sequence[str] = (), out: str | None = None) -> "Frame":
-        w = Window.partitionBy(*partition_by).orderBy(self._order)
-        return self.assign(
-            **{out or f"{col}_diff": F.col(col) - F.lag(F.col(col)).over(w)}
-        )
+        w = self._ordered(partition_by)
+        return self.assign(**{out or f"{col}_diff": _win.diff(col, w)})
 
     def pct_change(self, col: str, partition_by: Sequence[str] = (), out: str | None = None) -> "Frame":
-        w = Window.partitionBy(*partition_by).orderBy(self._order)
-        prev = F.lag(F.col(col)).over(w)
-        return self.assign(**{out or f"{col}_pct": (F.col(col) - prev) / prev})
+        w = self._ordered(partition_by)
+        return self.assign(**{out or f"{col}_pct": _win.pct_change(col, w)})
 
     def cumsum(self, col: str, partition_by: Sequence[str] = (), out: str | None = None) -> "Frame":
-        w = (
-            Window.partitionBy(*partition_by)
-            .orderBy(self._order)
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        return self.assign(**{out or f"{col}_cumsum": F.sum(col).over(w)})
-
-    def _cum(self, fn, col: str, partition_by: Sequence[str], out: str) -> "Frame":
-        w = (
-            Window.partitionBy(*partition_by)
-            .orderBy(self._order)
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        return self.assign(**{out: fn(col).over(w)})
+        w = self._ordered(partition_by)
+        return self.assign(**{out or f"{col}_cumsum": _win.cumsum(col, w)})
 
     def cummax(self, col: str, partition_by: Sequence[str] = (), out: str | None = None) -> "Frame":
-        return self._cum(F.max, col, partition_by, out or f"{col}_cummax")
+        w = self._ordered(partition_by)
+        return self.assign(**{out or f"{col}_cummax": _win.cummax(col, w)})
 
     def cummin(self, col: str, partition_by: Sequence[str] = (), out: str | None = None) -> "Frame":
-        return self._cum(F.min, col, partition_by, out or f"{col}_cummin")
+        w = self._ordered(partition_by)
+        return self.assign(**{out or f"{col}_cummin": _win.cummin(col, w)})
 
     def cumprod(self, col: str, partition_by: Sequence[str] = (), out: str | None = None) -> "Frame":
-        """Running product via exp(Σ log|x|) with sign/zero carried
-        exactly (operators/windows.py cumprod is the shared impl)."""
-        from pandrs_spark.operators.windows import cumprod as _cp
-
-        w = Window.partitionBy(*partition_by).orderBy(self._order)
-        return self.assign(**{out or f"{col}_cumprod": _cp(col, w)})
+        """Running product via the PRODUCT aggregate over an expanding
+        frame (operators/windows.py cumprod is the shared impl)."""
+        w = self._ordered(partition_by)
+        return self.assign(**{out or f"{col}_cumprod": _win.cumprod(col, w)})
 
     def abs(self, col: str, out: str | None = None) -> "Frame":
         return self.assign(**{out or f"{col}_abs": F.abs(F.col(col))})
@@ -950,22 +932,18 @@ class Frame:
         )
 
     def rank(self, col: str, method: str = "average", ascending: bool = True, out: str | None = None) -> "Frame":
-        from pandrs_spark.operators.windows import rank_method
-
         return self.assign(
             **{
-                out or f"{col}_rank": rank_method(
+                out or f"{col}_rank": _win.rank_method(
                     col, None, method, ascending, tiebreak=[self._order]
                 )
             }
         )
 
     def rolling(self, col: str, window: int, agg: str = "avg", partition_by: Sequence[str] = (), min_periods: int | None = None, out: str | None = None) -> "Frame":
-        from pandrs_spark.operators.windows import rolling as _rolling
-
-        w = Window.partitionBy(*partition_by).orderBy(self._order)
+        w = self._ordered(partition_by)
         return self.assign(
-            **{out or f"{col}_roll": _rolling(col, window, w, agg, min_periods)}
+            **{out or f"{col}_roll": _win.rolling(col, window, w, agg, min_periods)}
         )
 
     # -- positional access (§2.2 iloc/take/nth — anti-pattern at scale,
@@ -1115,13 +1093,11 @@ class Frame:
     ) -> "Frame":
         """Interpolate interior NULL runs (compat :870); ``method`` in
         'linear' | 'nearest' | 'pad'/'ffill' | 'bfill' | 'zero'."""
-        from pandrs_spark.operators.timeseries import interpolate_linear_cols
-
-        w = Window.partitionBy(*partition_by).orderBy(self._order)
+        w = self._ordered(partition_by)
         out = self._df.withColumn("__rn__", F.row_number().over(w))
         for c in cols:
             out = out.withColumn(
-                c, interpolate_linear_cols(c, F.col("__rn__"), w, method)
+                c, _ts.interpolate_linear_cols(c, F.col("__rn__"), w, method)
             )
         return self._wrap(out.drop("__rn__"))
 

@@ -12,8 +12,9 @@ iteration is one shuffle. Scale posture:
 
 - edges are repartitioned ONCE on the join key and persisted, so every
   iteration reuses the same partitioning (no repeated exchange of the
-  big side); ``_right_sized`` shrinks a provably-small loop-invariant
-  table to a size-derived partition count once it is materialized;
+  big side); every loop-invariant table goes through
+  ``operators/util.persist_right_sized``, which materializes it and
+  shrinks a provably-small one to a size-derived partition count;
 - per-iteration state (ranks/labels/frontier) is small relative to
   edges and is what moves;
 - the iterative loops run their rounds through ``_iterate``, which
@@ -61,6 +62,7 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, Window, functions as F
 
 from pandrs_spark.operators.util import (
+    persist_right_sized,
     right_size_keyed,
     right_sized_width,
     scoped_conf,
@@ -104,15 +106,6 @@ class ConvergenceError(RuntimeError):
     return the last iterate), which is what the fixed-round SQL oracles
     mirror; WITH it a truncated answer can never be mistaken for a
     converged one."""
-
-
-def _right_sized(df: DataFrame, *keys: str) -> DataFrame:
-    """:func:`right_size_keyed` for a loop-invariant table whose source
-    is already materialized (so its cache stats are exact): the
-    repartitioned copy is persisted, and tracked, only when
-    right-sizing actually changed the plan."""
-    rs = right_size_keyed(df, *keys)
-    return df if rs is df else tracked_persist(rs)
 
 
 def _assert_settled(
@@ -334,9 +327,7 @@ def _rank_walk(
     only when an up-front probe finds a vertex without out-edges
     (never for symmetrized graphs).
     """
-    verts = tracked_persist(_endpoints(e))
-    n = verts.count()
-    verts = _right_sized(verts, "id")
+    verts, n = persist_right_sized(_endpoints(e), "id")
     weighted = "w" in e.columns
     out = tracked_persist(
         e.groupBy("src").agg(
@@ -348,6 +339,8 @@ def _rank_walk(
         dangling
         and verts.join(no_out, "id", "left_anti").limit(1).count() > 0
     )
+    # sized from the join's estimate, not counted first: a count here
+    # would add a Spark job to every PageRank query
     ew = tracked_persist(right_size_keyed(e.join(out, "src"), "src"))
     mass = F.col("rank") * F.col("w") if weighted else F.col("rank")
 
@@ -444,15 +437,13 @@ def connected_components(
     default keeps the documented truncation convention (return the last
     iterate) that the fixed-round oracles mirror.
     """
-    und = tracked_persist(symmetrize(edges, src, dst))
+    sym = symmetrize(edges, src, dst)
+    und, _ = persist_right_sized(sym, "src")
     labels = tracked_persist(
-        und.select(F.col("src").alias("id"))
+        sym.select(F.col("src").alias("id"))
         .distinct()
         .withColumn("component", F.col("id"))
     )
-    # materialize, then right-size the edge table every round re-scans
-    labels.count()
-    und = _right_sized(und, "src")
     relax = _min_label_step(und, "component")
 
     def step(labels: DataFrame) -> DataFrame:
@@ -610,11 +601,10 @@ def bfs_hops(
             "id bigint, hops int",
         )
     )
-    # materialize, then right-size the edge table every hop re-scans
     with _static_plan(edges):
-        und = tracked_persist(symmetrize(edges, src, dst).repartition("src"))
-        und.count()
-    und = _right_sized(und, "src")
+        und, _ = persist_right_sized(
+            symmetrize(edges, src, dst).repartition("src"), "src"
+        )
     visited, converged = _frontier_walk(und, visited, ["id"], max_iter)
     if check_convergence and not converged:
         raise ConvergenceError(
@@ -709,15 +699,13 @@ def label_propagation(
     extra round + count, only when the flag is set and the budget ran
     out).
     """
-    und = tracked_persist(symmetrize(edges, src, dst))
+    sym = symmetrize(edges, src, dst)
+    und, _ = persist_right_sized(sym, "dst")
     labels = tracked_persist(
-        und.select(F.col("src").alias("id"))
+        sym.select(F.col("src").alias("id"))
         .distinct()
         .withColumn("label", F.col("id"))
     )
-    # materialize, then right-size the edge table every round re-scans
-    labels.count()
-    und = _right_sized(und, "dst")
     top1 = Window.partitionBy("id").orderBy(F.desc("c"), F.asc("label"))
 
     def step(labels: DataFrame) -> DataFrame:
@@ -815,18 +803,16 @@ def closeness_centrality(
     more hop after ``max_iter`` would still discover a (root, vertex)
     pair, the same exact rule as :func:`bfs_hops`.
     """
+    sym = symmetrize(edges, src, dst).repartition("src")
     with _static_plan(edges):
-        und = tracked_persist(symmetrize(edges, src, dst).repartition("src"))
-        # materialize, then right-size the edge table every hop re-scans
-        und.count()
-    verts = und.select(F.col("src").alias("id")).distinct()
+        und, _ = persist_right_sized(sym, "src")
+    verts = sym.select(F.col("src").alias("id")).distinct()
     start = (roots if roots is not None else verts).select("id")
     visited = tracked_persist(
         start.select(
             F.col("id").alias("root"), F.col("id"), F.lit(0).alias("hops")
         )
     )
-    und = _right_sized(und, "src")
     visited, converged = _frontier_walk(
         und, visited, ["root", "id"], max_iter
     )
@@ -883,14 +869,11 @@ def eigenvector_centrality(
     norm — the power method has not settled on the principal
     eigenvector at this budget.
     """
-    und = tracked_persist(symmetrize(edges, src, dst).repartition("dst"))
-    verts = tracked_persist(
-        und.select(F.col("src").alias("id")).distinct()
+    sym = symmetrize(edges, src, dst).repartition("dst")
+    und, _ = persist_right_sized(sym, "dst")
+    verts, _ = persist_right_sized(
+        sym.select(F.col("src").alias("id")).distinct(), "id"
     )
-    # materialize, then right-size the per-round tables (round 11)
-    verts.count()
-    und = _right_sized(und, "dst")
-    verts = _right_sized(verts, "id")
 
     def step(scores: DataFrame) -> DataFrame:
         nbr_sum = (
@@ -934,16 +917,13 @@ def katz_centrality(
     last two iterates differ by more than ``tol`` in max norm (the
     geometric α-series was truncated short of its fixpoint).
     """
-    e = tracked_persist(
+    e0 = (
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         .distinct()
         .repartition("src")
     )
-    verts = tracked_persist(_endpoints(e))
-    # materialize, then right-size the per-round tables (round 11)
-    verts.count()
-    e = _right_sized(e, "src")
-    verts = _right_sized(verts, "id")
+    e, _ = persist_right_sized(e0, "src")
+    verts, _ = persist_right_sized(_endpoints(e0), "id")
 
     def step(scores: DataFrame) -> DataFrame:
         in_sum = (
@@ -985,15 +965,9 @@ def hits(
     either normalized vector moved more than ``tol`` in max norm over
     the final round.
     """
-    e = tracked_persist(
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .distinct()
-    )
-    verts = tracked_persist(_endpoints(e))
-    # materialize, then right-size the per-round tables (round 11)
-    verts.count()
-    e = _right_sized(e, "src")
-    verts = _right_sized(verts, "id")
+    e0 = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
+    e, _ = persist_right_sized(e0, "src")
+    verts, _ = persist_right_sized(_endpoints(e0), "id")
 
     def half_step(base, scores, frm: str, to: str, col: str, out: str):
         # ``base`` plus ``out``: per ``to`` endpoint, the normalized sum
@@ -1054,19 +1028,13 @@ def shortest_paths(
     :class:`ConvergenceError` if one more round would still relax a
     vertex.
     """
-    e = tracked_persist(
-        edges.select(
-            F.col(src).alias("src"),
-            F.col(dst).alias("dst"),
-            F.col(cost).cast("long").alias("cost"),
-        )
-        .repartition("src")
-    )
-    verts = tracked_persist(_endpoints(e))
-    # materialize, then right-size the per-round tables (round 11)
-    verts.count()
-    e = _right_sized(e, "src")
-    verts = _right_sized(verts, "id")
+    e0 = edges.select(
+        F.col(src).alias("src"),
+        F.col(dst).alias("dst"),
+        F.col(cost).cast("long").alias("cost"),
+    ).repartition("src")
+    e, _ = persist_right_sized(e0, "src")
+    verts, _ = persist_right_sized(_endpoints(e0), "id")
     dist = verts.withColumn(
         "dist",
         F.when(F.col("id") == F.lit(source), F.lit(0).cast("long")).otherwise(
@@ -1236,7 +1204,7 @@ def strongly_connected_components(
                 f"{_outer + 1}) — raise max_iter",
             )
         # --- 3. backward collect within color, from the color roots ---
-        ce = (
+        ce, _ = persist_right_sized(
             rem_e.join(
                 colors.select(
                     F.col("id").alias("src"), F.col("color").alias("c_src")
@@ -1255,8 +1223,8 @@ def strongly_connected_components(
                 F.col("dst").alias("src"),
                 F.col("src").alias("dst"),
                 F.col("c_src").alias("root"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            "src",
         )
         roots = colors.filter(F.col("color") == F.col("id")).select(
             F.col("id").alias("root"), "id"

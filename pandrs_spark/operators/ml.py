@@ -20,7 +20,7 @@ Two tiers, chosen by what determinism allows:
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
-from pandrs_spark.operators.util import fan_out, right_size_keyed, small_local_df, tracked_persist
+from pandrs_spark.operators.util import fan_out, persist_right_sized, small_local_df, tracked_persist
 from pyspark.sql import functions as F
 
 from pandrs_spark.functions.deterministic import dsum
@@ -791,23 +791,17 @@ def local_outlier_factor(
     else:
         raise ValueError(f"local_outlier_factor: unknown method {method!r}")
     w = Window.partitionBy("a_id").orderBy(F.round(F.col("d"), 6), "b_id")
-    knn = tracked_persist(
-        pairs.withColumn("rn", F.row_number().over(w)).filter(
-            F.col("rn") <= k
-        )
-    )
     # the kNN table is scanned ~5× downstream (k-distance, reach join,
     # inverse-lrd join, both fences); the cache freezes the window
     # exchange's partition count (200 on a default session, AQE never
     # re-coalesces cached plans), so every scan paid a stage of
-    # near-empty tasks. Materialize once for exact stats, then
-    # right-size — provably-small tables collapse to a few partitions,
-    # data-sized ones are left to shuffle-partition/AQE sizing
-    # (round 11).
-    knn.count()
-    _rs = right_size_keyed(knn, "a_id")
-    if _rs is not knn:
-        knn = tracked_persist(_rs)
+    # near-empty tasks — a provably-small table is right-sized
+    knn, _ = persist_right_sized(
+        pairs.withColumn("rn", F.row_number().over(w)).filter(
+            F.col("rn") <= k
+        ),
+        "a_id",
+    )
     kdist = knn.filter(F.col("rn") == k).select(F.col("a_id").alias("id"), F.col("d").alias("kd"))
     if method == "grid":
         # Exactness certificate, enforced where Catalyst cannot prune it

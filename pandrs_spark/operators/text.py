@@ -209,7 +209,6 @@ def decontaminate(
     k: int = 8,
     max_overlap_frac: float = 0.0,
     carry: tuple[str, ...] = (),
-    hashed: bool = False,
 ):
     """Benchmark decontamination — the word-k-gram overlap rule used to
     scrub eval-set contamination from web-scale training corpora: a
@@ -223,14 +222,6 @@ def decontaminate(
     grams; the only shuffle is the per-doc hit aggregation on
     ``id_col``. ``explode_outer`` keeps docs shorter than k tokens in
     the output (n_grams = 0, never contaminated).
-
-    ``hashed=True`` joins on ``xxhash64(gram)`` instead of the gram
-    string: the broadcast table shrinks to 8 bytes/entry and the join
-    compares longs, which measurably cuts the explode-dominated wall
-    time at corpus scale. Collision risk is ~m²/2⁶⁵ for m distinct
-    benchmark grams (negligible below billions of grams, and any
-    collision only over-flags contamination — the safe direction).
-    The exact string form is the oracle-matched default.
 
     Returns one row per candidate doc:
     (id_col, *carry, n_grams, n_hits, overlap_frac, contaminated).
@@ -246,18 +237,6 @@ def decontaminate(
         *carry,
         F.explode_outer(shingles(tokens(F.col(text_col)), k)).alias("g"),
     )
-    if hashed:
-        # xxhash64(NULL) is the (non-null) seed value, so the
-        # explode_outer null that marks a too-short doc must be
-        # preserved explicitly or n_grams would over-count.
-        bench_grams = bench_grams.select(
-            F.xxhash64("g").alias("g"), "__hit__"
-        )
-        doc_grams = doc_grams.select(
-            id_col,
-            *carry,
-            F.when(F.col("g").isNotNull(), F.xxhash64("g")).alias("g"),
-        )
     per_doc = (
         doc_grams.join(F.broadcast(bench_grams), "g", "left")
         .groupBy(id_col, *carry)

@@ -15,6 +15,7 @@ __all__ = [
     "UnboundedBuildError",
     "assert_bounded",
     "fan_out",
+    "persist_right_sized",
     "right_size_keyed",
     "right_sized_width",
     "scoped_conf",
@@ -238,17 +239,39 @@ def right_size_keyed(
     (measured round 11: a 20-round PageRank over 25 vertices spent
     2/3 of its wall in those scans on a default session).
 
-    Call AFTER the source of ``df`` is materialized so optimizer stats
-    are exact (``InMemoryRelation`` carries real bytes). The explicit
-    count is only applied when the whole frame is provably smaller
-    than one task per core — anything bigger, or with unknown stats,
-    returns ``df`` unchanged and keeps the shuffle-partition/AQE
-    sizing, so production-scale tables are never squeezed.
+    Sizing is only as good as ``df``'s optimizer stats, which are exact
+    once ``df`` is a materialized cache (``InMemoryRelation`` carries
+    real bytes): a loop table goes through :func:`persist_right_sized`,
+    which materializes it first. The explicit count is only applied
+    when the whole frame is provably smaller than one task per core —
+    anything bigger, or with unknown stats, returns ``df`` unchanged
+    and keeps the shuffle-partition/AQE sizing, so production-scale
+    tables are never squeezed.
     """
     target = right_sized_width(df, bytes_per_task)
     if target is None:
         return df
     return df.repartition(target, *[F.col(c) for c in key_cols])
+
+
+def persist_right_sized(df: DataFrame, *key_cols: str) -> tuple[DataFrame, int]:
+    """Persist a table that a query re-reads (a loop's edge or vertex
+    table, a kNN table scanned several times) and return it with its
+    row count.
+
+    The count materializes the cache, so its size stats are exact; when
+    they prove the table small (:func:`right_size_keyed`), the returned
+    table is a hash-partitioned copy on ``key_cols`` at the right-sized
+    width, persisted as well, so every later scan runs a few tasks
+    instead of a stage at the session's shuffle width. Both persists go
+    through :func:`tracked_persist`. ``df`` itself is persisted in
+    place: a table derived from it afterwards (a loop's vertex set from
+    its edges) reads its materialized cache, not the right-sized copy,
+    which is built on first use."""
+    df = tracked_persist(df)
+    n = df.count()
+    rs = right_size_keyed(df, *key_cols)
+    return (df if rs is df else tracked_persist(rs)), n
 
 
 def right_sized_width(df: DataFrame, bytes_per_task: int = 1 << 22) -> int | None:

@@ -1471,23 +1471,16 @@ def q328(spark, sf_dir):
 def q570(spark, sf_dir):
     from pandrs_spark.functions.deterministic import quantize
     from pandrs_spark.operators.similarity import knn_topk_edges
-    from pandrs_spark.operators.util import tracked_persist
+    from pandrs_spark.operators.util import persist_right_sized
 
     emb = T(spark, sf_dir, "embeddings")
-    knn = tracked_persist(
-        knn_topk_edges(emb, k=5, method="ivf").select("id_a", "id_b")
-    )
     # the kNN edge table is scanned 5x below (reversal join both
     # sides, in-degree, edge/vertex counts) at the cache's frozen
-    # partition count — materialize once for exact stats, then
-    # right-size so each scan is one task instead of a stage of
-    # near-empty ones (round 11; no-op for data-sized tables)
-    from pandrs_spark.operators.util import right_size_keyed
-
-    knn.count()
-    _rs = right_size_keyed(knn, "id_a")
-    if _rs is not knn:
-        knn = tracked_persist(_rs)
+    # partition count — right-sized so each scan is one task instead
+    # of a stage of near-empty ones (no-op for data-sized tables)
+    knn, _ = persist_right_sized(
+        knn_topk_edges(emb, k=5, method="ivf").select("id_a", "id_b"), "id_a"
+    )
     rev = knn.select(F.col("id_a").alias("id_b"), F.col("id_b").alias("id_a"))
     mut = knn.join(rev, ["id_a", "id_b"]).agg(
         F.count(F.lit(1)).cast("long").alias("n_mutual")

@@ -61,6 +61,13 @@ def get_spark(
         .config("spark.ui.showConsoleProgress", "false")
     )
     builder = builder.master(master or f"local[{cpus}]")
-    for k, v in (extra_conf or {}).items():
+    # Python workers import pandrs_spark to unpickle UDFs, whatever the
+    # driver's working directory: put the directory that holds it on
+    # their path, ahead of any path the caller passes
+    conf = dict(extra_conf or {})
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    key = "spark.executorEnv.PYTHONPATH"
+    conf[key] = os.pathsep.join(filter(None, [root, conf.get(key)]))
+    for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

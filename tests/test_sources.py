@@ -606,3 +606,16 @@ def test_concurrent_loads_share_one_schema(spark, sf_dir):
         seen = list(pool.map(load_all, range(8)))
     expected = load_all(None)
     assert all(s == expected for s in seen)
+
+
+def test_session_puts_the_package_on_the_workers_path(spark):
+    """Python workers unpickle UDFs that import pandrs_spark, so the
+    session hands them the directory that holds the package, whatever
+    the driver's working directory."""
+    import os
+
+    import pandrs_spark
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(pandrs_spark.__file__)))
+    path = spark.sparkContext.environment.get("PYTHONPATH", "")
+    assert root in path.split(os.pathsep)

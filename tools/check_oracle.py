@@ -65,12 +65,6 @@ def main() -> int:
 
     from pandrs_spark.session import get_spark
 
-    # Python workers get the environment, not this sys.path: they must
-    # find pandrs_spark to unpickle UDFs from any working directory.
-    os.environ["PYTHONPATH"] = os.pathsep.join(
-        filter(None, [ROOT, os.environ.get("PYTHONPATH")])
-    )
-
     import __spark_entry__ as E
 
     # PANDRS_ORACLE_SHUFFLE: override shuffle partitions for

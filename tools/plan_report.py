@@ -447,11 +447,18 @@ def main() -> int:
         json_out = args[i + 1]
         args = args[:i] + args[i + 2 :]
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
-    only = set(args[1:])
 
     from pandrs_spark.session import get_spark
 
     import __spark_entry__ as E
+    from tools.check_oracle import resolve
+
+    qs = E.queries()
+    try:
+        only = set(resolve(args[1:], qs))
+    except ValueError as e:
+        print(f"plan_report: {e}", file=sys.stderr)
+        return 2
 
     spark = get_spark("plan-report")
     spark.sparkContext.setLogLevel("ERROR")
@@ -480,7 +487,7 @@ def main() -> int:
     # q35, the last all-pairs plan, is now a bounded-sample × corpus
     # broadcast join (lowest-200-id sample, plan-visible .limit).
     documented: dict[str, str] = {}
-    for name, fn in E.queries().items():
+    for name, fn in qs.items():
         if only and name not in only:
             continue
         try:
